@@ -9,8 +9,12 @@ import json, re, sys, pathlib, statistics
 def main(outdir, la, lb):
     d = pathlib.Path(outdir)
     data = {}  # q -> side -> [times]
+    # Longer label first, both escaped: with labels "base" and "base_v2",
+    # "base_v2_q01_round1.json" must not parse as side "base", query "v2_q01".
+    sides = "|".join(re.escape(l) for l in sorted((la, lb), key=len,
+                                                   reverse=True))
     for f in d.glob("*_round*.json"):
-        m = re.match(rf"({la}|{lb})_(.+)_round(\d+)\.json", f.name)
+        m = re.fullmatch(rf"({sides})_(.+)_round(\d+)\.json", f.name)
         if not m:
             continue
         side, q = m.group(1), m.group(2)

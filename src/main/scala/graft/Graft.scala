@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.SqlBind
 import graft.plans.{PartitionConfig, PartitionPlan, Planner, QueryPartitioningMode}
-import graft.sources.{JdbcSource, ParquetSource, Source}
+import graft.sources.{ParquetSource, Source}
 
 /** Public facade — the Spark-native counterpart of the reference's three
   * entry points (conecta-python/conecta/__init__.py: read_sql,
@@ -86,15 +86,9 @@ object Graft {
       fetchMinMax = q => source.fetchMinMax(q, config.partitionOn.get),
       fetchCounts = qs => source.fetchCounts(qs))
 
-  /** Execute a plan against its source. Multiple data queries concatenate as
-    * an implicit UNION ALL, the multi-query property asserted by the
-    * reference (conecta-python/conecta/tests/test_read_sql.py:69-84). */
+  /** Execute a plan against its source — see [[Source.readPlan]]. */
   def executePlan(source: Source, plan: PartitionPlan): DataFrame =
-    source match {
-      case j: JdbcSource => j.readPlan(plan)
-      case s =>
-        plan.dataQueries.map(s.execute).reduce(_ unionAll _)
-    }
+    source.readPlan(plan)
 
   /** Convenience: the Parquet source over a driver-testdata directory with
     * all tables registered as temp views. */

@@ -154,28 +154,34 @@ final case class PartitionPlan(
 
 object Planner {
 
-  /** Wrap a user query with a range predicate on the partition column —
-    * the pushdown SQL rewrite of conecta-core/src/source/postgres.rs:488-510.
-    * Half-open `[lo, hi)`, but `<=` on the final partition so `max` is kept. */
-  def wrapQueryWithBounds(query: String, col: String, lo: Long, hi: Long,
-      isLast: Boolean): String = {
-    val op = if (isLast) "<=" else "<"
-    s"select * from ($query) as query_inner where $col >= $lo and $col $op $hi"
-  }
-
-  /** Predicate fragment form of the same range — for `spark.read.jdbc`'s
-    * `predicates` array or a Parquet `.where`. */
+  /** Range predicate on the partition column — for `spark.read.jdbc`'s
+    * `predicates` array or a Parquet `.where`. Half-open `[lo, hi)`, but
+    * `<=` on the final partition so `max` is kept. */
   def boundsPredicate(col: String, lo: Long, hi: Long, isLast: Boolean): String = {
     val op = if (isLast) "<=" else "<"
     s"$col >= $lo and $col $op $hi"
   }
 
+  /** Wrap a user query with a range predicate on the partition column —
+    * the pushdown SQL rewrite of conecta-core/src/source/postgres.rs:488-510. */
+  def wrapQueryWithBounds(query: String, col: String, lo: Long, hi: Long,
+      isLast: Boolean): String =
+    wrapWithPredicate(query, boundsPredicate(col, lo, hi, isLast))
+
+  private def wrapWithPredicate(query: String, predicate: String): String =
+    s"select * from ($query) as query_inner where $predicate"
+
+  /** One range predicate per range, `<=` on the last. */
+  private def rangePredicates(col: String,
+      ranges: Seq[(Long, Long)]): Seq[String] =
+    ranges.zipWithIndex.map { case ((lo, hi), i) =>
+      boundsPredicate(col, lo, hi, isLast = i == ranges.length - 1)
+    }
+
   /** One bounded SQL string per range — conecta-core/src/partition.rs:116-134. */
   def createBoundedQueries(query: String, col: String,
       ranges: Seq[(Long, Long)]): Seq[String] =
-    ranges.zipWithIndex.map { case ((lo, hi), i) =>
-      wrapQueryWithBounds(query, col, lo, hi, isLast = i == ranges.length - 1)
-    }
+    rangePredicates(col, ranges).map(wrapWithPredicate(query, _))
 
   /** Orchestrate config → (optional min/max fetch) → bounded queries, mirroring
     * conecta-core/src/metadata.rs:27-83. `fetchMinMax` is the source-specific
@@ -203,12 +209,8 @@ object Planner {
       case OnePartitionedQuery =>
         val col = config.partitionOn.get
         val n = config.partitionNum.get
-        val ranges = Bounds.bounds(minV.get, maxV.get, n)
-        val dq = createBoundedQueries(config.queries.head, col, ranges)
-        val preds = ranges.zipWithIndex.map { case ((lo, hi), i) =>
-          boundsPredicate(col, lo, hi, isLast = i == ranges.length - 1)
-        }
-        (dq, preds)
+        val preds = rangePredicates(col, Bounds.bounds(minV.get, maxV.get, n))
+        (preds.map(wrapWithPredicate(config.queries.head, _)), preds)
       case _ => (config.queries, Seq.empty[String])
     }
     val counts =

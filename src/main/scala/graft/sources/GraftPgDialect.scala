@@ -22,8 +22,9 @@ import org.apache.spark.sql.types._
   * TIME's µs-since-midnight convention cannot be expressed here — a
   * LongType mapping would make Spark call `ResultSet.getLong` on a TIME
   * column, which JDBC drivers reject. It is applied as a post-read
-  * projection in [[JdbcSource]] (same observable result: a LongType
-  * column of µs since midnight).
+  * projection in [[JdbcSource]], keyed on the `jdbcClientType` type name
+  * that Spark's schema resolution records in each field's metadata (same
+  * observable result: a LongType column of µs since midnight).
   */
 object GraftPgDialect extends JdbcDialect {
 

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.sql.DriverManager
 import java.util.Properties
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -25,12 +24,12 @@ import graft.plans.PartitionPlan
   *   - [[GraftPgDialect]] (registered once, below) overrides the Catalyst
   *     type where the JDBC getter allows it (uuid/json → string,
   *     PostGIS geometry → EWKB bytes);
-  *   - `applyConventions` projects the rest after the load, driven by the
-  *     column type names from a zero-row JDBC metadata probe (the same
-  *     prepared-statement describe the reference's schema probe runs,
-  *     postgres.rs LIMIT 0): TIME → LongType µs since midnight, native
-  *     geometric text forms → the documented ArrayType(Double) encodings
-  *     via [[Geo.parseGeoText]].
+  *   - `applyTypeConventions` projects the rest after the load, driven by
+  *     the database type name Spark's schema resolution already recorded
+  *     in each field's `jdbcClientType` metadata (its one zero-row schema
+  *     query, like the reference's postgres.rs LIMIT 0 probe):
+  *     TIME → LongType µs since midnight, native geometric text forms →
+  *     the documented ArrayType(Double) encodings via [[Geo.parseGeoText]].
   *
   * Verified end-to-end against embedded Derby (JdbcSpec): partitioned
   * reads with one executor-side connection per predicate, min/max plan
@@ -38,8 +37,7 @@ import graft.plans.PartitionPlan
   * trait is the test seam, exactly as in the reference
   * (conecta-core/src/metadata.rs:103-261).
   */
-final class JdbcSource(val spark: SparkSession, url: String,
-    props: Properties = new Properties()) extends Source {
+final class JdbcSource(val spark: SparkSession, url: String) extends Source {
 
   JdbcSource.ensureDialect()
 
@@ -56,62 +54,25 @@ final class JdbcSource(val spark: SparkSession, url: String,
     if (url.startsWith("jdbc:derby")) " from SYSIBM.SYSDUMMY1" else ""
 
   override def execute(query: String): DataFrame =
-    applyConventions(
+    JdbcSource.applyTypeConventions(
       spark.read.format("jdbc")
         .option("url", url)
         .option("query", query)
         .option("preferTimestampNTZ", preferNtz)
-        .load(),
-      query)
+        .load())
 
-  /** Execute a partition plan: one Spark partition per predicate, matching
-    * "one RecordBatch per partition" (conecta-core/src/lib.rs:30-40). */
-  def readPlan(plan: PartitionPlan): DataFrame = {
-    if (plan.predicates.nonEmpty) {
-      // single partitioned query → predicates array, 1 task per range
-      val query = plan.config.queries.head
-      val dbtable = s"($query) as query_inner"
+  /** A single partitioned query becomes the `predicates` array of one
+    * partitioned JDBC read, one task per range; anything else takes the
+    * trait's union of single-partition reads. */
+  override def readPlan(plan: PartitionPlan): DataFrame =
+    if (plan.predicates.isEmpty) super.readPlan(plan)
+    else {
+      val dbtable = s"(${plan.config.queries.head}) as query_inner"
       val p = new Properties()
-      p.putAll(props)
       p.setProperty("preferTimestampNTZ", String.valueOf(preferNtz))
-      applyConventions(
-        spark.read.jdbc(url, dbtable, plan.predicates.toArray, p), query)
-    } else {
-      // one or more unpartitioned queries → union of single-partition reads
-      plan.dataQueries.map(execute).reduce(_ unionAll _)
+      JdbcSource.applyTypeConventions(
+        spark.read.jdbc(url, dbtable, plan.predicates.toArray, p))
     }
-  }
-
-  /** Column label → database type name, from the prepared statement's
-    * ResultSetMetaData — a zero-row describe, no data fetched. */
-  private[graft] def columnDbTypes(query: String): Map[String, String] =
-    try {
-      val conn = DriverManager.getConnection(url, props)
-      try {
-        val md = conn.prepareStatement(query).getMetaData
-        if (md == null) Map.empty
-        else (1 to md.getColumnCount)
-          .map(i => md.getColumnLabel(i).toLowerCase ->
-            String.valueOf(md.getColumnTypeName(i)).toLowerCase)
-          .toMap
-      } finally conn.close()
-    } catch {
-      // Conventions are best-effort sugar, but degrading must be LOUD: a
-      // flaky probe connection would otherwise silently change the schema
-      // of TIME/geo columns between runs.
-      case e: Exception =>
-        System.err.println("[graft] WARN: type-convention probe failed " +
-          s"for ${Source.sanitizeCredentials(url)} — TIME/geo conventions " +
-          "skipped this read: " +
-          Source.sanitizeCredentials(String.valueOf(e.getMessage)))
-        Map.empty
-    }
-
-  private def applyConventions(df: DataFrame, query: String): DataFrame = {
-    val dbTypes = columnDbTypes(query)
-    if (dbTypes.isEmpty) df
-    else JdbcSource.applyTypeConventions(df, dbTypes)
-  }
 }
 
 object JdbcSource {
@@ -126,17 +87,21 @@ object JdbcSource {
   private val geoTextTypes =
     Set("point", "line", "circle", "box", "lseg", "path", "polygon")
 
-  /** The post-read type-conventions projection, split from the live
-    * metadata probe so the static PG replay (PgRowConformanceSpec) can
-    * drive the REAL projection over replayed rows: TIME → LongType µs
-    * since midnight, native geometric text forms → the documented
-    * ArrayType(Double) encodings via [[Geo.parseGeoText]]. `dbTypes` is
-    * column label → database type name (lowercase), as
-    * `columnDbTypes` probes it. */
-  private[graft] def applyTypeConventions(df: DataFrame,
-      dbTypes: Map[String, String]): DataFrame = {
+  /** Spark's JDBC schema resolution (`JdbcUtils.getSchema`) records each
+    * column's `ResultSetMetaData.getColumnTypeName` under this metadata key. */
+  private val clientTypeKey = "jdbcClientType"
+
+  /** The post-read type-conventions projection: TIME → LongType µs since
+    * midnight, native geometric text forms → the documented
+    * ArrayType(Double) encodings via [[Geo.parseGeoText]]. Each field's
+    * database type name comes from its own `jdbcClientType` metadata, so
+    * the conventions always agree with the schema they rewrite; fields
+    * without it pass through. The static PG replay (PgRowConformanceSpec)
+    * drives this same projection over replayed rows. */
+  private[graft] def applyTypeConventions(df: DataFrame): DataFrame = {
     val cols: Seq[Column] = df.schema.fields.toSeq.map { f =>
-      dbTypes.get(f.name.toLowerCase) match {
+      Option.when(f.metadata.contains(clientTypeKey))(
+          f.metadata.getString(clientTypeKey).toLowerCase) match {
         case Some("time") => timeToMicros(f).as(f.name)
         case Some(t) if geoTextTypes(t) && f.dataType == StringType =>
           geoParse(t)(col(f.name)).as(f.name)

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.plans.PartitionPlan
+
 /** Source abstraction — the Scala counterpart of the reference's `Source`
   * trait (conecta-core/src/source/source.rs:6-51), which is also its test
   * seam (mocked as DummySource in conecta-core/src/metadata.rs:103-261).
@@ -84,6 +86,13 @@ trait Source {
 
   /** Execute one SQL query against this source, returning a DataFrame. */
   def execute(query: String): DataFrame
+
+  /** Execute a partition plan, one Spark partition per data query. Multiple
+    * data queries concatenate as an implicit UNION ALL, the multi-query
+    * property asserted by the reference
+    * (conecta-python/conecta/tests/test_read_sql.py:69-84). */
+  def readPlan(plan: PartitionPlan): DataFrame =
+    plan.dataQueries.map(execute).reduce(_ unionAll _)
 
   private def toLong(v: Any): Long = v match {
     case l: java.lang.Long => l

@@ -69,8 +69,4 @@ object TypeMapping {
     ps.map(m => DecimalType(m.group(1).toInt, m.group(2).toInt))
       .getOrElse(DecimalType(38, 18))
   }
-
-  /** Schema with every field forced nullable (schema.rs:154, lib.rs:46). */
-  def allNullable(schema: StructType): StructType =
-    StructType(schema.fields.map(_.copy(nullable = true)))
 }

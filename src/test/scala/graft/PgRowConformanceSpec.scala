@@ -45,13 +45,13 @@ class PgRowConformanceSpec extends AnyFunSuite {
     raw.get(schema.fieldIndex(col))
 
   // Stage B: the engine's post-read conventions projection (the same
-  // code a live read applies, fed the same probed type names)
+  // code a live read applies, over the schema the real JdbcUtils.getSchema
+  // resolved — so the same `jdbcClientType` metadata a live read carries)
+  private def project(): org.apache.spark.sql.DataFrame =
+    JdbcSource.applyTypeConventions(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1), schema))
   private lazy val converted = {
-    val dbTypes = PgFixture.selectCols.map(c => c.name -> c.pgName).toMap
-    val df = JdbcSource.applyTypeConventions(
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema),
-      dbTypes)
+    val df = project()
     (df.schema, df.collect().head)
   }
   private def convVal(col: String): Any =
@@ -114,11 +114,7 @@ class PgRowConformanceSpec extends AnyFunSuite {
       // east of UTC — the cast-based projection this replaced went
       // NEGATIVE here (wall clock reinterpreted as an instant)
       spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
-      val dbTypes = PgFixture.selectCols.map(c => c.name -> c.pgName).toMap
-      val df = JdbcSource.applyTypeConventions(
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1), schema),
-        dbTypes)
+      val df = project()
       val r = df.collect().head
       assert(r.get(df.schema.fieldIndex("time_")) == 52200000000L)
     } finally spark.conf.set("spark.sql.session.timeZone", prev)
