@@ -38,10 +38,14 @@ object Retrieval {
     // chain — materialize it on a concurrent future so its (small)
     // shingle pass overlaps the corpus-scale tf + stats actions
     // instead of serializing after them (guide §2.6; r18)
+    // (`blocking` lets the global pool add a thread while the action
+    // holds this one)
     val fQtf = scala.concurrent.Future {
-      shingleHashRows(q, 3)
-        .select(col("doc_id").as("query_id"), col("h")).distinct()
-        .localCheckpoint() // query-side term lists — query-set-bounded
+      scala.concurrent.blocking {
+        shingleHashRows(q, 3)
+          .select(col("doc_id").as("query_id"), col("h")).distinct()
+          .localCheckpoint() // query-side term lists — query-set-bounded
+      }
     }(scala.concurrent.ExecutionContext.global)
     val tf = shingleHashRows(c, 3)
       .groupBy(col("doc_id"), col("h")).agg(count(lit(1)).as("tf"))

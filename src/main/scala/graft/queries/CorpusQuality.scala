@@ -1022,17 +1022,19 @@ object CorpusQuality {
       // the two candidate-bounded artifact probes are independent given
       // candDocs — materialize them on concurrent futures so neither
       // serializes the other on the driver (guide §2.6; r18)
+      // (`blocking` lets the global pool add a thread while an action
+      // holds one)
       val (candPost, dlC) = {
-        import scala.concurrent.{Await, Future}
+        import scala.concurrent.{Await, Future, blocking}
         import scala.concurrent.duration.DurationInt
         implicit val ec: scala.concurrent.ExecutionContext =
           scala.concurrent.ExecutionContext.global
-        val fPost = Future(post
+        val fPost = Future(blocking(post
           .join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-          .localCheckpoint()) // candidate docs' full postings
-        val fDl = Future(s.read.parquet(dlPath)
+          .localCheckpoint())) // candidate docs' full postings
+        val fDl = Future(blocking(s.read.parquet(dlPath)
           .join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-          .localCheckpoint()) // ≤ |candidate docs| rows
+          .localCheckpoint())) // ≤ |candidate docs| rows
         (Await.result(fPost, 60.minutes), Await.result(fDl, 60.minutes))
       }
       val tot = s.read.parquet(totPath)

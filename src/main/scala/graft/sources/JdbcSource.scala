@@ -3,6 +3,7 @@ package graft.sources
 import java.util.Properties
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.jdbc.{JDBCOptions, JdbcUtils}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.jdbc.JdbcDialects
 import org.apache.spark.sql.types._
@@ -31,11 +32,15 @@ import graft.plans.PartitionPlan
   *     TIME → LongType µs since midnight, native geometric text forms →
   *     the documented ArrayType(Double) encodings via [[Geo.parseGeoText]].
   *
+  * Plan metadata (MIN/MAX, COUNTs) runs like the reference's
+  * (postgres.rs:556-563): plain statements on one driver-side connection
+  * per call, opened the way Spark's own read opens one, with no Spark job.
+  *
   * Verified end-to-end against embedded Derby (JdbcSpec): partitioned
   * reads with one executor-side connection per predicate, min/max plan
-  * metadata, multi-query union, and the TIME µs convention — the Source
-  * trait is the test seam, exactly as in the reference
-  * (conecta-core/src/metadata.rs:103-261).
+  * metadata with no Spark job, multi-query union, and the TIME µs
+  * convention — the Source trait is the test seam, exactly as in the
+  * reference (conecta-core/src/metadata.rs:103-261).
   */
 final class JdbcSource(val spark: SparkSession, url: String) extends Source {
 
@@ -52,6 +57,24 @@ final class JdbcSource(val spark: SparkSession, url: String) extends Source {
     * PG keeps the reference's exact merged-COUNT template. */
   override protected def dualFrom: String =
     if (url.startsWith("jdbc:derby")) " from SYSIBM.SYSDUMMY1" else ""
+
+  /** One connection from the URL's dialect and connection provider, with
+    * Spark's query timeout, for all the queries of one metadata fetch. */
+  override protected def firstRows(queries: Seq[String]): Seq[Seq[Any]] =
+    if (queries.isEmpty) Nil
+    else {
+      val opts = new JDBCOptions(Map("url" -> url, "query" -> queries.head))
+      JdbcUtils.withConnection(opts) { conn =>
+        queries.map { q =>
+          var row: Seq[Any] = null
+          JdbcUtils.executeQuery(conn, opts, q) { rs =>
+            require(rs.next(), s"no row returned by: $q")
+            row = (1 to rs.getMetaData.getColumnCount).map(rs.getObject)
+          }
+          row
+        }
+      }
+    }
 
   override def execute(query: String): DataFrame =
     JdbcSource.applyTypeConventions(

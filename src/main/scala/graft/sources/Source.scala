@@ -30,18 +30,28 @@ trait Source {
   def schemaQuery(query: String): String =
     s"select * from ($query) as query_inner limit 0"
 
+  /** The first row of each query, in order, one value per column (`null`
+    * for SQL NULL). The metadata fetches below all go through here. The
+    * default runs each query as a Spark action; [[JdbcSource]] runs them
+    * all as plain statements on one driver-side connection, with no Spark
+    * job — the reference's one round-trip on a pooled connection. */
+  protected def firstRows(queries: Seq[String]): Seq[Seq[Any]] =
+    queries.map(q => execute(q).collect().head.toSeq)
+
   /** MIN/MAX of the partition column, pushed down as one aggregate query —
-    * conecta-core/src/source/postgres.rs:556-563,585-592. */
+    * conecta-core/src/source/postgres.rs:556-563,585-592. On JDBC it runs
+    * on one driver-side connection, with no Spark job. */
   def fetchMinMax(query: String, col: String): (Long, Long) = {
-    val row = execute(minMaxQuery(query, col)).collect().head
-    require(!row.isNullAt(0) && !row.isNullAt(1),
+    val row = firstRows(Seq(minMaxQuery(query, col))).head
+    require(row(0) != null && row(1) != null,
       s"MIN/MAX of $col returned NULL — empty input or all-null column")
-    (toLong(row.get(0)), toLong(row.get(1)))
+    (toLong(row(0)), toLong(row(1)))
   }
 
-  /** Aliases matter: some dialects (Derby) auto-name unaliased expression
-    * columns "1","2", which Spark's generated outer SELECT then cannot
-    * reference. */
+  /** Aliases matter where the query runs through `execute` (the parquet
+    * path, and q05's reference-shape check): some dialects (Derby)
+    * auto-name unaliased expression columns "1","2", which Spark's
+    * generated outer SELECT then cannot reference. */
   def minMaxQuery(query: String, col: String): String =
     s"select cast(min($col) as bigint) as min_v, " +
       s"cast(max($col) as bigint) as max_v from ($query) as query_inner"
@@ -59,14 +69,17 @@ trait Source {
       .map { case (q, i) => s"(select count(*) from ($q) as t$i)" }
       .mkString("select ", " + ", s" as total_count$dualFrom")
 
+  /** Runs [[mergedCountQuery]]; on JDBC on one driver-side connection, with
+    * no Spark job. */
   def fetchMergedCount(queries: Seq[String]): Long =
-    toLong(execute(mergedCountQuery(queries)).collect().head.get(0))
+    toLong(firstRows(Seq(mergedCountQuery(queries))).head.head)
 
   /** Per-query COUNT(*) — the preallocation probe of postgres.rs:353-366,
-    * kept as an optional stats feature. */
+    * kept as an optional stats feature. On JDBC all the COUNTs run on one
+    * driver-side connection, with no Spark job. */
   def fetchCounts(queries: Seq[String]): Seq[Long] =
-    queries.map(q => toLong(execute(
-      s"select count(*) as cnt from ($q) as q_count").collect().head.get(0)))
+    firstRows(queries.map(q =>
+      s"select count(*) as cnt from ($q) as q_count")).map(r => toLong(r.head))
 
   /** First table referenced in the query's FROM clause — the reference's
     * `get_table_name` (conecta-core/src/source/postgres.rs:532-554, which

@@ -57,6 +57,46 @@ class JdbcSpec extends AnyFunSuite {
     assert(plan.predicates.length == 4)
   }
 
+  test("plan-only introspection submits no Spark job") {
+    // SURVEY §3.2: the plan is built on the driver, like the reference's
+    // one round-trip on a pooled connection (postgres.rs:556-563). The
+    // status tracker learns of jobs through the listener bus, so a known
+    // control job runs last in the same group; once it shows, every
+    // earlier job of the group has shown too.
+    seeded
+    val sc = spark.sparkContext
+    val group = s"plan-only-${java.util.UUID.randomUUID()}"
+    val control = s"$group-control"
+    sc.setJobGroup(group, "plan-only introspection")
+    try {
+      val plan = Graft.createPartitionPlan(spark, url,
+        Seq("select * from li"), partitionOn = Some("id"),
+        partitionNum = Some(4))
+      assert(plan.minValue.contains(1L) && plan.maxValue.contains(1000L))
+      sc.setCallSite(control)
+      try assert(sc.parallelize(Seq(1), 1).count() == 1L)
+      finally sc.clearCallSite()
+    } finally sc.clearJobGroup()
+    val tracker = sc.statusTracker
+    def controlSeen: Boolean = tracker.getJobIdsForGroup(group).exists { j =>
+      tracker.getJobInfo(j).exists(_.stageIds.exists(st =>
+        tracker.getStageInfo(st).exists(_.name == control)))
+    }
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (!controlSeen && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(controlSeen, "the control job never reached the status tracker")
+    assert(tracker.getJobIdsForGroup(group).length == 1,
+      "partition planning ran a Spark job")
+  }
+
+  test("NULL MIN/MAX on the JDBC path is an IllegalArgumentException") {
+    seeded
+    val src = graft.sources.Source.forConnection(spark, url)
+    val e = intercept[IllegalArgumentException](
+      src.fetchMinMax("select * from li where id > 5000", "id"))
+    assert(e.getMessage.contains("returned NULL"))
+  }
+
   test("multi-query union-all over JDBC") {
     seeded
     val df = Graft.readSql(spark, url, Seq(
@@ -83,6 +123,7 @@ class JdbcSpec extends AnyFunSuite {
       "select * from li where id < 500",
       "select * from li where id >= 500",
       "select * from li where flag = 'A'")) === Seq(499L, 501L, 500L))
+    assert(src.fetchCounts(Nil).isEmpty)
     // and the generated SQL keeps the reference's single-statement
     // shape: one SELECT, n subselect COUNTs summed
     val sql = src.mergedCountQuery(Seq("q0", "q1", "q2"))
