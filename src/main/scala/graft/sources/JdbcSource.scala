@@ -27,14 +27,22 @@ import graft.plans.PartitionPlan
   *     PostGIS geometry → EWKB bytes);
   *   - `applyTypeConventions` projects the rest after the load, driven by
   *     the database type name Spark's schema resolution already recorded
-  *     in each field's `jdbcClientType` metadata (its one zero-row schema
-  *     query, like the reference's postgres.rs LIMIT 0 probe):
-  *     TIME → LongType µs since midnight, native geometric text forms →
-  *     the documented ArrayType(Double) encodings via [[Geo.parseGeoText]].
+  *     in each field's `jdbcClientType` metadata: TIME → LongType µs since
+  *     midnight, native geometric text forms → the documented
+  *     ArrayType(Double) encodings via [[Geo.parseGeoText]].
+  *
+  * Spark resolves a read's schema with one zero-row `WHERE 1=0` query,
+  * which also serves as [[Source.schemaOf]] — Derby rejects the
+  * reference's `LIMIT 0` probe (postgres.rs:528-530).
   *
   * Plan metadata (MIN/MAX, COUNTs) runs like the reference's
   * (postgres.rs:556-563): plain statements on one driver-side connection
   * per call, opened the way Spark's own read opens one, with no Spark job.
+  *
+  * A bare `select * from T` reaches the database as `T` itself
+  * ([[Source.relation]]): the MIN/MAX statement reads `from T`, and each
+  * partition task sends `SELECT cols FROM T WHERE <range>`. Any other
+  * query goes as the derived table `(<query>) as query_inner`.
   *
   * Verified end-to-end against embedded Derby (JdbcSpec): partitioned
   * reads with one executor-side connection per predicate, min/max plan
@@ -80,7 +88,7 @@ final class JdbcSource(val spark: SparkSession, url: String) extends Source {
     JdbcSource.applyTypeConventions(
       spark.read.format("jdbc")
         .option("url", url)
-        .option("query", query)
+        .option("dbtable", relation(query))
         .option("preferTimestampNTZ", preferNtz)
         .load())
 
@@ -90,11 +98,10 @@ final class JdbcSource(val spark: SparkSession, url: String) extends Source {
   override def readPlan(plan: PartitionPlan): DataFrame =
     if (plan.predicates.isEmpty) super.readPlan(plan)
     else {
-      val dbtable = s"(${plan.config.queries.head}) as query_inner"
       val p = new Properties()
       p.setProperty("preferTimestampNTZ", String.valueOf(preferNtz))
-      JdbcSource.applyTypeConventions(
-        spark.read.jdbc(url, dbtable, plan.predicates.toArray, p))
+      JdbcSource.applyTypeConventions(spark.read.jdbc(url,
+        relation(plan.config.queries.head), plan.predicates.toArray, p))
     }
 }
 

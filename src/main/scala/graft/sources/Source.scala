@@ -18,17 +18,36 @@ trait Source {
 
   def spark: SparkSession
 
-  /** `LIMIT 0` schema probe — conecta-core/src/source/postgres.rs:528-530.
-    * All fields are reported nullable, matching the reference's forced
+  /** The query's schema, read without fetching rows — the reference's
+    * LIMIT-0 probe (conecta-core/src/source/postgres.rs:528-530). `execute`
+    * only resolves the schema: Spark's JDBC relation sends one zero-row
+    * `WHERE 1=0` query, and the Parquet path only analyses the query. All
+    * fields are reported nullable, matching the reference's forced
     * nullability (conecta-core/src/schema.rs:154). */
-  def schemaOf(query: String): StructType = {
-    val s = execute(schemaQuery(query)).schema
-    StructType(s.fields.map(_.copy(nullable = true)))
-  }
+  def schemaOf(query: String): StructType =
+    StructType(execute(query).schema.fields.map(_.copy(nullable = true)))
 
-  /** The probe SQL itself (postgres.rs:528-530). */
+  /** The reference's probe SQL itself (postgres.rs:528-530), kept for q07's
+    * reference-shape check. Not every dialect accepts it: Derby has no
+    * `LIMIT`. */
   def schemaQuery(query: String): String =
     s"select * from ($query) as query_inner limit 0"
+
+  /** The FROM item that stands for `query` in SQL sent to the database.
+    * A query that is exactly `select * from <table>` — `<table>` one or
+    * more dot-separated unquoted identifiers, keywords in any case, free
+    * whitespace between tokens — becomes `<table>` itself; anything more
+    * (quoted names, an alias, a clause, a comment, a trailing `;`) becomes
+    * the derived table `(<query>) as query_inner`. Both give the same rows
+    * under the table's own column names. Quoted names stay wrapped because
+    * rendering them again could change how the database folds their case.
+    * The gain was measured on Derby 10.16 only, whose scans through the
+    * derived table ran 2 to 2.5 times slower on a 600k-row table; it is
+    * unverified on other engines. */
+  def relation(query: String): String = query match {
+    case Source.BareTable(table) => table
+    case _ => s"($query) as query_inner"
+  }
 
   /** The first row of each query, in order, one value per column (`null`
     * for SQL NULL). The metadata fetches below all go through here. The
@@ -51,10 +70,12 @@ trait Source {
   /** Aliases matter where the query runs through `execute` (the parquet
     * path, and q05's reference-shape check): some dialects (Derby)
     * auto-name unaliased expression columns "1","2", which Spark's
-    * generated outer SELECT then cannot reference. */
+    * generated outer SELECT then cannot reference. MIN and MAX stay in one
+    * statement: on Derby 10.16 a lone MAX of an indexed column over a
+    * windowed derived table returns the whole table's MAX. */
   def minMaxQuery(query: String, col: String): String =
     s"select cast(min($col) as bigint) as min_v, " +
-      s"cast(max($col) as bigint) as max_v from ($query) as query_inner"
+      s"cast(max($col) as bigint) as max_v from ${relation(query)}"
 
   /** FROM-less scalar SELECTs (the reference's merged-COUNT shape) are
     * PostgreSQL-legal but some dialects (Derby) demand a FROM clause;
@@ -138,6 +159,9 @@ object Source {
         throw new IllegalArgumentException(s"unsupported source scheme: $other")
     }
   }
+
+  private val BareTable =
+    """(?i)\s*select\s*\*\s*from\s+([a-z_][a-z0-9_]*(?:\.[a-z_][a-z0-9_]*)*)\s*""".r
 
   /** Credential-sanitizing error rewrite, kept from the reference's Polars
     * integration (conecta-python/conecta/ext/__init__.py:49-52): the

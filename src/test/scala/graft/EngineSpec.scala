@@ -102,4 +102,27 @@ class EngineSpec extends AnyFunSuite {
       == "db.schema.lineitem")
     assertThrows[IllegalArgumentException](src.tableName("select 1"))
   }
+
+  test("only a bare `select * from <table>` skips the derived-table wrapper") {
+    val src = Graft.parquetSource(spark, dir)
+    assert(src.relation("select * from lineitem") == "lineitem")
+    assert(src.relation("SELECT  *  FROM  app.lineitem") == "app.lineitem")
+    assert(src.relation(" select *\n from\tline_item2 \n") == "line_item2")
+    assert(src.minMaxQuery("select * from lineitem", "l_orderkey")
+      .endsWith(" from lineitem"))
+    Seq(
+      "select * from \"Li\"",
+      "select * from li where id > 5",
+      "select * from li x",
+      "select * from li limit 10",
+      "select * from li;",
+      "select * from li -- comment",
+      "select * from li join lo on li.id = lo.id",
+      "select id from li",
+      "select * from li, lo"
+    ).foreach { q =>
+      assert(src.relation(q) == s"($q) as query_inner", q)
+      assert(src.minMaxQuery(q, "id").endsWith(s"from ($q) as query_inner"), q)
+    }
+  }
 }

@@ -1,0 +1,82 @@
+package graft
+
+import java.lang.reflect.{InvocationHandler, InvocationTargetException, Method, Proxy}
+import java.sql.{Connection, Driver, DriverManager, DriverPropertyInfo, Statement}
+import java.util.Properties
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.logging.Logger
+
+import scala.jdk.CollectionConverters._
+
+/** A JDBC driver that records the SQL the database receives. It accepts
+  * `jdbc:derby://recording/<db>`, which Derby's embedded driver declines
+  * (it is client syntax), opens the embedded database `<db>`, and records
+  * the text of every statement prepared on the connection or executed
+  * through one of its plain statements, from driver and executor threads
+  * alike. The URL still starts with `jdbc:derby`, so Spark picks its Derby
+  * dialect as it would for a plain Derby URL. */
+final class RecordingDriver extends Driver {
+  import RecordingDriver._
+
+  def acceptsURL(url: String): Boolean = url != null && url.startsWith(Prefix)
+
+  def connect(url: String, info: Properties): Connection =
+    if (!acceptsURL(url)) null
+    else Option(embedded.connect(embeddedUrl(url), info))
+      .map(proxy(classOf[Connection], _)).orNull
+
+  def getPropertyInfo(url: String, info: Properties): Array[DriverPropertyInfo] =
+    embedded.getPropertyInfo(embeddedUrl(url), info)
+  def getMajorVersion: Int = embedded.getMajorVersion
+  def getMinorVersion: Int = embedded.getMinorVersion
+  def jdbcCompliant(): Boolean = false
+  def getParentLogger: Logger = Logger.getLogger("graft.RecordingDriver")
+}
+
+object RecordingDriver {
+  val Prefix = "jdbc:derby://recording/"
+
+  private lazy val embedded: Driver = DriverManager.getDriver("jdbc:derby:x")
+
+  private def embeddedUrl(url: String) = "jdbc:derby:" + url.stripPrefix(Prefix)
+
+  private lazy val registered: Unit = {
+    embedded // load Derby's driver before this one is listed
+    DriverManager.registerDriver(new RecordingDriver)
+  }
+
+  /** The recording URL for the embedded database `db`. */
+  def url(db: String): String = { registered; Prefix + db }
+
+  private val sent = new ConcurrentLinkedQueue[String]()
+
+  /** Runs `body` and returns its result with the SQL texts sent while it
+    * ran, in the order they were sent. */
+  def recording[A](body: => A): (A, Seq[String]) = synchronized {
+    sent.clear()
+    val a = body
+    (a, sent.asScala.toSeq)
+  }
+
+  private val sqlMethods = Set("prepareStatement", "prepareCall",
+    "execute", "executeQuery", "executeUpdate", "executeLargeUpdate", "addBatch")
+
+  /** Wraps a connection or a plain statement: records the SQL argument of
+    * `sqlMethods`, and wraps each statement a connection creates. */
+  private def proxy[T](iface: Class[T], target: T): T =
+    Proxy.newProxyInstance(getClass.getClassLoader, Array(iface),
+      new InvocationHandler {
+        def invoke(p: Any, m: Method, args: Array[AnyRef]): AnyRef = {
+          val a = if (args == null) Array.empty[AnyRef] else args
+          a.headOption.collect { case q: String if sqlMethods(m.getName) => q }
+            .foreach(sent.add)
+          val out = try m.invoke(target, a: _*)
+            catch { case e: InvocationTargetException => throw e.getCause }
+          out match {
+            case s: Statement if m.getName == "createStatement" =>
+              proxy(classOf[Statement], s)
+            case o => o
+          }
+        }
+      }).asInstanceOf[T]
+}
