@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.SqlBind
-import graft.plans.{PartitionConfig, PartitionPlan, Planner, QueryPartitioningMode}
+import graft.plans.{PartitionConfig, PartitionPlan, Planner}
 import graft.sources.{ParquetSource, Source}
 
 /** Public facade — the Spark-native counterpart of the reference's three
@@ -84,7 +84,7 @@ object Graft {
     Planner.createPartitionPlan(
       config,
       fetchMinMax = q => source.fetchMinMax(q, config.partitionOn.get),
-      fetchCounts = qs => source.fetchCounts(qs))
+      fetchCounts = plan => source.fetchCounts(plan))
 
   /** Execute a plan against its source — see [[Source.readPlan]]. */
   def executePlan(source: Source, plan: PartitionPlan): DataFrame =

@@ -1621,7 +1621,7 @@ object Text {
     val tot = coo.agg(sum(col("cnt")).as("nn"))
     // fixed-point PPMI: e = len(bin(p div q)) - 1, then ten exact
     // squaring rounds on the 2^20-grid mantissa (see scaladoc)
-    var cells = coo
+    val cells = coo
       .join(marg, Seq("a"))
       .join(marg.select(col("a").as("b"), col("ra").as("rb")), Seq("b"))
       .crossJoin(broadcast(tot))

@@ -168,7 +168,8 @@ object Planner {
       isLast: Boolean): String =
     wrapWithPredicate(query, boundsPredicate(col, lo, hi, isLast))
 
-  private def wrapWithPredicate(query: String, predicate: String): String =
+  /** The data query of one range: `query` restricted by `predicate`. */
+  def wrapWithPredicate(query: String, predicate: String): String =
     s"select * from ($query) as query_inner where $predicate"
 
   /** One range predicate per range, `<=` on the last. */
@@ -184,11 +185,12 @@ object Planner {
     rangePredicates(col, ranges).map(wrapWithPredicate(query, _))
 
   /** Orchestrate config → (optional min/max fetch) → bounded queries, mirroring
-    * conecta-core/src/metadata.rs:27-83. `fetchMinMax` is the source-specific
-    * callback (the Source trait seam the reference tests rely on). */
+    * conecta-core/src/metadata.rs:27-83. `fetchMinMax` and `fetchCounts` are
+    * the source-specific callbacks (the Source trait seam the reference
+    * tests rely on); `fetchCounts` gets the plan it fills in. */
   def createPartitionPlan(config: PartitionConfig,
       fetchMinMax: String => (Long, Long),
-      fetchCounts: Seq[String] => Seq[Long] = _ => Seq.empty): PartitionPlan = {
+      fetchCounts: PartitionPlan => Seq[Long] = _ => Seq.empty): PartitionPlan = {
     import QueryPartitioningMode._
     val needMinMax = config.neededMetadata == NeededMetadata.MinMax ||
       config.neededMetadata == NeededMetadata.CountAndMinMax
@@ -213,8 +215,7 @@ object Planner {
         (preds.map(wrapWithPredicate(config.queries.head, _)), preds)
       case _ => (config.queries, Seq.empty[String])
     }
-    val counts =
-      if (config.preallocation) fetchCounts(dataQueries) else Seq.empty[Long]
-    PartitionPlan(minV, maxV, counts, dataQueries, predicates, config)
+    val plan = PartitionPlan(minV, maxV, Nil, dataQueries, predicates, config)
+    if (config.preallocation) plan.copy(counts = fetchCounts(plan)) else plan
   }
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,8 +22,6 @@ import graft.functions.TextFunctions._
   */
 object TextPipeline {
 
-  private val P = HashP // 2^31-1
-
   /** q149's curriculum stage count — the ONE definition both the engine
     * binding and the DuckDB oracle interpolate (the q150 knob-pin
     * discipline): the `graft.curr.buckets` session knob exists for
@@ -31,21 +29,17 @@ object TextPipeline {
     * knobs are not verify-gate material. */
   private val CurrBucketsDefault = 8
 
-  /** (doc_id, h): distinct word-n-gram shingle hashes as ROWS, with no
-    * higher-order functions anywhere in the plan. Shingles are built by
-    * posexploding the token stream and stitching each token to its n-1
-    * successors with window `lead` — every operator (split, explode,
-    * window sort, concat, md5) is whole-stage-codegen'd. The HOF
-    * `transform`-based path (shingleHashes) computes the same set but
+  /** (doc_id, h): word-n-gram shingle hashes as ROWS, one row per shingle
+    * occurrence, with no higher-order functions anywhere in the plan.
+    * Shingles are built by posexploding the token stream and stitching
+    * each token to its n-1 successors with window `lead` — every operator
+    * (split, explode, window sort, concat, md5) is whole-stage-codegen'd.
+    * The HOF `transform`-based path (shingleHashes) computes the same set but
     * runs interpreted: lambda expressions are excluded from codegen, and
     * the megamorphic interpreted tree is also hostage to JIT mood — the
     * same query measured 3 s to 90 s run-to-run. Codegen'd plans are
     * small monomorphic classes and time stably. Only docs with ≥3 words
     * participate (matches every dedup query's filter). */
-  private def shingleRows(s: SparkSession, dir: String, n: Int = 3): DataFrame =
-    shingleRowsAll(s, dir, n).distinct()
-
-  /** Same, with multiplicity (one row per shingle occurrence). */
   private def shingleRowsAll(s: SparkSession, dir: String, n: Int = 3): DataFrame =
     shingleHashRows(Graft.parquetSource(s, dir).table("documents"), n)
 

@@ -39,10 +39,21 @@ import graft.plans.PartitionPlan
   * (postgres.rs:556-563): plain statements on one driver-side connection
   * per call, opened the way Spark's own read opens one, with no Spark job.
   *
-  * A bare `select * from T` reaches the database as `T` itself
-  * ([[Source.relation]]): the MIN/MAX statement reads `from T`, and each
-  * partition task sends `SELECT cols FROM T WHERE <range>`. Any other
-  * query goes as the derived table `(<query>) as query_inner`.
+  * The SQL sent follows the query's [[QueryShape]]:
+  *   - MIN/MAX: a `Bare` query sends `select (select cast(min(c) as bigint)
+  *     from T) as min_v, (select cast(max(c) …) from T) as max_v`, one
+  *     scalar subquery per aggregate, which Derby answers with index
+  *     probes; a `Filtered` one sends `select cast(min(c) …), cast(max(c)
+  *     …) from T where <cond>`;
+  *   - reads: each partition task sends `SELECT cols FROM T WHERE
+  *     [(<cond>) AND] <range>`;
+  *   - preallocation COUNTs: `select count(*) as cnt from T where
+  *     [(<cond>) and] <range>`;
+  *   - an `Opaque` query keeps the derived table `(<query>) as
+  *     query_inner` on all three paths.
+  * MIN and MAX of a filtered query stay in one statement: on Derby 10.16 a
+  * lone MAX of an indexed column over a windowed derived table returns the
+  * whole table's MAX.
   *
   * Verified end-to-end against embedded Derby (JdbcSpec): partitioned
   * reads with one executor-side connection per predicate, min/max plan
@@ -84,24 +95,55 @@ final class JdbcSource(val spark: SparkSession, url: String) extends Source {
       }
     }
 
-  override def execute(query: String): DataFrame =
-    JdbcSource.applyTypeConventions(
-      spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", relation(query))
-        .option("preferTimestampNTZ", preferNtz)
-        .load())
+  /** The MIN/MAX statement for the query's shape (class doc). */
+  override def minMaxQuery(query: String, col: String): String = {
+    def agg(f: String) = s"cast($f($col) as bigint)"
+    QueryShape(query) match {
+      case QueryShape.Bare(t) => s"select (select ${agg("min")} from $t) " +
+        s"as min_v, (select ${agg("max")} from $t) as max_v$dualFrom"
+      case QueryShape.Filtered(t, cond) => s"select ${agg("min")} as min_v, " +
+        s"${agg("max")} as max_v from $t where $cond"
+      case QueryShape.Opaque => super.minMaxQuery(query, col)
+    }
+  }
+
+  override protected def countQuery(query: String,
+      range: Option[String]): String =
+    onTable(query, range.toSeq).fold(super.countQuery(query, range)) {
+      case (t, conds) =>
+        s"select count(*) as cnt from $t" + conds.map(" where " + _).mkString
+    }
+
+  override def execute(query: String): DataFrame = read(query, Nil)
 
   /** A single partitioned query becomes the `predicates` array of one
     * partitioned JDBC read, one task per range; anything else takes the
     * trait's union of single-partition reads. */
   override def readPlan(plan: PartitionPlan): DataFrame =
     if (plan.predicates.isEmpty) super.readPlan(plan)
-    else {
-      val p = new Properties()
-      p.setProperty("preferTimestampNTZ", String.valueOf(preferNtz))
-      JdbcSource.applyTypeConventions(spark.read.jdbc(url,
-        relation(plan.config.queries.head), plan.predicates.toArray, p))
+    else read(plan.config.queries.head, plan.predicates)
+
+  /** `query`'s rows, one partition per range predicate (one partition for
+    * none). */
+  private def read(query: String, ranges: Seq[String]): DataFrame = {
+    val (table, preds) =
+      onTable(query, ranges).getOrElse((relation(query), ranges))
+    val p = new Properties()
+    p.setProperty("preferTimestampNTZ", String.valueOf(preferNtz))
+    JdbcSource.applyTypeConventions(
+      if (preds.isEmpty) spark.read.jdbc(url, table, p)
+      else spark.read.jdbc(url, table, preds.toArray, p))
+  }
+
+  /** For a `Bare` or `Filtered` query, its table and the WHERE conditions
+    * that select its rows within each range (all its rows for no range). */
+  private def onTable(query: String,
+      ranges: Seq[String]): Option[(String, Seq[String])] =
+    QueryShape(query) match {
+      case QueryShape.Bare(t) => Some((t, ranges))
+      case QueryShape.Filtered(t, cond) => Some((t,
+        if (ranges.isEmpty) Seq(cond) else ranges.map(r => s"($cond) and $r")))
+      case QueryShape.Opaque => None
     }
 }
 

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.plans.PartitionPlan
+import graft.plans.{PartitionPlan, Planner}
 
 /** Source abstraction — the Scala counterpart of the reference's `Source`
   * trait (conecta-core/src/source/source.rs:6-51), which is also its test
@@ -13,6 +13,15 @@ import graft.plans.PartitionPlan
   * MIN/MAX of a partition column (pushed down), sum COUNT(*) over a set of
   * queries in one statement, and execute one SQL query into a DataFrame.
   * Partition planning itself is source-agnostic (graft.plans.Planner).
+  *
+  * The SQL sent for a query follows its [[QueryShape]]. A `Bare` query goes
+  * as its table `T`; on JDBC a `Filtered` one goes as `T` with its condition
+  * in the WHERE clause; an `Opaque` one goes as the derived table
+  * `(<query>) as query_inner`. The gain is measured on Derby 10.16 only,
+  * which does not flatten the derived table and plans MIN/MAX over a table
+  * as index probes only in the per-aggregate form. PostgreSQL already does
+  * both, so the shapes are expected to be neutral there; that is
+  * unmeasured.
   */
 trait Source {
 
@@ -33,19 +42,10 @@ trait Source {
   def schemaQuery(query: String): String =
     s"select * from ($query) as query_inner limit 0"
 
-  /** The FROM item that stands for `query` in SQL sent to the database.
-    * A query that is exactly `select * from <table>` — `<table>` one or
-    * more dot-separated unquoted identifiers, keywords in any case, free
-    * whitespace between tokens — becomes `<table>` itself; anything more
-    * (quoted names, an alias, a clause, a comment, a trailing `;`) becomes
-    * the derived table `(<query>) as query_inner`. Both give the same rows
-    * under the table's own column names. Quoted names stay wrapped because
-    * rendering them again could change how the database folds their case.
-    * The gain was measured on Derby 10.16 only, whose scans through the
-    * derived table ran 2 to 2.5 times slower on a 600k-row table; it is
-    * unverified on other engines. */
-  def relation(query: String): String = query match {
-    case Source.BareTable(table) => table
+  /** `query` as a FROM item: the table of a `Bare` query ([[QueryShape]]),
+    * the derived table `(<query>) as query_inner` otherwise. */
+  def relation(query: String): String = QueryShape(query) match {
+    case QueryShape.Bare(table) => table
     case _ => s"($query) as query_inner"
   }
 
@@ -57,7 +57,7 @@ trait Source {
   protected def firstRows(queries: Seq[String]): Seq[Seq[Any]] =
     queries.map(q => execute(q).collect().head.toSeq)
 
-  /** MIN/MAX of the partition column, pushed down as one aggregate query —
+  /** MIN/MAX of the partition column, pushed down as one statement —
     * conecta-core/src/source/postgres.rs:556-563,585-592. On JDBC it runs
     * on one driver-side connection, with no Spark job. */
   def fetchMinMax(query: String, col: String): (Long, Long) = {
@@ -71,8 +71,9 @@ trait Source {
     * path, and q05's reference-shape check): some dialects (Derby)
     * auto-name unaliased expression columns "1","2", which Spark's
     * generated outer SELECT then cannot reference. MIN and MAX stay in one
-    * statement: on Derby 10.16 a lone MAX of an indexed column over a
-    * windowed derived table returns the whole table's MAX. */
+    * SELECT over the derived table: on Derby 10.16 a lone MAX of an indexed
+    * column over a windowed derived table returns the whole table's MAX.
+    * [[JdbcSource]] sends a shape-specific form instead. */
   def minMaxQuery(query: String, col: String): String =
     s"select cast(min($col) as bigint) as min_v, " +
       s"cast(max($col) as bigint) as max_v from ${relation(query)}"
@@ -99,8 +100,24 @@ trait Source {
     * kept as an optional stats feature. On JDBC all the COUNTs run on one
     * driver-side connection, with no Spark job. */
   def fetchCounts(queries: Seq[String]): Seq[Long] =
-    firstRows(queries.map(q =>
-      s"select count(*) as cnt from ($q) as q_count")).map(r => toLong(r.head))
+    counts(queries.map((_, None)))
+
+  /** A plan's preallocation COUNTs, one per partition, built from its
+    * (query, range predicate) pairs. */
+  def fetchCounts(plan: PartitionPlan): Seq[Long] =
+    if (plan.predicates.isEmpty) fetchCounts(plan.dataQueries)
+    else counts(plan.predicates.map(r => (plan.config.queries.head, Some(r))))
+
+  private def counts(ranged: Seq[(String, Option[String])]): Seq[Long] =
+    firstRows(ranged.map { case (q, r) => countQuery(q, r) })
+      .map(row => toLong(row.head))
+
+  /** COUNT(*) of `query`'s rows within `range` (all of them for None). The
+    * default counts the data query the plan runs for that range:
+    * `select count(*) as cnt from (<data query>) as q_count`. */
+  protected def countQuery(query: String, range: Option[String]): String =
+    s"select count(*) as cnt from " +
+      s"(${range.fold(query)(Planner.wrapWithPredicate(query, _))}) as q_count"
 
   /** First table referenced in the query's FROM clause — the reference's
     * `get_table_name` (conecta-core/src/source/postgres.rs:532-554, which
@@ -159,9 +176,6 @@ object Source {
         throw new IllegalArgumentException(s"unsupported source scheme: $other")
     }
   }
-
-  private val BareTable =
-    """(?i)\s*select\s*\*\s*from\s+([a-z_][a-z0-9_]*(?:\.[a-z_][a-z0-9_]*)*)\s*""".r
 
   /** Credential-sanitizing error rewrite, kept from the reference's Polars
     * integration (conecta-python/conecta/ext/__init__.py:49-52): the

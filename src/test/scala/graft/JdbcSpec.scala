@@ -123,17 +123,6 @@ class JdbcSpec extends AnyFunSuite {
     }
   }
 
-  test("a bare-table read equals the wrapped read row for row") {
-    seeded
-    def read(q: String) = Graft.readSql(spark, url, Seq(q),
-      partitionOn = Some("id"), partitionNum = Some(3))
-    val bare = read("select * from li")
-    val wrapped = read("select * from li where 1 = 1")
-    assert(bare.schema == wrapped.schema)
-    assert(bare.orderBy("ID").collect().toSeq ==
-      wrapped.orderBy("ID").collect().toSeq)
-  }
-
   test("MIN/MAX of a bare table skips NULLs in the partition column") {
     val conn = DriverManager.getConnection(s"$url;create=true")
     try {
@@ -146,13 +135,33 @@ class JdbcSpec extends AnyFunSuite {
     assert(src.fetchMinMax("select * from kgaps", "k") == ((-3L, 42L)))
   }
 
+  /** One query per shape, each selecting every row of `li`. The filter is
+    * an OR, so a range predicate joined to it without parentheses would
+    * select other rows. */
+  private val bare = "select * from li"
+  private val cond = "flag = 'A' or flag = 'B'"
+  private val filtered = s"select * from li where $cond"
+  private val opaque = "select * from li where flag in (select flag from li)"
+
+  // The wrapped control is the Opaque query: a filter with a subquery is
+  // the filtered query that still goes through the derived-table wrapper.
+  test("a bare-table read equals the wrapped read row for row") {
+    seeded
+    def read(q: String) = Graft.readSql(spark, url, Seq(q),
+      partitionOn = Some("id"), partitionNum = Some(3))
+    val bareDf = read(bare)
+    val wrapped = read(opaque)
+    assert(bareDf.schema == wrapped.schema)
+    assert(bareDf.orderBy("ID").collect().toSeq ==
+      wrapped.orderBy("ID").collect().toSeq)
+  }
+
   test("the database receives a bare table as itself, a filtered query " +
       "through the derived-table wrapper") {
     seeded
     val rurl = RecordingDriver.url("memory:graftdb")
     val src = graft.sources.Source.forConnection(spark, rurl)
-    for ((q, wrapped) <- Seq("select * from li" -> false,
-        "select * from li where 1 = 1" -> true)) {
+    for ((q, wrapped) <- Seq(bare -> false, opaque -> true)) {
       val (plan, sent) = RecordingDriver.recording {
         val plan = Graft.createPartitionPlan(spark, rurl, Seq(q),
           partitionOn = Some("id"), partitionNum = Some(3))
@@ -166,6 +175,80 @@ class JdbcSpec extends AnyFunSuite {
       for (sql <- minMax ++ parts.flatten)
         assert(sql.contains("query_inner") == wrapped, sql)
       if (!wrapped) assert(!sent.exists(_.contains("query_inner")), sent)
+    }
+  }
+
+  test("each query shape's own MIN/MAX, read and COUNT SQL; " +
+      "all read the same rows") {
+    seeded
+    val rurl = RecordingDriver.url("memory:graftdb")
+    val src = graft.sources.Source.forConnection(spark, rurl)
+    val ranges = Seq("id >= 1 and id < 334", "id >= 334 and id < 667",
+      "id >= 667 and id <= 1000")
+    val minMax = "cast(min(id) as bigint) as min_v, " +
+      "cast(max(id) as bigint) as max_v"
+    // per shape: the MIN/MAX statement, and each range's COUNT statement
+    // and partition read
+    val expected = Seq(
+      bare -> ((
+        "select (select cast(min(id) as bigint) from li) as min_v, " +
+          "(select cast(max(id) as bigint) from li) as max_v " +
+          "from SYSIBM.SYSDUMMY1",
+        ranges.map(r => s"select count(*) as cnt from li where $r"),
+        ranges.map(r => s"FROM li WHERE $r"))),
+      filtered -> ((
+        s"select $minMax from li where $cond",
+        ranges.map(r => s"select count(*) as cnt from li where ($cond) and $r"),
+        ranges.map(r => s"FROM li WHERE ($cond) and $r"))),
+      opaque -> ((
+        s"select $minMax from ($opaque) as query_inner",
+        ranges.map(r => s"select count(*) as cnt from " +
+          s"(select * from ($opaque) as query_inner where $r) as q_count"),
+        ranges.map(r => s"FROM ($opaque) as query_inner WHERE $r"))))
+    def norm(sql: String) = sql.trim.replaceAll("\\s+", " ")
+    val read = expected.map { case (q, (minMaxSql, countSqls, readSqls)) =>
+      val (rows, sent) = RecordingDriver.recording {
+        val plan = Graft.createPartitionPlan(spark, rurl, Seq(q),
+          partitionOn = Some("id"), partitionNum = Some(3),
+          preallocation = true)
+        assert(plan.predicates == ranges, q)
+        assert(plan.counts == Seq(333L, 333L, 334L), q)
+        // sorted here: a Spark sort would read every partition twice
+        Graft.executePlan(src, plan).collect().toSeq.sortBy(_.getLong(0))
+      }
+      val got = sent.map(norm)
+      assert(got.count(_ == minMaxSql) == 1, got)
+      countSqls.foreach(c => assert(got.count(_ == c) == 1, got))
+      readSqls.foreach(r => assert(
+        got.count(g => g.startsWith("SELECT ") && g.endsWith(r)) == 1, got))
+      if (q != opaque) assert(!got.exists(_.contains("query_inner")), got)
+      rows
+    }
+    assert(read.head.length == 1000)
+    assert(read.forall(_ == read.head))
+  }
+
+  test("readSql rows do not depend on partition count, preallocation " +
+      "or query shape") {
+    seeded
+    val all = spark.read.jdbc(url, "li", new java.util.Properties)
+      .orderBy("ID").collect().toSeq
+    val flagA = all.filter(_.getString(2) == "A")
+    assert(all.length == 1000 && flagA.length == 500)
+    // every shape over all rows, and a filtered and an opaque query over
+    // the flag 'A' half
+    for ((q, expected) <- Seq(bare -> all, filtered -> all, opaque -> all,
+          "select * from li where flag = 'A'" -> flagA,
+          "select * from li where flag in (select flag from li where id = 2)"
+            -> flagA);
+        n <- Seq(1, 2, 3, 7); pre <- Seq(false, true)) {
+      val df = Graft.readSql(spark, url, Seq(q), partitionOn = Some("id"),
+        partitionNum = Some(n), preallocation = pre)
+      assert(df.rdd.getNumPartitions == n, (q, n, pre))
+      assert(df.orderBy("ID").collect().toSeq == expected, (q, n, pre))
+      if (pre) assert(Graft.createPartitionPlan(spark, url, Seq(q),
+        partitionOn = Some("id"), partitionNum = Some(n),
+        preallocation = true).counts.sum == expected.length, (q, n))
     }
   }
 
