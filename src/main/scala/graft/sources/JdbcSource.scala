@@ -2,6 +2,8 @@ package graft.sources
 
 import java.util.Properties
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.jdbc.{JDBCOptions, JdbcUtils}
 import org.apache.spark.sql.functions._
@@ -17,7 +19,10 @@ import graft.plans.PartitionPlan
   * each → cursor stream → columnar transpose, postgres.rs:340-485) IS
   * Spark's partitioned JDBC read: `spark.read.jdbc(url, table, predicates,
   * props)` runs one executor task per predicate, each over its own
-  * connection, into columnar batches. The connection-pool sizing rule
+  * connection. When such a read leaves through [[ArrowSink]], its tasks
+  * write each `ResultSet` straight into Arrow vectors
+  * ([[JdbcArrowReader]]), as the reference's transpose does; read as a
+  * DataFrame, it goes through Spark's rows. The connection-pool sizing rule
   * (max_pool_size defaults to partition count, conecta-core/src/lib.rs:131-139)
   * maps to `numPartitions`.
   *
@@ -72,6 +77,14 @@ final class JdbcSource(val spark: SparkSession, url: String) extends Source {
     * Asserted per type-zoo column in DialectConformanceSpec. */
   private val preferNtz = url.startsWith("jdbc:postgresql")
 
+  /** Each query's shape, classified once per source: a partitioned read
+    * asks for it in its MIN/MAX, in its read and in each partition's COUNT.
+    * Per instance, so it lives as long as one `readSql` call. */
+  private val shapes = TrieMap.empty[String, QueryShape]
+
+  override protected def shape(query: String): QueryShape =
+    shapes.getOrElseUpdate(query, QueryShape(query))
+
   /** Derby (the live test dialect) rejects FROM-less scalar SELECTs;
     * PG keeps the reference's exact merged-COUNT template. */
   override protected def dualFrom: String =
@@ -98,7 +111,7 @@ final class JdbcSource(val spark: SparkSession, url: String) extends Source {
   /** The MIN/MAX statement for the query's shape (class doc). */
   override def minMaxQuery(query: String, col: String): String = {
     def agg(f: String) = s"cast($f($col) as bigint)"
-    QueryShape(query) match {
+    shape(query) match {
       case QueryShape.Bare(t) => s"select (select ${agg("min")} from $t) " +
         s"as min_v, (select ${agg("max")} from $t) as max_v$dualFrom"
       case QueryShape.Filtered(t, cond) => s"select ${agg("min")} as min_v, " +
@@ -139,7 +152,7 @@ final class JdbcSource(val spark: SparkSession, url: String) extends Source {
     * that select its rows within each range (all its rows for no range). */
   private def onTable(query: String,
       ranges: Seq[String]): Option[(String, Seq[String])] =
-    QueryShape(query) match {
+    shape(query) match {
       case QueryShape.Bare(t) => Some((t, ranges))
       case QueryShape.Filtered(t, cond) => Some((t,
         if (ranges.isEmpty) Seq(cond) else ranges.map(r => s"($cond) and $r")))

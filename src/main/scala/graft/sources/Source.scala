@@ -42,9 +42,12 @@ trait Source {
   def schemaQuery(query: String): String =
     s"select * from ($query) as query_inner limit 0"
 
+  /** The [[QueryShape]] of `query`. */
+  protected def shape(query: String): QueryShape = QueryShape(query)
+
   /** `query` as a FROM item: the table of a `Bare` query ([[QueryShape]]),
     * the derived table `(<query>) as query_inner` otherwise. */
-  def relation(query: String): String = QueryShape(query) match {
+  def relation(query: String): String = shape(query) match {
     case QueryShape.Bare(table) => table
     case _ => s"($query) as query_inner"
   }

@@ -244,7 +244,9 @@ object PgFixture {
       }
     }
 
-  private def mockDataResultSet(cols: Seq[Col],
+  /** A replayed pgjdbc ResultSet positioned before its one row of
+    * `values`, one column per entry of `cols`. */
+  def mockDataResultSet(cols: Seq[Col],
       values: Map[String, Any]): ResultSet = {
     val md = mockMeta(cols)
     val row = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -559,12 +559,19 @@ class PipelineSpec extends AnyFunSuite {
     assert(t.map(_.k1) == Seq(0L, 1L, 2L))
   }
 
-  test("arrow sink: one IPC batch per partition") {
-    import spark.implicits._
-    val df = spark.range(0, 1000).toDF("id").repartition(4)
-    val batches = graft.sources.ArrowSink.collectIpcBatches(df)
-    assert(batches.length == 4)
-    assert(batches.forall(_.nonEmpty))
+  test("arrow sink: batches cut at maxRecordsPerBatch rows per partition; " +
+      "0 gives one") {
+    val key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    val df = spark.range(0, 25000, 1, 2).toDF("id")
+    val schema = org.apache.spark.sql.TestArrowBridge.arrowSchema(spark, df.schema)
+    def batchRows = ArrowIpc.decode(schema,
+      graft.sources.ArrowSink.collectIpcBatches(df).toSeq).map(_.size)
+    // the default cap is 10,000 rows: 12,500 rows per partition cut in two
+    spark.conf.unset(key)
+    assert(batchRows == Seq(10000, 2500, 10000, 2500))
+    spark.conf.set(key, "0")
+    try assert(batchRows == Seq(12500, 12500))
+    finally spark.conf.unset(key)
   }
 
   test("real pixel decode: ImageIO round-trips the synthetic PNG-RGB/" +

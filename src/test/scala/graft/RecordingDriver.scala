@@ -4,6 +4,7 @@ import java.lang.reflect.{InvocationHandler, InvocationTargetException, Method, 
 import java.sql.{Connection, Driver, DriverManager, DriverPropertyInfo, Statement}
 import java.util.Properties
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 import java.util.logging.Logger
 
 import scala.jdk.CollectionConverters._
@@ -13,7 +14,8 @@ import scala.jdk.CollectionConverters._
   * (it is client syntax), opens the embedded database `<db>`, and records
   * the text of every statement prepared on the connection or executed
   * through one of its plain statements, from driver and executor threads
-  * alike. The URL still starts with `jdbc:derby`, so Spark picks its Derby
+  * alike, and counts the connections it has opened that are not yet
+  * closed. The URL still starts with `jdbc:derby`, so Spark picks its Derby
   * dialect as it would for a plain Derby URL. */
 final class RecordingDriver extends Driver {
   import RecordingDriver._
@@ -22,8 +24,10 @@ final class RecordingDriver extends Driver {
 
   def connect(url: String, info: Properties): Connection =
     if (!acceptsURL(url)) null
-    else Option(embedded.connect(embeddedUrl(url), info))
-      .map(proxy(classOf[Connection], _)).orNull
+    else Option(embedded.connect(embeddedUrl(url), info)).map { c =>
+      open.incrementAndGet()
+      proxy(classOf[Connection], c)
+    }.orNull
 
   def getPropertyInfo(url: String, info: Properties): Array[DriverPropertyInfo] =
     embedded.getPropertyInfo(embeddedUrl(url), info)
@@ -50,6 +54,11 @@ object RecordingDriver {
 
   private val sent = new ConcurrentLinkedQueue[String]()
 
+  private val open = new AtomicInteger
+
+  /** Connections opened through this driver and not yet closed. */
+  def openConnections: Int = open.get
+
   /** Runs `body` and returns its result with the SQL texts sent while it
     * ran, in the order they were sent. */
   def recording[A](body: => A): (A, Seq[String]) = synchronized {
@@ -62,14 +71,18 @@ object RecordingDriver {
     "execute", "executeQuery", "executeUpdate", "executeLargeUpdate", "addBatch")
 
   /** Wraps a connection or a plain statement: records the SQL argument of
-    * `sqlMethods`, and wraps each statement a connection creates. */
+    * `sqlMethods`, counts a connection's first `close`, and wraps each
+    * statement a connection creates. */
   private def proxy[T](iface: Class[T], target: T): T =
     Proxy.newProxyInstance(getClass.getClassLoader, Array(iface),
       new InvocationHandler {
+        private val closed = new AtomicBoolean
         def invoke(p: Any, m: Method, args: Array[AnyRef]): AnyRef = {
           val a = if (args == null) Array.empty[AnyRef] else args
           a.headOption.collect { case q: String if sqlMethods(m.getName) => q }
             .foreach(sent.add)
+          if (iface == classOf[Connection] && m.getName == "close" &&
+              closed.compareAndSet(false, true)) open.decrementAndGet()
           val out = try m.invoke(target, a: _*)
             catch { case e: InvocationTargetException => throw e.getCause }
           out match {
