@@ -137,9 +137,9 @@ object Bench {
       // Suite-aging diagnostics (SPARK_GRAFT_STORAGE=1): snapshot what
       // survives clearCache+GC after each query — persisted-RDD block
       // count and bytes (localCheckpoint blocks live here until their
-      // frames are unreachable AND the ContextCleaner drains), memo
-      // populations, and JIT code-cache occupancy. Stderr-only; the
-      // stdout protocol is unchanged.
+      // frames are unreachable AND the ContextCleaner drains), each
+      // memo's size/hits/misses, and JIT code-cache occupancy.
+      // Stderr-only; the stdout protocol is unchanged.
       if (sys.env.get("SPARK_GRAFT_STORAGE").contains("1")) {
         val infos = spark.sparkContext.getRDDStorageInfo
         val mem = infos.map(_.memSize).sum / (1 << 20)
@@ -150,34 +150,14 @@ object Bench {
           .mapToLong(_.getUsage.getUsed).sum / (1 << 20)
         System.err.println(s"[storage] $name rdds=${infos.length} " +
           s"mem=${mem}MB disk=${dsk}MB codeCache=${cc}MB " +
-          s"memos=pair:${graft.queries.TextPipeline.pairMemoSize}," +
-          s"bpe:${graft.queries.TextPipeline.bpeMemoSize}," +
-          s"ulm:${graft.queries.TextPipeline.ulmMemoSize}," +
-          s"km:${graft.queries.Embeddings.kmMemoSize}," +
-          s"ann:${graft.queries.Embeddings.annMemoSize}," +
-          s"pq:${graft.queries.Embeddings.pqMemoSize}," +
-          s"pca:${graft.queries.Embeddings.pcaMemoSize}," +
-          s"clf:${graft.queries.Classifier.clfMemoSize}," +
-          s"substr:${graft.queries.TextPipeline.substrMemoSize}," +
-          s"wv:${graft.queries.WordVectors.wvMemoSize}," +
-          s"side:${graft.sources.SideTable.size}")
+          s"memos=${graft.sources.Memo.summary}")
       }
       // Bisect lever (SPARK_GRAFT_RESET=1): drop every session memo
       // between queries, so a suite run measures each query without
       // memo-held checkpoint blocks from earlier queries. NOT the
       // default protocol — memo reuse is intended behavior (q53/q27).
       if (sys.env.get("SPARK_GRAFT_RESET").contains("1")) {
-        graft.queries.TextPipeline.clearPairMemo()
-        graft.queries.TextPipeline.clearBpeMemo()
-        graft.queries.TextPipeline.clearUlmMemo()
-        graft.queries.TextPipeline.clearSubstrMemo()
-        graft.queries.Embeddings.clearAnnMemo()
-        graft.queries.Embeddings.clearKmMemo()
-        graft.queries.Embeddings.clearPqMemo()
-        graft.queries.Embeddings.clearPcaMemo()
-        graft.queries.Classifier.clearClfMemo()
-        graft.queries.WordVectors.clearWvMemo()
-        graft.sources.SideTable.clear()
+        graft.sources.Memo.clearAll()
         System.gc()
       }
       (name, times)

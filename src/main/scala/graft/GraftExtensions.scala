@@ -22,82 +22,41 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  /** (name, info, builder) triples for every graft SQL function. */
-  val functions: Seq[(FunctionIdentifier, ExpressionInfo,
+  /** One row per graft SQL function: name, expression class, arity, and
+    * the constructor over exactly `arity` children. */
+  private val rows: Seq[(String, Class[_ <: Expression], Int,
       Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProductExpr].getName, "graft_dot"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          s"graft_dot expects 2 arguments, got ${children.length}")
-        DotProductExpr(children.head, children(1))
-      }),
-    (FunctionIdentifier("graft_hash60"),
-      new ExpressionInfo(classOf[Hash60Expr].getName, "graft_hash60"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          s"graft_hash60 expects 1 argument, got ${children.length}")
-        Hash60Expr(children.head)
-      }),
-    (FunctionIdentifier("graft_max_abs"),
-      new ExpressionInfo(classOf[MaxAbsExpr].getName, "graft_max_abs"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          s"graft_max_abs expects 1 argument, got ${children.length}")
-        MaxAbsExpr(children.head)
-      }),
-    (FunctionIdentifier("graft_quantize"),
-      new ExpressionInfo(classOf[QuantizeExpr].getName, "graft_quantize"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          s"graft_quantize expects 2 arguments, got ${children.length}")
-        QuantizeExpr(children.head, children(1))
-      }),
-    (FunctionIdentifier("graft_unaccent"),
-      new ExpressionInfo(classOf[UnaccentExpr].getName, "graft_unaccent"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          s"graft_unaccent expects 1 argument, got ${children.length}")
-        UnaccentExpr(children.head)
-      }),
-    (FunctionIdentifier("graft_image_meta"),
-      new ExpressionInfo(classOf[ImageMetaExpr].getName, "graft_image_meta"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          s"graft_image_meta expects 1 argument, got ${children.length}")
-        ImageMetaExpr(children.head)
-      }),
-    (FunctionIdentifier("graft_audio_meta"),
-      new ExpressionInfo(classOf[AudioMetaExpr].getName,
-        "graft_audio_meta"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          s"graft_audio_meta expects 1 argument, got ${children.length}")
-        AudioMetaExpr(children.head)
-      }),
-    (FunctionIdentifier("graft_audio_pcm"),
-      new ExpressionInfo(classOf[AudioPcmExpr].getName,
-        "graft_audio_pcm"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          s"graft_audio_pcm expects 1 argument, got ${children.length}")
-        AudioPcmExpr(children.head)
-      }),
-    (FunctionIdentifier("graft_video_meta"),
-      new ExpressionInfo(classOf[VideoMetaExpr].getName,
-        "graft_video_meta"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1,
-          s"graft_video_meta expects 1 argument, got ${children.length}")
-        VideoMetaExpr(children.head)
-      }),
-    (FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[ShinglesExpr].getName, "graft_shingles"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          s"graft_shingles expects 2 arguments, got ${children.length}")
-        ShinglesExpr(children.head, children(1))
-      }))
+    ("graft_dot", classOf[DotProductExpr], 2,
+      c => DotProductExpr(c(0), c(1))),
+    ("graft_hash60", classOf[Hash60Expr], 1, c => Hash60Expr(c(0))),
+    ("graft_max_abs", classOf[MaxAbsExpr], 1, c => MaxAbsExpr(c(0))),
+    ("graft_quantize", classOf[QuantizeExpr], 2,
+      c => QuantizeExpr(c(0), c(1))),
+    ("graft_unaccent", classOf[UnaccentExpr], 1, c => UnaccentExpr(c(0))),
+    ("graft_image_meta", classOf[ImageMetaExpr], 1,
+      c => ImageMetaExpr(c(0))),
+    ("graft_audio_meta", classOf[AudioMetaExpr], 1,
+      c => AudioMetaExpr(c(0))),
+    ("graft_audio_pcm", classOf[AudioPcmExpr], 1, c => AudioPcmExpr(c(0))),
+    ("graft_video_meta", classOf[VideoMetaExpr], 1,
+      c => VideoMetaExpr(c(0))),
+    ("graft_shingles", classOf[ShinglesExpr], 2,
+      c => ShinglesExpr(c(0), c(1))))
+
+  /** (name, info, builder) triples for every graft SQL function; each
+    * builder rejects a wrong argument count. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo,
+      Seq[Expression] => Expression)] =
+    rows.map { case (name, cls, arity, make) =>
+      val builder = (children: Seq[Expression]) => {
+        require(children.length == arity,
+          s"$name expects $arity argument${if (arity == 1) "" else "s"}, " +
+            s"got ${children.length}")
+        make(children)
+      }
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+        builder)
+    }
 
   /** Register into an already-running session's function registry. */
   def register(spark: SparkSession): Unit = {

@@ -1399,17 +1399,23 @@ object Dedup {
       posexplode(bandKeys).as(Seq("band_idx", "band_key")))
   }
 
+  /** Times [[repPairs]] actually ran — the plan-pin counter for the
+    * single-derivation property: memo consumers (q53/q73/q74/q77) must
+    * never re-run the LSH pipeline within a session. */
+  private[graft] val repPairComputes =
+    new java.util.concurrent.atomic.AtomicInteger(0)
+
   /** The shared MinHash+LSH candidate/verify pipeline over a canonical
     * `doc_id`/`text` frame: exact-dup collapse → 16-perm minhash over
     * representatives → 4×4 banded bucket-join (capped) → exact-Jaccard
     * verification ≥ `minJac`. Returns (members, repPairs), both
     * localCheckpoint-materialized (see the q27 entry docs for the full
-    * scale argument; the counter/plan pins live in
+    * scale argument; the plan pin lives in
     * [[graft.queries.TextPipeline]]). */
   private[graft] def repPairs(d: DataFrame,
       minJac: Double = 0.8): (DataFrame, DataFrame) = {
     val s = d.sparkSession
-    graft.queries.TextPipeline.repPairComputes.incrementAndGet()
+    repPairComputes.incrementAndGet()
     val members = exactGroups(d)
       .localCheckpoint() // one narrow row per doc — corpus-growth, so
       // checkpoint (executor disk), never cache

@@ -162,27 +162,18 @@ object Planner {
     s"$col >= $lo and $col $op $hi"
   }
 
-  /** Wrap a user query with a range predicate on the partition column —
+  /** The data query of one range: `query` restricted by `predicate` —
     * the pushdown SQL rewrite of conecta-core/src/source/postgres.rs:488-510. */
-  def wrapQueryWithBounds(query: String, col: String, lo: Long, hi: Long,
-      isLast: Boolean): String =
-    wrapWithPredicate(query, boundsPredicate(col, lo, hi, isLast))
-
-  /** The data query of one range: `query` restricted by `predicate`. */
   def wrapWithPredicate(query: String, predicate: String): String =
     s"select * from ($query) as query_inner where $predicate"
 
-  /** One range predicate per range, `<=` on the last. */
+  /** One range predicate per range, `<=` on the last —
+    * conecta-core/src/partition.rs:116-134. */
   private def rangePredicates(col: String,
       ranges: Seq[(Long, Long)]): Seq[String] =
     ranges.zipWithIndex.map { case ((lo, hi), i) =>
       boundsPredicate(col, lo, hi, isLast = i == ranges.length - 1)
     }
-
-  /** One bounded SQL string per range — conecta-core/src/partition.rs:116-134. */
-  def createBoundedQueries(query: String, col: String,
-      ranges: Seq[(Long, Long)]): Seq[String] =
-    rangePredicates(col, ranges).map(wrapWithPredicate(query, _))
 
   /** Orchestrate config → (optional min/max fetch) → bounded queries, mirroring
     * conecta-core/src/metadata.rs:27-83. `fetchMinMax` and `fetchCounts` are

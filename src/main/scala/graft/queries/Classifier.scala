@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Graft
 import graft.functions.TextFunctions._
+import graft.sources.Memo
 
 /** The trained model-based quality classifier (q151–q153) — the
   * fastText/DCLM/FineWeb-Edu-style discriminator that modern curation
@@ -57,12 +58,7 @@ object Classifier {
   /** Trained models per (session, dir, variant) — model-grain driver
     * rows (≤ buckets+1), the bpeMemo discipline: q151/q152 share one
     * training run per session instead of re-deriving it. */
-  private val clfMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), Array[(Long, Long)]]()
-
-  private[graft] def clearClfMemo(): Unit = clfMemo.clear()
-
-  private[graft] def clfMemoSize: Int = clfMemo.size()
+  private val clfMemo = Memo[Array[(Long, Long)]]("clf")
 
   /** The balanced training seed over `d`: all docs of the target source
     * (y=1) plus negatives hash-sampled at rate 1/r, r = ⌊neg/pos⌋
@@ -87,14 +83,14 @@ object Classifier {
     // so a mid-session knob change can never serve a stale model
     val variant = maxId.map(c => s"cut$c").getOrElse("full") +
       s"#b${bucketsOf(s)}#i${itersOf(s)}#lr${lrOf(s)}#t${tgtOf(s)}"
-    clfMemo.computeIfAbsent((s, dir, variant), _ => {
+    clfMemo(s, Some(s"$dir/documents.parquet"), variant) {
       val d0 = Graft.parquetSource(s, dir).table("documents")
       val d = maxId.map(c => d0.where(col("doc_id") < c)).getOrElse(d0)
       graft.ops.Select.classifierTrain(
           balancedSeed(d, tgtOf(s)), "y", "doc_id", "text",
           bucketsOf(s), itersOf(s), lrOf(s))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
-    })
+    }
   }
 
   private def tgtOf(s: SparkSession): String =

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Graft
 import graft.functions.EmbeddingFunctions._
+import graft.sources.Memo
 
 /** Similarity search over the `embeddings` table (Array[Float], 64-dim)
   * — ANN baseline + LSH scale path (SURVEY.md §7.2 step 7).
@@ -80,39 +81,32 @@ object Embeddings {
         sqrt(dotNative(col("qv"), col("qv"))).as("qn"): _*)
   }
 
+  /** Session memo of the q169 PCA component frame — metadata grain
+    * ((k+1)·|dims| rows); q169 the DETECTOR refreshes, q170 the
+    * projection CONSUMER reuses (the pairMemo discipline). */
+  private val pcaMemo = Memo[DataFrame]("pca")
+
+  /** The session's embeddings file — the input every embedding memo is
+    * fingerprinted on. */
+  private def embFile(dir: String) = Some(s"$dir/embeddings.parquet")
+
+  private def pcaCompsOf(s: SparkSession, dir: String,
+      refresh: Boolean): DataFrame = {
+    def compute = graft.ops.Embed.pca(
+      Graft.parquetSource(s, dir).table("embeddings"), 2, 6)
+    if (refresh) pcaMemo.put(s, embFile(dir))(compute)
+    else pcaMemo(s, embFile(dir))(compute)
+  }
+
   /** Session-level memo of [[computeAnnPairs]] results, keyed by
-    * (session, dir). Same producer/consumer convention as
+    * (session, embeddings file). Same producer/consumer convention as
     * [[TextPipeline]]'s pair memo: q31 (the DETECTOR) always recomputes
     * and refreshes the entry — its benchmarked cost is the real
     * pipeline — while q60 (the dedup CONSUMER) reuses the session's last
     * computation, so detect-then-dedup sessions pay the LSH pipeline
     * once. Entries are localCheckpoint-materialized with no cached
     * catalog tables left behind. */
-  /** Session memo of the q169 PCA component frame — metadata grain
-    * ((k+1)·|dims| rows); q169 the DETECTOR refreshes, q170 the
-    * projection CONSUMER reuses (the pairMemo discipline). */
-  private val pcaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  private[graft] def clearPcaMemo(): Unit = pcaMemo.clear()
-
-  private[graft] def pcaMemoSize: Int = pcaMemo.size()
-
-  private def pcaCompsOf(s: SparkSession, dir: String,
-      refresh: Boolean): DataFrame = {
-    val key = (s, dir)
-    def compute = graft.ops.Embed.pca(
-      Graft.parquetSource(s, dir).table("embeddings"), 2, 6)
-    if (refresh) { val f = compute; pcaMemo.put(key, f); f }
-    else pcaMemo.computeIfAbsent(key, _ => compute)
-  }
-
-  private val annMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  private[graft] def clearAnnMemo(): Unit = annMemo.clear()
-
-  private[graft] def annMemoSize: Int = annMemo.size
+  private val annMemo = Memo[DataFrame]("ann")
 
   /** Physical plan of q46's last cell-assignment aggregate, captured for
     * plan-quality tests (the assignment runs eagerly inside the
@@ -266,20 +260,21 @@ object Embeddings {
         col("r.score").as("score"))
 
   /** Session memo of the final k-means frame (vec_id, cluster, score, v,
-    * nrm), keyed by (session, dir, k, iters) — the inputs that determine
-    * the clustering, so a conf change can never serve a memo entry
-    * computed under the old parameters. q80 (the CLUSTERING) always
-    * recomputes and refreshes; q81/q85 (the CONSUMERS) reuse the
+    * nrm), keyed by (session, embeddings file, k, iters) — the inputs
+    * that determine the clustering, so a conf change can never serve a
+    * memo entry computed under the old parameters. q80 (the CLUSTERING)
+    * always recomputes and refreshes; q81/q85 (the CONSUMERS) reuse the
     * session's last run, same convention as [[annMemo]]. */
-  private val kmMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), DataFrame]()
+  private val kmMemo = Memo[DataFrame]("km")
 
-  private def kmMemoKey(s: SparkSession, dir: String) =
-    (s, dir, kmK(s), kmIters(s))
-
-  private[graft] def clearKmMemo(): Unit = kmMemo.clear()
-
-  private[graft] def kmMemoSize: Int = kmMemo.size
+  /** The session's k-means frame: read-through, or recomputed and
+    * stored (`refresh`, q80's path). */
+  private def kmeansOf(s: SparkSession, dir: String,
+      refresh: Boolean = false): DataFrame = {
+    val params = (kmK(s), kmIters(s))
+    if (refresh) kmMemo.put(s, embFile(dir), params)(computeKmeans(s, dir))
+    else kmMemo(s, embFile(dir), params)(computeKmeans(s, dir))
+  }
 
   /** The labeled, cluster-capped pair scaffold shared by the
     * contrastive-mining pair (q96, q99): session k-means join labels,
@@ -290,8 +285,7 @@ object Embeddings {
     * (km, labels, capped, mates). */
   private def labeledClusterPairFrames(s: SparkSession, dir: String,
       what: String): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val km = kmMemo.computeIfAbsent(kmMemoKey(s, dir),
-      _ => computeKmeans(s, dir))
+    val km = kmeansOf(s, dir)
     val labels = Graft.parquetSource(s, dir).table("embeddings")
       .select(col("vec_id"), col("label"))
     val m = km.select(col("vec_id"), col("cluster"), col("v"),
@@ -412,8 +406,7 @@ object Embeddings {
 
     // ---- q31: hyperplane-LSH near-duplicate pairs, cosine ≥ 0.45 -------
     "q31_ann_lsh" -> ((s, dir) => {
-      val pairs = computeAnnPairs(s, dir)
-      annMemo.put((s, dir), pairs)
+      val pairs = annMemo.put(s, embFile(dir))(computeAnnPairs(s, dir))
       pairs.orderBy("v1", "v2")
     }),
 
@@ -427,8 +420,7 @@ object Embeddings {
     // rounds). Oracle: recursive-CTE transitive closure over the same
     // pair SQL — an independent formulation of the same components.
     "q60_embedding_dedup" -> ((s, dir) => {
-      val pairs = annMemo.computeIfAbsent((s, dir),
-        _ => computeAnnPairs(s, dir))
+      val pairs = annMemo(s, embFile(dir))(computeAnnPairs(s, dir))
       graft.plans.Components.keepList(pairs.select(col("v1"), col("v2")))
         .withColumnRenamed("id", "vec_id")
         .orderBy("vec_id")
@@ -784,8 +776,7 @@ object Embeddings {
     // rows never shuffle. At 100 TB this is the standard pre-step for
     // cluster-based curation (SemDeDup, cluster-balanced sampling).
     "q80_kmeans" -> ((s, dir) => {
-      val km = computeKmeans(s, dir)
-      kmMemo.put(kmMemoKey(s, dir), km)
+      val km = kmeansOf(s, dir, refresh = true)
       km.select(col("vec_id"), col("cluster"), col("score"))
         .orderBy("vec_id")
     }),
@@ -810,8 +801,7 @@ object Embeddings {
     // members surface as kept, never silently quadratic). Clusters come
     // from the session memo when q80 already ran.
     "q81_semdedup" -> ((s, dir) => {
-      val km = kmMemo.computeIfAbsent(kmMemoKey(s, dir),
-        _ => computeKmeans(s, dir))
+      val km = kmeansOf(s, dir)
       val capped = TextPipeline.capBuckets(
         km.select(col("vec_id"), col("cluster"), col("v"), col("nrm")),
         Seq("cluster"), s, "q81 semdedup clusters",
@@ -1244,8 +1234,7 @@ object Embeddings {
     // guards). Clusters come from the session memo when q80 already
     // ran.
     "q85_cluster_sample" -> ((s, dir) => {
-      val km = kmMemo.computeIfAbsent(kmMemoKey(s, dir),
-        _ => computeKmeans(s, dir))
+      val km = kmeansOf(s, dir)
       val scored = km.select(col("cluster").as("q_id"), col("vec_id"),
         (-(graft.functions.TextFunctions.hash60(
             col("vec_id").cast("string")) % lit(2147483647L))
@@ -1377,9 +1366,8 @@ object Embeddings {
       // the DETECTOR always recomputes and refreshes the session memo
       // (its benchmarked cost is the real pipeline); q121, the
       // CONSUMER, reuses the session's last run — the q27/q53 pattern
-      val r = computePqAnn(s, dir).localCheckpoint() // 25 rows
-      pqMemo.put(pqMemoKey(s, dir), r)
-      r
+      pqMemo.put(s, embFile(dir), pqParams(s))(
+        computePqAnn(s, dir).localCheckpoint()) // 25 rows
     }),
 
     // ---- q121: PQ recall audit vs exact ground truth -------------------
@@ -1395,8 +1383,8 @@ object Embeddings {
         .where(col("rank") <= 5)
         .select(col("q_id"), col("vec_id"))
         .localCheckpoint() // ≤ 5 rows per query; read by hits AND qids
-      val approx = pqMemo.computeIfAbsent(pqMemoKey(s, dir),
-          _ => computePqAnn(s, dir).localCheckpoint())
+      val approx = pqMemo(s, embFile(dir), pqParams(s))(
+          computePqAnn(s, dir).localCheckpoint())
         .select(col("q_id"), col("vec_id"))
       // approx is k-per-query and hits one-per-query; the checkpointed
       // inputs carry no size stats, so hint both joins broadcast
@@ -1681,19 +1669,13 @@ object Embeddings {
 
   /** Session memo of q117's 25-row ranking, keyed by every input that
     * determines it (conf-resolved m/ksub/C fold in via the key). */
-  private val pqMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int, Int), DataFrame]()
+  private val pqMemo = Memo[DataFrame]("pq")
 
-  private def pqMemoKey(s: SparkSession, dir: String) =
-    (s, dir,
-      s.conf.getOption("graft.pq.m").map(_.toInt).getOrElse(PqMDefault),
+  private def pqParams(s: SparkSession) =
+    (s.conf.getOption("graft.pq.m").map(_.toInt).getOrElse(PqMDefault),
       s.conf.getOption("graft.pq.ksub").map(_.toInt)
         .getOrElse(PqKsubDefault),
       rerankC(s))
-
-  private[graft] def clearPqMemo(): Unit = pqMemo.clear()
-
-  private[graft] def pqMemoSize: Int = pqMemo.size
 
   /** The persisted IVFPQ snapshot artifacts behind q123 — router
     * centroids, codebooks (q120's, shared by identity), the

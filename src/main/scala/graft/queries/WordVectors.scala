@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Graft
+import graft.sources.Memo
 
 /** Count-based word/document embeddings over `documents` — the text
   * side's answer to "semantic similarity with NO embedding table":
@@ -35,12 +36,7 @@ object WordVectors {
   /** Session memo of the trained word-vector frame — metadata grain
     * (k·V rows); q173 the TRAINER refreshes, q174 the doc-vector
     * CONSUMER reuses (the pcaMemo discipline). */
-  private val wvMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  private[graft] def clearWvMemo(): Unit = wvMemo.clear()
-
-  private[graft] def wvMemoSize: Int = wvMemo.size()
+  private val wvMemo = Memo[DataFrame]("wv")
 
   /** The frozen snapshot vocabulary behind q176 — persisted once per
     * (dir, cut) via [[graft.sources.SideTable]]. */
@@ -89,17 +85,15 @@ object WordVectors {
   /** Session memo of the LSA long-form frame (metadata grain after the
     * rescale: 3 rows/doc) — q182 the TRAINER refreshes, q183 the
     * top-k CONSUMER reuses (the wvMemo discipline). */
-  private val lsaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  private val lsaMemo = Memo[DataFrame]("lsa")
 
   private def lsaOf(s: SparkSession, dir: String,
       refresh: Boolean): DataFrame = {
-    val key = (s, dir)
     def compute = graft.ops.Text.lsaVectors(
       Graft.parquetSource(s, dir).table("documents"), TopV, K)
       .localCheckpoint()
-    if (refresh) { val f = compute; lsaMemo.put(key, f); f }
-    else lsaMemo.computeIfAbsent(key, _ => compute)
+    val docs = Some(s"$dir/documents.parquet")
+    if (refresh) lsaMemo.put(s, docs)(compute) else lsaMemo(s, docs)(compute)
   }
 
   /** The frozen LSA snapshot artifacts behind q184, persisted once per
@@ -143,12 +137,11 @@ object WordVectors {
 
   private def wordVecsOf(s: SparkSession, dir: String,
       refresh: Boolean): DataFrame = {
-    val key = (s, dir)
     def compute = graft.ops.Text.wordVectors(
       Graft.parquetSource(s, dir).table("documents"), TopV, K)
       .localCheckpoint()
-    if (refresh) { val f = compute; wvMemo.put(key, f); f }
-    else wvMemo.computeIfAbsent(key, _ => compute)
+    val docs = Some(s"$dir/documents.parquet")
+    if (refresh) wvMemo.put(s, docs)(compute) else wvMemo(s, docs)(compute)
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -51,19 +51,20 @@ final class ParquetSource(val spark: SparkSession, dir: String) extends Source {
     }
   }
 
-  /** Register views once per (session, dir) — re-running registerAll on
-    * every query re-reads each table's parquet footer, pure overhead in a
-    * hot loop (temp views are session-scoped and the testdata directories
-    * are immutable, so registration cannot go stale). */
+  /** Register views once per (session, dir) and data fingerprint —
+    * re-running registerAll on every query re-reads each table's parquet
+    * footer, pure overhead in a hot loop; a rewritten file under `dir`
+    * changes the fingerprint and re-registers, so views never read a
+    * stale file listing. */
   def ensureRegistered(): Unit =
-    if (ParquetSource.registered.add((spark, dir))) registerAll()
+    ParquetSource.views(spark, Some(dir))(registerAll())
 
   def table(name: String): DataFrame = {
     require(tables.contains(name), s"unknown table $name in $dir " +
       s"(have: ${tables.keys.toSeq.sorted.mkString(", ")})")
     ensureRegistered() // sets nanosAsLong before the footer is interpreted
-    ParquetSource.frames.computeIfAbsent((spark, tables(name)),
-      _ => spark.read.parquet(tables(name)))
+    ParquetSource.frames(spark, Some(tables(name)))(
+      spark.read.parquet(tables(name)))
   }
 
   override def execute(query: String): DataFrame = {
@@ -73,18 +74,15 @@ final class ParquetSource(val spark: SparkSession, dir: String) extends Source {
 }
 
 object ParquetSource {
-  /** (session, dir) pairs whose views are already registered. Sessions key
-    * by reference equality (SparkSession has no value equals), which is
-    * collision-free; the strong reference is fine — a JVM holds a handful
-    * of sessions, not a stream of them. */
-  private val registered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
+  /** (session, dir) whose views are registered against the dir's
+    * current files. */
+  private val views = Memo[Unit]("views")
 
   /** (session, path) → DataFrame — parquet footer/schema reads happen
-    * once per table per session, not once per query. DataFrames are
-    * immutable plan descriptions, so sharing one across queries is safe. */
-  private val frames = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+    * once per table per session and file version, not once per query.
+    * DataFrames are immutable plan descriptions, so sharing one across
+    * queries is safe. */
+  private val frames = Memo[DataFrame]("frames")
 
   def apply(spark: SparkSession, dir: String): ParquetSource =
     new ParquetSource(spark, dir)

@@ -3,7 +3,6 @@ package graft.sources
 import java.io.{File, PrintWriter}
 import java.security.MessageDigest
 import java.util.UUID
-import java.util.concurrent.{ConcurrentHashMap, ExecutionException, FutureTask}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -19,10 +18,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    files' names/sizes/mtimes, so an in-place rewrite of the corpus
   *    that keeps `max(doc_id)` unchanged gets a NEW artifact instead of
   *    silently serving a stale one.
-  *  - '''build-once''' — per (session, full key), builds are memoized as
-  *    [[FutureTask]]s: `computeIfAbsent` only CREATES the task (cheap,
-  *    inside the map's bin lock); the Spark job runs outside the lock,
-  *    so concurrent `ensure` calls for different keys never serialize
+  *  - '''build-once''' — per (session, full key), builds are memoized in
+  *    the `side` [[Memo]]: the Spark job runs outside any map lock, so
+  *    concurrent `ensure` calls for different keys never serialize
   *    behind one build. A failed build is evicted so the next call can
   *    retry.
   *  - '''cross-JVM reuse''' — artifact dirs carry a `_graft_manifest
@@ -54,8 +52,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SideTable {
 
-  private val memo =
-    new ConcurrentHashMap[(SparkSession, String), FutureTask[String]]()
+  /** Artifact paths per (session, `name#fullKey`) — the full key
+    * already carries the data fingerprint. */
+  private val memo = Memo[String]("side")
 
   private def md5hex(s: String): String = MessageDigest.getInstance("MD5")
     .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -183,17 +182,9 @@ object SideTable {
     val fk = fullKey(key, dataPath)
     val refresh =
       s.conf.get("graft.artifacts.refresh", "false").toBoolean
-    if (refresh) memo.remove((s, s"$name#$fk"))
-    val task = memo.computeIfAbsent((s, s"$name#$fk"),
-      _ => new FutureTask[String](() =>
-        buildAt(s, name, fk, refresh, partitionBy, build)))
-    task.run() // no-op if another thread is already running it
-    try task.get()
-    catch {
-      case e: ExecutionException =>
-        memo.remove((s, s"$name#$fk"), task) // allow retry after failure
-        throw e.getCause
-    }
+    def run = buildAt(s, name, fk, refresh, partitionBy, build)
+    if (refresh) memo.put(s, None, s"$name#$fk")(run)
+    else memo(s, None, s"$name#$fk")(run)
   }
 
   private def buildAt(s: SparkSession, name: String, fk: String,
@@ -283,10 +274,9 @@ object SideTable {
   def append(s: SparkSession, name: String, key: String,
       dataPath: Option[String] = None)(delta: DataFrame): String = {
     val fk = fullKey(key, dataPath)
-    val task = memo.get((s, s"$name#$fk"))
-    require(task != null,
-      s"append on side-table $name before ensure() in this session")
-    val path = task.get()
+    val path = memo.get(s, None, s"$name#$fk").getOrElse(
+      throw new IllegalArgumentException(
+        s"append on side-table $name before ensure() in this session"))
     // The artifact's contents are about to change under an UNCHANGED
     // identity: a bloom companion compiled from the pre-append rows
     // would have false negatives for the appended keys, breaking the
@@ -372,14 +362,10 @@ object SideTable {
     invalidate(s, name, fullKey(key, dataPath))
 
   private def invalidate(s: SparkSession, name: String, fk: String): Unit = {
-    memo.remove((s, s"$name#$fk"))
+    memo.remove(s, None, s"$name#$fk")
     val root = new File(s.conf.get("graft.artifacts.dir",
       sys.props("java.io.tmpdir")))
     val dir = new File(root, s"graft_${name}_${md5hex(fk)}")
     if (dir.exists()) deleteTree(dir)
   }
-
-  private[graft] def clear(): Unit = memo.clear()
-
-  private[graft] def size: Int = memo.size()
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.TextPipeline
+import graft.sources.Memo
 
 /** Long-lived sessions must not accumulate cached tables from queries
   * that cache intermediates for their own internal self-joins: the
@@ -48,21 +49,25 @@ class CacheHygieneSpec extends AnyFunSuite {
   }
 
   test("q53 reuses the session's q27 pair computation (memo populated)") {
-    TextPipeline.clearPairMemo()
-    assert(TextPipeline.pairMemoSize === 0)
-    // q27 computes and stores under (session, dir, cap); q53's
-    // computeIfAbsent then finds that entry instead of re-deriving the
-    // LSH pipeline (ConcurrentHashMap contract: fn not invoked when the
-    // key is present — the entry count staying at 1 proves key identity).
+    Memo.clearAll()
+    val memo = Memo.named("pair")
+    assert(memo.size === 0)
+    // q27 computes and stores under (session, documents file, cap);
+    // q53's read-through lookup then finds that entry instead of
+    // re-deriving the LSH pipeline (the memo contract: compute not run
+    // when the key is present — the entry count staying at 1 proves key
+    // identity, the hit count that q53 was served from it).
     val pairs = TextPipeline.defs("q27_minhash_lsh")(spark, dir)
     val pairDocs = pairs.select("d1").union(pairs.select("d2"))
       .distinct().collect().map(_.getLong(0)).toSet
-    assert(TextPipeline.pairMemoSize === 1)
+    assert(memo.size === 1)
+    val hits = memo.hits
     val clustered = TextPipeline.defs("q53_dedup_clusters")(spark, dir)
       .collect().map(_.getLong(0)).toSet
-    assert(TextPipeline.pairMemoSize === 1)
+    assert(memo.size === 1)
+    assert(memo.hits === hits + 1)
     // and the shared frames give the identical doc universe
     assert(clustered === pairDocs)
-    TextPipeline.clearPairMemo()
+    Memo.clearAll()
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Ingest
-import graft.sources.SideTable
+import graft.sources.{Memo, SideTable}
 
 /** Lifecycle test of the public crawl loop — OpsApiSpec covers single
   * `Ingest` calls; this proves a USER can run multiple crawl epochs
@@ -162,7 +162,7 @@ class CrawlLoopLifecycleSpec extends AnyFunSuite {
     } finally {
       prev.fold(s.conf.unset("graft.artifacts.dir"))(
         s.conf.set("graft.artifacts.dir", _))
-      SideTable.clear()
+      Memo.clearAll()
     }
   }
 
@@ -214,7 +214,7 @@ class CrawlLoopLifecycleSpec extends AnyFunSuite {
     } finally {
       prev.fold(s.conf.unset("graft.artifacts.dir"))(
         s.conf.set("graft.artifacts.dir", _))
-      SideTable.clear()
+      Memo.clearAll()
     }
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.Embeddings
+import graft.sources.Memo
 
 /** Third-formulation equivalence for the clustering family: a
   * single-threaded Scala reimplementation of deterministic Lloyd's (the
@@ -134,7 +134,7 @@ class KMeansSpec extends AnyFunSuite {
     // change the computed answer, reproduce the brute-force
     // reimplementation at the SAME parameters, and never serve a memo
     // entry computed under different ones.
-    Embeddings.clearKmMemo()
+    Memo.clearAll()
     spark.conf.set("graft.kmeans.k", "4")
     spark.conf.set("graft.kmeans.iters", "2")
     spark.conf.set("graft.semdedup.tau", "0.6")
@@ -155,7 +155,7 @@ class KMeansSpec extends AnyFunSuite {
       spark.conf.unset("graft.kmeans.k")
       spark.conf.unset("graft.kmeans.iters")
       spark.conf.unset("graft.semdedup.tau")
-      Embeddings.clearKmMemo()
+      Memo.clearAll()
     }
   }
 
@@ -329,12 +329,12 @@ class KMeansSpec extends AnyFunSuite {
   }
 
   test("q81 reuses the session's q80 clustering (memo populated)") {
-    Embeddings.clearKmMemo()
-    assert(Embeddings.kmMemoSize === 0)
+    Memo.clearAll()
+    assert(Memo.named("km").size === 0)
     SparkEntry.queries("q80_kmeans")(spark, dir).count()
-    assert(Embeddings.kmMemoSize === 1)
+    assert(Memo.named("km").size === 1)
     SparkEntry.queries("q81_semdedup")(spark, dir).count()
-    assert(Embeddings.kmMemoSize === 1)
-    Embeddings.clearKmMemo()
+    assert(Memo.named("km").size === 1)
+    Memo.clearAll()
   }
 }

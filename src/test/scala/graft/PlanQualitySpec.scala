@@ -816,10 +816,10 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("q93/q94 consume the session pair set — no re-derivation") {
     SparkEntry.queries("q74_quality_keep")(spark, dir).count() // fill memo
-    val n = graft.queries.TextPipeline.repPairComputes.get()
+    val n = graft.ops.Dedup.repPairComputes.get()
     SparkEntry.queries("q93_curation_ledger")(spark, dir).count()
     SparkEntry.queries("q94_source_attribution")(spark, dir).count()
-    assert(graft.queries.TextPipeline.repPairComputes.get() === n,
+    assert(graft.ops.Dedup.repPairComputes.get() === n,
       "q93/q94 re-ran the LSH pair derivation")
   }
 
@@ -1037,9 +1037,9 @@ class PlanQualitySpec extends AnyFunSuite {
     // re-run the LSH pipeline. Counter-pinned: computeRepPairs
     // increments per actual derivation.
     SparkEntry.queries("q74_quality_keep")(spark, dir).count() // fill memo
-    val n = graft.queries.TextPipeline.repPairComputes.get()
+    val n = graft.ops.Dedup.repPairComputes.get()
     SparkEntry.queries("q77_curation_pipeline")(spark, dir).count()
-    assert(graft.queries.TextPipeline.repPairComputes.get() === n,
+    assert(graft.ops.Dedup.repPairComputes.get() === n,
       "q77 re-ran the LSH pair derivation")
   }
 

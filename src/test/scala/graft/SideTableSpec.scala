@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.SideTable
+import graft.sources.{Memo, SideTable}
 
 /** Contract of the persisted-artifact registry behind q67/q69/q72: an
   * artifact is built exactly once per (session, name, key, data
@@ -78,7 +78,7 @@ class SideTableSpec extends AnyFunSuite {
       assert(m.get._3 > 0L)
       // simulate a fresh JVM: the in-memory memo is gone but the files
       // and manifest survive — ensure() must reuse, not rebuild
-      SideTable.clear()
+      Memo.clearAll()
       val p2 = SideTable.ensure(spark, "spec_manifest", "k1")(build)
       assert(p2 === p)
       assert(builds.get() === 1, "fresh session re-built a valid artifact")

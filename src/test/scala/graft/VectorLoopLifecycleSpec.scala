@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Embed
-import graft.sources.SideTable
+import graft.sources.{Memo, SideTable}
 
 /** Lifecycle test of the public VECTOR ingest loop — the IVFPQ analogue
   * of [[CrawlLoopLifecycleSpec]]: a user runs multiple embedding-batch
@@ -227,7 +227,7 @@ class VectorLoopLifecycleSpec extends AnyFunSuite {
     } finally {
       prev.fold(s.conf.unset("graft.artifacts.dir"))(
         s.conf.set("graft.artifacts.dir", _))
-      SideTable.clear()
+      Memo.clearAll()
     }
   }
 }
