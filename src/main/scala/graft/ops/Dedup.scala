@@ -1405,13 +1405,17 @@ object Dedup {
   private[graft] val repPairComputes =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** Physical plan of the last [[repPairs]] candidate bucket-join,
+    * captured for plan-quality tests (the join runs eagerly inside the
+    * pipeline, so it does not appear in q27's returned plan). */
+  @volatile private[graft] var lastCandidatePlan: String = ""
+
   /** The shared MinHash+LSH candidate/verify pipeline over a canonical
     * `doc_id`/`text` frame: exact-dup collapse → 16-perm minhash over
     * representatives → 4×4 banded bucket-join (capped) → exact-Jaccard
     * verification ≥ `minJac`. Returns (members, repPairs), both
     * localCheckpoint-materialized (see the q27 entry docs for the full
-    * scale argument; the plan pin lives in
-    * [[graft.queries.TextPipeline]]). */
+    * scale argument). */
   private[graft] def repPairs(d: DataFrame,
       minJac: Double = 0.8): (DataFrame, DataFrame) = {
     val s = d.sparkSession
@@ -1442,8 +1446,7 @@ object Dedup {
         col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .distinct()
-    graft.queries.TextPipeline.lastCandidatePlan =
-      candLazy.queryExecution.executedPlan.toString
+    lastCandidatePlan = candLazy.queryExecution.executedPlan.toString
     val cand = candLazy
       .localCheckpoint() // eager + tiny: read to build the candDocs
       // broadcast AND by the verify join

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Par
 import graft.functions.EmbeddingFunctions.dotNative
 
 /** Public embedding operators over arbitrary `id`/`vector` frames:
@@ -761,41 +762,31 @@ object Embed {
     // launches of mostly fixed overhead; overlapping them cut q117's
     // wall ~2× at test SFs and the results are identical — each
     // subspace's arithmetic is self-contained and deterministic)
-    import scala.concurrent.{Await, Future, blocking}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // blocking{} tells the global (fork-join) pool these tasks park on
-    // Spark actions, so it spawns compensating threads instead of
-    // silently serializing on small/saturated pools; the finite timeout
-    // turns a hung Spark job into a loud failure instead of a hung caller
-    val trained = (0 until m).map { j =>
-      Future(blocking(graft.queries.Embeddings.kmeansCentroids(
-          pqSliceOf(e, j, sub).localCheckpoint(), ksub, iters,
-          capture = false)
-        .select(lit(j).as("sub"), col("cid"), col("cv"), col("cn"))))
+    Par.scope(e.sparkSession, "pq-train") { p =>
+      (0 until m).map { j =>
+        p.async(s"sub$j")(graft.queries.Embeddings.kmeansCentroids(
+            pqSliceOf(e, j, sub).localCheckpoint(), ksub, iters,
+            capture = false)
+          .select(lit(j).as("sub"), col("cid"), col("cv"), col("cn")))
+      }.map(_.get).reduce(_ unionByName _)
     }
-    trained.map(Await.result(_, pqJobTimeout)).reduce(_ unionByName _)
   }
-
-  /** Generous ceiling for one concurrent PQ training/encode subspace job
-    * — far above any plausible job at any SF, but finite so a hung Spark
-    * job surfaces as a TimeoutException rather than a hung caller. */
-  private val pqJobTimeout = scala.concurrent.duration.Duration(2, "hours")
 
   private def pqEncodeOf(e: DataFrame, cb: DataFrame, m: Int,
       sub: Int): DataFrame = {
-    import scala.concurrent.{Await, Future, blocking}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    (0 until m).map { j =>
-      // the slice feeds ONE assignment pass — no checkpoint needed
-      // (training slices checkpoint because k-means re-reads them);
-      // the m assignments are independent — overlap them like training
-      Future(blocking(
-        graft.queries.Embeddings.kmAssignSlim(pqSliceOf(e, j, sub),
-            cb.where(col("sub") === j)
-              .select(col("cid"), col("cv"), col("cn")))
-          .select(col("vec_id"), col("cid").as(s"c$j"))
-          .localCheckpoint())) // the compressed index slice: 1 code/vector
-    }.map(Await.result(_, pqJobTimeout)).reduce(_.join(_, Seq("vec_id")))
+    Par.scope(e.sparkSession, "pq-encode") { p =>
+      (0 until m).map { j =>
+        // the slice feeds ONE assignment pass — no checkpoint needed
+        // (training slices checkpoint because k-means re-reads them);
+        // the m assignments are independent — overlap them like training
+        p.async(s"sub$j")(
+          graft.queries.Embeddings.kmAssignSlim(pqSliceOf(e, j, sub),
+              cb.where(col("sub") === j)
+                .select(col("cid"), col("cv"), col("cn")))
+            .select(col("vec_id"), col("cid").as(s"c$j"))
+            .localCheckpoint()) // the compressed index slice: 1 code/vector
+      }.map(_.get).reduce(_.join(_, Seq("vec_id")))
+    }
   }
 
   /** ADC + exact re-rank over (codes, codebooks, exact) frames —

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Par
 import graft.functions.TextFunctions._
 
 /** Public ranked-retrieval operators: BM25 over arbitrary corpus/query
@@ -34,46 +35,44 @@ object Retrieval {
       col(corpusTextCol).as("text"))
     val q = queries.select(col(queryIdCol).as("doc_id"),
       col(queryTextCol).as("text"))
-    // the query-side term list is independent of the corpus tf/df
-    // chain — materialize it on a concurrent future so its (small)
-    // shingle pass overlaps the corpus-scale tf + stats actions
-    // instead of serializing after them (guide §2.6; r18)
-    // (`blocking` lets the global pool add a thread while the action
-    // holds this one)
-    val fQtf = scala.concurrent.Future {
-      scala.concurrent.blocking {
+    Par.scope(q.sparkSession, "bm25") { p =>
+      // the query-side term list is independent of the corpus tf/df
+      // chain — materialize it on a concurrent task so its (small)
+      // shingle pass overlaps the corpus-scale tf + stats actions
+      // instead of serializing after them (guide §2.6; r18); a failed
+      // corpus-side action cancels it
+      val fQtf = p.async("query-terms") {
         shingleHashRows(q, 3)
           .select(col("doc_id").as("query_id"), col("h")).distinct()
           .localCheckpoint() // query-side term lists — query-set-bounded
       }
-    }(scala.concurrent.ExecutionContext.global)
-    val tf = shingleHashRows(c, 3)
-      .groupBy(col("doc_id"), col("h")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint() // five consumers (dl/stats/tot/posting join/
-      // scoring join) — re-deriving the shingle stream per consumer
-      // measured slower than one executor-disk checkpoint
-    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    val stats = tf.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .localCheckpoint() // the df model — reused by prune + scoring
-    val tot = tf.agg(sum(col("tf")).as("t_tok"),
-      countDistinct(col("doc_id")).as("n_docs"))
-    val qtf = scala.concurrent.Await.result(fQtf,
-      scala.concurrent.duration.Duration(60, "minutes"))
-    val selfFilter =
-      if (excludeSelf) col("doc_id") =!= col("query_id") else lit(true)
-    val cand = qtf
-      .join(stats.where(col("df") <= dfCap).select(col("h")), "h")
-      .join(tf.select(col("doc_id"), col("h")), "h")
-      .where(selfFilter)
-      .select(col("query_id"), col("doc_id"))
-      .distinct()
-      .localCheckpoint() // df-cap-bounded: ≤ |query terms| · dfCap
-    bm25Rank(cand
-      .join(qtf, Seq("query_id"))
-      .join(tf, Seq("doc_id", "h"))
-      .join(stats, "h")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(tot)), k)
+      val tf = shingleHashRows(c, 3)
+        .groupBy(col("doc_id"), col("h")).agg(count(lit(1)).as("tf"))
+        .localCheckpoint() // five consumers (dl/stats/tot/posting join/
+        // scoring join) — re-deriving the shingle stream per consumer
+        // measured slower than one executor-disk checkpoint
+      val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+      val stats = tf.groupBy(col("h")).agg(count(lit(1)).as("df"))
+        .localCheckpoint() // the df model — reused by prune + scoring
+      val tot = tf.agg(sum(col("tf")).as("t_tok"),
+        countDistinct(col("doc_id")).as("n_docs"))
+      val qtf = fQtf.get
+      val selfFilter =
+        if (excludeSelf) col("doc_id") =!= col("query_id") else lit(true)
+      val cand = qtf
+        .join(stats.where(col("df") <= dfCap).select(col("h")), "h")
+        .join(tf.select(col("doc_id"), col("h")), "h")
+        .where(selfFilter)
+        .select(col("query_id"), col("doc_id"))
+        .distinct()
+        .localCheckpoint() // df-cap-bounded: ≤ |query terms| · dfCap
+      bm25Rank(cand
+        .join(qtf, Seq("query_id"))
+        .join(tf, Seq("doc_id", "h"))
+        .join(stats, "h")
+        .join(dl, "doc_id")
+        .crossJoin(broadcast(tot)), k)
+    }
   }
 
   /** The shared BM25 scoring tail: per-term integer-ppm scores summed

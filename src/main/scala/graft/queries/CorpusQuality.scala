@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Graft
+import graft.{Graft, Par}
 import graft.functions.TextFunctions._
 
 /** Corpus-level quality / curation operators over the `documents` table —
@@ -1020,22 +1020,16 @@ object CorpusQuality {
       val candC = cand.localCheckpoint() // rare-df-bounded
       val candDocs = candC.select(col("doc_id")).distinct()
       // the two candidate-bounded artifact probes are independent given
-      // candDocs — materialize them on concurrent futures so neither
+      // candDocs — materialize them on concurrent tasks so neither
       // serializes the other on the driver (guide §2.6; r18)
-      // (`blocking` lets the global pool add a thread while an action
-      // holds one)
-      val (candPost, dlC) = {
-        import scala.concurrent.{Await, Future, blocking}
-        import scala.concurrent.duration.DurationInt
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.global
-        val fPost = Future(blocking(post
+      val (candPost, dlC) = Par.scope(s, "q105") { p =>
+        val fPost = p.async("postings")(post
           .join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-          .localCheckpoint())) // candidate docs' full postings
-        val fDl = Future(blocking(s.read.parquet(dlPath)
+          .localCheckpoint()) // candidate docs' full postings
+        val fDl = p.async("dl")(s.read.parquet(dlPath)
           .join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-          .localCheckpoint())) // ≤ |candidate docs| rows
-        (Await.result(fPost, 60.minutes), Await.result(fDl, 60.minutes))
+          .localCheckpoint()) // ≤ |candidate docs| rows
+        (fPost.get, fDl.get)
       }
       val tot = s.read.parquet(totPath)
       bm25TopK(candC

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Graft
+import graft.{Graft, Par}
 import graft.functions.TextFunctions._
 
 /** q109 — the composed crawl-ingest batch job: the incremental family's
@@ -53,25 +53,6 @@ object CrawlIngest {
     * re-shingle (generator allowed, but candidate-pruned with the cut
     * pushed to the scan). */
   @volatile private[graft] var lastIngestPlans: String = ""
-
-  /** Driver-side scheduler for the member pipelines: after the shared
-    * gram/meta frames materialize, the members are INDEPENDENT — their
-    * eager steps (localCheckpoint materializations, the cap's stats
-    * job, the delta-artifact writes) run as concurrent Spark actions
-    * from separate driver threads, so member B's candidate join
-    * overlaps member A's artifact probe instead of queueing behind it
-    * (measured 14.2 s serialized → 10.0 s overlapped at sf0.1;
-    * local[32] has the idle cores, and on a cluster the scheduler
-    * interleaves member stages the same way). Daemon threads: a dying
-    * driver must not be held open by the pool. Results never depend on
-    * scheduling — every member is deterministic on its own inputs. */
-  private lazy val memberEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-ingest-member")
-        t.setDaemon(true)
-        t
-      }))
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q109_crawl_ingest" -> ((s, dir) => run(s, dir)),
@@ -150,18 +131,8 @@ object CrawlIngest {
       : (DataFrame, DataFrame, String, String) = {
     // stage timing under the q111 decomposition flag: the dedup member
     // is the epoch barrier, so ITS phase split must be measurable too
-    val timing =
-      s.conf.getOption("graft.stream.timing").contains("true") ||
-        sys.env.get("SPARK_GRAFT_STREAM_TIMING").contains("1")
-    def timed[T](l: String)(b: => T): T =
-      if (!timing) b
-      else {
-        val t0 = System.nanoTime()
-        val r = b
-        System.err.println(f"[q111-timing]     dedup.$l%-8s ${
-          (System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
+    val timer = new PhaseTimer(s, "q111-timing")
+    def timed[T](l: String)(b: => T): T = timer(f"    dedup.$l%-8s")(b)
     val deltaBands = timed("sig")(graft.ops.Dedup.bandRows(
         graft.ops.Dedup.minhashSignaturesOf(sh3))
       .localCheckpoint()) // 4 narrow rows per delta doc
@@ -352,121 +323,117 @@ object CrawlIngest {
 
     val batch = d.where(col("doc_id") >= cut)
 
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.DurationInt
-    implicit val ec: scala.concurrent.ExecutionContext = memberEc
+    Par.scope(s, "q109") { p =>
+      // ---- per-doc metadata: ONE narrow whole-doc projection ----------
+      // materializes concurrently with the gram frame — two independent
+      // batch-slice scans.
+      val fMeta = p.async("meta")(metaFrame(batch).localCheckpoint())
+        // |batch| narrow rows; read by triage, dup flags, and the spine
 
-    // ---- per-doc metadata: ONE narrow whole-doc projection ----------
-    // materializes concurrently with the gram frame — two independent
-    // batch-slice scans.
-    val fMeta = Future(metaFrame(batch).localCheckpoint())
-      // |batch| narrow rows; read by triage, dup flags, and the spine
+      // ---- THE gram frame: ONE TriShingles generator pass -------------
+      // (doc_id, source, term, h1, h2, h3): every member's gram stream is
+      // a projection of this frame — the non-null h3 rows are exactly
+      // shingleHashRows(batch, 3), the (h1, h2) pairs exactly
+      // dualShingleHashRows(batch, 1, 2), the term column exactly the
+      // exploded word stream.
+      val gramsLazy = triShingleHashRows(batch, Seq("source"))
+      val grams = gramsLazy.localCheckpoint() // |batch tokens| rows; read
+        // by all seven members — the whole point of the composed job
+      val meta = fMeta.get
 
-    // ---- THE gram frame: ONE TriShingles generator pass -------------
-    // (doc_id, source, term, h1, h2, h3): every member's gram stream is
-    // a projection of this frame — the non-null h3 rows are exactly
-    // shingleHashRows(batch, 3), the (h1, h2) pairs exactly
-    // dualShingleHashRows(batch, 1, 2), the term column exactly the
-    // exploded word stream.
-    val gramsLazy = triShingleHashRows(batch, Seq("source"))
-    val grams = gramsLazy.localCheckpoint() // |batch tokens| rows; read
-      // by all seven members — the whole point of the composed job
-    val meta = Await.result(fMeta, 60.minutes)
+      // The members below are independent given (grams, meta) — each
+      // task runs one member's eager steps (checkpoint
+      // materializations, the cap's stats job, its delta-artifact write)
+      // as concurrent Spark actions, so member B's candidate join
+      // overlaps member A's artifact probe instead of queueing behind it
+      // (measured 14.2 s serialized → 10.0 s overlapped at sf0.1); the
+      // delta ensures also feed the artifacts here, inside the member
+      // that derives the delta frame.
 
-    // The members below are independent given (grams, meta) — each
-    // future runs one member's eager steps (checkpoint
-    // materializations, the cap's stats job, its delta-artifact write)
-    // as concurrent Spark actions; the delta ensures also feed the
-    // artifacts here, inside the member that derives the delta frame.
+      // ---- vocabulary (q101) + per-doc new-term attribution -----------
+      val fVocab = p.async("vocab") {
+        val (newTerms, perDocNew) =
+          vocabMember(s.read.parquet(snaps.termPath), grams)
+        graft.sources.SideTable.ensure(s, "vocab_terms_delta",
+          s"$dir#$cut", fp) { newTerms.select(col("term")) }
+        perDocNew
+      }
 
-    // ---- vocabulary (q101) + per-doc new-term attribution -----------
-    val fVocab = Future {
-      val (newTerms, perDocNew) =
-        vocabMember(s.read.parquet(snaps.termPath), grams)
-      graft.sources.SideTable.ensure(s, "vocab_terms_delta",
-        s"$dir#$cut", fp) { newTerms.select(col("term")) }
-      perDocNew
-    }
+      // ---- incremental near-dup (q67), batch side from the gram frame -
+      val sh3 = grams.where(col("h3").isNotNull)
+        .select(col("doc_id"), col("h3").as("h"))
+      val fDedup = p.async("dedup") {
+        // verify: OLD candidates re-shingle under a candidate-pruned,
+        // cut-pushed scan; BATCH candidates reuse the gram frame.
+        val (deltaBands, pairs, candPlan, verifyPlan) =
+          dedupMember(s, s.read.parquet(snaps.sigPath), sh3,
+            "q109 ingest bands") { candDocs =>
+            shingleHashRows(d.where(col("doc_id") < cut)
+              .join(broadcast(candDocs), Seq("doc_id"), "left_semi"), 3)
+          }
+        graft.sources.SideTable.ensure(s, "sig_index_delta", s"$dir#$cut",
+          fp) { deltaBands }
+        val nearDocs = pairs.select(col("d1").as("doc_id"))
+          .unionByName(pairs.select(col("d2").as("doc_id")))
+          .where(col("doc_id") >= cut).distinct()
+          .withColumn("near_hit", lit(1))
+        (nearDocs, candPlan, verifyPlan)
+      }
 
-    // ---- incremental near-dup (q67), batch side from the gram frame -
-    val sh3 = grams.where(col("h3").isNotNull)
-      .select(col("doc_id"), col("h3").as("h"))
-    val fDedup = Future {
-      // verify: OLD candidates re-shingle under a candidate-pruned,
-      // cut-pushed scan; BATCH candidates reuse the gram frame.
-      val (deltaBands, pairs, candPlan, verifyPlan) =
-        dedupMember(s, s.read.parquet(snaps.sigPath), sh3,
-          "q109 ingest bands") { candDocs =>
-          shingleHashRows(d.where(col("doc_id") < cut)
-            .join(broadcast(candDocs), Seq("doc_id"), "left_semi"), 3)
+      // ---- key probe shared by triage (q79) and dup flags (q95) -------
+      val batchKeys = meta.where(col("gk").isNotNull)
+        .select(col("doc_id"), col("gk"))
+      val bkeys = batchKeys.select(col("gk")).distinct()
+      val fKeys = p.async("keys") {
+        val hitKeys = keysMember(s, dir, cut, snaps.keyPath, bkeys)
+        graft.sources.SideTable.ensure(s, "content_keys_delta",
+          s"$dir#$cut", fp) {
+          bkeys.join(broadcast(hitKeys.select(col("gk"))), Seq("gk"),
+            "left_anti")
         }
-      graft.sources.SideTable.ensure(s, "sig_index_delta", s"$dir#$cut",
-        fp) { deltaBands }
-      val nearDocs = pairs.select(col("d1").as("doc_id"))
-        .unionByName(pairs.select(col("d2").as("doc_id")))
-        .where(col("doc_id") >= cut).distinct()
-        .withColumn("near_hit", lit(1))
-      (nearDocs, candPlan, verifyPlan)
-    }
-
-    // ---- key probe shared by triage (q79) and dup flags (q95) -------
-    val batchKeys = meta.where(col("gk").isNotNull)
-      .select(col("doc_id"), col("gk"))
-    val bkeys = batchKeys.select(col("gk")).distinct()
-    val fKeys = Future {
-      val hitKeys = keysMember(s, dir, cut, snaps.keyPath, bkeys)
-      graft.sources.SideTable.ensure(s, "content_keys_delta",
-        s"$dir#$cut", fp) {
-        bkeys.join(broadcast(hitKeys.select(col("gk"))), Seq("gk"),
-          "left_anti")
+        hitKeys
       }
-      hitKeys
-    }
 
-    // ---- DSIR (q106): fully lazy, both frozen LMs broadcast ---------
-    val dsir = dsirMember(s.read.parquet(snaps.ctPath),
-      s.read.parquet(snaps.crPath), grams, target, buckets)
+      // ---- DSIR (q106): fully lazy, both frozen LMs broadcast ---------
+      val dsir = dsirMember(s.read.parquet(snaps.ctPath),
+        s.read.parquet(snaps.crPath), grams, target, buckets)
 
-    // ---- bigram surprisal (q107) against the frozen LM artifacts ----
-    val fBigram = Future(bigramMember(s.read.parquet(snaps.ctxPath),
-      s.read.parquet(snaps.bigPath), grams))
+      // ---- bigram surprisal (q107) against the frozen LM artifacts ----
+      val fBigram = p.async("bigram")(bigramMember(
+        s.read.parquet(snaps.ctxPath), s.read.parquet(snaps.bigPath), grams))
 
-    // ---- BM25 top-1 routing (q105) against the index artifacts ------
-    val fBm25 = Future {
-      graft.sources.SideTable.ensure(s, "bm25_postings_delta",
-        s"$dir#$cut", fp, Seq("bucket")) {
-        sh3.groupBy(col("doc_id"), col("h")).agg(count(lit(1)).as("tf"))
-          .withColumn("bucket", pmod(col("h"), lit(64)).cast("int"))
+      // ---- BM25 top-1 routing (q105) against the index artifacts ------
+      val fBm25 = p.async("bm25") {
+        graft.sources.SideTable.ensure(s, "bm25_postings_delta",
+          s"$dir#$cut", fp, Seq("bucket")) {
+          sh3.groupBy(col("doc_id"), col("h")).agg(count(lit(1)).as("tf"))
+            .withColumn("bucket", pmod(col("h"), lit(64)).cast("int"))
+        }
+        bm25Member(s.read.parquet(snaps.postPath),
+          s.read.parquet(snaps.lexPath), s.read.parquet(snaps.dlPath),
+          s.read.parquet(snaps.totPath), grams, dfCap)
       }
-      bm25Member(s.read.parquet(snaps.postPath),
-        s.read.parquet(snaps.lexPath), s.read.parquet(snaps.dlPath),
-        s.read.parquet(snaps.totPath), grams, dfCap)
+
+      // ---- await the members, capture the pinned plans ----------------
+      val perDocNew = fVocab.get
+      val (nearDocs, candPlan, verifyPlan) = fDedup.get
+      val hitKeys = fKeys.get
+      val bigram = fBigram.get
+      val top1 = fBm25.get
+      lastIngestPlans =
+        gramsLazy.queryExecution.executedPlan.toString +
+          "\n-- cand --\n" + candPlan +
+          "\n-- verify-old --\n" + verifyPlan
+
+      // ---- triage (q79) + dup flags (q95) over the shared key probe ---
+      val (triage, bdup) =
+        batchTriageAndDup(batchKeys, meta, hitKeys, nearDocs)
+
+      record(meta, triage, bdup, perDocNew, bigram, dsir, top1)
+        .orderBy("doc_id")
     }
-
-    // ---- await the members, capture the pinned plans ----------------
-    val perDocNew = Await.result(fVocab, 60.minutes)
-    val (nearDocs, candPlan, verifyPlan) = Await.result(fDedup, 60.minutes)
-    val hitKeys = Await.result(fKeys, 60.minutes)
-    val bigram = Await.result(fBigram, 60.minutes)
-    val top1 = Await.result(fBm25, 60.minutes)
-    lastIngestPlans =
-      gramsLazy.queryExecution.executedPlan.toString +
-        "\n-- cand --\n" + candPlan +
-        "\n-- verify-old --\n" + verifyPlan
-
-    // ---- triage (q79) + dup flags (q95) over the shared key probe ---
-    val (triage, bdup) =
-      batchTriageAndDup(batchKeys, meta, hitKeys, nearDocs)
-
-    record(meta, triage, bdup, perDocNew, bigram, dsir, top1)
-      .orderBy("doc_id")
   }
 
-  /** Batch-view triage (q79) + dup flags (q95) over the shared key
-    * probe: BOTH sides of a verified within-batch pair triage 'near' —
-    * the retrospective whole-batch view (q111 emits the arrival-time
-    * view; see runStream). Shared by [[run]] and
-    * [[graft.ops.Ingest.scoreBatch]]. */
   /** The exact/near/novel triage labeling alone — the arrival-time
     * (q111) and batch-view (q109) forms differ ONLY in the `nearDocs`
     * they pass, so the CASE lives once. */
@@ -480,20 +447,29 @@ object CrawlIngest {
           .when(col("near_hit") === 1, "near")
           .otherwise("novel").as("triage"))
 
+  /** Triage (q79) + dup flags (q95) over the shared key probe. q109's
+    * batch view passes `nearDocs` with BOTH sides of a verified
+    * within-batch pair; q111's arrival-time view passes the later side
+    * only, plus `priorKeys` (`prior_hit` rows: keys that arrived in an
+    * earlier epoch). Shared by [[run]], [[runStream]] and
+    * [[graft.ops.Ingest.scoreBatch]]. */
   private[graft] def batchTriageAndDup(batchKeys: DataFrame,
-      meta: DataFrame, hitKeys: DataFrame,
-      nearDocs: DataFrame): (DataFrame, DataFrame) = {
+      meta: DataFrame, hitKeys: DataFrame, nearDocs: DataFrame,
+      priorKeys: Option[DataFrame] = None): (DataFrame, DataFrame) = {
     val triage = triageOf(batchKeys, hitKeys, nearDocs)
     val bkeys3 = meta.where(col("nw") >= 3)
       .select(col("doc_id"), col("gk"))
     val firstIds = bkeys3.groupBy(col("gk"))
       .agg(min(col("doc_id")).as("first_id"))
-    val bdup = bkeys3
-      .join(broadcast(hitKeys), Seq("gk"), "left")
+    val probed = (hitKeys +: priorKeys.toSeq)
+      .foldLeft(bkeys3)((f, k) => f.join(broadcast(k), Seq("gk"), "left"))
+    val prior =
+      if (priorKeys.isEmpty) lit(false) else col("prior_hit").isNotNull
+    val bdup = probed
       .join(broadcast(firstIds), Seq("gk"))
       .select(col("doc_id"),
-        (col("exact_hit").isNotNull || col("doc_id") > col("first_id"))
-          .cast("int").as("is_dup"))
+        (col("exact_hit").isNotNull || prior ||
+          col("doc_id") > col("first_id")).cast("int").as("is_dup"))
     (triage, bdup)
   }
 
@@ -529,21 +505,9 @@ object CrawlIngest {
     import org.apache.spark.sql.{Dataset, Row}
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    // Phase timing (stderr, off by default): q111 is the bench's single
-    // most expensive line item, so its cost must be decomposable into
-    // fixed streaming overhead (snapshot ensure, state seed, stream
-    // start/stop) vs per-epoch member work — set graft.stream.timing=true.
-    val timing = s.conf.getOption("graft.stream.timing").contains("true") ||
-      sys.env.get("SPARK_GRAFT_STREAM_TIMING").contains("1")
-    def timed[T](label: String)(body: => T): T =
-      if (!timing) body
-      else {
-        val t0 = System.nanoTime()
-        val r = body
-        System.err.println(f"[q111-timing] $label ${
-          (System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
+    // Phase timing: q111 is the bench's single most expensive line
+    // item, so its cost must be decomposable (see PhaseTimer).
+    val timed = new PhaseTimer(s, "q111-timing")
     val target = s.conf.getOption("graft.dsir.targetSource")
       .getOrElse("src0")
     val buckets = s.conf.getOption("graft.dsir.buckets").map(_.toInt)
@@ -561,23 +525,17 @@ object CrawlIngest {
     // identity so concurrent JVMs never share in-flight state, dropped
     // when the stream ends. A deployment that RESUMES ingestion keeps
     // the artifacts and skips the refresh.
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    import org.apache.spark.sql.types.StructType
     val runKey = s"$dir#$cut#ingest#${s.sparkContext.applicationId}"
-    def emptyOf(field: String): DataFrame = s.createDataFrame(
-      s.sparkContext.emptyRDD[Row],
-      StructType(Seq(StructField(field, StringType))))
-    val prevRefresh = s.conf.getOption("graft.artifacts.refresh")
-    s.conf.set("graft.artifacts.refresh", "true")
+    def emptyOf(field: String): DataFrame = Seq.empty[String].toDF(field)
     val (seenPath, keysPath, termsPath) = timed("seed-state") {
-      try (
+      graft.sources.SideTable.refreshing(s)((
         graft.sources.SideTable.ensure(s, "ingest_seen", runKey, fp) {
           s.read.parquet(snaps.sigPath) },
         graft.sources.SideTable.ensure(s, "ingest_keys", runKey, fp) {
           emptyOf("gk") },
         graft.sources.SideTable.ensure(s, "ingest_terms", runKey, fp) {
-          emptyOf("term") })
-      finally prevRefresh.fold(s.conf.unset("graft.artifacts.refresh"))(
-        v => s.conf.set("graft.artifacts.refresh", v))
+          emptyOf("term") }))
     }
 
     // the driver-side id collect is the MemoryStream harness seam
@@ -591,194 +549,162 @@ object CrawlIngest {
         math.max(1, (ids.length + nEpochs - 1) / nEpochs)).toSeq
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[Long]
-    val acc = scala.collection.mutable.ArrayBuffer
-      .empty[scala.concurrent.Future[DataFrame]]
-    // earlier epochs' shingle projections (over their checkpointed
-    // gram frames) — the dedup member's prior-candidate shingle source
-    val priorEpochSh = scala.collection.mutable.ArrayBuffer
-      .empty[DataFrame]
-    val query = ms.toDF().toDF("doc_id").writeStream
-      .outputMode("append")
-      .foreachBatch { (epochIds: Dataset[Row], epochNo: Long) =>
-        timed(s"epoch-body-$epochNo") {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.DurationInt
-        val bodyT0 = System.nanoTime()
-        def mark(l: String): Unit = if (timing)
-          System.err.println(f"[q111-timing]   +$l%-10s ${
-            (System.nanoTime() - bodyT0) / 1e9}%.3f s")
-        implicit val ec: scala.concurrent.ExecutionContext = memberEc
-        val epochDocs =
-          d.join(broadcast(epochIds), Seq("doc_id"), "left_semi")
-        val fMeta = Future(metaFrame(epochDocs).localCheckpoint())
-        val grams = triShingleHashRows(epochDocs, Seq("source"))
-          .localCheckpoint() // ONE generator pass per epoch
-        mark("grams")
-        val meta = Await.result(fMeta, 60.minutes)
-        mark("meta")
+    Par.scope(s, "q111") { p =>
+      val acc = scala.collection.mutable.ArrayBuffer
+        .empty[Par.Task[DataFrame]]
+      // earlier epochs' shingle projections (over their checkpointed
+      // gram frames) — the dedup member's prior-candidate shingle source
+      val priorEpochSh = scala.collection.mutable.ArrayBuffer
+        .empty[DataFrame]
+      val query = ms.toDF().toDF("doc_id").writeStream
+        .outputMode("append")
+        .foreachBatch { (epochIds: Dataset[Row], epochNo: Long) =>
+          timed(s"epoch-body-$epochNo") {
+          val bodyT0 = System.nanoTime()
+          def mark(l: String): Unit = timed.since(bodyT0, f"  +$l%-10s")
+          val epochDocs =
+            d.join(broadcast(epochIds), Seq("doc_id"), "left_semi")
+          val fMeta = p.async(s"e$epochNo/meta")(
+            metaFrame(epochDocs).localCheckpoint())
+          val grams = triShingleHashRows(epochDocs, Seq("source"))
+            .localCheckpoint() // ONE generator pass per epoch
+          mark("grams")
+          val meta = fMeta.get
+          mark("meta")
 
-        val fVocab = Future {
-          // known = snapshot vocabulary ∪ terms arrived in earlier
-          // epochs — so an epoch owns only genuinely-first arrivals
-          vocabMember(s.read.parquet(snaps.termPath)
-            .unionByName(s.read.parquet(termsPath)), grams)
-        }
-        val sh3 = grams.where(col("h3").isNotNull)
-          .select(col("doc_id"), col("h3").as("h"))
-        val fDedup = Future {
-          dedupMember(s, s.read.parquet(seenPath), sh3,
-            "q111 ingest bands") { candDocs =>
-            // prior candidates = old corpus OR an earlier epoch. The
-            // old-corpus side re-shingles under a candidate-pruned,
-            // CUT-PUSHED scan (doc_id < cut reaches the parquet
-            // reader); earlier-epoch candidates reuse that epoch's
-            // already-checkpointed gram projection instead of
-            // re-tokenizing raw text — the shingle analogue of the
-            // seenPath band-index accumulation. (A restartable
-            // deployment persists the shingle deltas as a SideTable
-            // artifact like ingest_seen; in-session the checkpoint
-            // blocks are the same rows at zero recompute.)
-            val priorCand = candDocs.join(broadcast(epochIds),
-              Seq("doc_id"), "left_anti")
-            val fromOld = shingleHashRows(
-              d.where(col("doc_id") < cut)
-                .join(broadcast(priorCand), Seq("doc_id"), "left_semi"),
-              3)
-            priorEpochSh.foldLeft(fromOld) { (u, pSh) =>
-              u.unionByName(pSh.join(broadcast(priorCand),
-                Seq("doc_id"), "left_semi"))
+          val fVocab = p.async(s"e$epochNo/vocab") {
+            // known = snapshot vocabulary ∪ terms arrived in earlier
+            // epochs — so an epoch owns only genuinely-first arrivals
+            vocabMember(s.read.parquet(snaps.termPath)
+              .unionByName(s.read.parquet(termsPath)), grams)
+          }
+          val sh3 = grams.where(col("h3").isNotNull)
+            .select(col("doc_id"), col("h3").as("h"))
+          val fDedup = p.async(s"e$epochNo/dedup") {
+            dedupMember(s, s.read.parquet(seenPath), sh3,
+              "q111 ingest bands") { candDocs =>
+              // prior candidates = old corpus OR an earlier epoch. The
+              // old-corpus side re-shingles under a candidate-pruned,
+              // CUT-PUSHED scan (doc_id < cut reaches the parquet
+              // reader); earlier-epoch candidates reuse that epoch's
+              // already-checkpointed gram projection instead of
+              // re-tokenizing raw text — the shingle analogue of the
+              // seenPath band-index accumulation. (A restartable
+              // deployment persists the shingle deltas as a SideTable
+              // artifact like ingest_seen; in-session the checkpoint
+              // blocks are the same rows at zero recompute.)
+              val priorCand = candDocs.join(broadcast(epochIds),
+                Seq("doc_id"), "left_anti")
+              val fromOld = shingleHashRows(
+                d.where(col("doc_id") < cut)
+                  .join(broadcast(priorCand), Seq("doc_id"), "left_semi"),
+                3)
+              priorEpochSh.foldLeft(fromOld) { (u, pSh) =>
+                u.unionByName(pSh.join(broadcast(priorCand),
+                  Seq("doc_id"), "left_semi"))
+              }
             }
           }
-        }
-        val batchKeys = meta.where(col("gk").isNotNull)
-          .select(col("doc_id"), col("gk"))
-        val bkeys = batchKeys.select(col("gk")).distinct()
-        val fKeys = Future {
-          (keysMember(s, dir, cut, snaps.keyPath, bkeys),
-            // earlier-arrival key membership from the accumulated set
-            s.read.parquet(keysPath)
-              .join(broadcast(bkeys), Seq("gk"), "left_semi")
-              .withColumn("prior_hit", lit(1))
-              .localCheckpoint())
-        }
-        // dsir is the one member whose core is fully lazy; checkpoint it
-        // HERE, overlapped behind the dedup critical path, so the
-        // deferred record assembly is pure broadcast composition
-        val fDsir = Future(dsirMember(s.read.parquet(snaps.ctPath),
-          s.read.parquet(snaps.crPath), grams, target, buckets)
-          .localCheckpoint())
-        val fBigram = Future(bigramMember(s.read.parquet(snaps.ctxPath),
-          s.read.parquet(snaps.bigPath), grams))
-        val fBm25 = Future(bm25Member(s.read.parquet(snaps.postPath),
-          s.read.parquet(snaps.lexPath), s.read.parquet(snaps.dlPath),
-          s.read.parquet(snaps.totPath), grams, dfCap))
+          val batchKeys = meta.where(col("gk").isNotNull)
+            .select(col("doc_id"), col("gk"))
+          val bkeys = batchKeys.select(col("gk")).distinct()
+          val fKeys = p.async(s"e$epochNo/keys") {
+            (keysMember(s, dir, cut, snaps.keyPath, bkeys),
+              // earlier-arrival key membership from the accumulated set
+              s.read.parquet(keysPath)
+                .join(broadcast(bkeys), Seq("gk"), "left_semi")
+                .withColumn("prior_hit", lit(1))
+                .localCheckpoint())
+          }
+          // dsir is the one member whose core is fully lazy; checkpoint it
+          // HERE, overlapped behind the dedup critical path, so the
+          // deferred record assembly is pure broadcast composition
+          val fDsir = p.async(s"e$epochNo/dsir")(dsirMember(
+            s.read.parquet(snaps.ctPath), s.read.parquet(snaps.crPath),
+            grams, target, buckets).localCheckpoint())
+          val fBigram = p.async(s"e$epochNo/bigram")(bigramMember(
+            s.read.parquet(snaps.ctxPath), s.read.parquet(snaps.bigPath),
+            grams))
+          val fBm25 = p.async(s"e$epochNo/bm25")(bm25Member(
+            s.read.parquet(snaps.postPath), s.read.parquet(snaps.lexPath),
+            s.read.parquet(snaps.dlPath), s.read.parquet(snaps.totPath),
+            grams, dfCap))
 
-        val (newTerms, perDocNew) = Await.result(fVocab, 60.minutes)
-        mark("vocab")
-        val (deltaBands, pairs, _, _) = Await.result(fDedup, 60.minutes)
-        mark("dedup")
-        val (hitKeys, priorKeys) = Await.result(fKeys, 60.minutes)
-        mark("keys")
-        val bigram = Await.result(fBigram, 60.minutes)
-        mark("bigram")
-        val top1 = Await.result(fBm25, 60.minutes)
-        mark("bm25")
-        val dsir = Await.result(fDsir, 60.minutes)
-        mark("dsir")
+          val (newTerms, perDocNew) = fVocab.get
+          mark("vocab")
+          val (deltaBands, pairs, _, _) = fDedup.get
+          mark("dedup")
+          val (hitKeys, priorKeys) = fKeys.get
+          mark("keys")
+          val bigram = fBigram.get
+          mark("bigram")
+          val top1 = fBm25.get
+          mark("bm25")
+          val dsir = fDsir.get
+          mark("dsir")
 
-        // arrival-time triage: 'near' iff the doc is the LATER side of
-        // a verified pair (prior = old corpus or earlier arrival; d2 is
-        // always the delta side by construction)
-        val nearDocs = pairs.select(col("d2").as("doc_id")).distinct()
-          .withColumn("near_hit", lit(1))
-        val triage = triageOf(batchKeys, hitKeys, nearDocs)
-        val bkeys3 = meta.where(col("nw") >= 3)
-          .select(col("doc_id"), col("gk"))
-        val firstIds = bkeys3.groupBy(col("gk"))
-          .agg(min(col("doc_id")).as("first_id"))
-        val bdup = bkeys3
-          .join(broadcast(hitKeys), Seq("gk"), "left")
-          .join(broadcast(priorKeys), Seq("gk"), "left")
-          .join(broadcast(firstIds), Seq("gk"))
-          .select(col("doc_id"),
-            (col("exact_hit").isNotNull || col("prior_hit").isNotNull ||
-              col("doc_id") > col("first_id")).cast("int").as("is_dup"))
+          // arrival-time triage: 'near' iff the doc is the LATER side of
+          // a verified pair (prior = old corpus or earlier arrival; d2 is
+          // always the delta side by construction)
+          val nearDocs = pairs.select(col("d2").as("doc_id")).distinct()
+            .withColumn("near_hit", lit(1))
+          val (triage, bdup) = batchTriageAndDup(batchKeys, meta, hitKeys,
+            nearDocs, Some(priorKeys))
 
-        // state transitions AFTER scoring: this epoch's bands, content
-        // keys and new terms join the accumulated state, visible to
-        // every later epoch's probes — three independent artifacts, so
-        // the writes overlap each other and the record materialization
-        val fAppends = Seq(
-          Future(graft.sources.SideTable.append(s, "ingest_seen",
-            runKey, fp)(deltaBands)),
-          Future(graft.sources.SideTable.append(s, "ingest_keys",
-            runKey, fp)(bkeys3.select(col("gk")).distinct())),
-          Future(graft.sources.SideTable.append(s, "ingest_terms",
-            runKey, fp)(newTerms.select(col("term")))))
-        // The record frame is PURE COMPOSITION over member frames that
-        // are already localCheckpointed (or that read persistent snapshot
-        // artifacts, never the dropped per-run state), so its ~3 s
-        // assembly job does NOT have to serialize inside the epoch: it
-        // materializes on a background future that overlaps the NEXT
-        // epoch's member work, and only the final epoch's assembly is
-        // paid as a tail (measured 8.3 s -> ~5.8 s per epoch at sf0.1,
-        // q111 ~32 s -> ~27 s). The state appends stay inside the epoch
-        // barrier — later epochs read them.
-        acc += Future(record(meta, triage, bdup, perDocNew, bigram,
-          dsir, top1).localCheckpoint())
-        mark("record")
-        fAppends.foreach(Await.result(_, 60.minutes))
-        mark("appends")
-        priorEpochSh += sh3 // visible to later epochs' dedup members
-        ()
+          // state transitions AFTER scoring: this epoch's bands, content
+          // keys and new terms join the accumulated state, visible to
+          // every later epoch's probes — three independent artifacts, so
+          // the writes overlap each other and the record materialization
+          val fAppends = Seq(
+            "ingest_seen" -> deltaBands,
+            "ingest_keys" ->
+              meta.where(col("nw") >= 3).select(col("gk")).distinct(),
+            "ingest_terms" -> newTerms.select(col("term"))).map {
+              case (n, rows) => p.async(s"e$epochNo/append-$n")(
+                graft.sources.SideTable.append(s, n, runKey, fp)(rows)) }
+          // The record frame is PURE COMPOSITION over member frames that
+          // are already localCheckpointed (or that read persistent snapshot
+          // artifacts, never the dropped per-run state), so its ~3 s
+          // assembly job does NOT have to serialize inside the epoch: it
+          // materializes on a background task that overlaps the NEXT
+          // epoch's member work, and only the final epoch's assembly is
+          // paid as a tail (measured 8.3 s -> ~5.8 s per epoch at sf0.1,
+          // q111 ~32 s -> ~27 s). The state appends stay inside the epoch
+          // barrier — later epochs read them.
+          acc += p.async(s"e$epochNo/record")(record(meta, triage, bdup,
+            perDocNew, bigram, dsir, top1).localCheckpoint())
+          mark("record")
+          fAppends.foreach(_.get)
+          mark("appends")
+          priorEpochSh += sh3 // visible to later epochs' dedup members
+          ()
+          }
         }
+        .start()
+      try {
+        chunks.zipWithIndex.foreach { case (c, i) =>
+          timed(s"epoch-drive-$i") {
+            ms.addData(c); query.processAllAvailable() }
+        }
+        // the final epoch's assembly is the one paid as a tail: its rows
+        // are the result (record tasks run under their own job groups,
+        // so stop() could not cancel them)
+        timed("assembly-tail")(acc.foreach(_.get))
       }
-      .start()
-    try {
-      chunks.zipWithIndex.foreach { case (c, i) =>
-        timed(s"epoch-drive-$i") {
-          ms.addData(c); query.processAllAvailable() }
+      finally timed("stop-drop") {
+        query.stop()
+        Seq("ingest_seen", "ingest_keys", "ingest_terms")
+          .foreach(graft.sources.SideTable.drop(s, _, runKey, fp))
       }
-      // The FINAL epoch's assembly future must land BEFORE stop():
-      // memberEc's pool threads are created lazily, so threads first
-      // spawned inside a foreachBatch body inherit the streaming
-      // query's job group (thread-local Spark properties), and stop()
-      // cancels that group — an in-flight assembly job then dies with
-      // SPARK_JOB_CANCELLED (observed intermittently under full-suite
-      // load). Awaiting here is the documented final-epoch tail.
-      timed("assembly-tail")(acc.foreach(
-        scala.concurrent.Await.ready(_,
-          scala.concurrent.duration.Duration(60, "minutes"))))
+      acc.map(_.get).reduceOption(_ unionByName _)
+        .getOrElse(s.createDataFrame(s.sparkContext.emptyRDD[Row],
+          StructType.fromDDL("doc_id BIGINT, source STRING, " +
+            "triage STRING, keep INT, is_dup INT, n_new_terms BIGINT, " +
+            "n_bigrams BIGINT, n_oov BIGINT, lm_bits BIGINT, " +
+            "lm_mean DOUBLE, dsir_tokens BIGINT, dsir_bits BIGINT, " +
+            "dsir_score DOUBLE, top1_doc BIGINT, top1_ppm BIGINT")))
+        .orderBy("doc_id")
     }
-    finally timed("stop-drop") {
-      query.stop()
-      graft.sources.SideTable.drop(s, "ingest_seen", runKey, fp)
-      graft.sources.SideTable.drop(s, "ingest_keys", runKey, fp)
-      graft.sources.SideTable.drop(s, "ingest_terms", runKey, fp)
-    }
-    acc.map(scala.concurrent.Await.result(_,
-        scala.concurrent.duration.Duration(60, "minutes")))
-      .reduceOption(_ unionByName _)
-      .getOrElse {
-        import org.apache.spark.sql.types._
-        s.createDataFrame(s.sparkContext.emptyRDD[Row], StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("source", StringType),
-          StructField("triage", StringType),
-          StructField("keep", IntegerType),
-          StructField("is_dup", IntegerType),
-          StructField("n_new_terms", LongType),
-          StructField("n_bigrams", LongType),
-          StructField("n_oov", LongType),
-          StructField("lm_bits", LongType),
-          StructField("lm_mean", DoubleType),
-          StructField("dsir_tokens", LongType),
-          StructField("dsir_bits", LongType),
-          StructField("dsir_score", DoubleType),
-          StructField("top1_doc", LongType),
-          StructField("top1_ppm", LongType))))
-      }
-      .orderBy("doc_id")
   }
 
   // ---------------------------------------------------------------- oracle

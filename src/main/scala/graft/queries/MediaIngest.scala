@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Graft
+import graft.{Graft, Par}
 
 /** q214 — the MEDIA crawl-ingest loop as a Structured Streaming
   * deployment: the q111 discipline applied to the media content-dedup
@@ -60,14 +60,6 @@ import graft.Graft
   */
 object MediaIngest {
 
-  private lazy val memberEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-media-member")
-        t.setDaemon(true)
-        t
-      }))
-
   /** Per-frame content hash WITH the frame index (q202 grain). */
   private def hIdx = graft.functions.TextFunctions.hash60(concat_ws(":",
     col("frame_idx"), col("width"), col("height"),
@@ -84,21 +76,10 @@ object MediaIngest {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     import graft.sources.SideTable
 
-    // Phase timing (stderr, off by default) — the q111 decomposition
-    // discipline: fixed overhead (snapshot ensure, state seed) vs
-    // per-epoch member work must be separable before optimizing.
-    val timing =
-      s.conf.getOption("graft.stream.timing").contains("true") ||
-        sys.env.get("SPARK_GRAFT_STREAM_TIMING").contains("1")
-    def timed[T](label: String)(body: => T): T =
-      if (!timing) body
-      else {
-        val t0 = System.nanoTime()
-        val r = body
-        System.err.println(f"[q214-timing] $label ${
-          (System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
+    // Phase timing — the q111 decomposition discipline: fixed overhead
+    // (snapshot ensure, state seed) vs per-epoch member work must be
+    // separable before optimizing (see PhaseTimer).
+    val timed = new PhaseTimer(s, "q214-timing")
 
     val d = Graft.parquetSource(s, dir).table("documents")
     val cut = BatchCut.cut(s, d)
@@ -128,23 +109,15 @@ object MediaIngest {
     // in-flight state. A deployment that RESUMES ingestion keeps the
     // artifacts and skips the refresh.
     val runKey = s"$dir#$cut#mediaingest#${s.sparkContext.applicationId}"
-    val prevRefresh = s.conf.getOption("graft.artifacts.refresh")
-    s.conf.set("graft.artifacts.refresh", "true")
-    val (seenFp, seenFh, seenAu) = timed("seed-state") {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.DurationInt
-      implicit val ec: scala.concurrent.ExecutionContext = memberEc
-      try {
-        // three independent tiny ensure-writes — concurrent futures
-        val fs = Seq("media_seen_fp_v2" -> snapFp, "media_seen_fh_v2" -> snapFh,
+    val Seq(seenFp, seenFh, seenAu) = timed("seed-state") {
+      SideTable.refreshing(s)(Par.scope(s, "q214-seed") { p =>
+        // three independent tiny ensure-writes — concurrent tasks
+        Seq("media_seen_fp_v2" -> snapFp, "media_seen_fh_v2" -> snapFh,
           "media_seen_au_v2" -> snapAu).map { case (n, snap) =>
-          Future(SideTable.ensure(s, n, runKey, fpr) {
+          p.async(n)(SideTable.ensure(s, n, runKey, fpr) {
             s.read.parquet(snap).limit(0) })
-        }
-        val Seq(a, b, c) = fs.map(Await.result(_, 60.minutes))
-        (a, b, c)
-      } finally prevRefresh.fold(s.conf.unset("graft.artifacts.refresh"))(
-        v => s.conf.set("graft.artifacts.refresh", v))
+        }.map(_.get)
+      })
     }
     // the accumulated view each member probes: frozen snapshot ∪ the
     // arrived deltas (identical rows to the old seeded copy)
@@ -162,213 +135,195 @@ object MediaIngest {
         math.max(1, (ids.length + nEpochs - 1) / nEpochs)).toSeq
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[Long]
-    val recs = scala.collection.mutable.ArrayBuffer
-      .empty[scala.concurrent.Future[DataFrame]]
+    Par.scope(s, "q214") { p =>
+      val recs = scala.collection.mutable.ArrayBuffer
+        .empty[Par.Task[DataFrame]]
 
-    val query = ms.toDF().toDF("doc_id").writeStream
-      .outputMode("append")
-      .foreachBatch { (epochIds: Dataset[Row], epochNo: Long) =>
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.DurationInt
-        implicit val ec: scala.concurrent.ExecutionContext = memberEc
-        val bodyT0 = System.nanoTime()
-        def mark(l: String): Unit = if (timing)
-          System.err.println(f"[q214-timing]   epoch-$epochNo +$l%-10s ${
-            (System.nanoTime() - bodyT0) / 1e9}%.3f s")
-        val batchDocs =
-          d.join(broadcast(epochIds), Seq("doc_id"), "left_semi")
-        val bids = epochIds.select(col("doc_id").as("media_id"))
-          .localCheckpoint() // tiny (one row per media id), but MUST be
-          // pinned before the record future launches: the future runs
-          // after the micro-batch may have committed, and a frame
-          // derived from the foreachBatch argument is only re-executable
-          // then because Spark's ForeachBatchSink happens to wrap the
-          // batch in a LogicalRDD over the materialized RDD — the
-          // checkpoint makes the record assembly genuinely
-          // sink-independent instead of relying on that wrapping
+      val query = ms.toDF().toDF("doc_id").writeStream
+        .outputMode("append")
+        .foreachBatch { (epochIds: Dataset[Row], epochNo: Long) =>
+          val bodyT0 = System.nanoTime()
+          def mark(l: String): Unit =
+            timed.since(bodyT0, f"  epoch-$epochNo +$l%-10s")
+          val batchDocs =
+            d.join(broadcast(epochIds), Seq("doc_id"), "left_semi")
+          val bids = epochIds.select(col("doc_id").as("media_id"))
+            .localCheckpoint() // tiny (one row per media id), but MUST be
+            // pinned before the record task launches: the task runs
+            // after the micro-batch may have committed, and a frame
+            // derived from the foreachBatch argument is only re-executable
+            // then because Spark's ForeachBatchSink happens to wrap the
+            // batch in a LogicalRDD over the materialized RDD — the
+            // checkpoint makes the record assembly genuinely
+            // sink-independent instead of relying on that wrapping
 
-        // ONE decode pass per modality per epoch, shared by all members.
-        // The PCM decode runs on a future FIRST so it overlaps the video
-        // decode (guide §2.6 — independent jobs back-fill each other);
-        // the two batch fingerprint projections then materialize on
-        // futures too, so neither serializes the other on the driver.
-        val fAudioStats = Future {
-          Media.audioStats(Media.syntheticPcmAudio(batchDocs))
-            .localCheckpoint() // verdict member AND the state append
-        }
-        val frames = graft.functions.Multimodal.decodeVideoFrames(
-            Media.syntheticMjpegVideos(batchDocs))
-          .localCheckpoint() // sig AND frame-hash projections
-        mark("frames")
-        val fSig = Future {
-          frames.select(col("media_id"), hIdx.as("h"))
-            .groupBy(col("media_id"))
-            .agg(sum(col("h")).as("fp"),
-              count(lit(1)).cast("long").as("n_frames"))
-            .localCheckpoint() // verdict member AND the state append
-        }
-        val fFh = Future {
-          frames.select(col("media_id"), hNoIdx.as("h"))
-            .distinct()
-            .localCheckpoint() // clip member AND the state append
-        }
+          // ONE decode pass per modality per epoch, shared by all members.
+          // The PCM decode runs on a task FIRST so it overlaps the video
+          // decode (guide §2.6 — independent jobs back-fill each other);
+          // the two batch fingerprint projections then materialize on
+          // tasks too, so neither serializes the other on the driver.
+          val fAudioStats = p.async(s"e$epochNo/audio-stats") {
+            Media.audioStats(Media.syntheticPcmAudio(batchDocs))
+              .localCheckpoint() // verdict member AND the state append
+          }
+          val frames = graft.functions.Multimodal.decodeVideoFrames(
+              Media.syntheticMjpegVideos(batchDocs))
+            .localCheckpoint() // sig AND frame-hash projections
+          mark("frames")
+          val fSig = p.async(s"e$epochNo/sig") {
+            frames.select(col("media_id"), hIdx.as("h"))
+              .groupBy(col("media_id"))
+              .agg(sum(col("h")).as("fp"),
+                count(lit(1)).cast("long").as("n_frames"))
+              .localCheckpoint() // verdict member AND the state append
+          }
+          val fFh = p.async(s"e$epochNo/fh") {
+            frames.select(col("media_id"), hNoIdx.as("h"))
+              .distinct()
+              .localCheckpoint() // clip member AND the state append
+          }
 
-        // video content-dedup member: arrival-time window verdicts over
-        // the collision-RELEVANT slice of accumulated ∪ batch
-        val fVideo = fSig.map { batchSig =>
-          val bFps = batchSig.select(col("fp")).distinct()
-          val rel = seenView(snapFp, seenFp).unionByName(batchSig)
-            .join(broadcast(bFps), Seq("fp"), "left_semi")
-          val w = Window.partitionBy(col("fp")).orderBy(col("media_id"))
-          rel.select(col("media_id"), col("fp"),
-              col("n_frames").as("v_nf"),
-              min(col("media_id")).over(w).as("v_dup_of"),
-              (row_number().over(w) - 1).cast("long").as("v_n_prior"))
-            .join(broadcast(bids), Seq("media_id"), "left_semi")
-            .localCheckpoint()
-        }
+          // video content-dedup member: arrival-time window verdicts over
+          // the collision-RELEVANT slice of accumulated ∪ batch
+          val fVideo = p.async(s"e$epochNo/video") {
+            val batchSig = fSig.get
+            val bFps = batchSig.select(col("fp")).distinct()
+            val rel = seenView(snapFp, seenFp).unionByName(batchSig)
+              .join(broadcast(bFps), Seq("fp"), "left_semi")
+            val w = Window.partitionBy(col("fp")).orderBy(col("media_id"))
+            rel.select(col("media_id"), col("fp"),
+                col("n_frames").as("v_nf"),
+                min(col("media_id")).over(w).as("v_dup_of"),
+                (row_number().over(w) - 1).cast("long").as("v_n_prior"))
+              .join(broadcast(bids), Seq("media_id"), "left_semi")
+              .localCheckpoint()
+          }
 
-        // audio content-dedup member: same shape on the stat tuple
-        val fAudio = fAudioStats.map { batchAu =>
-          val keys = Media.AudioKeys
-          val bKeys = batchAu.select(keys.map(col): _*).distinct()
-          val rel = seenView(snapAu, seenAu).unionByName(batchAu)
-            .join(broadcast(bKeys), keys, "left_semi")
-          val w = Window.partitionBy(keys.map(col): _*)
-            .orderBy(col("media_id"))
-          (batchAu,
-            rel.select(col("media_id"),
-              min(col("media_id")).over(w).as("a_dup_of"),
-              (row_number().over(w) - 1).cast("long").as("a_n_prior"))
-            .join(broadcast(bids), Seq("media_id"), "left_semi")
-            .localCheckpoint())
-        }
+          // audio content-dedup member: same shape on the stat tuple
+          val fAudio = p.async(s"e$epochNo/audio") {
+            val batchAu = fAudioStats.get
+            val keys = Media.AudioKeys
+            val bKeys = batchAu.select(keys.map(col): _*).distinct()
+            val rel = seenView(snapAu, seenAu).unionByName(batchAu)
+              .join(broadcast(bKeys), keys, "left_semi")
+            val w = Window.partitionBy(keys.map(col): _*)
+              .orderBy(col("media_id"))
+            (batchAu,
+              rel.select(col("media_id"),
+                min(col("media_id")).over(w).as("a_dup_of"),
+                (row_number().over(w) - 1).cast("long").as("a_n_prior"))
+              .join(broadcast(bids), Seq("media_id"), "left_semi")
+              .localCheckpoint())
+          }
 
-        // clip member: q213's probe per epoch — relevant rows only,
-        // denominators fetched for candidate videos alone
-        val fClip = fFh.map { batchFh =>
-          val bHs = batchFh.select(col("h")).distinct()
-          val all = seenView(snapFh, seenFh).unionByName(batchFh)
-          // whole buckets survive the semi-join (membership is by h),
-          // so relevant-slice bucket counts equal full-corpus counts.
-          // Checkpointed: three consumers (the cap's stats job, both
-          // shared-join sides) — measured 0.3 s/epoch FASTER than
-          // re-running the semi-join per consumer (guide §1.1: tried
-          // lazy, reverted on measurement). r18: window-count cap
-          // fusion also tried, also reverted on measurement
-          // (OPTIMIZATION_r18.md)
-          val rel = all.join(broadcast(bHs), Seq("h"), "left_semi")
-            .localCheckpoint()
-          val capped = graft.ops.Dedup.capBuckets(rel, Seq("h"), s,
-            "q214 frame-hash buckets")
-          val shared = capped.select(col("media_id").as("m1"), col("h"))
-            .join(capped.join(broadcast(bids), Seq("media_id"),
+          // clip member: q213's probe per epoch — relevant rows only,
+          // denominators fetched for candidate videos alone
+          val fClip = p.async(s"e$epochNo/clip") {
+            val batchFh = fFh.get
+            val bHs = batchFh.select(col("h")).distinct()
+            val all = seenView(snapFh, seenFh).unionByName(batchFh)
+            // whole buckets survive the semi-join (membership is by h),
+            // so relevant-slice bucket counts equal full-corpus counts.
+            // Checkpointed: three consumers (the cap's stats job, both
+            // shared-join sides) — measured 0.3 s/epoch FASTER than
+            // re-running the semi-join per consumer (guide §1.1: tried
+            // lazy, reverted on measurement). r18: window-count cap
+            // fusion also tried, also reverted on measurement
+            // (OPTIMIZATION_r18.md)
+            val rel = all.join(broadcast(bHs), Seq("h"), "left_semi")
+              .localCheckpoint()
+            val capped = graft.ops.Dedup.capBuckets(rel, Seq("h"), s,
+              "q214 frame-hash buckets")
+            val shared = capped.select(col("media_id").as("m1"), col("h"))
+              .join(capped.join(broadcast(bids), Seq("media_id"),
+                  "left_semi")
+                .select(col("media_id").as("m2"), col("h")), Seq("h"))
+              .where(col("m1") < col("m2"))
+              .groupBy(col("m1"), col("m2"))
+              .agg(count(lit(1)).cast("long").as("n_shared"))
+              .localCheckpoint()
+            val candMedia = shared.select(col("m1").as("media_id"))
+              .unionByName(shared.select(col("m2").as("media_id")))
+              .distinct()
+            val nf = all.join(broadcast(candMedia), Seq("media_id"),
                 "left_semi")
-              .select(col("media_id").as("m2"), col("h")), Seq("h"))
-            .where(col("m1") < col("m2"))
-            .groupBy(col("m1"), col("m2"))
-            .agg(count(lit(1)).cast("long").as("n_shared"))
+              .groupBy(col("media_id"))
+              .agg(count(lit(1)).cast("long").as("n"))
+            shared
+              .join(broadcast(nf.select(col("media_id").as("m1"),
+                col("n").as("n1"))), Seq("m1"))
+              .join(broadcast(nf.select(col("media_id").as("m2"),
+                col("n").as("n2"))), Seq("m2"))
+              .where(expr("(n_shared * 1000000L) div least(n1, n2)")
+                >= 500000L)
+              .groupBy(col("m2").as("media_id"))
+              .agg(count(lit(1)).cast("long").as("cp"))
+              .localCheckpoint()
+          }
+
+          val vver = fVideo.get
+          mark("video")
+          val (batchAu, aver) = fAudio.get
+          mark("audio")
+          val clip = fClip.get
+          mark("clip")
+          val batchSig = fSig.get
+          val batchFh = fFh.get
+
+          // state transitions AFTER scoring — three independent
+          // artifacts, visible to every later epoch's probes; they stay
+          // inside the epoch barrier (later epochs read them), while the
+          // record assembly below overlaps them AND the next epoch
+          val fAppends = Seq("media_seen_fp_v2" -> batchSig,
+              "media_seen_fh_v2" -> batchFh, "media_seen_au_v2" -> batchAu)
+            .map { case (n, rows) => p.async(s"e$epochNo/append-$n")(
+              SideTable.append(s, n, runKey, fpr)(rows)) }
+
+          // the batch record: −1 sentinels for undecodable modalities
+          // (is_dup computed BEFORE its n_prior is sentinel-folded).
+          // PURE COMPOSITION over already-checkpointed frames (bids
+          // included — see its checkpoint note above), so
+          // it materializes on a background task that overlaps the next
+          // epoch (the q111 assembly discipline; only the final epoch's
+          // assembly is paid as a tail)
+          recs += p.async(s"e$epochNo/record") { bids
+            .join(vver, Seq("media_id"), "left")
+            .join(aver, Seq("media_id"), "left")
+            .join(clip, Seq("media_id"), "left")
+            .select(col("media_id"),
+              coalesce(col("fp"), lit(-1L)).as("v_fp"),
+              coalesce(col("v_nf"), lit(-1L)).as("v_nf"),
+              coalesce(col("v_dup_of"), lit(-1L)).as("v_dup_of"),
+              coalesce(col("v_n_prior"), lit(-1L)).as("v_n_prior"),
+              coalesce((col("v_n_prior") > 0).cast("int"), lit(-1))
+                .as("v_is_dup"),
+              coalesce(col("a_dup_of"), lit(-1L)).as("a_dup_of"),
+              coalesce(col("a_n_prior"), lit(-1L)).as("a_n_prior"),
+              coalesce((col("a_n_prior") > 0).cast("int"), lit(-1))
+                .as("a_is_dup"),
+              coalesce(col("cp"), lit(0L)).as("clip_pairs"))
             .localCheckpoint()
-          val candMedia = shared.select(col("m1").as("media_id"))
-            .unionByName(shared.select(col("m2").as("media_id")))
-            .distinct()
-          val nf = all.join(broadcast(candMedia), Seq("media_id"),
-              "left_semi")
-            .groupBy(col("media_id"))
-            .agg(count(lit(1)).cast("long").as("n"))
-          shared
-            .join(broadcast(nf.select(col("media_id").as("m1"),
-              col("n").as("n1"))), Seq("m1"))
-            .join(broadcast(nf.select(col("media_id").as("m2"),
-              col("n").as("n2"))), Seq("m2"))
-            .where(expr("(n_shared * 1000000L) div least(n1, n2)")
-              >= 500000L)
-            .groupBy(col("m2").as("media_id"))
-            .agg(count(lit(1)).cast("long").as("cp"))
-            .localCheckpoint()
+          }
+          mark("record")
+          fAppends.foreach(_.get)
+          mark("appends")
+          ()
         }
+        .start()
+      try {
+        chunks.foreach { c => ms.addData(c); query.processAllAvailable() }
+        // the final epoch's assembly: its rows are the result
+        timed("assembly-tail")(recs.foreach(_.get))
+      } finally query.stop()
 
-        val vver = Await.result(fVideo, 60.minutes)
-        mark("video")
-        val (batchAu, aver) = Await.result(fAudio, 60.minutes)
-        mark("audio")
-        val clip = Await.result(fClip, 60.minutes)
-        mark("clip")
-        val batchSig = Await.result(fSig, 60.minutes)
-        val batchFh = Await.result(fFh, 60.minutes)
-
-        // state transitions AFTER scoring — three independent
-        // artifacts, visible to every later epoch's probes; they stay
-        // inside the epoch barrier (later epochs read them), while the
-        // record assembly below overlaps them AND the next epoch
-        val fAppends = Seq(
-          Future(SideTable.append(s, "media_seen_fp_v2", runKey, fpr)(
-            batchSig)),
-          Future(SideTable.append(s, "media_seen_fh_v2", runKey, fpr)(
-            batchFh)),
-          Future(SideTable.append(s, "media_seen_au_v2", runKey, fpr)(
-            batchAu)))
-
-        // the batch record: −1 sentinels for undecodable modalities
-        // (is_dup computed BEFORE its n_prior is sentinel-folded).
-        // PURE COMPOSITION over already-checkpointed frames (bids
-        // included — see its checkpoint note above), so
-        // it materializes on a background future that overlaps the next
-        // epoch (the q111 assembly discipline; only the final epoch's
-        // assembly is paid as a tail, awaited before stop() — memberEc
-        // threads inherit the streaming job group, which stop() cancels)
-        recs += Future { bids
-          .join(vver, Seq("media_id"), "left")
-          .join(aver, Seq("media_id"), "left")
-          .join(clip, Seq("media_id"), "left")
-          .select(col("media_id"),
-            coalesce(col("fp"), lit(-1L)).as("v_fp"),
-            coalesce(col("v_nf"), lit(-1L)).as("v_nf"),
-            coalesce(col("v_dup_of"), lit(-1L)).as("v_dup_of"),
-            coalesce(col("v_n_prior"), lit(-1L)).as("v_n_prior"),
-            coalesce((col("v_n_prior") > 0).cast("int"), lit(-1))
-              .as("v_is_dup"),
-            coalesce(col("a_dup_of"), lit(-1L)).as("a_dup_of"),
-            coalesce(col("a_n_prior"), lit(-1L)).as("a_n_prior"),
-            coalesce((col("a_n_prior") > 0).cast("int"), lit(-1))
-              .as("a_is_dup"),
-            coalesce(col("cp"), lit(0L)).as("clip_pairs"))
-          .localCheckpoint()
-        }
-        mark("record")
-        fAppends.foreach(Await.result(_, 60.minutes))
-        mark("appends")
-        ()
-      }
-      .start()
-    try {
-      chunks.foreach { c => ms.addData(c); query.processAllAvailable() }
-      // final epoch's assembly must land BEFORE stop() — see the
-      // record-future comment above (job-group cancellation)
-      timed("assembly-tail")(recs.foreach(
-        scala.concurrent.Await.ready(_,
-          scala.concurrent.duration.Duration(60, "minutes"))))
-    } finally query.stop()
-
-    recs.map(scala.concurrent.Await.result(_,
-        scala.concurrent.duration.Duration(60, "minutes")))
-      .reduceOption(_ unionByName _)
-      .getOrElse(s.createDataFrame(s.sparkContext.emptyRDD[Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          "media_id", "v_fp", "v_nf", "v_dup_of", "v_n_prior")
-          .map(org.apache.spark.sql.types.StructField(_,
-            org.apache.spark.sql.types.LongType)) ++ Seq(
-          org.apache.spark.sql.types.StructField("v_is_dup",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("a_dup_of",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("a_n_prior",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("a_is_dup",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("clip_pairs",
-            org.apache.spark.sql.types.LongType)))))
-      .orderBy("media_id")
+      recs.map(_.get).reduceOption(_ unionByName _)
+        .getOrElse(s.createDataFrame(s.sparkContext.emptyRDD[Row],
+          org.apache.spark.sql.types.StructType.fromDDL("media_id BIGINT, " +
+            "v_fp BIGINT, v_nf BIGINT, v_dup_of BIGINT, v_n_prior BIGINT, " +
+            "v_is_dup INT, a_dup_of BIGINT, a_n_prior BIGINT, " +
+            "a_is_dup INT, clip_pairs BIGINT")))
+        .orderBy("media_id")
+    }
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(

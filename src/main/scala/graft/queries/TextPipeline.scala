@@ -261,11 +261,6 @@ object TextPipeline {
     else pairMemo(s, docsFile(dir), cap)(computeRepPairs(s, dir))
   }
 
-  /** Physical plan of the last LSH candidate bucket-join, captured for
-    * plan-quality tests (the join runs eagerly inside [[computeRepPairs]],
-    * so it no longer appears in q27's returned plan). */
-  @volatile private[graft] var lastCandidatePlan: String = ""
-
   /** Physical plan of q83's last candidate join, captured for the plan
     * test that proves the eval bands broadcast (the train corpus's
     * bands never shuffle for candidate generation). */
@@ -1604,13 +1599,9 @@ object TextPipeline {
       // each other's in-flight stream state
       val seenKey = s"$dir#$cut#stream#${s.sparkContext.applicationId}"
       val dataPath = Some(s"$dir/documents.parquet")
-      val prevRefresh = s.conf.getOption("graft.artifacts.refresh")
-      s.conf.set("graft.artifacts.refresh", "true")
-      val seenPath =
-        try graft.sources.SideTable.ensure(s, "stream_seen", seenKey,
-          dataPath) { idx }
-        finally prevRefresh.fold(s.conf.unset("graft.artifacts.refresh"))(
-          v => s.conf.set("graft.artifacts.refresh", v))
+      val seenPath = graft.sources.SideTable.refreshing(s)(
+        graft.sources.SideTable.ensure(s, "stream_seen", seenKey,
+          dataPath) { idx })
       streamSeenRows.set(Vector.empty)
       val ids = d.where(col("doc_id") >= cut).select(col("doc_id"))
         .orderBy("doc_id").collect().map(_.getLong(0)).toSeq

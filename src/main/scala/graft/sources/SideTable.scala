@@ -170,6 +170,17 @@ object SideTable {
     f.delete()
   }
 
+  /** Runs `body` under `graft.artifacts.refresh=true`, then restores
+    * the session's value: how a streaming loop seeds its per-run state,
+    * so a rerun starts from fresh artifacts. */
+  def refreshing[A](s: SparkSession)(body: => A): A = {
+    val prev = s.conf.getOption("graft.artifacts.refresh")
+    s.conf.set("graft.artifacts.refresh", "true")
+    try body
+    finally prev.fold(s.conf.unset("graft.artifacts.refresh"))(
+      v => s.conf.set("graft.artifacts.refresh", v))
+  }
+
   /** Returns the path of artifact `name` for `key`, building and
     * writing it via `build` at most once per (session, key, data
     * fingerprint) — and, via the manifest, at most once per key ACROSS

@@ -107,7 +107,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // The candidate bucket-join runs eagerly inside the pipeline (its
     // result is localCheckpoint-materialized), so it no longer appears in
     // q27's returned plan — assert on the captured physical plan instead.
-    val cp = graft.queries.TextPipeline.lastCandidatePlan
+    val cp = graft.ops.Dedup.lastCandidatePlan
     assert(cp.nonEmpty, "candidate plan was not captured")
     assert(!cp.contains("CartesianProduct"), s"candidates cross-join:\n$cp")
     assert(!cp.contains("BroadcastNestedLoopJoin"),
