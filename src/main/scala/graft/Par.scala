@@ -24,11 +24,14 @@ import org.apache.spark.sql.SparkSession
   *     thread that created them, so a task never runs under a job group
   *     it picked up from elsewhere — a streaming query's `stop()` cancels
   *     its own group, never a task started from its `foreachBatch`.
-  *   - The first task failure, or an exception from the scope body,
-  *     cancels the job groups of the unfinished tasks; tasks not yet
-  *     started never run. The scope then waits for every task to end
-  *     and rethrows that first exception itself, unwrapped. A scope
-  *     never returns while one of its Spark jobs still runs.
+  *   - The first task failure, an exception from the scope body, or an
+  *     interrupt of the scope's wait fails the scope: it cancels the job
+  *     groups of the unfinished tasks; tasks not yet started never run.
+  *     The scope then waits for every task to end and rethrows that
+  *     first exception itself, unwrapped. A scope never returns while one
+  *     of its Spark jobs still runs.
+  *   - Work that runs no Spark job, which no job-group cancel reaches,
+  *     polls [[Scope.check]] to stop once the scope has failed.
   *   - `get` waits at most 2 h, so a hung job fails loudly.
   *   - Tasks may be started from any thread, including other tasks;
   *     the pool is unbounded, so tasks that wait on each other cannot
@@ -110,6 +113,12 @@ object Par {
         }
       }
 
+    /** Throws a `CancellationException` once the scope has failed. A
+      * task that runs no Spark job calls it between units of its work. */
+    def check(): Unit =
+      if (failure.get != null)
+        throw new CancellationException(s"$label failed")
+
     private[Par] def fail(e: Throwable): Unit =
       if (failure.compareAndSet(null, e))
         tasks.synchronized(tasks.toList).filterNot(_.result.isDone)
@@ -132,18 +141,18 @@ object Par {
 
   /** Runs `body` with a fresh [[Scope]] and returns its value once every
     * task started in the scope has ended. On a failure it rethrows the
-    * first exception, from a task or from `body`. */
+    * first exception: from a task, from `body`, or the
+    * `InterruptedException` of an interrupted wait. */
   def scope[T](spark: SparkSession, label: String)(body: Scope => T): T = {
     val p = new Scope(spark, label)
     val out =
-      try body(p)
+      try { val v = body(p); p.awaitAll(); v }
       catch {
         case e: Throwable =>
           p.fail(e)
           p.awaitAll()
           throw p.failure.get
       }
-    p.awaitAll()
     Option(p.failure.get).foreach(throw _)
     out
   }

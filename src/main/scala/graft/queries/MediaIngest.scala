@@ -106,8 +106,9 @@ object MediaIngest {
     // held, without re-writing the whole snapshot per run (guide §2.3:
     // don't move bytes a scan-side union can reference in place).
     // Application id in the identity so concurrent JVMs never share
-    // in-flight state. A deployment that RESUMES ingestion keeps the
-    // artifacts and skips the refresh.
+    // in-flight state. The run drops them when it ends, as q111 drops
+    // `ingest_*`; a deployment that RESUMES ingestion would keep the
+    // artifacts and skip the refresh.
     val runKey = s"$dir#$cut#mediaingest#${s.sparkContext.applicationId}"
     val Seq(seenFp, seenFh, seenAu) = timed("seed-state") {
       SideTable.refreshing(s)(Par.scope(s, "q214-seed") { p =>
@@ -314,7 +315,13 @@ object MediaIngest {
         chunks.foreach { c => ms.addData(c); query.processAllAvailable() }
         // the final epoch's assembly: its rows are the result
         timed("assembly-tail")(recs.foreach(_.get))
-      } finally query.stop()
+      } finally timed("stop-drop") {
+        query.stop()
+        // the records are eager local checkpoints: the result reads none
+        // of the per-run state
+        Seq("media_seen_fp_v2", "media_seen_fh_v2", "media_seen_au_v2")
+          .foreach(SideTable.drop(s, _, runKey, fpr))
+      }
 
       recs.map(_.get).reduceOption(_ unionByName _)
         .getOrElse(s.createDataFrame(s.sparkContext.emptyRDD[Row],

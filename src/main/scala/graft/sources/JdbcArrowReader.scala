@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 import java.nio.channels.Channels
 import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.{Connection, PreparedStatement, ResultSet}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
@@ -13,9 +14,10 @@ import org.apache.arrow.vector._
 import org.apache.arrow.vector.ipc.WriteChannel
 import org.apache.arrow.vector.ipc.message.MessageSerializer
 import org.apache.arrow.vector.types.pojo.Schema
-import org.apache.spark.{InterruptibleIterator, Partition, SparkContext, TaskContext}
+import org.apache.spark.{InterruptibleIterator, Partition, SparkContext,
+  SparkException, TaskContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.GraftArrowBridge
+import org.apache.spark.sql.{GraftArrowBridge, SparkSession}
 import org.apache.spark.sql.GraftArrowBridge.JdbcScan
 import org.apache.spark.sql.catalyst.util.{CharVarcharCodegenUtils, DateTimeUtils}
 import org.apache.spark.sql.execution.datasources.jdbc.JDBCPartition
@@ -23,19 +25,22 @@ import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.Par
+
 /** Direct JDBC → Arrow read of one JDBC relation — the reference's scan,
   * which transposes each partition's rows into pre-allocated Arrow builders
   * with no intermediate row format (conecta-core/src/source/postgres.rs:
   * 340-485, lib.rs:33-52).
   *
-  * One task per JDBC partition sends the SQL Spark's own JDBC scan sends for
+  * Each JDBC partition's read sends the SQL Spark's own JDBC scan sends for
   * that partition, over a connection opened the way Spark opens it, and
   * writes the `ResultSet` straight into Arrow vectors with one typed writer
   * per column. The writers reproduce Spark's JDBC getters followed by its
   * `ArrowWriter` value for value ([[ColumnWriter]]), so the batches decode to
   * the rows, schema and batch count of `toArrowBatchRdd` over the same
   * DataFrame; only the per-row `InternalRow`, `UnsafeRow` projection and
-  * generic per-cell Arrow dispatch are gone.
+  * generic per-cell Arrow dispatch are gone. [[JdbcArrowRDD]] runs one read
+  * per Spark task; [[collect]] runs them on driver threads.
   */
 private[graft] object JdbcArrowReader {
 
@@ -53,6 +58,56 @@ private[graft] object JdbcArrowReader {
       case _ => false
     })
 
+  /** The IPC batches of `scan`, in partition order, read on driver threads
+    * with no Spark job: conecta's N threads with one connection each
+    * (lib.rs:35-52). At most `min(#partitions, defaultParallelism)`
+    * partitions are open at once; each [[Par]] task reads the next
+    * unclaimed partition until none is left. Once the batches read so far
+    * exceed `maxResultSize` bytes (0: no limit) the read fails with
+    * Spark's collect error. The first failure stops every other read at
+    * its next poll; the call returns once every read has closed its
+    * connection and freed its buffers, and rethrows that failure
+    * unwrapped. A failed partition is not retried. */
+  def collect(spark: SparkSession, scan: JdbcScan,
+      maxResultSize: Long): Array[Array[Byte]] = {
+    val parts = scan.partitions
+    val out = new Array[Array[Array[Byte]]](parts.length)
+    val claimed = new AtomicInteger
+    val bytes = new AtomicLong
+    Par.scope(spark, "arrow-collect") { p =>
+      val control = new ReadControl {
+        def poll(): Unit = p.check()
+        def recordsRead(n: Int): Unit = ()
+      }
+      val workers = math.min(parts.length, spark.sparkContext.defaultParallelism)
+      (0 until workers).foreach(w => p.async(s"reader-$w") {
+        var i = claimed.getAndIncrement()
+        while (i < parts.length) {
+          p.check()
+          val reader = new PartitionReader(scan,
+            parts(i).asInstanceOf[JDBCPartition], control)
+          try out(i) = reader.open().map { b =>
+            val total = bytes.addAndGet(b.length)
+            if (maxResultSize > 0 && total > maxResultSize)
+              throw new SparkException("Total size of the Arrow batches " +
+                s"read so far ($total bytes) is bigger than " +
+                s"spark.driver.maxResultSize ($maxResultSize bytes)")
+            b
+          }.toArray
+          finally reader.close()
+          i = claimed.getAndIncrement()
+        }
+      })
+    }
+    out.flatten
+  }
+}
+
+/** How a partition read is told to stop, polled every 1,024 rows, and
+  * where it counts the records it read. */
+private[graft] trait ReadControl {
+  def poll(): Unit
+  def recordsRead(n: Int): Unit
 }
 
 /** The IPC batches of `scan`: one task per JDBC partition. */
@@ -64,7 +119,11 @@ private[graft] final class JdbcArrowRDD(sc: SparkContext, scan: JdbcScan)
   override def compute(split: Partition,
       context: TaskContext): Iterator[Array[Byte]] = {
     val reader = new PartitionReader(scan, split.asInstanceOf[JDBCPartition],
-      context)
+      new ReadControl {
+        def poll(): Unit = GraftArrowBridge.killTaskIfInterrupted(context)
+        def recordsRead(n: Int): Unit =
+          GraftArrowBridge.incRecordsRead(context, n)
+      })
     // runs on completion, failure and kill alike
     context.addTaskCompletionListener[Unit](_ => reader.close())
     new InterruptibleIterator(context, reader.open())
@@ -74,7 +133,7 @@ private[graft] final class JdbcArrowRDD(sc: SparkContext, scan: JdbcScan)
 /** The connection, statement, result set and Arrow buffers of one
   * partition's read, opened as Spark's `JDBCRDD.compute` opens them. */
 private final class PartitionReader(scan: JdbcScan, part: JDBCPartition,
-    context: TaskContext) {
+    control: ReadControl) {
   private val options = scan.options
   private val dialect = JdbcDialects.get(options.url)
   private var conn: Connection = _
@@ -112,7 +171,7 @@ private final class PartitionReader(scan: JdbcScan, part: JDBCPartition,
       case (f, n) => if (n > 0) f.copy(dataType = CharType(n)) else f
     })
     batches = new ResultSetBatches(rs, columns, dialect, scan.arrowSchema,
-      scan.maxRecordsPerBatch, allocator, Some(context))
+      scan.maxRecordsPerBatch, allocator, Some(control))
     // the by-name tail runs once the batches are exhausted: release the
     // connection then, not at the end of the task
     batches ++ { close(); Iterator.empty }
@@ -139,12 +198,12 @@ private final class PartitionReader(scan: JdbcScan, part: JDBCPartition,
   * batch capacity and filled with `set`, with no per-cell capacity check;
   * they grow (doubling) only past 65,536 rows, when the cap is larger or
   * absent. Variable-width values are written with `setSafe`. The vectors
-  * are reset and reused between batches. `context`, when given, gets the
-  * records read and is checked for a kill every 1,024 rows. Closing
-  * releases the vectors, not `rs`. */
+  * are reset and reused between batches. `control`, when given, is polled
+  * every 1,024 rows and gets the records read. Closing releases the
+  * vectors, not `rs`. */
 private[graft] final class ResultSetBatches(rs: ResultSet, schema: StructType,
     dialect: JdbcDialect, arrowSchema: Schema, maxRecordsPerBatch: Int,
-    allocator: BufferAllocator, context: Option[TaskContext])
+    allocator: BufferAllocator, control: Option[ReadControl])
     extends Iterator[Array[Byte]] with AutoCloseable {
 
   // the first row is fetched before any buffer is allocated, so a query
@@ -186,7 +245,7 @@ private[graft] final class ResultSetBatches(rs: ResultSet, schema: StructType,
       }
       n += 1
       if ((n & 1023) == 0)
-        context.foreach(GraftArrowBridge.killTaskIfInterrupted)
+        control.foreach(_.poll())
       more = rs.next()
     }
     root.setRowCount(n)
@@ -196,7 +255,7 @@ private[graft] final class ResultSetBatches(rs: ResultSet, schema: StructType,
       batch)
     finally batch.close()
     vectors.foreach(_.reset())
-    context.foreach(GraftArrowBridge.incRecordsRead(_, n))
+    control.foreach(_.recordsRead(n))
     out.toByteArray
   }
 

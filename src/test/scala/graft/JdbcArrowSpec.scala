@@ -1,9 +1,13 @@
 package graft
 
 import java.nio.file.Files
-import java.sql.DriverManager
+import java.sql.{DriverManager, SQLException}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkException
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftArrowBridge, SparkSession, TestArrowBridge}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,7 +18,9 @@ import graft.sources.{ArrowSink, JdbcArrowRDD, JdbcArrowReader, ResultSetBatches
   * `toArrowBatchRdd` over the same DataFrame: the same rows, Arrow schema,
   * batch count and SQL, on embedded Derby for every covered type and on
   * the replayed pgjdbc row of [[PgFixture]]; the plans it must leave to
-  * Spark; and its clean-up when a partition fails. */
+  * Spark; its clean-up when a partition fails, in a Spark task and in the
+  * driver collect; and the driver collect's result-size limit, job count
+  * and connection bound. */
 class JdbcArrowSpec extends AnyFunSuite {
 
   private val db = "memory:arrowdb"
@@ -197,19 +203,21 @@ class JdbcArrowSpec extends AnyFunSuite {
     assertSparkPath(spark.read.parquet(dir.toString))
   }
 
+  /** `fail` in two partitions; the second divides by zero mid-batch at
+    * id 250, or on its first row at id 101. */
+  private def failing(bad: Int): DataFrame = spark.read.jdbc(url, "fail",
+    Array("id <= 100", s"id > 100 and 1000 / (id - $bad) <> 0"),
+    new java.util.Properties())
+
   test("a failing partition reaches the caller and releases its Arrow " +
       "buffers and connections") {
     seeded
-    // the second partition divides by zero mid-batch at id 250, or on its
-    // first row at id 101
     for (bad <- Seq(250, 101)) {
-      val df = spark.read.jdbc(url, "fail",
-        Array("id <= 100", s"id > 100 and 1000 / (id - $bad) <> 0"),
-        new java.util.Properties())
+      val df = failing(bad)
       assert(ArrowSink.arrowBatchRdd(df).isInstanceOf[JdbcArrowRDD])
       val memory = GraftArrowBridge.rootAllocator.getAllocatedMemory
       val connections = RecordingDriver.openConnections
-      val e = intercept[SparkException](ArrowSink.collectIpcBatches(df))
+      val e = intercept[SparkException](ArrowSink.arrowBatchRdd(df).collect())
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(t => String.valueOf(t.getMessage).contains("divide by zero")))
       // the other task may still be winding down when the job fails
@@ -220,5 +228,80 @@ class JdbcArrowSpec extends AnyFunSuite {
       assert(GraftArrowBridge.rootAllocator.getAllocatedMemory == memory)
       assert(RecordingDriver.openConnections == connections)
     }
+  }
+
+  test("the driver collect rethrows a failing partition's own exception " +
+      "once every read has released its Arrow buffers and connection") {
+    seeded
+    for (bad <- Seq(250, 101)) {
+      val df = failing(bad)
+      val memory = GraftArrowBridge.rootAllocator.getAllocatedMemory
+      val connections = RecordingDriver.openConnections
+      val e = intercept[SQLException](ArrowSink.collectIpcBatches(df))
+      assert(e.getMessage.contains("divide by zero"), e)
+      assert(GraftArrowBridge.rootAllocator.getAllocatedMemory == memory)
+      assert(RecordingDriver.openConnections == connections)
+    }
+  }
+
+  test("the driver collect stops every read past spark.driver.maxResultSize") {
+    seeded
+    val scan = GraftArrowBridge.jdbcScan(zoo()).get
+    val memory = GraftArrowBridge.rootAllocator.getAllocatedMemory
+    val connections = RecordingDriver.openConnections
+    val e = intercept[SparkException](JdbcArrowReader.collect(spark, scan, 1024))
+    assert(e.getMessage.contains("spark.driver.maxResultSize"), e)
+    assert(GraftArrowBridge.rootAllocator.getAllocatedMemory == memory)
+    assert(RecordingDriver.openConnections == connections)
+    // 0: no limit
+    assert(JdbcArrowReader.collect(spark, scan, 0).length == 2)
+  }
+
+  test("the driver collect of a covered read runs no Spark job and holds " +
+      "at most defaultParallelism connections") {
+    seeded
+    val sc = spark.sparkContext
+    assert(sc.defaultParallelism == 4)
+    // 8 partitions over [1, 121]: about half of them empty
+    val df = Graft.readSql(spark, url, Seq("select * from zoo"),
+      partitionOn = Some("id"), partitionNum = Some(8),
+      partitionRange = Some((1L, 121L)))
+    assert(GraftArrowBridge.jdbcScan(df).map(_.partitions.length).contains(8))
+    val expected = sparkPath(df)
+    // the job group of every job that starts; the listener bus delivers
+    // in order, so once the "after" control job shows, every job started
+    // before it has shown too
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val mark = s"no-job-${java.util.UUID.randomUUID()}"
+    def control(tag: String): Unit = {
+      sc.setJobGroup(s"$mark-$tag", tag)
+      try assert(sc.parallelize(Seq(1), 1).count() == 1L)
+      finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    val (direct, peak) = try {
+      control("before")
+      val out = RecordingDriver.peakOpen(ArrowSink.collectIpcBatches(df).toSeq)
+      control("after")
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains(s"$mark-after") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      out
+    } finally sc.removeSparkListener(listener)
+    val seen = groups.asScala.toSeq
+    assert(seen.contains(s"$mark-before") && seen.contains(s"$mark-after"),
+      seen)
+    assert(seen.dropWhile(_ != s"$mark-before").drop(1)
+      .takeWhile(_ != s"$mark-after").isEmpty, seen)
+    assert(peak <= 4, s"$peak connections open at once")
+    val schema = TestArrowBridge.arrowSchema(spark, df.schema)
+    val rows = ArrowIpc.decode(schema, direct)
+    assert(rows == ArrowIpc.decode(schema, expected))
+    assert(rows.flatten.map(_.head) == (1 to 60).map(_.toLong))
   }
 }

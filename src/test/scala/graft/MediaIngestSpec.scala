@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -70,5 +72,18 @@ class MediaIngestSpec extends AnyFunSuite {
     val nStream = spark.read.parquet(s"$dir/documents.parquet")
       .where(col("doc_id") >= cut).count()
     assert(rec.count() == nStream)
+  }
+
+  test("a run leaves none of its per-run state artifacts behind") {
+    val artifacts = Files.createTempDirectory("media-ingest-spec").toFile
+    val prev = spark.conf.getOption("graft.artifacts.dir")
+    spark.conf.set("graft.artifacts.dir", artifacts.getAbsolutePath)
+    try {
+      val out = SparkEntry.queries("q214_stream_media_ingest")(spark, dir)
+      assert(out.count() > 0)
+      val left = artifacts.list().toSeq
+      assert(!left.exists(_.startsWith("graft_media_seen_")), left)
+    } finally prev.fold(spark.conf.unset("graft.artifacts.dir"))(
+      spark.conf.set("graft.artifacts.dir", _))
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicReference
+import java.util.concurrent.{CancellationException, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import org.apache.spark.TaskContext
 import org.apache.spark.scheduler.{JobFailed, JobResult, SparkListener,
@@ -25,7 +25,9 @@ object ParSpecGates {
 
 /** Contract of [[Par]]: tasks run under their own job groups, and a
   * failure — of a task or of the scope body — cancels the running jobs
-  * of the other tasks before the scope rethrows it. */
+  * of the other tasks before the scope rethrows it; a task that runs no
+  * Spark job stops at its next `check` after a failure or an interrupted
+  * scope wait. */
 class ParSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -199,5 +201,60 @@ class ParSpec extends AnyFunSuite {
     }
     assert(thrown eq boom)
     assert(ran.get == null)
+  }
+
+  test("a task that runs no Spark job stops at its first check after a " +
+      "sibling throws") {
+    val polls = new AtomicInteger
+    val checked = new CountDownLatch(1)
+    val failed = new CountDownLatch(1)
+    val bEnded = new AtomicReference[Throwable]()
+    val boom = new IllegalStateException("task a failed")
+    val thrown = intercept[IllegalStateException] {
+      Par.scope(spark, "par-poll") { p =>
+        p.async("b") {
+          // one unit of work between checks, as a reader's 1,024 rows
+          try while (polls.get < 100) {
+            p.check()
+            polls.incrementAndGet()
+            checked.countDown()
+            failed.await(Wait, TimeUnit.SECONDS)
+          } catch { case e: Throwable => bEnded.set(e); throw e }
+        }
+        assert(checked.await(Wait, TimeUnit.SECONDS))
+        val a = p.async("a")(throw boom)
+        intercept[IllegalStateException](a.get)
+        failed.countDown()
+      }
+    }
+    assert(thrown eq boom)
+    assert(bEnded.get.isInstanceOf[CancellationException], bEnded.get)
+    assert(polls.get == 1)
+  }
+
+  test("an interrupted scope wait stops a polling task before the scope " +
+      "rethrows the interrupt") {
+    val checked = new CountDownLatch(1)
+    val bEnded = new AtomicReference[Throwable]()
+    val thrown = new AtomicReference[Throwable]()
+    val waiter = new Thread(() =>
+      try Par.scope(spark, "par-interrupt") { p =>
+        p.async("b") {
+          val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(Wait)
+          try while (System.nanoTime() < deadline) {
+            p.check()
+            checked.countDown()
+            Thread.sleep(5)
+          } catch { case e: Throwable => bEnded.set(e); throw e }
+        }
+      } catch { case e: Throwable => thrown.set(e) })
+    waiter.start()
+    assert(checked.await(Wait, TimeUnit.SECONDS))
+    waiter.interrupt()
+    waiter.join(TimeUnit.SECONDS.toMillis(Wait))
+    assert(!waiter.isAlive)
+    assert(thrown.get.isInstanceOf[InterruptedException], thrown.get)
+    assert(bEnded.get.isInstanceOf[CancellationException],
+      s"the scope returned while b still ran: ${bEnded.get}")
   }
 }

@@ -14,9 +14,10 @@ import scala.jdk.CollectionConverters._
   * (it is client syntax), opens the embedded database `<db>`, and records
   * the text of every statement prepared on the connection or executed
   * through one of its plain statements, from driver and executor threads
-  * alike, and counts the connections it has opened that are not yet
-  * closed. The URL still starts with `jdbc:derby`, so Spark picks its Derby
-  * dialect as it would for a plain Derby URL. */
+  * alike. It counts the connections it has opened that are not yet
+  * closed, and the most of them open at once. The URL still starts with
+  * `jdbc:derby`, so Spark picks its Derby dialect as it would for a plain
+  * Derby URL. */
 final class RecordingDriver extends Driver {
   import RecordingDriver._
 
@@ -25,7 +26,7 @@ final class RecordingDriver extends Driver {
   def connect(url: String, info: Properties): Connection =
     if (!acceptsURL(url)) null
     else Option(embedded.connect(embeddedUrl(url), info)).map { c =>
-      open.incrementAndGet()
+      peak.accumulateAndGet(open.incrementAndGet(), math.max)
       proxy(classOf[Connection], c)
     }.orNull
 
@@ -56,8 +57,18 @@ object RecordingDriver {
 
   private val open = new AtomicInteger
 
+  private val peak = new AtomicInteger
+
   /** Connections opened through this driver and not yet closed. */
   def openConnections: Int = open.get
+
+  /** Runs `body` and returns its result with the most connections that
+    * were open at once while it ran. */
+  def peakOpen[A](body: => A): (A, Int) = synchronized {
+    peak.set(open.get)
+    val a = body
+    (a, peak.get)
+  }
 
   /** Runs `body` and returns its result with the SQL texts sent while it
     * ran, in the order they were sent. */
