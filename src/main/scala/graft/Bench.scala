@@ -44,6 +44,16 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // The run's effective graft.* conf (file artifact only): per table
+    // key, the value a read gets (null: unset, no default) and whether
+    // the session set it. Read before any query runs; a malformed value
+    // fails here, naming its key.
+    val confJson = Conf.entries.map { e =>
+      val v = e.effective(spark).fold("null")(x =>
+        "\"" + x.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
+      val set = spark.conf.getOption(e.key).isDefined
+      s""""${e.key}":{"value":$v,"set":$set}"""
+    }.mkString("{", ",", "}")
     // Optional perf protocol (reference metric names) — SPARK_GRAFT_PERF=1
     val perf = if (sys.env.get("SPARK_GRAFT_PERF").contains("1"))
       Some(graft.tools.PerfLogger.install(spark)) else None
@@ -303,7 +313,7 @@ object Bench {
       s""","sys_start":${sysJson(sysStart)},"sys_end":${sysJson(sysEnd)}""" +
       s""","reps_detail":$diagJson,"stable":$stableJson""" +
       s""","stable_why":$whyJson""" +
-      s""","data_digest":$digestJson}"""
+      s""","data_digest":$digestJson,"conf":$confJson}"""
     // The driver keeps only a bounded tail of the combined output, so a
     // long per-query map can lose its HEAD in the captured artifact
     // (BENCH_r10 lost q01–q26 that way). Defense: also write the full

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Conf
 import graft.functions.TextFunctions._
 
 /** Public deduplication operators over arbitrary `id`/`text` frames —
@@ -1310,14 +1311,33 @@ object Dedup {
           (col("n1") + col("n2") - col("inter")).cast("double")).as("jac"))
 
   /** Degenerate-input guard for bucket self-joins: buckets larger than
-    * the cap conf are dropped from candidate generation, loudly (count
-    * + largest land in [[graft.tools.DedupGuard]]). See the q27 entry
-    * docs for the one-bounded-job shape. */
+    * `graft.dedup.maxBucket` (default 2000 — far above anything real
+    * data produces AFTER exact-duplicate collapse, so oracle parity at
+    * the test SFs is unaffected) are DROPPED from candidate generation,
+    * loudly: the skip count and largest bucket land in
+    * [[graft.tools.DedupGuard]] and a WARN log line.
+    *
+    * ONE bounded job computes bucket sizes and collects only the
+    * OVERSIZED keys — pathological, few by construction. The all-clear
+    * common case then returns `keyed` untouched, so candidate generation
+    * pays NOTHING downstream: no second stats job, no filter join
+    * re-running the upstream aggregate (the r4/r5 advice item — the old
+    * shape forced the pipeline once for a `.head()` stats probe and again
+    * for the size join). When oversized keys exist they are removed by a
+    * broadcast anti-join on the collected list; should an adversarial
+    * input produce more oversized keys than `graft.dedup.maxOversizedKeys`
+    * (default 10k — remember each IS a >cap-doc bucket), the guard stays
+    * distributed: anti-join against the oversized-key frame itself.
+    *
+    * `capKey` is the cap's conf entry — the banded/blocked joins share
+    * `graft.dedup.maxBucket`; q81's cluster-keyed join has its own knob
+    * (`graft.semdedup.maxCluster`) because cluster size is controlled by
+    * a different deployment lever (k ∝ N) than bucket size. */
   private[graft] def capBuckets(keyed: DataFrame, keys: Seq[String],
       s: SparkSession, what: String,
-      capConf: String = "graft.dedup.maxBucket"): DataFrame = {
-    val cap = s.conf.get(capConf, "2000").toInt
-    val maxKeys = s.conf.get("graft.dedup.maxOversizedKeys", "10000").toInt
+      capKey: Conf.Key[Int] = Conf.DedupMaxBucket): DataFrame = {
+    val cap = capKey(s)
+    val maxKeys = Conf.DedupMaxOversizedKeys(s)
     val oversized = keyed.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("bsz"))
       .where(col("bsz") > cap)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Par
+import graft.{Conf, Par}
 import graft.functions.EmbeddingFunctions.dotNative
 
 /** Public embedding operators over arbitrary `id`/`vector` frames:
@@ -861,7 +861,7 @@ object Embed {
         col("nrm"))
       .localCheckpoint() // cap scan + both pairwise sides + final left join
     val capped = Dedup.capBuckets(km, Seq("cluster"), s,
-      "semdedup clusters", "graft.semdedup.maxCluster")
+      "semdedup clusters", Conf.SemdedupMaxCluster)
     val b = capped.select(col("vec_id").as("b_id"), col("cluster"),
       col("v").as("bv"), col("nrm").as("bn"))
     val dom = capped.join(b, Seq("cluster"))

@@ -19,6 +19,6 @@ import org.apache.spark.sql.functions.expr
 object BatchCut {
 
   def cut(s: SparkSession, d: DataFrame, idCol: String = "doc_id"): Long =
-    s.conf.getOption("graft.batch.cut").map(_.toLong).getOrElse(
+    graft.Conf.BatchCut(s).getOrElse(
       d.agg(expr(s"(max($idCol) * 4) div 5")).head().getLong(0))
 }

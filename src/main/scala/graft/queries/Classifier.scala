@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Graft
+import graft.{Conf, Graft}
 import graft.functions.TextFunctions._
 import graft.sources.Memo
 
@@ -33,24 +33,15 @@ import graft.sources.Memo
   * bit-for-bit.
   *
   * Knob pins (the q150 oracle-pin discipline): the oracles interpolate
-  * [[ClfBuckets]]/[[ClfIters]]/[[ClfLr20]]/[[ClfThreshold20]]/
-  * [[ClfTarget]] — the graft.clf.* session knobs exist for deployment
-  * runs, but non-default values are not verify-gate material.
+  * the defaults of the graft.clf.* entries of [[graft.Conf]] and
+  * [[ClfThreshold20]] — the graft.clf.* session knobs exist for
+  * deployment runs, but non-default values are not verify-gate
+  * material.
   */
 object Classifier {
 
-  /** Hash buckets for the tf feature space (model rows ≤ buckets+1). */
-  private val ClfBuckets = 8192
-  /** Full-batch training iterations (each unrolled in the oracle). */
-  private val ClfIters = 16
-  /** Learning rate in 2²⁰ fixed point (2.0 — measured stable where 4.0
-    * overshoots on the sf0.01 corpus; per-coordinate normalization
-    * makes the same lr serve bias and word features). */
-  private val ClfLr20 = 2L * 1048576L
   /** keep threshold: p ≥ 0.5. */
   private val ClfThreshold20 = 524288L
-  /** The positive-class source (the q104 target-source convention). */
-  private val ClfTarget = "src0"
 
   private val Fp = 1048576L
   private val Fp40 = 1099511627776L
@@ -76,31 +67,26 @@ object Classifier {
       pmod(hash60(col("doc_id").cast("string")), lit(r)) === 0L)
   }
 
+  /** Every knob the training reads, as the model memo and the q153
+    * artifact key them (the substrMemo rule: a memo is keyed by the
+    * inputs that determine the answer, so a mid-session knob change can
+    * never serve a stale model). */
+  private def knobs(s: SparkSession): String =
+    s"b${Conf.ClfBuckets(s)}i${Conf.ClfIters(s)}l${Conf.ClfLr20(s)}" +
+      s"t${Conf.ClfTarget(s)}"
+
   private def trainedModel(s: SparkSession, dir: String,
       maxId: Option[Long]): Array[(Long, Long)] = {
-    // the key carries every knob the training reads (the substrMemo
-    // rule: a memo is keyed by the inputs that determine the answer),
-    // so a mid-session knob change can never serve a stale model
-    val variant = maxId.map(c => s"cut$c").getOrElse("full") +
-      s"#b${bucketsOf(s)}#i${itersOf(s)}#lr${lrOf(s)}#t${tgtOf(s)}"
+    val variant = maxId.map(c => s"cut$c").getOrElse("full") + "#" + knobs(s)
     clfMemo(s, Some(s"$dir/documents.parquet"), variant) {
       val d0 = Graft.parquetSource(s, dir).table("documents")
       val d = maxId.map(c => d0.where(col("doc_id") < c)).getOrElse(d0)
       graft.ops.Select.classifierTrain(
-          balancedSeed(d, tgtOf(s)), "y", "doc_id", "text",
-          bucketsOf(s), itersOf(s), lrOf(s))
+          balancedSeed(d, Conf.ClfTarget(s)), "y", "doc_id", "text",
+          Conf.ClfBuckets(s), Conf.ClfIters(s), Conf.ClfLr20(s))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
     }
   }
-
-  private def tgtOf(s: SparkSession): String =
-    s.conf.getOption("graft.clf.target").getOrElse(ClfTarget)
-  private def bucketsOf(s: SparkSession): Int =
-    s.conf.getOption("graft.clf.buckets").map(_.toInt).getOrElse(ClfBuckets)
-  private def itersOf(s: SparkSession): Int =
-    s.conf.getOption("graft.clf.iters").map(_.toInt).getOrElse(ClfIters)
-  private def lrOf(s: SparkSession): Long =
-    s.conf.getOption("graft.clf.lr20").map(_.toLong).getOrElse(ClfLr20)
 
   private def modelDf(s: SparkSession,
       m: Array[(Long, Long)]): DataFrame = {
@@ -112,9 +98,8 @@ object Classifier {
     * public op (the bpeMergeIndex discipline). */
   private[graft] def clfModelIndex(s: SparkSession, dir: String,
       cut: Long): String =
-    graft.sources.SideTable.ensure(s, "clf_model",
-        s"$dir#$cut#b${bucketsOf(s)}i${itersOf(s)}l${lrOf(s)}" +
-          s"t${tgtOf(s)}", Some(s"$dir/documents.parquet")) {
+    graft.sources.SideTable.ensure(s, "clf_model", s"$dir#$cut#${knobs(s)}",
+        Some(s"$dir/documents.parquet")) {
       modelDf(s, trainedModel(s, dir, Some(cut)))
     }
 
@@ -123,8 +108,8 @@ object Classifier {
     // ---- q151: quality-classifier training (the model itself) ----------
     // The model is the verified output: ≤ buckets+1 (h, w20) rows, h=−1
     // the bias. Training data = the balanced seed; the oracle replays
-    // ratio probe, seed selection, feature build, and all ClfIters
-    // iterations with exact integers.
+    // ratio probe, seed selection, feature build, and all
+    // graft.clf.iters iterations with exact integers.
     "q151_clf_train" -> ((s, dir) => {
       modelDf(s, trainedModel(s, dir, None)).orderBy("h")
     }),
@@ -141,7 +126,7 @@ object Classifier {
       graft.ops.Select.classifierScore(
           Graft.parquetSource(s, dir).table("documents"),
           modelDf(s, trainedModel(s, dir, None)),
-          ClfThreshold20, "doc_id", "text", bucketsOf(s))
+          ClfThreshold20, "doc_id", "text", Conf.ClfBuckets(s))
         .orderBy("doc_id")
     }),
 
@@ -160,7 +145,7 @@ object Classifier {
       val mPath = clfModelIndex(s, dir, cut)
       graft.ops.Select.classifierScore(
           d.where(col("doc_id") >= cut), s.read.parquet(mPath),
-          ClfThreshold20, "doc_id", "text", bucketsOf(s))
+          ClfThreshold20, "doc_id", "text", Conf.ClfBuckets(s))
         .orderBy("doc_id")
     }),
 
@@ -178,24 +163,25 @@ object Classifier {
       val d = Graft.parquetSource(s, dir).table("documents")
       val scored = graft.ops.Select.classifierScore(
         d, modelDf(s, trainedModel(s, dir, None)),
-        ClfThreshold20, "doc_id", "text", bucketsOf(s))
+        ClfThreshold20, "doc_id", "text", Conf.ClfBuckets(s))
       val labels = d.select(col("doc_id"),
-        when(col("source") === tgtOf(s), 1L).otherwise(0L).as("y"))
+        when(col("source") === Conf.ClfTarget(s), 1L).otherwise(0L).as("y"))
       graft.ops.Select.classifierEval(scored, labels)
     })
   )
 
   // --------------------------------------------------------- oracles
 
-  /** The training CTE chain: seed/features/labels plus ClfIters
-    * unrolled gradient iterations ending in w<ClfIters>. `pre` opens
+  /** The training CTE chain: seed/features/labels plus n unrolled
+    * gradient iterations ending in w<n>, n the default of
+    * `graft.clf.iters`. `pre` opens
     * extra leading CTEs; `docWhere` restricts the TRAINING corpus
     * (the q153 old slice). Reused CTEs are MATERIALIZED — the chain
     * references w{i−1} twice per round, which default CTE inlining
     * would blow up exponentially. */
   private def clfTrainCtes(pre: String, docWhere: String): String = {
     val base = s"""WITH ${pre}lab0 AS (
-      |  SELECT doc_id, CASE WHEN source = '$ClfTarget' THEN 1 ELSE 0
+      |  SELECT doc_id, CASE WHEN source = '${Conf.ClfTarget.default}' THEN 1 ELSE 0
       |    END::bigint AS y
       |  FROM documents$docWhere
       |), ratio AS (
@@ -208,7 +194,7 @@ object Classifier {
       |    ('0x' || substr(md5(doc_id::varchar),1,15))::bigint % r = 0
       |), tok AS (
       |  SELECT d.doc_id,
-      |    ('0x' || substr(md5(t),1,15))::bigint % $ClfBuckets AS h
+      |    ('0x' || substr(md5(t),1,15))::bigint % ${Conf.ClfBuckets.default} AS h
       |  FROM (
       |    SELECT doc_id,
       |      unnest(regexp_split_to_array(trim(text), '\\s+')) AS t
@@ -228,7 +214,7 @@ object Classifier {
       |  SELECT CAST(NULL AS BIGINT) AS h, CAST(NULL AS BIGINT) AS w20
       |  WHERE false
       |)""".stripMargin
-    val iters = (1 to ClfIters).map { i =>
+    val iters = (1 to Conf.ClfIters.default).map { i =>
       val p = i - 1
       s""", z$i AS (
         |  SELECT f.doc_id, sum(coalesce(w.w20, 0) * f.t20)::bigint AS zn
@@ -245,22 +231,22 @@ object Classifier {
         |), w$i AS MATERIALIZED (
         |  SELECT g.h,
         |    (coalesce(w.w20, 0) - (CASE WHEN g.g < 0
-        |       THEN -(((-g.g) * $ClfLr20) // (g.s * $Fp))
-        |       ELSE ((g.g * $ClfLr20) // (g.s * $Fp)) END))::bigint AS w20
+        |       THEN -(((-g.g) * ${Conf.ClfLr20.default}) // (g.s * $Fp))
+        |       ELSE ((g.g * ${Conf.ClfLr20.default}) // (g.s * $Fp)) END))::bigint AS w20
         |  FROM g$i g LEFT JOIN w$p w USING (h)
         |)""".stripMargin
     }.mkString
     base + iters
   }
 
-  /** The scoring CTE chain against w<ClfIters>: tf features of
+  /** The scoring CTE chain against w<n>: tf features of
     * `scoreWhere`-restricted docs, zn, and the `scored` CTE
     * (doc_id, n_tokens, p20, prob, keep) shared by the q152/q153
     * per-doc tails and the q158 eval rollup. */
   private def clfScoreCtes(scoreWhere: String): String =
     s""", allt AS (
       |  SELECT doc_id,
-      |    ('0x' || substr(md5(t),1,15))::bigint % $ClfBuckets AS h
+      |    ('0x' || substr(md5(t),1,15))::bigint % ${Conf.ClfBuckets.default} AS h
       |  FROM (
       |    SELECT doc_id,
       |      unnest(regexp_split_to_array(trim(text), '\\s+')) AS t
@@ -276,7 +262,7 @@ object Classifier {
       |), zf AS (
       |  SELECT f.doc_id, sum(coalesce(w.w20, 0) * f.t20)::bigint AS zn,
       |    max(ann.n)::bigint AS n_tokens
-      |  FROM afeats f LEFT JOIN w$ClfIters w USING (h)
+      |  FROM afeats f LEFT JOIN w${Conf.ClfIters.default} w USING (h)
       |    JOIN ann ON ann.doc_id = f.doc_id
       |  GROUP BY f.doc_id
       |), scored AS MATERIALIZED (
@@ -301,7 +287,7 @@ object Classifier {
 
     "q151_clf_train" ->
       (clfTrainCtes("", "") +
-        s"\nSELECT h, w20 FROM w$ClfIters ORDER BY h"),
+        s"\nSELECT h, w20 FROM w${Conf.ClfIters.default} ORDER BY h"),
 
     "q152_clf_score" ->
       (clfTrainCtes("", "") + clfScoreSql("")),

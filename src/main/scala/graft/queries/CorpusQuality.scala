@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Graft, Par}
+import graft.{Conf, Graft, Par}
 import graft.functions.TextFunctions._
 
 /** Corpus-level quality / curation operators over the `documents` table —
@@ -28,15 +28,6 @@ import graft.functions.TextFunctions._
   * hash-match the DuckDB oracle bit-for-bit.
   */
 object CorpusQuality {
-
-  /** q150's Kneser-Ney discount — the ONE definition both the engine
-    * binding and the DuckDB oracle interpolate, so the two sides
-    * cannot drift; must stay binary-exact (a multiple of 1/256,
-    * enforced by [[graft.ops.Text.knScore]]'s require). The
-    * `graft.kn.discount` session knob still exists for deployment
-    * runs, but the oracle replays THIS value — non-default knobs are
-    * not verify-gate material (documented at the binding). */
-  private val KnDiscountDefault = 0.75d
 
   /** q66's C4-style flag battery — one single-pass, fully codegen'd
     * projection shared by q66 (per-doc audit) and q84 (per-source
@@ -414,7 +405,7 @@ object CorpusQuality {
       val old = s.read.parquet(gramPath).withColumn("seen", lit(1))
       val sh = shingleHashRows(d.where(col("doc_id") >= cut), 3).distinct()
       val flagged =
-        if (s.conf.get("graft.artifacts.bloom", "false").toBoolean) {
+        if (Conf.ArtifactsBloom(s)) {
           val bf = graft.sources.SideTable.ensureBloomOf(s, "gram_set",
             s"$dir#$cut", Some(s"$dir/documents.parquet"), gramPath, "h")
           val probed = sh.withColumn("maybe",
@@ -846,13 +837,11 @@ object CorpusQuality {
     // discipline — no rand()), so excludeSelf drops the trivial
     // self-retrieval rows.
     "q102_bm25_retrieval" -> ((s, dir) => {
-      val dfCap = s.conf.getOption("graft.bm25.dfCap").map(_.toInt)
-        .getOrElse(16)
-      val k = s.conf.getOption("graft.bm25.k").map(_.toInt).getOrElse(10)
       val d = Graft.parquetSource(s, dir).table("documents")
       val queries = d.where(pmod(hash60(col("text")), lit(20)) === 0)
         .select(col("doc_id"), col("text"))
-      graft.ops.Retrieval.bm25(d, queries, k, dfCap, excludeSelf = true)
+      graft.ops.Retrieval.bm25(d, queries, Conf.Bm25K(s), Conf.Bm25DfCap(s),
+        excludeSelf = true)
     }),
 
     // ---- q135: hybrid retrieval — RRF fusion of BM25 and dense ANN -----
@@ -863,7 +852,7 @@ object CorpusQuality {
     // Rank-only fusion is the point: ppm and cosine are incomparable
     // scales, RRF never compares them.
     "q135_hybrid_rrf" -> ((s, dir) => {
-      val k = s.conf.getOption("graft.bm25.k").map(_.toInt).getOrElse(10)
+      val k = Conf.Bm25K(s)
       val sparse = defs("q102_bm25_retrieval")(s, dir)
         .select(col("query_id"), col("doc_id"), col("rank"))
       val d = Graft.parquetSource(s, dir).table("documents")
@@ -926,13 +915,11 @@ object CorpusQuality {
     // word follows. Fixed-point 2^20 scores keep the per-doc sum an
     // exact integer. Knob: graft.kn.discount ∈ (0,1), binary-exact
     // (multiple of 1/256) values only — NOTE the oracle interpolates
-    // [[KnDiscountDefault]], so a non-default knob is a deployment
+    // the entry's default, so a non-default knob is a deployment
     // setting, not a verify-gate one (the oracle pin).
     "q150_kn_bigram" -> ((s, dir) => {
-      val d0 = s.conf.getOption("graft.kn.discount").map(_.toDouble)
-        .getOrElse(KnDiscountDefault)
       graft.ops.Text.knScore(
-          Graft.parquetSource(s, dir).table("documents"), d0)
+          Graft.parquetSource(s, dir).table("documents"), Conf.KnDiscount(s))
         .orderBy("doc_id")
     }),
 
@@ -962,17 +949,12 @@ object CorpusQuality {
     // pool = every non-target source, target = the designated
     // quality-domain source.
     "q104_dsir_selection" -> ((s, dir) => {
-      val target = s.conf.getOption("graft.dsir.targetSource")
-        .getOrElse("src0")
-      val buckets = s.conf.getOption("graft.dsir.buckets").map(_.toInt)
-        .getOrElse(10000)
-      val budget = s.conf.getOption("graft.dsir.budget").map(_.toInt)
-        .getOrElse(100)
+      val target = Conf.DsirTargetSource(s)
       val d = Graft.parquetSource(s, dir).table("documents")
       graft.ops.Select.dsirTopK(
           d.where(col("source") =!= target),
           d.where(col("source") === target),
-          budget, buckets = buckets)
+          Conf.DsirBudget(s), buckets = Conf.DsirBuckets(s))
         .orderBy("rank")
     }),
 
@@ -996,9 +978,6 @@ object CorpusQuality {
     // retrieval use case: route/attribute/near-dup-check every incoming
     // doc against the indexed corpus without touching corpus documents.
     "q105_incremental_bm25" -> ((s, dir) => {
-      val dfCap = s.conf.getOption("graft.bm25.dfCap").map(_.toInt)
-        .getOrElse(16)
-      val k = s.conf.getOption("graft.bm25.k").map(_.toInt).getOrElse(10)
       val d = Graft.parquetSource(s, dir).table("documents")
       val cut = BatchCut.cut(s, d)
       val (postPath, lexPath, dlPath, totPath) = bm25Index(s, dir, cut)
@@ -1009,7 +988,7 @@ object CorpusQuality {
       val qDf = s.read.parquet(lexPath)
         .join(broadcast(qtf.select("h").distinct()), Seq("h"), "left_semi")
         .localCheckpoint() // ≤ |batch terms| rows
-      val rare = qtf.join(broadcast(qDf.where(col("df") <= dfCap)
+      val rare = qtf.join(broadcast(qDf.where(col("df") <= Conf.Bm25DfCap(s))
           .select("h")), Seq("h"), "left_semi")
         .withColumn("bucket", pmod(col("h"), lit(64)).cast("int"))
       // no self-pair filter needed: query ids are ≥ cut, postings < cut
@@ -1038,7 +1017,7 @@ object CorpusQuality {
           Seq("doc_id", "h"))
         .join(broadcast(qDf), Seq("h"))
         .join(broadcast(dlC), Seq("doc_id"))
-        .crossJoin(broadcast(tot)), k)
+        .crossJoin(broadcast(tot)), Conf.Bm25K(s))
     }),
 
     // ---- q106: incremental DSIR scoring vs persisted LM artifacts ------
@@ -1056,10 +1035,8 @@ object CorpusQuality {
     // the per-doc score stream (the resampler's input), not a top-k —
     // the batch is already the unit of work.
     "q106_incremental_dsir" -> ((s, dir) => {
-      val target = s.conf.getOption("graft.dsir.targetSource")
-        .getOrElse("src0")
-      val buckets = s.conf.getOption("graft.dsir.buckets").map(_.toInt)
-        .getOrElse(10000)
+      val target = Conf.DsirTargetSource(s)
+      val buckets = Conf.DsirBuckets(s)
       val d = Graft.parquetSource(s, dir).table("documents")
       val cut = BatchCut.cut(s, d)
       val (ctPath, crPath) = dsirLmIndex(s, dir, cut, target, buckets)
@@ -1138,8 +1115,6 @@ object CorpusQuality {
     // df > dfCap — the signal to raise the cap or add an impact-ordered
     // fallback tier.
     "q108_bm25_recall_audit" -> ((s, dir) => {
-      val dfCap = s.conf.getOption("graft.bm25.dfCap").map(_.toInt)
-        .getOrElse(16)
       val k = 10 // fixed audit grain (matches the recall_at_10 column)
       val d = Graft.parquetSource(s, dir).table("documents")
       val tf = shingleHashRows(d, 3)
@@ -1174,7 +1149,7 @@ object CorpusQuality {
         .select(col("query_id"), col("doc_id")).distinct()
         .localCheckpoint() // bounded by Σ df over the sample's terms
       val candCap = qtf
-        .join(stats.where(col("df") <= dfCap).select(col("h")), "h")
+        .join(stats.where(col("df") <= Conf.Bm25DfCap(s)).select(col("h")), "h")
         .join(tf.select(col("doc_id"), col("h")), "h")
         .where(col("doc_id") =!= col("query_id"))
         .select(col("query_id"), col("doc_id")).distinct()
@@ -1381,9 +1356,8 @@ object CorpusQuality {
     * before the window. */
   private def tokenBudget(s: SparkSession, docs: DataFrame): DataFrame =
     graft.ops.Curate.tokenBudget(docs,
-      s.conf.get("graft.budget.tokens", "10000").toLong,
-      shards0 = s.conf.get("graft.budget.shards",
-        s.sparkContext.defaultParallelism.toString).toInt)
+      Conf.BudgetTokens(s),
+      shards0 = Conf.BudgetShards(s))
 
   // ---------------------------------------------------------------- oracle
 
@@ -1934,7 +1908,7 @@ object CorpusQuality {
         |  GROUP BY 1, 2, 3
         |), sc AS (
         |  SELECT doc_id, k,
-        |    floor((((c12 - $KnDiscountDefault) + ($KnDiscountDefault * n1l)
+        |    floor((((c12 - ${Conf.KnDiscount.default}) + (${Conf.KnDiscount.default} * n1l)
         |      * (n1r::double / bt::double)) / c1) * 1048576)::bigint
         |      AS kn20
         |  FROM dp JOIN pc USING (w1, w2) JOIN lm USING (w1)

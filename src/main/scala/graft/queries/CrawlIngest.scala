@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Graft, Par}
+import graft.{Conf, Graft, Par}
 import graft.functions.TextFunctions._
 
 /** q109 — the composed crawl-ingest batch job: the incremental family's
@@ -192,7 +192,7 @@ object CrawlIngest {
   private[graft] def keysMember(s: SparkSession, dir: String, cut: Long,
       keyPath: String, bkeys: DataFrame): DataFrame = {
     val probeKeys =
-      if (s.conf.get("graft.artifacts.bloom", "false").toBoolean) {
+      if (Conf.ArtifactsBloom(s)) {
         val bf = graft.sources.SideTable.ensureBloomOf(s, "content_keys",
           s"$dir#$cut", Some(s"$dir/documents.parquet"), keyPath, "gk")
         bkeys.where(graft.functions.Bloom.mightContain(bf, col("gk")))
@@ -307,12 +307,9 @@ object CrawlIngest {
         col("top1_doc"), col("top1_ppm"))
 
   private[graft] def run(s: SparkSession, dir: String): DataFrame = {
-    val target = s.conf.getOption("graft.dsir.targetSource")
-      .getOrElse("src0")
-    val buckets = s.conf.getOption("graft.dsir.buckets").map(_.toInt)
-      .getOrElse(10000)
-    val dfCap = s.conf.getOption("graft.bm25.dfCap").map(_.toInt)
-      .getOrElse(16)
+    val target = Conf.DsirTargetSource(s)
+    val buckets = Conf.DsirBuckets(s)
+    val dfCap = Conf.Bm25DfCap(s)
 
     val d = Graft.parquetSource(s, dir).table("documents")
     val cut = BatchCut.cut(s, d)
@@ -508,12 +505,9 @@ object CrawlIngest {
     // Phase timing: q111 is the bench's single most expensive line
     // item, so its cost must be decomposable (see PhaseTimer).
     val timed = new PhaseTimer(s, "q111-timing")
-    val target = s.conf.getOption("graft.dsir.targetSource")
-      .getOrElse("src0")
-    val buckets = s.conf.getOption("graft.dsir.buckets").map(_.toInt)
-      .getOrElse(10000)
-    val dfCap = s.conf.getOption("graft.bm25.dfCap").map(_.toInt)
-      .getOrElse(16)
+    val target = Conf.DsirTargetSource(s)
+    val buckets = Conf.DsirBuckets(s)
+    val dfCap = Conf.Bm25DfCap(s)
     val d = Graft.parquetSource(s, dir).table("documents")
     val cut = BatchCut.cut(s, d)
     val fp = Some(s"$dir/documents.parquet")
@@ -542,7 +536,7 @@ object CrawlIngest {
     // (bounded by |batch|; a deployment's source is Kafka/files)
     val ids = d.where(col("doc_id") >= cut).select(col("doc_id"))
       .orderBy("doc_id").collect().map(_.getLong(0)).toSeq
-    val nEpochs = s.conf.get("graft.stream.epochs", "4").toInt
+    val nEpochs = Conf.StreamEpochs(s)
     val chunks =
       if (ids.isEmpty) Seq.empty
       else ids.grouped(

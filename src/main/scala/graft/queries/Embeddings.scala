@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Graft
+import graft.{Conf, Graft}
 import graft.functions.EmbeddingFunctions._
 import graft.sources.Memo
 
@@ -158,37 +158,16 @@ object Embeddings {
 
   // ------------------------------------------------------- k-means (q80)
 
-  /** Defaults for the clustering family — the values the static DuckDB
-    * oracles are written against. The confs are the DEPLOYMENT knobs:
-    * SemDeDup's scale rule is k ∝ N (constant expected cluster size, so
-    * q81's Σ|cluster|² pairwise work stays linear in the corpus), which
-    * makes k a per-corpus parameter, never a constant, at 100 TB. A
-    * non-default value changes the operator's defined answer — the
-    * driver's oracle harness runs at the defaults; KMeansSpec covers the
-    * conf-driven variants against the brute-force reimplementation. */
-  private[queries] val KmKDefault = 8
-  private[queries] val KmItersDefault = 3
-  private val SemTauDefault = 0.45
-
-  private val RerankCDefault = 20
-
-  /** q117 PQ defaults: 4 subspaces × 16 centroids over Dim=64 — the
-    * oracle unrolls exactly these (conf knobs graft.pq.m/ksub exist for
-    * deployments; changing them parts ways with the oracle, like kmK). */
-  private[graft] val PqMDefault = 4
-  private[graft] val PqKsubDefault = 16
-  private val OodTauDefault = 0.12
-
-  private[graft] def kmK(s: SparkSession): Int =
-    s.conf.get("graft.kmeans.k", KmKDefault.toString).toInt
-  private[graft] def kmIters(s: SparkSession): Int =
-    s.conf.get("graft.kmeans.iters", KmItersDefault.toString).toInt
-  private[graft] def semTau(s: SparkSession): Double =
-    s.conf.get("graft.semdedup.tau", SemTauDefault.toString).toDouble
-  private[graft] def rerankC(s: SparkSession): Int =
-    s.conf.get("graft.ann.rerankCandidates", RerankCDefault.toString).toInt
-  private[graft] def oodTau(s: SparkSession): Double =
-    s.conf.get("graft.ood.tau", OodTauDefault.toString).toDouble
+  // The clustering family's defaults (graft.kmeans.*, graft.semdedup.*,
+  // graft.ann.rerankCandidates, graft.pq.*, graft.ood.tau; see
+  // graft.Conf) are the values the static DuckDB oracles are written
+  // against. The confs are the DEPLOYMENT knobs: SemDeDup's scale rule
+  // is k ∝ N (constant expected cluster size, so q81's Σ|cluster|²
+  // pairwise work stays linear in the corpus), which makes k a
+  // per-corpus parameter, never a constant, at 100 TB. A non-default
+  // value changes the operator's defined answer — the driver's oracle
+  // harness runs at the defaults; KMeansSpec covers the conf-driven
+  // variants against the brute-force reimplementation.
 
   /** Fixed-point scale (2^20) for centroid accumulation. Multiplying a
     * double by a power of two is EXACT in binary floating point (no
@@ -271,7 +250,7 @@ object Embeddings {
     * stored (`refresh`, q80's path). */
   private def kmeansOf(s: SparkSession, dir: String,
       refresh: Boolean = false): DataFrame = {
-    val params = (kmK(s), kmIters(s))
+    val params = (Conf.KmeansK(s), Conf.KmeansIters(s))
     if (refresh) kmMemo.put(s, embFile(dir), params)(computeKmeans(s, dir))
     else kmMemo(s, embFile(dir), params)(computeKmeans(s, dir))
   }
@@ -291,8 +270,8 @@ object Embeddings {
     val m = km.select(col("vec_id"), col("cluster"), col("v"),
         col("nrm"))
       .join(labels, Seq("vec_id"))
-    val capped = TextPipeline.capBuckets(m, Seq("cluster"), s,
-      what, "graft.semdedup.maxCluster")
+    val capped = graft.ops.Dedup.capBuckets(m, Seq("cluster"), s,
+      what, Conf.SemdedupMaxCluster)
     val b = capped.select(col("vec_id").as("b_id"), col("cluster"),
       col("label").as("b_label"), col("v").as("bv"),
       col("nrm").as("bn"))
@@ -342,7 +321,7 @@ object Embeddings {
     * (checkpoint class, never `.cache()`). */
   private def computeKmeans(s: SparkSession, dir: String): DataFrame = {
     val e = normalized(s, dir).localCheckpoint()
-    val cents = kmeansCentroids(e, kmK(s), kmIters(s))
+    val cents = kmeansCentroids(e, Conf.KmeansK(s), Conf.KmeansIters(s))
     val fin = kmAssign(e, cents)
       .select(col("vec_id"), col("cid").as("cluster"), col("score"),
         col("v"), col("nrm"))
@@ -541,7 +520,7 @@ object Embeddings {
         .select(col("q_id"), col("qv"), col("qn"),
           col("cid").cast("int").as("cell"))
       val scoredLazy =
-        if (s.conf.get("graft.ann.broadcastProbes", "true").toBoolean)
+        if (Conf.AnnBroadcastProbes(s))
           idx.join(broadcast(probes), "cell")
             .select(col("q_id"), col("vec_id"),
               (dotNative(col("qv"), col("v")) / (col("qn") * col("nrm")))
@@ -802,17 +781,17 @@ object Embeddings {
     // from the session memo when q80 already ran.
     "q81_semdedup" -> ((s, dir) => {
       val km = kmeansOf(s, dir)
-      val capped = TextPipeline.capBuckets(
+      val capped = graft.ops.Dedup.capBuckets(
         km.select(col("vec_id"), col("cluster"), col("v"), col("nrm")),
         Seq("cluster"), s, "q81 semdedup clusters",
-        "graft.semdedup.maxCluster")
+        Conf.SemdedupMaxCluster)
       val a = capped
       val b = capped.select(col("vec_id").as("b_id"), col("cluster"),
         col("v").as("bv"), col("nrm").as("bn"))
       val dom = a.join(b, Seq("cluster"))
         .where(col("b_id") < col("vec_id") &&
           (dotNative(col("v"), col("bv")) / (col("nrm") * col("bn")))
-            >= lit(semTau(s)))
+            >= lit(Conf.SemdedupTau(s)))
         .groupBy(col("vec_id")).agg(min(col("b_id")).as("dropped_by"))
       km.select(col("vec_id"), col("cluster"))
         .join(dom, Seq("vec_id"), "left")
@@ -908,7 +887,7 @@ object Embeddings {
           qz.join(broadcast(qq), col("vec_id") =!= col("q_id"))
             .select(col("q_id"), col("vec_id"),
               (dotNative(col("qqv"), col("qv")) / (col("qqn") * col("qn")))
-                .as("cos")), rerankC(s))
+                .as("cos")), Conf.AnnRerankCandidates(s))
         .select(col("q_id"), col("vec_id"))
         .localCheckpoint() // ≤ C·|q| rows; the fetch probe + re-rank spine
       val fetch = e.join(
@@ -942,7 +921,7 @@ object Embeddings {
     "q91_batch_ood" -> ((s, dir) => {
       val cut = BatchCut.cut(s,
         Graft.parquetSource(s, dir).table("embeddings"), "vec_id")
-      val k = kmK(s); val it = kmIters(s)
+      val k = Conf.KmeansK(s); val it = Conf.KmeansIters(s)
       val path = graft.sources.SideTable.ensure(s, "km_centroids",
           s"$dir#$cut#k$k-i$it-s${FpScale.toLong}-hinit",
           Some(s"$dir/embeddings.parquet")) {
@@ -963,7 +942,7 @@ object Embeddings {
           col("r.cos").as("fit"))
       fit.groupBy(col("cluster"))
         .agg(count(lit(1)).as("n_batch"),
-          sum(when(col("fit") < lit(oodTau(s)), 1L).otherwise(0L))
+          sum(when(col("fit") < lit(Conf.OodTau(s)), 1L).otherwise(0L))
             .as("n_ood"),
           min(col("fit")).as("min_fit"))
         .select(col("cluster"), col("n_batch"), col("n_ood"),
@@ -1118,7 +1097,7 @@ object Embeddings {
       // centroids computed under the old parameters
       // ("-hinit" = the hash-sampled init generation: an init-scheme
       // change redefines the centroids, so it must version the identity)
-      val k = kmK(s); val it = kmIters(s)
+      val k = Conf.KmeansK(s); val it = Conf.KmeansIters(s)
       val path = graft.sources.SideTable.ensure(s, "km_centroids",
           s"$dir#$cut#k$k-i$it-s${FpScale.toLong}-hinit",
           Some(s"$dir/embeddings.parquet")) {
@@ -1162,7 +1141,7 @@ object Embeddings {
     "q88_incremental_semdedup" -> ((s, dir) => {
       val cut = BatchCut.cut(s,
         Graft.parquetSource(s, dir).table("embeddings"), "vec_id")
-      val k = kmK(s); val it = kmIters(s)
+      val k = Conf.KmeansK(s); val it = Conf.KmeansIters(s)
       val ident = s"$dir#$cut#k$k-i$it-s${FpScale.toLong}-hinit"
       val dataPath = Some(s"$dir/embeddings.parquet")
       val centPath = graft.sources.SideTable.ensure(s, "km_centroids",
@@ -1203,12 +1182,12 @@ object Embeddings {
         .select(col("vec_id"), col("cluster"), col("v"), col("nrm"))
         .unionByName(batchAsg
           .select(col("vec_id"), col("cluster"), col("v"), col("nrm")))
-      val capped = TextPipeline.capBuckets(earlier, Seq("cluster"),
-        s, "q88 semdedup clusters", "graft.semdedup.maxCluster")
+      val capped = graft.ops.Dedup.capBuckets(earlier, Seq("cluster"),
+        s, "q88 semdedup clusters", Conf.SemdedupMaxCluster)
       val domLazy = capped.join(broadcast(b), Seq("cluster"))
         .where(col("vec_id") < col("b_id") &&
           (dotNative(col("v"), col("bv")) / (col("nrm") * col("bn")))
-            >= lit(semTau(s)))
+            >= lit(Conf.SemdedupTau(s)))
         .select(col("b_id"), col("vec_id"))
       lastIncrementalSemPlan =
         domLazy.queryExecution.executedPlan.toString
@@ -1326,7 +1305,7 @@ object Embeddings {
         .select(col("q_id"), col("vec_id"),
           (dotNative(col("qqv"), col("qv")) / (col("qqn") * col("qn")))
             .as("cos"))
-      val cand = topkPerQuery(scored1Lazy, rerankC(s))
+      val cand = topkPerQuery(scored1Lazy, Conf.AnnRerankCandidates(s))
         .select(col("q_id"), col("vec_id"))
         .localCheckpoint() // ≤ C·|batch| rows; fetch probe + spine
       // stage 2: exact payload for candidates ONLY, from the exact
@@ -1411,9 +1390,9 @@ object Embeddings {
     "q122_ivfpq_ann" -> ((s, dir) => {
       val emb = Graft.parquetSource(s, dir).table("embeddings")
       graft.ops.Embed.ivfPqTopK(emb, emb.where(col("vec_id") < 5),
-        k = 5, nlist = kmK(s), nprobe = 2, m = PqMDefault,
-        ksub = PqKsubDefault, iters = KmItersDefault, c = rerankC(s),
-        excludeSelf = true)
+        k = 5, nlist = Conf.KmeansK(s), nprobe = 2, m = Conf.PqM.default,
+        ksub = Conf.PqKsub.default, iters = Conf.KmeansIters.default,
+        c = Conf.AnnRerankCandidates(s), excludeSelf = true)
     }),
 
     // ---- q123: incremental IVFPQ vs persisted router + routed codes --
@@ -1438,7 +1417,8 @@ object Embeddings {
         s.read.parquet(routerP), nprobe = 2)
       graft.ops.Embed.pqSearch(s.read.parquet(ccP),
         s.read.parquet(cbP), s.read.parquet(exP), batch, k = 5,
-        c = rerankC(s), m = PqMDefault, probes = Some(probes))
+        c = Conf.AnnRerankCandidates(s), m = Conf.PqM.default,
+        probes = Some(probes))
     }),
 
     // ---- q124: incremental-IVFPQ recall audit vs exact ground truth --
@@ -1590,21 +1570,18 @@ object Embeddings {
     // bottom/top rank-quantiles flag low/high. Knobs: graft.norm.lo /
     // graft.norm.hi (percent).
     "q145_norm_outliers" -> ((s, dir) => {
-      val lo = s.conf.getOption("graft.norm.lo").map(_.toInt).getOrElse(5)
-      val hi = s.conf.getOption("graft.norm.hi").map(_.toInt).getOrElse(95)
       graft.ops.Embed.normOutliers(
-          Graft.parquetSource(s, dir).table("embeddings"), lo, hi)
+          Graft.parquetSource(s, dir).table("embeddings"),
+          Conf.NormLo(s), Conf.NormHi(s))
         .orderBy("vec_id")
     }),
 
     "q130_margin_mining" -> ((s, dir) => {
-      val k = s.conf.getOption("graft.margin.k").map(_.toInt).getOrElse(4)
-      val tau = s.conf.getOption("graft.margin.tau").map(_.toDouble)
-        .getOrElse(1.05d)
       val emb = Graft.parquetSource(s, dir).table("embeddings")
       graft.ops.Embed.marginPairs(
           emb.where(pmod(col("vec_id"), lit(2)) === 0),
-          emb.where(pmod(col("vec_id"), lit(2)) === 1), k, tau)
+          emb.where(pmod(col("vec_id"), lit(2)) === 1),
+          Conf.MarginK(s), Conf.MarginTau(s))
         .orderBy("x_id")
     }),
 
@@ -1618,14 +1595,12 @@ object Embeddings {
     // corpus scan (the |corpus|·|batch| pair frame never
     // materializes). Same knobs as q130.
     "q131_incremental_margin_mining" -> ((s, dir) => {
-      val k = s.conf.getOption("graft.margin.k").map(_.toInt).getOrElse(4)
-      val tau = s.conf.getOption("graft.margin.tau").map(_.toDouble)
-        .getOrElse(1.05d)
       val emb = Graft.parquetSource(s, dir).table("embeddings")
       val cut = BatchCut.cut(s, emb, "vec_id")
       val nP = normIndex(s, dir, cut)
       graft.ops.Embed.marginPairsBatchImpl(
-          s.read.parquet(nP), emb.where(col("vec_id") >= cut), k, tau,
+          s.read.parquet(nP), emb.where(col("vec_id") >= cut),
+          Conf.MarginK(s), Conf.MarginTau(s),
           "vec_id", "v", "vec_id", "embedding",
           capture = true) // the q131 plan pin reads the capture
         .orderBy("x_id")
@@ -1649,7 +1624,8 @@ object Embeddings {
       val batch = emb.where(col("vec_id") >= cut)
       graft.ops.Embed.pqSearchImpl(s.read.parquet(codeP),
         s.read.parquet(cbP), s.read.parquet(exP), batch, k = 5,
-        c = rerankC(s), m = PqMDefault, "vec_id", "embedding",
+        c = Conf.AnnRerankCandidates(s), m = Conf.PqM.default, "vec_id",
+        "embedding",
         capture = true) // the q120 plan pin reads the capture
     })
   )
@@ -1657,13 +1633,10 @@ object Embeddings {
   /** The q117 pipeline body — shared by the q117 binding (which
     * refreshes the session memo) and q121's consumer path. */
   private def computePqAnn(s: SparkSession, dir: String): DataFrame = {
-    val m = s.conf.getOption("graft.pq.m").map(_.toInt)
-      .getOrElse(PqMDefault)
-    val ksub = s.conf.getOption("graft.pq.ksub").map(_.toInt)
-      .getOrElse(PqKsubDefault)
+    val (m, ksub, c) = pqParams(s)
     val emb = Graft.parquetSource(s, dir).table("embeddings")
     graft.ops.Embed.pqTopK(emb, emb.where(col("vec_id") < 5), k = 5,
-      m = m, ksub = ksub, iters = KmItersDefault, c = rerankC(s),
+      m = m, ksub = ksub, iters = Conf.KmeansIters.default, c = c,
       excludeSelf = true)
   }
 
@@ -1672,10 +1645,7 @@ object Embeddings {
   private val pqMemo = Memo[DataFrame]("pq")
 
   private def pqParams(s: SparkSession) =
-    (s.conf.getOption("graft.pq.m").map(_.toInt).getOrElse(PqMDefault),
-      s.conf.getOption("graft.pq.ksub").map(_.toInt)
-        .getOrElse(PqKsubDefault),
-      rerankC(s))
+    (Conf.PqM(s), Conf.PqKsub(s), Conf.AnnRerankCandidates(s))
 
   /** The persisted IVFPQ snapshot artifacts behind q123 — router
     * centroids, codebooks (q120's, shared by identity), the
@@ -1683,8 +1653,9 @@ object Embeddings {
   private[graft] def pqIvfIndex(s: SparkSession, dir: String,
       cut: Long): (String, String, String, String) = {
     import graft.sources.SideTable
-    val k = kmK(s)
-    val key = s"$dir#$cut#m$PqMDefault-k$PqKsubDefault-i$KmItersDefault" +
+    val k = Conf.KmeansK(s)
+    val key = s"$dir#$cut#m${Conf.PqM.default}-k${Conf.PqKsub.default}" +
+      s"-i${Conf.KmeansIters.default}" +
       s"-s${FpScale.toLong}"
     val fp = Some(s"$dir/embeddings.parquet")
     def old = Graft.parquetSource(s, dir).table("embeddings")
@@ -1692,15 +1663,15 @@ object Embeddings {
     val routerP = SideTable.ensure(s, "pq_router", s"$key-r$k", fp) {
       kmeansCentroids(
         graft.ops.Embed.normalize(old).localCheckpoint(), k,
-        KmItersDefault, capture = false)
+        Conf.KmeansIters.default, capture = false)
     }
     val cbP = SideTable.ensure(s, "pq_codebooks", key, fp) {
-      graft.ops.Embed.pqCodebooks(old, PqMDefault, PqKsubDefault,
-        KmItersDefault)
+      graft.ops.Embed.pqCodebooks(old, Conf.PqM.default, Conf.PqKsub.default,
+        Conf.KmeansIters.default)
     }
     val ccP = SideTable.ensure(s, "pq_cellcodes", s"$key-r$k", fp,
         partitionBy = Seq("cell")) {
-      graft.ops.Embed.pqEncode(old, s.read.parquet(cbP), PqMDefault)
+      graft.ops.Embed.pqEncode(old, s.read.parquet(cbP), Conf.PqM.default)
         .join(graft.ops.Embed.assignCells(old,
           s.read.parquet(routerP)), Seq("vec_id"))
     }
@@ -1752,17 +1723,18 @@ object Embeddings {
   private[graft] def pqIndex(s: SparkSession, dir: String,
       cut: Long): (String, String, String) = {
     import graft.sources.SideTable
-    val key = s"$dir#$cut#m$PqMDefault-k$PqKsubDefault-i$KmItersDefault" +
+    val key = s"$dir#$cut#m${Conf.PqM.default}-k${Conf.PqKsub.default}" +
+      s"-i${Conf.KmeansIters.default}" +
       s"-s${FpScale.toLong}"
     val fp = Some(s"$dir/embeddings.parquet")
     def old = Graft.parquetSource(s, dir).table("embeddings")
       .where(col("vec_id") < cut)
     val cbP = SideTable.ensure(s, "pq_codebooks", key, fp) {
-      graft.ops.Embed.pqCodebooks(old, PqMDefault, PqKsubDefault,
-        KmItersDefault)
+      graft.ops.Embed.pqCodebooks(old, Conf.PqM.default, Conf.PqKsub.default,
+        Conf.KmeansIters.default)
     }
     val codeP = SideTable.ensure(s, "pq_codes", key, fp) {
-      graft.ops.Embed.pqEncode(old, s.read.parquet(cbP), PqMDefault)
+      graft.ops.Embed.pqEncode(old, s.read.parquet(cbP), Conf.PqM.default)
     }
     val exP = SideTable.ensure(s, "pq_exact", key, fp) {
       graft.ops.Embed.normalize(old)
@@ -2015,9 +1987,10 @@ object Embeddings {
   private def kmScoreSql(v: String, cv: String, cn: String): String =
     s"(${duckDot(v, cv)} - (0.5 * ($cn * $cn)))"
 
-  /** The k-means iteration chain c0 → (a/u/c)1..KmItersDefault over source
-    * relation `src` — the same init, assignment ranking, and
-    * fixed-point update arithmetic as the Spark side, op for op.
+  /** The k-means iteration chain c0 → (a/u/c)1..n, n the default of
+    * `graft.kmeans.iters`, over source relation `src` — the same init,
+    * assignment ranking, and fixed-point update arithmetic as the Spark
+    * side, op for op.
     * `src` is "e" for the full-corpus clustering (q80/q81/q85) and the
     * old-corpus CTE for q86's artifact rebuild. */
   private[queries] def kmCtesFrom(src: String, dim: Int = Dim): String = {
@@ -2029,9 +2002,9 @@ object Embeddings {
          |    SELECT vec_id, v, nrm, row_number() OVER (ORDER BY
          |      (('0x' || substr(md5(vec_id::varchar),1,15))::bigint % 2147483647), vec_id) rnk
          |    FROM $src
-         |  ) WHERE rnk <= $KmKDefault
+         |  ) WHERE rnk <= ${Conf.KmeansK.default}
          |)""".stripMargin
-    val iters = (1 to KmItersDefault).map { it =>
+    val iters = (1 to Conf.KmeansIters.default).map { it =>
       val prev = s"c${it - 1}"
       s""", a$it AS (
          |  SELECT vec_id, v, cid FROM (
@@ -2058,13 +2031,13 @@ object Embeddings {
 
   private lazy val kmCtes: String = kmCtesFrom("e")
 
-  /** The final assignment of relation `src` against c<KmItersDefault>. */
+  /** The final assignment of relation `src` against c<n>. */
   private[queries] def kmFinalFrom(src: String): String =
     s"""SELECT vec_id, cid AS cluster, score FROM (
        |  SELECT e.vec_id, c.cid, ${kmScoreSql("e.v", "c.cv", "c.cn")} AS score,
        |    row_number() OVER (PARTITION BY e.vec_id
        |      ORDER BY ${kmScoreSql("e.v", "c.cv", "c.cn")} DESC, c.cid) rnk
-       |  FROM $src e CROSS JOIN c$KmItersDefault c
+       |  FROM $src e CROSS JOIN c${Conf.KmeansIters.default} c
        |) WHERE rnk = 1""".stripMargin
 
   /** q80's body, also the `asg` CTE of q81/q85. */
@@ -2246,7 +2219,7 @@ object Embeddings {
            |  SELECT a.vec_id, min(b.vec_id) AS dropped_by
            |  FROM asg a JOIN asg b ON a.cluster = b.cluster AND b.vec_id < a.vec_id
            |  JOIN e ea ON ea.vec_id = a.vec_id JOIN e eb ON eb.vec_id = b.vec_id
-           |  WHERE ${duckCos("ea.v", "ea.nrm", "eb.v", "eb.nrm")} >= $SemTauDefault
+           |  WHERE ${duckCos("ea.v", "ea.nrm", "eb.v", "eb.nrm")} >= ${Conf.SemdedupTau.default}
            |  GROUP BY a.vec_id
            |)
            |SELECT asg.vec_id, asg.cluster,
@@ -2275,7 +2248,7 @@ object Embeddings {
            |  SELECT b.vec_id AS vid, min(a.vec_id) AS dropped_by
            |  FROM asg_b b JOIN mem a ON a.cluster = b.cluster AND a.vec_id < b.vec_id
            |  JOIN e ea ON ea.vec_id = a.vec_id JOIN e eb ON eb.vec_id = b.vec_id
-           |  WHERE ${duckCos("ea.v", "ea.nrm", "eb.v", "eb.nrm")} >= $SemTauDefault
+           |  WHERE ${duckCos("ea.v", "ea.nrm", "eb.v", "eb.nrm")} >= ${Conf.SemdedupTau.default}
            |  GROUP BY b.vec_id
            |)
            |SELECT b.vec_id, b.cluster, (d.dropped_by IS NULL) AS kept, d.dropped_by
@@ -2342,7 +2315,7 @@ object Embeddings {
            |    SELECT q_id, vec_id,
            |      row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) rnk
            |    FROM qscored
-           |  ) WHERE rnk <= $RerankCDefault
+           |  ) WHERE rnk <= ${Conf.AnnRerankCandidates.default}
            |), q AS (SELECT vec_id q_id, v ev, nrm en FROM e WHERE vec_id < 5),
            |rer AS (
            |  SELECT c.q_id, c.vec_id,
@@ -2407,7 +2380,7 @@ object Embeddings {
            |  SELECT q_id, vec_id FROM (
            |    SELECT q_id, vec_id,
            |      row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) rnk
-           |    FROM s1) WHERE rnk <= $RerankCDefault
+           |    FROM s1) WHERE rnk <= ${Conf.AnnRerankCandidates.default}
            |), rer AS (
            |  SELECT cd.q_id, cd.vec_id,
            |    (${duckDot("b.ev", "o.v")} / (b.en * o.nrm)) AS cos
@@ -2436,12 +2409,12 @@ object Embeddings {
            |        ORDER BY ${duckCos("b.v", "b.nrm", "c.cv", "c.cn")} DESC, c.cid) rnk
            |    FROM (SELECT vec_id, v, nrm FROM e
            |          WHERE vec_id >= (SELECT c FROM cut)) b
-           |      CROSS JOIN c$KmItersDefault c
+           |      CROSS JOIN c${Conf.KmeansIters.default} c
            |  ) WHERE rnk = 1
            |)
            |SELECT cid AS cluster, count(*)::bigint AS n_batch,
-           |  sum(CASE WHEN cos < $OodTauDefault THEN 1 ELSE 0 END)::bigint AS n_ood,
-           |  (sum(CASE WHEN cos < $OodTauDefault THEN 1 ELSE 0 END)::double
+           |  sum(CASE WHEN cos < ${Conf.OodTau.default} THEN 1 ELSE 0 END)::bigint AS n_ood,
+           |  (sum(CASE WHEN cos < ${Conf.OodTau.default} THEN 1 ELSE 0 END)::double
            |    / count(*)::double) AS ood_rate,
            |  min(cos) AS min_fit
            |FROM fit GROUP BY cid ORDER BY cluster""".stripMargin),
@@ -2898,7 +2871,7 @@ object Embeddings {
          |    SELECT q.vec_id q_id, c.cid,
          |      row_number() OVER (PARTITION BY q.vec_id
          |        ORDER BY ${kmScoreSql("q.v", "c.cv", "c.cn")} DESC, c.cid) rnk
-         |    FROM e q CROSS JOIN c$KmItersDefault c
+         |    FROM e q CROSS JOIN c${Conf.KmeansIters.default} c
          |    WHERE q.vec_id >= (SELECT c FROM cut)
          |  ) WHERE rnk <= 2
          |)""".stripMargin +
@@ -2910,8 +2883,9 @@ object Embeddings {
 
   /** q122's oracle: the PQ chain with the approx stage restricted to
     * each query's probed cells — router trained by the standard kmCtes
-    * (k = KmKDefault), cells assigned kmFinal-style, probes = top-2
-    * cells per query by the same assignment score. */
+    * (k = the default of graft.kmeans.k), cells assigned
+    * kmFinal-style, probes = top-2 cells per query by the same
+    * assignment score. */
   private lazy val ivfPqSql: String =
     baseCte + kmCtesFrom("e") +
       s""", cells AS MATERIALIZED (
@@ -2921,7 +2895,7 @@ object Embeddings {
          |    SELECT q.vec_id q_id, c.cid,
          |      row_number() OVER (PARTITION BY q.vec_id
          |        ORDER BY ${kmScoreSql("q.v", "c.cv", "c.cn")} DESC, c.cid) rnk
-         |    FROM e q CROSS JOIN c$KmItersDefault c WHERE q.vec_id < 5
+         |    FROM e q CROSS JOIN c${Conf.KmeansIters.default} c WHERE q.vec_id < 5
          |  ) WHERE rnk <= 2
          |)""".stripMargin +
       pqSqlFrom("e", "q.vec_id < 5", excludeSelf = true,
@@ -2936,7 +2910,7 @@ object Embeddings {
     * clauses against k0/t0 — the IVF routing of q122). */
   private def pqSqlFrom(src: String, queryPred: String,
       excludeSelf: Boolean, probeJoin: String = ""): String = {
-    val m = PqMDefault
+    val m = Conf.PqM.default
     val sub = Dim / m
     val subCtes = (0 until m).map { j =>
       val lo = j * sub + 1
@@ -2951,9 +2925,9 @@ object Embeddings {
            |    SELECT vec_id, sv, sn, row_number() OVER (ORDER BY
            |      (('0x' || substr(md5(vec_id::varchar),1,15))::bigint % 2147483647), vec_id) rnk
            |    FROM s$j
-           |  ) WHERE rnk <= $PqKsubDefault
+           |  ) WHERE rnk <= ${Conf.PqKsub.default}
            |)""".stripMargin
-      val iters = (1 to KmItersDefault).map { it =>
+      val iters = (1 to Conf.KmeansIters.default).map { it =>
         val prev = s"s${j}c${it - 1}"
         s""", s${j}a$it AS (
            |  SELECT vec_id, sv, cid FROM (
@@ -2980,11 +2954,11 @@ object Embeddings {
            |    SELECT s.vec_id, c.cid,
            |      row_number() OVER (PARTITION BY s.vec_id
            |        ORDER BY ${kmScoreSql("s.sv", "c.cv", "c.cn")} DESC, c.cid) rnk
-           |    FROM s$j s CROSS JOIN s${j}c$KmItersDefault c
+           |    FROM s$j s CROSS JOIN s${j}c${Conf.KmeansIters.default} c
            |  ) WHERE rnk = 1
            |), s${j}tab AS MATERIALIZED (
            |  SELECT q.vec_id q_id, c.cid, ${duckDot(s"q.v[$lo:$hi]", "c.cv")} part
-           |  FROM e q CROSS JOIN s${j}c$KmItersDefault c WHERE $queryPred
+           |  FROM e q CROSS JOIN s${j}c${Conf.KmeansIters.default} c WHERE $queryPred
            |)""".stripMargin
       frame + iters + codeAndTab
     }.mkString
@@ -3005,7 +2979,7 @@ object Embeddings {
          |    SELECT q_id, vec_id,
          |      row_number() OVER (PARTITION BY q_id ORDER BY approx DESC, vec_id) rnk
          |    FROM approx
-         |  ) WHERE rnk <= $RerankCDefault
+         |  ) WHERE rnk <= ${Conf.AnnRerankCandidates.default}
          |), qe AS (SELECT q.vec_id q_id, q.v qv, q.nrm qn FROM e q WHERE $queryPred),
          |rer AS (
          |  SELECT c.q_id, c.vec_id, (${duckDot("q.qv", "ee.v")} / (q.qn * ee.nrm)) AS cos

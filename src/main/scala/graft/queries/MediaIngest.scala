@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Graft, Par}
+import graft.{Conf, Graft, Par}
 
 /** q214 — the MEDIA crawl-ingest loop as a Structured Streaming
   * deployment: the q111 discipline applied to the media content-dedup
@@ -129,7 +129,7 @@ object MediaIngest {
     // by |stream|; a deployment's source is Kafka/files)
     val ids = d.where(col("doc_id") >= cut).select(col("doc_id"))
       .orderBy("doc_id").collect().map(_.getLong(0)).toSeq
-    val nEpochs = s.conf.get("graft.stream.epochs", "4").toInt
+    val nEpochs = Conf.StreamEpochs(s)
     val chunks =
       if (ids.isEmpty) Seq.empty
       else ids.grouped(

@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * these lines. */
 private[graft] final class PhaseTimer(s: SparkSession, tag: String) {
   private val on =
-    s.conf.getOption("graft.stream.timing").contains("true") ||
+    graft.Conf.StreamTiming(s) ||
       sys.env.get("SPARK_GRAFT_STREAM_TIMING").contains("1")
 
   /** Runs `body`, printing its wall time when timing is on. */

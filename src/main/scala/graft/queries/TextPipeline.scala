@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Graft
+import graft.{Conf, Graft}
 import graft.functions.TextFunctions._
 import graft.sources.Memo
 
@@ -22,13 +22,6 @@ import graft.sources.Memo
   * bucket joins on small derived keys.
   */
 object TextPipeline {
-
-  /** q149's curriculum stage count — the ONE definition both the engine
-    * binding and the DuckDB oracle interpolate (the q150 knob-pin
-    * discipline): the `graft.curr.buckets` session knob exists for
-    * deployment runs, but the oracle replays THIS value, so non-default
-    * knobs are not verify-gate material. */
-  private val CurrBucketsDefault = 8
 
   /** (doc_id, h): word-n-gram shingle hashes as ROWS, one row per shingle
     * occurrence, with no higher-order functions anywhere in the plan.
@@ -106,34 +99,6 @@ object TextPipeline {
   private[queries] def exactGroups(d: DataFrame, minWords: Int): DataFrame =
     graft.ops.Dedup.exactGroups(d, "doc_id", "text", minWords)
 
-  /** Degenerate-input guard for bucket self-joins: buckets larger than
-    * `graft.dedup.maxBucket` (default 2000 — far above anything real
-    * data produces AFTER exact-duplicate collapse, so oracle parity at
-    * the test SFs is unaffected) are DROPPED from candidate generation,
-    * loudly: the skip count and largest bucket land in
-    * [[graft.tools.DedupGuard]] and a WARN log line.
-    *
-    * ONE bounded job computes bucket sizes and collects only the
-    * OVERSIZED keys — pathological, few by construction. The all-clear
-    * common case then returns `keyed` untouched, so candidate generation
-    * pays NOTHING downstream: no second stats job, no filter join
-    * re-running the upstream aggregate (the r4/r5 advice item — the old
-    * shape forced the pipeline once for a `.head()` stats probe and again
-    * for the size join). When oversized keys exist they are removed by a
-    * broadcast anti-join on the collected list; should an adversarial
-    * input produce more oversized keys than `graft.dedup.maxOversizedKeys`
-    * (default 10k — remember each IS a >cap-doc bucket), the guard stays
-    * distributed: anti-join against the oversized-key frame itself.
-    *
-    * `capConf` names the cap's conf key — the banded/blocked joins share
-    * `graft.dedup.maxBucket`; q81's cluster-keyed join has its own knob
-    * (`graft.semdedup.maxCluster`) because cluster size is controlled by
-    * a different deployment lever (k ∝ N) than bucket size. */
-  private[queries] def capBuckets(keyed: DataFrame, keys: Seq[String],
-      s: SparkSession, what: String,
-      capConf: String = "graft.dedup.maxBucket"): DataFrame =
-    graft.ops.Dedup.capBuckets(keyed, keys, s, what, capConf)
-
   /** Exact recovery of the doc-level near-dup answer from rep-level
     * pairs (see [[exactGroups]]): within an exact-dup group every pair
     * is a duplicate with similarity exactly 1 (identical word sequences
@@ -198,8 +163,6 @@ object TextPipeline {
     * graft.ulm.* session knobs exist for deployment, non-default
     * values are not verify-gate material). */
   private val UlmMaxW = 16
-  /** q159 ExactSubstr match-length cap (the q128 k knob is shared). */
-  private val SubstrCap = 64
   private val UlmMaxP = 4
   private val UlmMinFreq = 2L
   private val UlmRounds = 2
@@ -256,7 +219,7 @@ object TextPipeline {
     * key. */
   private def repPairsOf(s: SparkSession, dir: String,
       refresh: Boolean = false): (DataFrame, DataFrame) = {
-    val cap = s.conf.get("graft.dedup.maxBucket", "2000").toInt
+    val cap = Conf.DedupMaxBucket(s)
     if (refresh) pairMemo.put(s, docsFile(dir), cap)(computeRepPairs(s, dir))
     else pairMemo(s, docsFile(dir), cap)(computeRepPairs(s, dir))
   }
@@ -751,12 +714,8 @@ object TextPipeline {
     // without long string columns. Knobs: graft.chunk.window /
     // graft.chunk.stride.
     "q127_chunk" -> ((s, dir) => {
-      val w = s.conf.getOption("graft.chunk.window").map(_.toInt)
-        .getOrElse(16)
-      val st = s.conf.getOption("graft.chunk.stride").map(_.toInt)
-        .getOrElse(12)
-      graft.ops.Text.chunk(
-          Graft.parquetSource(s, dir).table("documents"), w, st)
+      graft.ops.Text.chunk(Graft.parquetSource(s, dir).table("documents"),
+          Conf.ChunkWindow(s), Conf.ChunkStride(s))
         .select(col("doc_id"), col("chunk_idx"), col("start_tok"),
           col("n_tok"), md5(col("chunk_text")).as("chunk_md5"))
         .orderBy("doc_id", "chunk_idx")
@@ -768,11 +727,8 @@ object TextPipeline {
     // corpus-duplicated gram positions merged into maximal extents.
     // Knobs: graft.span.k / graft.span.minCount.
     "q128_span_dups" -> ((s, dir) => {
-      val k = s.conf.getOption("graft.span.k").map(_.toInt).getOrElse(5)
-      val mc = s.conf.getOption("graft.span.minCount").map(_.toLong)
-        .getOrElse(2L)
-      graft.ops.Dedup.spanDups(
-          Graft.parquetSource(s, dir).table("documents"), k, mc)
+      graft.ops.Dedup.spanDups(Graft.parquetSource(s, dir).table("documents"),
+          Conf.SpanK(s), Conf.SpanMinCount(s))
         .orderBy("doc_id")
     }),
 
@@ -788,7 +744,7 @@ object TextPipeline {
     // alone (two batch docs sharing a novel span both score it fresh;
     // the NEXT snapshot owns it).
     "q129_incremental_span_dups" -> ((s, dir) => {
-      val k = s.conf.getOption("graft.span.k").map(_.toInt).getOrElse(5)
+      val k = Conf.SpanK(s)
       val d = Graft.parquetSource(s, dir).table("documents")
       val cut = BatchCut.cut(s, d)
       val gPath = spanGramIndex(s, dir, cut, k)
@@ -804,11 +760,8 @@ object TextPipeline {
     // Lee-et-al remediation); fully-duplicated docs come out empty
     // with n_removed = n_words. Same knobs as q128.
     "q132_span_trim" -> ((s, dir) => {
-      val k = s.conf.getOption("graft.span.k").map(_.toInt).getOrElse(5)
-      val mc = s.conf.getOption("graft.span.minCount").map(_.toLong)
-        .getOrElse(2L)
-      graft.ops.Dedup.spanTrim(
-          Graft.parquetSource(s, dir).table("documents"), k, mc)
+      graft.ops.Dedup.spanTrim(Graft.parquetSource(s, dir).table("documents"),
+          Conf.SpanK(s), Conf.SpanMinCount(s))
         .orderBy("doc_id")
     }),
 
@@ -979,11 +932,9 @@ object TextPipeline {
     // extent attribution is the one degree of freedom worth measuring.
     // Same knobs as q128.
     "q154_span_extent_audit" -> ((s, dir) => {
-      val k = s.conf.getOption("graft.span.k").map(_.toInt).getOrElse(5)
-      val mc = s.conf.getOption("graft.span.minCount").map(_.toLong)
-        .getOrElse(2L)
       graft.ops.Dedup.spanExtentAudit(
-          Graft.parquetSource(s, dir).table("documents"), k, mc)
+          Graft.parquetSource(s, dir).table("documents"),
+          Conf.SpanK(s), Conf.SpanMinCount(s))
         .orderBy("doc_id", "start_tok")
     }),
 
@@ -996,10 +947,8 @@ object TextPipeline {
     // covered positions stay exact). The suffix-grade exact path next
     // to the k-gram approximation (q128) its audit measures (q154).
     "q159_exact_substr_spans" -> ((s, dir) => {
-      val k = s.conf.getOption("graft.span.k").map(_.toInt).getOrElse(5)
-      val cap = s.conf.getOption("graft.substr.maxSpan").map(_.toInt)
-        .getOrElse(SubstrCap)
-      substrSpansOf(s, dir, k, cap, refresh = true)
+      substrSpansOf(s, dir, Conf.SpanK(s), Conf.SubstrMaxSpan(s),
+          refresh = true)
         .orderBy("doc_id", "start_tok")
     }),
 
@@ -1014,12 +963,10 @@ object TextPipeline {
     // the span memo, q160 reuses it, so the pair pays the
     // prefix-doubling pipeline once.
     "q160_exact_substr_trim" -> ((s, dir) => {
-      val k = s.conf.getOption("graft.span.k").map(_.toInt).getOrElse(5)
-      val cap = s.conf.getOption("graft.substr.maxSpan").map(_.toInt)
-        .getOrElse(SubstrCap)
       graft.ops.Dedup.trimSpans(
           Graft.parquetSource(s, dir).table("documents"),
-          substrSpansOf(s, dir, k, cap, refresh = false))
+          substrSpansOf(s, dir, Conf.SpanK(s), Conf.SubstrMaxSpan(s),
+            refresh = false))
         .orderBy("doc_id")
     }),
 
@@ -1144,9 +1091,8 @@ object TextPipeline {
     // gram-set Jaccard per source pair, full matrix). Knob:
     // graft.span.k (shared with the span family).
     "q134_source_overlap" -> ((s, dir) => {
-      val k = s.conf.getOption("graft.span.k").map(_.toInt).getOrElse(5)
       graft.ops.Dedup.crossSourceOverlap(
-          Graft.parquetSource(s, dir).table("documents"), k)
+          Graft.parquetSource(s, dir).table("documents"), Conf.SpanK(s))
         .orderBy("src1", "src2")
     }),
 
@@ -1159,7 +1105,7 @@ object TextPipeline {
     // [[graft.ops.Dedup.crossSourceOverlapOf]] makes appended
     // duplicates harmless (the lifecycle append discipline).
     "q136_incremental_source_overlap" -> ((s, dir) => {
-      val k = s.conf.getOption("graft.span.k").map(_.toInt).getOrElse(5)
+      val k = Conf.SpanK(s)
       val d = Graft.parquetSource(s, dir).table("documents")
       val cut = BatchCut.cut(s, d)
       val sgP = sourceGramIndex(s, dir, cut, k)
@@ -1187,8 +1133,7 @@ object TextPipeline {
     // bites) applied to every source; the deployment shape passes the
     // real mixture spec as the budgets map.
     "q138_source_budget" -> ((s, dir) => {
-      val b = s.conf.getOption("graft.budget.perSource").map(_.toLong)
-        .getOrElse(1000L)
+      val b = Conf.BudgetPerSource(s)
       val d = Graft.parquetSource(s, dir).table("documents")
       val srcs = d.select(col("source")).distinct()
         .collect().map(_.getString(0)) // ≤ |sources| — metadata grain
@@ -1203,10 +1148,8 @@ object TextPipeline {
     // ≥(w+k−1)-token match still shares a fingerprint). Knobs:
     // graft.span.k / graft.winnow.w.
     "q139_winnow" -> ((s, dir) => {
-      val k = s.conf.getOption("graft.span.k").map(_.toInt).getOrElse(5)
-      val w = s.conf.getOption("graft.winnow.w").map(_.toInt).getOrElse(4)
-      graft.ops.Dedup.winnow(
-          Graft.parquetSource(s, dir).table("documents"), k, w)
+      graft.ops.Dedup.winnow(Graft.parquetSource(s, dir).table("documents"),
+          Conf.SpanK(s), Conf.WinnowW(s))
         .orderBy("doc_id", "pos")
     }),
 
@@ -1215,9 +1158,8 @@ object TextPipeline {
     // repetition battery (top-n-gram fraction for n=1..3, duplicated
     // k-gram fraction) Gopher-style quality filters threshold on.
     "q140_repetition" -> ((s, dir) => {
-      val k = s.conf.getOption("graft.span.k").map(_.toInt).getOrElse(5)
-      graft.ops.Text.repetition(
-          Graft.parquetSource(s, dir).table("documents"), Seq(1, 2, 3), k)
+      graft.ops.Text.repetition(Graft.parquetSource(s, dir).table("documents"),
+          Seq(1, 2, 3), Conf.SpanK(s))
         .orderBy("doc_id")
     }),
 
@@ -1228,13 +1170,10 @@ object TextPipeline {
     // through the TakeOrdered tail. Knobs: graft.pmi.minCount /
     // graft.pmi.topK.
     "q141_collocations" -> ((s, dir) => {
-      val mc = s.conf.getOption("graft.pmi.minCount").map(_.toLong)
-        .getOrElse(5L)
-      val k = s.conf.getOption("graft.pmi.topK").map(_.toInt).getOrElse(100)
       graft.ops.Text.collocations(
-          Graft.parquetSource(s, dir).table("documents"), mc)
+          Graft.parquetSource(s, dir).table("documents"), Conf.PmiMinCount(s))
         .orderBy(col("lift").desc, col("w1"), col("w2"))
-        .limit(k)
+        .limit(Conf.PmiTopK(s))
     }),
 
     // ---- q144: incremental winnow novelty ------------------------------
@@ -1247,8 +1186,8 @@ object TextPipeline {
     // any ≥(w+k−1)-token span shared with the snapshot guarantees a
     // hit). Knobs: graft.span.k / graft.winnow.w.
     "q144_incremental_winnow" -> ((s, dir) => {
-      val k = s.conf.getOption("graft.span.k").map(_.toInt).getOrElse(5)
-      val w = s.conf.getOption("graft.winnow.w").map(_.toInt).getOrElse(4)
+      val k = Conf.SpanK(s)
+      val w = Conf.WinnowW(s)
       val d = Graft.parquetSource(s, dir).table("documents")
       val cut = BatchCut.cut(s, d)
       val fpP = winnowFpIndex(s, dir, cut, k, w)
@@ -1309,11 +1248,10 @@ object TextPipeline {
     // within-bucket hash shuffle — all via the q145 two-level
     // range-partition discipline (no single-partition window). Knob:
     // graft.curr.buckets — NOTE the oracle interpolates
-    // [[CurrBucketsDefault]], so a non-default knob is a deployment
+    // the entry's default, so a non-default knob is a deployment
     // setting, not a verify-gate one (the q150 oracle-pin discipline).
     "q149_curriculum" -> ((s, dir) => {
-      val nb = s.conf.getOption("graft.curr.buckets").map(_.toInt)
-        .getOrElse(CurrBucketsDefault)
+      val nb = Conf.CurrBuckets(s)
       graft.ops.Curate.curriculum(
           graft.ops.Text.readability(
               Graft.parquetSource(s, dir).table("documents"))
@@ -1330,10 +1268,8 @@ object TextPipeline {
     // + 20-bit fixed point + exact integer total). Knob:
     // graft.mix.alpha in {0, 0.5, 1}.
     "q142_mixture_weights" -> ((s, dir) => {
-      val a = s.conf.getOption("graft.mix.alpha").map(_.toDouble)
-        .getOrElse(0.5d)
       graft.ops.Curate.mixtureWeights(
-          Graft.parquetSource(s, dir).table("documents"), a)
+          Graft.parquetSource(s, dir).table("documents"), Conf.MixAlpha(s))
         .orderBy("source")
     }),
 
@@ -1346,14 +1282,10 @@ object TextPipeline {
     // [[graft.ops.Curate.sourceBudget]] EXECUTES the cut at corpus
     // grain. Knobs: graft.mix.alpha / graft.mix.budget.
     "q143_mixture_pipeline" -> ((s, dir) => {
-      val a = s.conf.getOption("graft.mix.alpha").map(_.toDouble)
-        .getOrElse(0.5d)
-      val total = s.conf.getOption("graft.mix.budget").map(_.toLong)
-        .getOrElse(10000L)
       val d = Graft.parquetSource(s, dir).table("documents")
-      val budgets = graft.ops.Curate.mixtureWeights(d, a)
+      val budgets = graft.ops.Curate.mixtureWeights(d, Conf.MixAlpha(s))
         .select(col("source"),
-          floor(col("weight") * total).cast("long").as("budget"))
+          floor(col("weight") * Conf.MixBudget(s)).cast("long").as("budget"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       graft.ops.Curate.sourceBudget(d, budgets)
         .orderBy("source", "cum", "doc_id")
@@ -1415,7 +1347,8 @@ object TextPipeline {
         .localCheckpoint() // 2 narrow cols per rep (rep count grows
         // with distinct content — checkpoint class); read by the cap's
         // size job and both self-join sides
-      val blocks = capBuckets(repBlocks, Seq("blk"), s, "q29 prefix blocks")
+      val blocks = graft.ops.Dedup.capBuckets(repBlocks, Seq("blk"), s,
+        "q29 prefix blocks")
       val a = blocks.as("a"); val b = blocks.as("b")
       val cand = a.join(b, col("a.blk") === col("b.blk") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -1528,7 +1461,7 @@ object TextPipeline {
         // r18 note: fusing the cap into this materialization via a
         // window bucket-count was tried and REVERTED on interleaved
         // A/B (q67 1.29× slower) — see OPTIMIZATION_r18.md.
-      val allBands = capBuckets(relevant,
+      val allBands = graft.ops.Dedup.capBuckets(relevant,
         Seq("band_idx", "band_key"), s, "q67 incremental bands")
       val candLazy = allBands.as("a").join(deltaBands.as("b"),
           col("a.band_idx") === col("b.band_idx") &&
@@ -1605,7 +1538,7 @@ object TextPipeline {
       streamSeenRows.set(Vector.empty)
       val ids = d.where(col("doc_id") >= cut).select(col("doc_id"))
         .orderBy("doc_id").collect().map(_.getLong(0)).toSeq
-      val nEpochs = s.conf.get("graft.stream.epochs", "4").toInt
+      val nEpochs = Conf.StreamEpochs(s)
       val chunks =
         if (ids.isEmpty) Seq.empty
         else ids.grouped(
@@ -1634,7 +1567,7 @@ object TextPipeline {
             // only; read by the capBuckets stats job AND the candidate
             // join, so materialize once per epoch (window-count fusion
             // tried and REVERTED on r18 A/B — OPTIMIZATION_r18.md)
-          val allBands = capBuckets(relevant,
+          val allBands = graft.ops.Dedup.capBuckets(relevant,
             Seq("band_idx", "band_key"), s, "q76 incremental bands")
           val cand = allBands.as("a").join(deltaBands.as("b"),
               col("a.band_idx") === col("b.band_idx") &&
@@ -1722,7 +1655,7 @@ object TextPipeline {
         // AND the final classification join
       val bkeys = batchKeys.select(col("gk")).distinct()
       val probeKeys =
-        if (s.conf.get("graft.artifacts.bloom", "false").toBoolean) {
+        if (Conf.ArtifactsBloom(s)) {
           val bf = graft.sources.SideTable.ensureBloomOf(s, "content_keys",
             s"$dir#$cut", Some(s"$dir/documents.parquet"), keyPath, "gk")
           bkeys.where(graft.functions.Bloom.mightContain(bf, col("gk")))
@@ -1852,7 +1785,7 @@ object TextPipeline {
     // (deterministic (jac, −eval_id) argmax).
     "q83_neardup_decontam" -> ((s, dir) => {
       val d = Graft.parquetSource(s, dir).table("documents")
-      val evBands = capBuckets(
+      val evBands = graft.ops.Dedup.capBuckets(
         minhashBands(d.where(col("doc_id") < 20))
           .localCheckpoint(), // tiny: the cap's size job + the join
         Seq("band_idx", "band_key"), s, "q83 eval bands")
@@ -1924,10 +1857,8 @@ object TextPipeline {
     // launching. 'first_doc'/'last_doc' pin the realized order's
     // endpoints; the checksum pins membership.
     "q92_shuffle_manifest" -> ((s, dir) => {
-      val seed = s.conf.get("graft.shuffle.seed", "0")
       val nShards = { // next power of two ⇒ shard key is a bit-prefix
-        val want = s.conf.get("graft.shuffle.shards", "16").toInt
-          .max(1).min(1 << 24)
+        val want = Conf.ShuffleShards(s).max(1).min(1 << 24)
         Integer.highestOneBit(want * 2 - 1)
       }
       val bits = Integer.numberOfTrailingZeros(nShards)
@@ -1939,7 +1870,7 @@ object TextPipeline {
           when(col("text").isNull, lit(0L))
             .otherwise(bpeTokenCount(col("text")).cast("long"))
             .as("n_tokens"),
-          hash60(concat_ws("#", col("text"), lit(seed))).as("h"))
+          hash60(concat_ws("#", col("text"), lit(Conf.ShuffleSeed(s)))).as("h"))
         .withColumn("shard", shiftright(col("h"), 60 - bits))
         .groupBy(col("shard"))
         .agg(count(lit(1)).as("n_docs"),
@@ -2074,15 +2005,11 @@ object TextPipeline {
     // hit spine, and the re-rank window partitions per query over ≤ k
     // rows. Output: (query_id, neg_rank, doc_id, score_ppm).
     "q116_bm25_negatives" -> ((s, dir) => {
-      val dfCap = s.conf.getOption("graft.bm25.dfCap").map(_.toInt)
-        .getOrElse(16)
-      val k = s.conf.getOption("graft.bm25.k").map(_.toInt).getOrElse(10)
-      val nNeg = s.conf.getOption("graft.negatives.n").map(_.toInt)
-        .getOrElse(5)
+      val k = Conf.Bm25K(s)
       val d = Graft.parquetSource(s, dir).table("documents")
       val queries = d.where(pmod(hash60(col("text")), lit(20)) === 0)
         .select(col("doc_id"), col("text"))
-      val hits = graft.ops.Retrieval.bm25(d, queries, k, dfCap,
+      val hits = graft.ops.Retrieval.bm25(d, queries, k, Conf.Bm25DfCap(s),
           excludeSelf = true)
         .localCheckpoint() // k·|queries| rows; anti-join spine + window
       val (members, repPairs) = repPairsOf(s, dir)
@@ -2094,7 +2021,7 @@ object TextPipeline {
       val w = Window.partitionBy("query_id").orderBy("rank")
       hits.join(broadcast(sym), Seq("query_id", "doc_id"), "left_anti")
         .withColumn("neg_rank", row_number().over(w).cast("long"))
-        .where(col("neg_rank") <= nNeg)
+        .where(col("neg_rank") <= Conf.NegativesN(s))
         .select(col("query_id"), col("neg_rank"), col("doc_id"),
           col("score_ppm"))
         .orderBy("query_id", "neg_rank")
@@ -2110,8 +2037,7 @@ object TextPipeline {
     // the contrast, kept there because its per-lang k=5 output IS the
     // window shape). Cap knob: graft.cap.perKey.
     "q118_domain_cap" -> ((s, dir) => {
-      val n = s.conf.getOption("graft.cap.perKey").map(_.toInt)
-        .getOrElse(15)
+      val n = Conf.CapPerKey(s)
       val d = Graft.parquetSource(s, dir).table("documents")
       graft.ops.Curate.capPerKey(d, n).orderBy("source", "doc_id")
     }),
@@ -2129,8 +2055,7 @@ object TextPipeline {
     // old-doc count at the test cut so BOTH the saturation path and the
     // remaining-slot path execute.
     "q119_incremental_domain_cap" -> ((s, dir) => {
-      val n = s.conf.getOption("graft.cap.perKeyIncr").map(_.toInt)
-        .getOrElse(22)
+      val n = Conf.CapPerKeyIncr(s)
       val d = Graft.parquetSource(s, dir).table("documents")
       val cut = BatchCut.cut(s, d)
       val cPath = capCountIndex(s, dir, cut, n)
@@ -3607,7 +3532,7 @@ object TextPipeline {
         |win AS MATERIALIZED (
         |  SELECT doc_id, n, i AS s, m, array_to_string(w[i:i+m-1], ' ') AS gram
         |  FROM dd, unnest(range(1, n + 1)) AS t(i),
-        |    unnest(range(5, ${SubstrCap + 1})) AS r(m)
+        |    unnest(range(5, ${Conf.SubstrMaxSpan.default + 1})) AS r(m)
         |  WHERE i + m - 1 <= n
         |), dupw AS (
         |  SELECT m, gram FROM win GROUP BY m, gram HAVING count(*) >= 2
@@ -3622,7 +3547,7 @@ object TextPipeline {
         |  FROM lmax
         |)
         |SELECT doc_id, s::bigint AS start_tok, L AS n_tok,
-        |  (L = $SubstrCap AND n - s + 1 > $SubstrCap) AS clamped
+        |  (L = ${Conf.SubstrMaxSpan.default} AND n - s + 1 > ${Conf.SubstrMaxSpan.default}) AS clamped
         |FROM fin WHERE pe IS NULL OR s + L > pe
         |ORDER BY doc_id, start_tok""".stripMargin,
 
@@ -3634,7 +3559,7 @@ object TextPipeline {
         |win AS MATERIALIZED (
         |  SELECT doc_id, n, i AS s, m, array_to_string(w[i:i+m-1], ' ') AS gram
         |  FROM dd, unnest(range(1, n + 1)) AS t(i),
-        |    unnest(range(5, ${SubstrCap + 1})) AS r(m)
+        |    unnest(range(5, ${Conf.SubstrMaxSpan.default + 1})) AS r(m)
         |  WHERE i + m - 1 <= n
         |), dupw AS (
         |  SELECT m, gram FROM win GROUP BY m, gram HAVING count(*) >= 2
@@ -4011,7 +3936,7 @@ object TextPipeline {
         |  SELECT doc_id, flesch,
         |    row_number() OVER (ORDER BY flesch DESC, doc_id)::bigint
         |      AS rank,
-        |    ntile($CurrBucketsDefault) OVER (ORDER BY flesch DESC, doc_id)::bigint
+        |    ntile(${Conf.CurrBuckets.default}) OVER (ORDER BY flesch DESC, doc_id)::bigint
         |      AS bucket
         |  FROM sc
         |)

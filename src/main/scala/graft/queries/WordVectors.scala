@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Graft
+import graft.{Conf, Graft}
 import graft.sources.Memo
 
 /** Count-based word/document embeddings over `documents` — the text
@@ -215,9 +215,7 @@ object WordVectors {
         .agg(greatest(max(abs(col("x"))), lit(1.0d))).head().getDouble(0)
       val dvs = dv.select(col("doc_id"),
         transform(col("vec"), x => x / lit(mx)).as("vec"))
-      val tau = s.conf.getOption("graft.wordvec.semtau")
-        .map(_.toDouble).getOrElse(0.9995d)
-      graft.ops.Embed.semdedupKeep(dvs, 8, 3, tau,
+      graft.ops.Embed.semdedupKeep(dvs, 8, 3, Conf.WordvecSemtau(s),
           idCol = "doc_id", vecCol = "vec")
         .orderBy("doc_id")
     }),

@@ -6,6 +6,8 @@ import java.util.UUID
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Conf
+
 /** Registry of PERSISTED parquet side-tables ("artifacts") — the
   * mechanism behind the incremental operators (q67's banded signature
   * index, q69's unigram-LM model, q72's gram set): derived corpus state
@@ -173,13 +175,8 @@ object SideTable {
   /** Runs `body` under `graft.artifacts.refresh=true`, then restores
     * the session's value: how a streaming loop seeds its per-run state,
     * so a rerun starts from fresh artifacts. */
-  def refreshing[A](s: SparkSession)(body: => A): A = {
-    val prev = s.conf.getOption("graft.artifacts.refresh")
-    s.conf.set("graft.artifacts.refresh", "true")
-    try body
-    finally prev.fold(s.conf.unset("graft.artifacts.refresh"))(
-      v => s.conf.set("graft.artifacts.refresh", v))
-  }
+  def refreshing[A](s: SparkSession)(body: => A): A =
+    Conf.ArtifactsRefresh.during(s, true)(body)
 
   /** Returns the path of artifact `name` for `key`, building and
     * writing it via `build` at most once per (session, key, data
@@ -191,8 +188,7 @@ object SideTable {
       dataPath: Option[String] = None, partitionBy: Seq[String] = Nil)
       (build: => DataFrame): String = {
     val fk = fullKey(key, dataPath)
-    val refresh =
-      s.conf.get("graft.artifacts.refresh", "false").toBoolean
+    val refresh = Conf.ArtifactsRefresh(s)
     def run = buildAt(s, name, fk, refresh, partitionBy, build)
     if (refresh) memo.put(s, None, s"$name#$fk")(run)
     else memo(s, None, s"$name#$fk")(run)
@@ -201,8 +197,7 @@ object SideTable {
   private def buildAt(s: SparkSession, name: String, fk: String,
       refresh: Boolean, partitionBy: Seq[String],
       build: => DataFrame): String = {
-    val root = new File(s.conf.get("graft.artifacts.dir",
-      sys.props("java.io.tmpdir")))
+    val root = new File(Conf.ArtifactsDir(s))
     val digest = md5hex(fk)
     val dest = new File(root, s"graft_${name}_$digest")
     if (!refresh && isValid(dest, fk)) return dest.getAbsolutePath
@@ -240,9 +235,7 @@ object SideTable {
       dataPath: Option[String], exactPath: String,
       keyCol: String): Array[Byte] = {
     val n = math.max(consistentRows(s, exactPath), 1L)
-    val maxBits = s.conf.get("graft.artifacts.bloomMaxBits",
-      (1L << 27).toString).toLong
-    val bits = math.min(math.max(n * 16L, 64L), maxBits)
+    val bits = math.min(math.max(n * 16L, 64L), Conf.ArtifactsBloomMaxBits(s))
     // `BloomFilterAggregate` silently clamps its size arguments to
     // spark.sql.optimizer.runtime.bloomFilter.maxNumBits (2^26) and
     // .maxNumItems (4·10⁶) — below the documented bloomMaxBits cap, so
@@ -324,7 +317,7 @@ object SideTable {
     // count (else every append past |values| > maxFiles would rewrite
     // the whole artifact without ever clearing the threshold); 2× the
     // leaf count guarantees each compaction at least halves the files.
-    val maxFiles = s.conf.get("graft.artifacts.maxFiles", "64").toLong
+    val maxFiles = Conf.ArtifactsMaxFiles(s)
     val files = dataFiles(dir)
     val floor =
       if (parts.isEmpty) maxFiles
@@ -348,8 +341,7 @@ object SideTable {
     val tmp = new File(root, s"${dest.getName}.compact-${UUID.randomUUID}")
     val parts = manifestParts(path)
     val df = s.read.parquet(path)
-    val target = s.conf.get("graft.artifacts.compactTargetFiles", "8")
-      .toInt.max(1)
+    val target = Conf.ArtifactsCompactTargetFiles(s).max(1)
     val out =
       if (parts.nonEmpty)
         df.repartition(parts.map(org.apache.spark.sql.functions.col): _*)
@@ -374,8 +366,7 @@ object SideTable {
 
   private def invalidate(s: SparkSession, name: String, fk: String): Unit = {
     memo.remove(s, None, s"$name#$fk")
-    val root = new File(s.conf.get("graft.artifacts.dir",
-      sys.props("java.io.tmpdir")))
+    val root = new File(Conf.ArtifactsDir(s))
     val dir = new File(root, s"graft_${name}_${md5hex(fk)}")
     if (dir.exists()) deleteTree(dir)
   }

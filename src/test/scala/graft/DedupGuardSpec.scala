@@ -19,7 +19,7 @@ import graft.tools.DedupGuard
   *    join; collapsed, candidate generation sees ONE representative and
   *    the (inherently quadratic, but correct) within-group answer is
   *    reconstructed arithmetically, in bounded time.
-  *  - bucket caps (TextPipeline.capBuckets): distinct-content buckets over
+  *  - bucket caps (ops.Dedup.capBuckets): distinct-content buckets over
   *    `graft.dedup.maxBucket` are dropped from candidate generation,
   *    loudly (DedupGuard counters + WARN) — never silently.
   */

@@ -20,7 +20,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *     labels each task's Spark jobs and cancels the siblings of a
   *     failed task. A Scala future, an ExecutionContext, a hand-built
   *     executor or an `Await` anywhere else is a private pool coming
-  *     back, whose first failure leaves its sibling jobs running. */
+  *     back, whose first failure leaves its sibling jobs running.
+  *   - Session configuration lives in one table, [[graft.Conf]], which
+  *     declares each `graft.*` key once with its type and its default
+  *     and parses every read the same way. A `"graft.<ns>.<key>"`
+  *     literal anywhere else is a hand-parsed read coming back, with
+  *     its own copy of the default and its own parse. */
 class MemoGuardSpec extends AnyFunSuite {
 
   private val root = new File("src/main/scala/graft")
@@ -47,7 +52,13 @@ class MemoGuardSpec extends AnyFunSuite {
       ("""scala\.concurrent\b|\bExecutionContext\b|\bExecutors\.|""" +
         """\bAwait\.|\bblocking\s*[({]""").r,
       Seq("Par.scala" -> ""),
-      imports = true))
+      imports = true),
+    Row("no graft.* conf key literal outside Conf",
+      "graft.* conf keys outside graft.Conf",
+      // two dots: a class name such as "graft.Bench" does not match
+      """"graft\.[a-z][A-Za-z0-9]*\.[A-Za-z0-9]+"""".r,
+      Seq("Conf.scala" -> ""),
+      imports = false))
 
   private def scalaFiles(f: File): Seq[File] =
     if (f.isFile) Seq(f).filter(_.getName.endsWith(".scala"))
