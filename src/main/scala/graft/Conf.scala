@@ -9,8 +9,8 @@ import org.apache.spark.sql.SparkSession
   * goes through its entry.
   *
   * {{{
-  * val k = Conf.SpanK(s)              // the session's value, or 5
-  * s"... rnk <= ${Conf.SpanK.default}" // an oracle pins the default
+  * val k = Conf.KmeansK(s)               // the session's value, or 8
+  * s"... rnk <= ${Conf.KmeansK.default}" // an oracle pins the default
   * }}}
   *
   *   - A default is a constant ([[Fixed]], readable without a session,
@@ -96,54 +96,19 @@ object Conf {
   val DedupMaxOversizedKeys = int("graft.dedup.maxOversizedKeys", 10000)
   val SemdedupMaxCluster = int("graft.semdedup.maxCluster", 2000)
 
-  // embeddings: clustering, ANN, PQ, margin mining
+  // embeddings: clustering and ANN
   val KmeansK = int("graft.kmeans.k", 8)
   val KmeansIters = int("graft.kmeans.iters", 3)
   val SemdedupTau = double("graft.semdedup.tau", 0.45)
-  val AnnRerankCandidates = int("graft.ann.rerankCandidates", 20)
   val AnnBroadcastProbes = bool("graft.ann.broadcastProbes", true)
-  val OodTau = double("graft.ood.tau", 0.12)
-  val PqM = int("graft.pq.m", 4)
-  val PqKsub = int("graft.pq.ksub", 16)
-  val NormLo = int("graft.norm.lo", 5)
-  val NormHi = int("graft.norm.hi", 95)
-  val MarginK = int("graft.margin.k", 4)
-  val MarginTau = double("graft.margin.tau", 1.05)
-  val WordvecSemtau = double("graft.wordvec.semtau", 0.9995)
 
-  // text: spans, winnowing, chunks, collocations, retrieval
-  val SpanK = int("graft.span.k", 5)
-  val SpanMinCount = long("graft.span.minCount", 2L)
-  val SubstrMaxSpan = int("graft.substr.maxSpan", 64)
-  val WinnowW = int("graft.winnow.w", 4)
-  val ChunkWindow = int("graft.chunk.window", 16)
-  val ChunkStride = int("graft.chunk.stride", 12)
-  val PmiMinCount = long("graft.pmi.minCount", 5L)
-  val PmiTopK = int("graft.pmi.topK", 100)
-  val KnDiscount = double("graft.kn.discount", 0.75)
-  val Bm25DfCap = int("graft.bm25.dfCap", 16)
+  // retrieval, selection and curation
   val Bm25K = int("graft.bm25.k", 10)
-  val NegativesN = int("graft.negatives.n", 5)
-
-  // selection and curation
-  val DsirTargetSource = string("graft.dsir.targetSource", "src0")
   val DsirBuckets = int("graft.dsir.buckets", 10000)
   val DsirBudget = int("graft.dsir.budget", 100)
-  val ClfTarget = string("graft.clf.target", "src0")
-  val ClfBuckets = int("graft.clf.buckets", 8192)
-  val ClfIters = int("graft.clf.iters", 16)
-  /** Learning rate in 2²⁰ fixed point: 2.0, measured stable where 4.0
-    * overshoots on the sf0.01 corpus. */
-  val ClfLr20 = long("graft.clf.lr20", 2L * 1048576L)
   val BudgetTokens = long("graft.budget.tokens", 10000L)
   val BudgetShards = new Key[Int]("graft.budget.shards", _.toInt,
     _.sparkContext.defaultParallelism, "defaultParallelism")
-  val BudgetPerSource = long("graft.budget.perSource", 1000L)
-  val CapPerKey = int("graft.cap.perKey", 15)
-  val CapPerKeyIncr = int("graft.cap.perKeyIncr", 22)
-  val MixAlpha = double("graft.mix.alpha", 0.5)
-  val MixBudget = long("graft.mix.budget", 10000L)
-  val CurrBuckets = int("graft.curr.buckets", 8)
   val ShuffleSeed = string("graft.shuffle.seed", "0")
   val ShuffleShards = int("graft.shuffle.shards", 16)
 
@@ -159,5 +124,4 @@ object Conf {
   val ArtifactsCompactTargetFiles =
     int("graft.artifacts.compactTargetFiles", 8)
   val StreamEpochs = int("graft.stream.epochs", 4)
-  val StreamTiming = bool("graft.stream.timing", false)
 }

@@ -106,7 +106,7 @@ object Dedup {
       sim.select(col("doc_id"), col("sh"),
         posexplode(chunks).as(Seq("chunk_idx", "chunk_key"))),
       Seq("chunk_idx", "chunk_key"), docs.sparkSession,
-      "simhash chunk buckets")
+      "simhash chunk buckets", Conf.DedupMaxBucket(docs.sparkSession))
     val a = keyed.as("a"); val b = keyed.as("b")
     a.join(b,
       col("a.chunk_idx") === col("b.chunk_idx") &&
@@ -1329,14 +1329,13 @@ object Dedup {
     * (default 10k — remember each IS a >cap-doc bucket), the guard stays
     * distributed: anti-join against the oversized-key frame itself.
     *
-    * `capKey` is the cap's conf entry — the banded/blocked joins share
-    * `graft.dedup.maxBucket`; q81's cluster-keyed join has its own knob
-    * (`graft.semdedup.maxCluster`) because cluster size is controlled by
-    * a different deployment lever (k ∝ N) than bucket size. */
+    * `cap` is the largest bucket kept — the banded/blocked joins pass
+    * `graft.dedup.maxBucket`; the cluster-keyed SemDeDup joins pass
+    * `graft.semdedup.maxCluster` (or [[Embed.semdedupKeep]]'s
+    * `maxCluster`) because cluster size is controlled by a different
+    * deployment lever (k ∝ N) than bucket size. */
   private[graft] def capBuckets(keyed: DataFrame, keys: Seq[String],
-      s: SparkSession, what: String,
-      capKey: Conf.Key[Int] = Conf.DedupMaxBucket): DataFrame = {
-    val cap = capKey(s)
+      s: SparkSession, what: String, cap: Int): DataFrame = {
     val maxKeys = Conf.DedupMaxOversizedKeys(s)
     val oversized = keyed.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("bsz"))
@@ -1458,7 +1457,8 @@ object Dedup {
       // the 16-min aggregate over the rep shingle stream. (r18:
       // window-count cap fusion tried and REVERTED on interleaved A/B
       // — q27 1.20× slower — see OPTIMIZATION_r18.md)
-      Seq("band_idx", "band_key"), s, "q27 LSH bands")
+      Seq("band_idx", "band_key"), s, "q27 LSH bands",
+      Conf.DedupMaxBucket(s))
     val a = banded.as("a"); val b = banded.as("b")
     val candLazy = a.join(b,
       col("a.band_idx") === col("b.band_idx") &&

@@ -846,11 +846,12 @@ object Embed {
     * lower-id cluster-mate sits at cosine ≥ `tau` (one matrix pass, no
     * transitivity bookkeeping, matching reference SemDeDup semantics —
     * see the q81 entry docs). Pairwise work is Σ|cluster|²: grow `k`
-    * with N to hold expected cluster size constant, and the
-    * `graft.semdedup.maxCluster` session conf caps degenerate clusters
-    * LOUDLY (DedupGuard counters; capped members surface as kept).
-    * Output: (<id>, cluster, kept, dropped_by). */
+    * with N to hold expected cluster size constant, and `maxCluster`
+    * (the `graft.semdedup.maxCluster` default unless given) caps
+    * degenerate clusters LOUDLY (DedupGuard counters; capped members
+    * surface as kept). Output: (<id>, cluster, kept, dropped_by). */
   def semdedupKeep(emb: DataFrame, k: Int, iters: Int, tau: Double,
+      maxCluster: Int = Conf.SemdedupMaxCluster.default,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val s = emb.sparkSession
     val e = normalize(emb, idCol, vecCol).localCheckpoint()
@@ -861,7 +862,7 @@ object Embed {
         col("nrm"))
       .localCheckpoint() // cap scan + both pairwise sides + final left join
     val capped = Dedup.capBuckets(km, Seq("cluster"), s,
-      "semdedup clusters", Conf.SemdedupMaxCluster)
+      "semdedup clusters", maxCluster)
     val b = capped.select(col("vec_id").as("b_id"), col("cluster"),
       col("v").as("bv"), col("nrm").as("bn"))
     val dom = capped.join(b, Seq("cluster"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Conf, Graft}
+import graft.Graft
 import graft.functions.TextFunctions._
 import graft.sources.Memo
 
@@ -32,16 +32,25 @@ import graft.sources.Memo
   * kmeans-oracle discipline), so model weights AND scores hash-match
   * bit-for-bit.
   *
-  * Knob pins (the q150 oracle-pin discipline): the oracles interpolate
-  * the defaults of the graft.clf.* entries of [[graft.Conf]] and
-  * [[ClfThreshold20]] — the graft.clf.* session knobs exist for
-  * deployment runs, but non-default values are not verify-gate
-  * material.
+  * Knob pins (the q150 oracle-pin discipline): the bindings and the
+  * oracles read the same constants, [[ClfBuckets]]/[[ClfIters]]/
+  * [[ClfLr20]]/[[ClfThreshold20]]/[[ClfTarget]]; a deployment that
+  * wants other values calls the ops with them.
   */
 object Classifier {
 
+  /** Hash buckets for the tf feature space (model rows ≤ buckets+1). */
+  private val ClfBuckets = 8192
+  /** Full-batch training iterations (each unrolled in the oracle). */
+  private val ClfIters = 16
+  /** Learning rate in 2²⁰ fixed point (2.0 — measured stable where 4.0
+    * overshoots on the sf0.01 corpus; per-coordinate normalization
+    * makes the same lr serve bias and word features). */
+  private val ClfLr20 = 2L * 1048576L
   /** keep threshold: p ≥ 0.5. */
   private val ClfThreshold20 = 524288L
+  /** The positive-class source (the q104 target-source convention). */
+  private val ClfTarget = "src0"
 
   private val Fp = 1048576L
   private val Fp40 = 1099511627776L
@@ -67,23 +76,19 @@ object Classifier {
       pmod(hash60(col("doc_id").cast("string")), lit(r)) === 0L)
   }
 
-  /** Every knob the training reads, as the model memo and the q153
-    * artifact key them (the substrMemo rule: a memo is keyed by the
-    * inputs that determine the answer, so a mid-session knob change can
-    * never serve a stale model). */
-  private def knobs(s: SparkSession): String =
-    s"b${Conf.ClfBuckets(s)}i${Conf.ClfIters(s)}l${Conf.ClfLr20(s)}" +
-      s"t${Conf.ClfTarget(s)}"
+  /** Every knob the training reads, as the q153 artifact key carries
+    * them (an artifact is keyed by the inputs that determine it). */
+  private val Knobs = s"b${ClfBuckets}i${ClfIters}l${ClfLr20}t$ClfTarget"
 
   private def trainedModel(s: SparkSession, dir: String,
       maxId: Option[Long]): Array[(Long, Long)] = {
-    val variant = maxId.map(c => s"cut$c").getOrElse("full") + "#" + knobs(s)
+    val variant = maxId.map(c => s"cut$c").getOrElse("full")
     clfMemo(s, Some(s"$dir/documents.parquet"), variant) {
       val d0 = Graft.parquetSource(s, dir).table("documents")
       val d = maxId.map(c => d0.where(col("doc_id") < c)).getOrElse(d0)
       graft.ops.Select.classifierTrain(
-          balancedSeed(d, Conf.ClfTarget(s)), "y", "doc_id", "text",
-          Conf.ClfBuckets(s), Conf.ClfIters(s), Conf.ClfLr20(s))
+          balancedSeed(d, ClfTarget), "y", "doc_id", "text",
+          ClfBuckets, ClfIters, ClfLr20)
         .collect().map(r => (r.getLong(0), r.getLong(1)))
     }
   }
@@ -98,7 +103,7 @@ object Classifier {
     * public op (the bpeMergeIndex discipline). */
   private[graft] def clfModelIndex(s: SparkSession, dir: String,
       cut: Long): String =
-    graft.sources.SideTable.ensure(s, "clf_model", s"$dir#$cut#${knobs(s)}",
+    graft.sources.SideTable.ensure(s, "clf_model", s"$dir#$cut#$Knobs",
         Some(s"$dir/documents.parquet")) {
       modelDf(s, trainedModel(s, dir, Some(cut)))
     }
@@ -109,7 +114,7 @@ object Classifier {
     // The model is the verified output: ≤ buckets+1 (h, w20) rows, h=−1
     // the bias. Training data = the balanced seed; the oracle replays
     // ratio probe, seed selection, feature build, and all
-    // graft.clf.iters iterations with exact integers.
+    // ClfIters iterations with exact integers.
     "q151_clf_train" -> ((s, dir) => {
       modelDf(s, trainedModel(s, dir, None)).orderBy("h")
     }),
@@ -126,7 +131,7 @@ object Classifier {
       graft.ops.Select.classifierScore(
           Graft.parquetSource(s, dir).table("documents"),
           modelDf(s, trainedModel(s, dir, None)),
-          ClfThreshold20, "doc_id", "text", Conf.ClfBuckets(s))
+          ClfThreshold20, "doc_id", "text", ClfBuckets)
         .orderBy("doc_id")
     }),
 
@@ -145,7 +150,7 @@ object Classifier {
       val mPath = clfModelIndex(s, dir, cut)
       graft.ops.Select.classifierScore(
           d.where(col("doc_id") >= cut), s.read.parquet(mPath),
-          ClfThreshold20, "doc_id", "text", Conf.ClfBuckets(s))
+          ClfThreshold20, "doc_id", "text", ClfBuckets)
         .orderBy("doc_id")
     }),
 
@@ -163,9 +168,9 @@ object Classifier {
       val d = Graft.parquetSource(s, dir).table("documents")
       val scored = graft.ops.Select.classifierScore(
         d, modelDf(s, trainedModel(s, dir, None)),
-        ClfThreshold20, "doc_id", "text", Conf.ClfBuckets(s))
+        ClfThreshold20, "doc_id", "text", ClfBuckets)
       val labels = d.select(col("doc_id"),
-        when(col("source") === Conf.ClfTarget(s), 1L).otherwise(0L).as("y"))
+        when(col("source") === ClfTarget, 1L).otherwise(0L).as("y"))
       graft.ops.Select.classifierEval(scored, labels)
     })
   )
@@ -173,15 +178,14 @@ object Classifier {
   // --------------------------------------------------------- oracles
 
   /** The training CTE chain: seed/features/labels plus n unrolled
-    * gradient iterations ending in w<n>, n the default of
-    * `graft.clf.iters`. `pre` opens
+    * gradient iterations ending in w<n>, n = [[ClfIters]]. `pre` opens
     * extra leading CTEs; `docWhere` restricts the TRAINING corpus
     * (the q153 old slice). Reused CTEs are MATERIALIZED — the chain
     * references w{i−1} twice per round, which default CTE inlining
     * would blow up exponentially. */
   private def clfTrainCtes(pre: String, docWhere: String): String = {
     val base = s"""WITH ${pre}lab0 AS (
-      |  SELECT doc_id, CASE WHEN source = '${Conf.ClfTarget.default}' THEN 1 ELSE 0
+      |  SELECT doc_id, CASE WHEN source = '${ClfTarget}' THEN 1 ELSE 0
       |    END::bigint AS y
       |  FROM documents$docWhere
       |), ratio AS (
@@ -194,7 +198,7 @@ object Classifier {
       |    ('0x' || substr(md5(doc_id::varchar),1,15))::bigint % r = 0
       |), tok AS (
       |  SELECT d.doc_id,
-      |    ('0x' || substr(md5(t),1,15))::bigint % ${Conf.ClfBuckets.default} AS h
+      |    ('0x' || substr(md5(t),1,15))::bigint % ${ClfBuckets} AS h
       |  FROM (
       |    SELECT doc_id,
       |      unnest(regexp_split_to_array(trim(text), '\\s+')) AS t
@@ -214,7 +218,7 @@ object Classifier {
       |  SELECT CAST(NULL AS BIGINT) AS h, CAST(NULL AS BIGINT) AS w20
       |  WHERE false
       |)""".stripMargin
-    val iters = (1 to Conf.ClfIters.default).map { i =>
+    val iters = (1 to ClfIters).map { i =>
       val p = i - 1
       s""", z$i AS (
         |  SELECT f.doc_id, sum(coalesce(w.w20, 0) * f.t20)::bigint AS zn
@@ -231,8 +235,8 @@ object Classifier {
         |), w$i AS MATERIALIZED (
         |  SELECT g.h,
         |    (coalesce(w.w20, 0) - (CASE WHEN g.g < 0
-        |       THEN -(((-g.g) * ${Conf.ClfLr20.default}) // (g.s * $Fp))
-        |       ELSE ((g.g * ${Conf.ClfLr20.default}) // (g.s * $Fp)) END))::bigint AS w20
+        |       THEN -(((-g.g) * ${ClfLr20}) // (g.s * $Fp))
+        |       ELSE ((g.g * ${ClfLr20}) // (g.s * $Fp)) END))::bigint AS w20
         |  FROM g$i g LEFT JOIN w$p w USING (h)
         |)""".stripMargin
     }.mkString
@@ -246,7 +250,7 @@ object Classifier {
   private def clfScoreCtes(scoreWhere: String): String =
     s""", allt AS (
       |  SELECT doc_id,
-      |    ('0x' || substr(md5(t),1,15))::bigint % ${Conf.ClfBuckets.default} AS h
+      |    ('0x' || substr(md5(t),1,15))::bigint % ${ClfBuckets} AS h
       |  FROM (
       |    SELECT doc_id,
       |      unnest(regexp_split_to_array(trim(text), '\\s+')) AS t
@@ -262,7 +266,7 @@ object Classifier {
       |), zf AS (
       |  SELECT f.doc_id, sum(coalesce(w.w20, 0) * f.t20)::bigint AS zn,
       |    max(ann.n)::bigint AS n_tokens
-      |  FROM afeats f LEFT JOIN w${Conf.ClfIters.default} w USING (h)
+      |  FROM afeats f LEFT JOIN w${ClfIters} w USING (h)
       |    JOIN ann ON ann.doc_id = f.doc_id
       |  GROUP BY f.doc_id
       |), scored AS MATERIALIZED (
@@ -287,7 +291,7 @@ object Classifier {
 
     "q151_clf_train" ->
       (clfTrainCtes("", "") +
-        s"\nSELECT h, w20 FROM w${Conf.ClfIters.default} ORDER BY h"),
+        s"\nSELECT h, w20 FROM w${ClfIters} ORDER BY h"),
 
     "q152_clf_score" ->
       (clfTrainCtes("", "") + clfScoreSql("")),

@@ -29,6 +29,16 @@ import graft.functions.TextFunctions._
   */
 object CorpusQuality {
 
+  /** The df cap of BM25 candidate generation: only terms in at most
+    * this many documents join the posting lists (q102, q105, q108,
+    * q109, q111, q116). */
+  private[queries] final val Bm25DfCap = 16
+  /** DSIR's target domain: the designated "quality domain" source
+    * (q104, q106, q109, q111). */
+  private[queries] final val DsirTargetSource = "src0"
+  /** q150's Kneser-Ney discount, binary-exact (a multiple of 1/256). */
+  private val KnDiscount = 0.75
+
   /** q66's C4-style flag battery — one single-pass, fully codegen'd
     * projection shared by q66 (per-doc audit) and q84 (per-source
     * report, `withSource = true`). `source` is only selected when
@@ -188,7 +198,7 @@ object CorpusQuality {
         .where(col("cos") >= 0.5)
         .localCheckpoint() // eager: allows unpersisting wC NOW
       wC.unpersist()
-      TextPipeline.expandRepPairs(members, scored, "cos")
+      graft.ops.Dedup.expandRepPairs(members, scored, "cos")
         .orderBy("d1", "d2")
     }),
 
@@ -520,7 +530,7 @@ object CorpusQuality {
         // stage consumes the survivor frame twice (shard totals + the
         // window pass), so the argmax/anti-join build side must not
         // re-derive per pass
-      val survivors = d.where(qualityKeepCond)
+      val survivors = d.where(graft.ops.Curate.qualityKeep(col("text")))
         .join(broadcast(drop), Seq("doc_id"), "left_anti") // the corpus
         // never shuffles to drop cluster members
       tokenBudget(s, survivors)
@@ -619,12 +629,13 @@ object CorpusQuality {
         .withColumn("near_dup", lit(1))
         .localCheckpoint() // cluster-member-bounded; read twice (the
         // survivor anti-join and the ledger label join)
-      val survivors = d.where(qualityKeepCond)
+      val survivors = d.where(graft.ops.Curate.qualityKeep(col("text")))
         .join(broadcast(drop), Seq("doc_id"), "left_anti")
       val kept = tokenBudget(s, survivors)
         .select(col("doc_id"), lit(1).as("in_budget"))
       d.select(col("doc_id"),
-          coalesce(qualityKeepCond, lit(false)).as("q"))
+          coalesce(graft.ops.Curate.qualityKeep(col("text")), lit(false))
+            .as("q"))
         .join(broadcast(drop.select(col("doc_id"), col("near_dup"))),
           Seq("doc_id"), "left")
         .join(broadcast(kept), Seq("doc_id"), "left")
@@ -822,7 +833,7 @@ object CorpusQuality {
     //
     // Scale shape: the query set is a broadcast-sized sample; candidate
     // generation joins query terms to the corpus posting lists ONLY for
-    // df-capped terms (`graft.bm25.dfCap`) — the WAND-style upper-bound
+    // df-capped terms ([[Bm25DfCap]]) — the WAND-style upper-bound
     // prune: a term in half the corpus contributes ~nothing to BM25 (idf
     // ≈ 0) but would drag the whole corpus into the join. Scoring work
     // is candidate-bounded (|cand| · |query dl| worst case), and the
@@ -840,7 +851,7 @@ object CorpusQuality {
       val d = Graft.parquetSource(s, dir).table("documents")
       val queries = d.where(pmod(hash60(col("text")), lit(20)) === 0)
         .select(col("doc_id"), col("text"))
-      graft.ops.Retrieval.bm25(d, queries, Conf.Bm25K(s), Conf.Bm25DfCap(s),
+      graft.ops.Retrieval.bm25(d, queries, Conf.Bm25K(s), Bm25DfCap,
         excludeSelf = true)
     }),
 
@@ -913,13 +924,11 @@ object CorpusQuality {
     // singleton bigrams stop dominating, productive contexts
     // redistribute their held-out mass by how many distinct contexts a
     // word follows. Fixed-point 2^20 scores keep the per-doc sum an
-    // exact integer. Knob: graft.kn.discount ∈ (0,1), binary-exact
-    // (multiple of 1/256) values only — NOTE the oracle interpolates
-    // the entry's default, so a non-default knob is a deployment
-    // setting, not a verify-gate one (the oracle pin).
+    // exact integer. Knob: [[KnDiscount]], which the oracle
+    // interpolates (the oracle pin).
     "q150_kn_bigram" -> ((s, dir) => {
       graft.ops.Text.knScore(
-          Graft.parquetSource(s, dir).table("documents"), Conf.KnDiscount(s))
+          Graft.parquetSource(s, dir).table("documents"), KnDiscount)
         .orderBy("doc_id")
     }),
 
@@ -927,7 +936,7 @@ object CorpusQuality {
     // Data Selection via Importance Resampling (Xie et al. 2023): pick
     // raw-pool documents whose hashed-feature distribution looks like a
     // TARGET domain, by per-token LM likelihood ratio. The target is a
-    // designated source (`graft.dsir.targetSource` — the "quality domain
+    // designated source ([[DsirTargetSource]] — the "quality domain
     // proxy"; at deployment, a curated corpus like Wikipedia). Faithful
     // to the paper where it matters at scale: features are HASH BUCKETS
     // (`graft.dsir.buckets`, default 10⁴ — collisions intentional), so
@@ -935,7 +944,7 @@ object CorpusQuality {
     // broadcasts; the corpus-growth per-doc frame never shuffles to meet
     // them. The house integer grade replaces log p with bitlen: per
     // token, bits = bitlen(ct+1) − bitlen(cr+1) (Laplace +1 on BOTH
-    // LMs, shared with q106 via `dsirScore`, whose frozen raw LM can
+    // LMs, shared with q106 via `ops.Select.score`, whose frozen raw LM can
     // genuinely miss batch features). The two LM
     // normalizers (log T_target − log T_raw) shift every per-token score
     // by the same constant, so they are dropped — rankings are
@@ -949,11 +958,10 @@ object CorpusQuality {
     // pool = every non-target source, target = the designated
     // quality-domain source.
     "q104_dsir_selection" -> ((s, dir) => {
-      val target = Conf.DsirTargetSource(s)
       val d = Graft.parquetSource(s, dir).table("documents")
       graft.ops.Select.dsirTopK(
-          d.where(col("source") =!= target),
-          d.where(col("source") === target),
+          d.where(col("source") =!= DsirTargetSource),
+          d.where(col("source") === DsirTargetSource),
           Conf.DsirBudget(s), buckets = Conf.DsirBuckets(s))
         .orderBy("rank")
     }),
@@ -988,7 +996,7 @@ object CorpusQuality {
       val qDf = s.read.parquet(lexPath)
         .join(broadcast(qtf.select("h").distinct()), Seq("h"), "left_semi")
         .localCheckpoint() // ≤ |batch terms| rows
-      val rare = qtf.join(broadcast(qDf.where(col("df") <= Conf.Bm25DfCap(s))
+      val rare = qtf.join(broadcast(qDf.where(col("df") <= Bm25DfCap)
           .select("h")), Seq("h"), "left_semi")
         .withColumn("bucket", pmod(col("h"), lit(64)).cast("int"))
       // no self-pair filter needed: query ids are ≥ cut, postings < cut
@@ -1011,7 +1019,7 @@ object CorpusQuality {
         (fPost.get, fDl.get)
       }
       val tot = s.read.parquet(totPath)
-      bm25TopK(candC
+      graft.ops.Retrieval.bm25Rank(candC
         .join(qtf, Seq("query_id"))
         .join(candPost.select(col("doc_id"), col("h"), col("tf")),
           Seq("doc_id", "h"))
@@ -1028,27 +1036,27 @@ object CorpusQuality {
     // and each incoming batch's pool docs score against them with ZERO
     // old-corpus reads: the cut is pushed to the batch's documents scan,
     // both LMs broadcast (plan-pinned no SortMergeJoin). Scoring is
-    // `dsirScore` — the SAME definition q104 uses — so a batch doc gets
-    // the score the full recompute would give it under the frozen LMs;
+    // `ops.Select.score` — the SAME definition q104 uses — so a batch doc
+    // gets the score the full recompute would give it under the frozen LMs;
     // frozen-LM semantics (the q69/q105 rule) mean batch composition
     // never shifts anyone's score between snapshot rebuilds. Output is
     // the per-doc score stream (the resampler's input), not a top-k —
     // the batch is already the unit of work.
     "q106_incremental_dsir" -> ((s, dir) => {
-      val target = Conf.DsirTargetSource(s)
       val buckets = Conf.DsirBuckets(s)
       val d = Graft.parquetSource(s, dir).table("documents")
       val cut = BatchCut.cut(s, d)
-      val (ctPath, crPath) = dsirLmIndex(s, dir, cut, target, buckets)
+      val (ctPath, crPath) =
+        dsirLmIndex(s, dir, cut, DsirTargetSource, buckets)
       val ct = s.read.parquet(ctPath)
       val cr = s.read.parquet(crPath)
       val perDoc = d
-        .where(col("doc_id") >= cut && col("source") =!= target)
+        .where(col("doc_id") >= cut && col("source") =!= DsirTargetSource)
         .select(col("doc_id"), explode(words(col("text"))).as("term"))
         .select(col("doc_id"),
           pmod(hash60(col("term")), lit(buckets)).as("h"))
         .groupBy(col("doc_id"), col("h")).agg(count(lit(1)).as("k"))
-      val out = dsirScore(perDoc, ct, cr).orderBy("doc_id")
+      val out = graft.ops.Select.score(perDoc, ct, cr).orderBy("doc_id")
       lastIncrementalDsirPlan = out.queryExecution.executedPlan.toString
       out
     }),
@@ -1149,7 +1157,7 @@ object CorpusQuality {
         .select(col("query_id"), col("doc_id")).distinct()
         .localCheckpoint() // bounded by Σ df over the sample's terms
       val candCap = qtf
-        .join(stats.where(col("df") <= Conf.Bm25DfCap(s)).select(col("h")), "h")
+        .join(stats.where(col("df") <= Bm25DfCap).select(col("h")), "h")
         .join(tf.select(col("doc_id"), col("h")), "h")
         .where(col("doc_id") =!= col("query_id"))
         .select(col("query_id"), col("doc_id")).distinct()
@@ -1161,8 +1169,8 @@ object CorpusQuality {
         .join(dl, "doc_id")
         .crossJoin(broadcast(tot))
         .localCheckpoint() // one derivation feeds BOTH rankings
-      val trueTop = bm25TopK(contrib, k).localCheckpoint()
-      val capTop = bm25TopK(
+      val trueTop = graft.ops.Retrieval.bm25Rank(contrib, k).localCheckpoint()
+      val capTop = graft.ops.Retrieval.bm25Rank(
         contrib.join(broadcast(candCap), Seq("query_id", "doc_id"),
           "left_semi"), k)
       val nTrue = candTrue.groupBy(col("query_id"))
@@ -1321,32 +1329,6 @@ object CorpusQuality {
       graft.sources.SideTable.ensure(s, name, s"$dir#$cut", fp) { frame }
     (lm("bigram_ctx_lm", lms._1), lm("bigram_lm", lms._2))
   }
-
-  /** The q104/q106 shared DSIR scorer: per-token importance bits =
-    * bitlen(ct+1) − bitlen(cr+1) (Laplace +1 on BOTH LMs — the target
-    * side can miss pool features and, in the incremental variant, a
-    * frozen raw LM can miss batch features), summed per doc with one
-    * final division. Both LM frames are ≤ `graft.dsir.buckets` rows and
-    * join as broadcasts. ONE definition, so the incremental operator
-    * scores exactly as the full-corpus one. */
-  private def dsirScore(perDoc: DataFrame, ct: DataFrame,
-      cr: DataFrame): DataFrame =
-    graft.ops.Select.score(perDoc, ct, cr)
-
-  /** The q102/q105 shared BM25 tail: per-term integer-ppm scores summed
-    * per (query, doc), then per-query top-k via the mergeable TopK.
-    * Expects one row per shared term with columns (query_id, doc_id,
-    * df, tf, dl, t_tok, n_docs). q105's frozen-LM parity with q102
-    * DEPENDS on the scoring expression being this one definition — the
-    * ppm ratio is the k1=6/5, b=3/4 BM25 multiplied through to integers
-    * (see the q102 entry comment for the derivation). */
-  private def bm25TopK(contrib0: DataFrame, k: Int): DataFrame =
-    graft.ops.Retrieval.bm25Rank(contrib0, k)
-
-  /** q66's keep conjunction as one predicate over raw `text` — shared
-    * by q77's survivor filter (the oracle embeds the identical SQL). */
-  private def qualityKeepCond: org.apache.spark.sql.Column =
-    graft.ops.Curate.qualityKeep(col("text"))
 
   /** q63's deterministic global token-budget cut over an arbitrary
     * `doc_id`/`text` frame — the two-level distributed prefix sum (see
@@ -1908,7 +1890,7 @@ object CorpusQuality {
         |  GROUP BY 1, 2, 3
         |), sc AS (
         |  SELECT doc_id, k,
-        |    floor((((c12 - ${Conf.KnDiscount.default}) + (${Conf.KnDiscount.default} * n1l)
+        |    floor((((c12 - ${KnDiscount}) + (${KnDiscount} * n1l)
         |      * (n1r::double / bt::double)) / c1) * 1048576)::bigint
         |      AS kn20
         |  FROM dp JOIN pc USING (w1, w2) JOIN lm USING (w1)
@@ -1921,7 +1903,7 @@ object CorpusQuality {
         |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
     "q104_dsir_selection" ->
-      """WITH tok AS (
+      raw"""WITH tok AS (
         |  SELECT doc_id, source,
         |    ('0x' || substr(md5(t),1,15))::bigint % 10000 AS h
         |  FROM (
@@ -1931,10 +1913,10 @@ object CorpusQuality {
         |  )
         |), perdoc AS (
         |  SELECT doc_id, h, count(*)::bigint AS k FROM tok
-        |  WHERE source <> 'src0' GROUP BY doc_id, h
+        |  WHERE source <> '$DsirTargetSource' GROUP BY doc_id, h
         |), ct AS (
         |  SELECT h, count(*)::bigint AS ct FROM tok
-        |  WHERE source = 'src0' GROUP BY h
+        |  WHERE source = '$DsirTargetSource' GROUP BY h
         |), cr AS (
         |  SELECT h, sum(k)::bigint AS cr FROM perdoc GROUP BY h
         |), scored AS (
@@ -1956,7 +1938,7 @@ object CorpusQuality {
     // Batch-unaware recompute of q105: corpus = docs below the default
     // cut, queries = the batch above it; identical integer-ratio BM25.
     "q105_incremental_bm25" ->
-      """WITH cut AS (SELECT (max(doc_id) * 4) // 5 AS c FROM documents),
+      raw"""WITH cut AS (SELECT (max(doc_id) * 4) // 5 AS c FROM documents),
         |ws AS (
         |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') w FROM documents
         |), occ AS (
@@ -1981,7 +1963,7 @@ object CorpusQuality {
         |), cand AS (
         |  SELECT DISTINCT b.doc_id AS query_id, t2.doc_id AS doc_id
         |  FROM tfb b
-        |  JOIN stats s ON s.h = b.h AND s.df <= 16
+        |  JOIN stats s ON s.h = b.h AND s.df <= $Bm25DfCap
         |  JOIN tfo t2 ON t2.h = b.h
         |), contrib AS (
         |  SELECT c.query_id, c.doc_id,
@@ -2009,7 +1991,7 @@ object CorpusQuality {
 
     // Batch-unaware recompute of q106 under the frozen old-corpus LMs.
     "q106_incremental_dsir" ->
-      """WITH cut AS (SELECT (max(doc_id) * 4) // 5 AS c FROM documents),
+      raw"""WITH cut AS (SELECT (max(doc_id) * 4) // 5 AS c FROM documents),
         |tok AS (
         |  SELECT doc_id, source,
         |    ('0x' || substr(md5(t),1,15))::bigint % 10000 AS h
@@ -2020,15 +2002,15 @@ object CorpusQuality {
         |  )
         |), ct AS (
         |  SELECT h, count(*)::bigint AS ct FROM tok
-        |  WHERE source = 'src0' AND doc_id < (SELECT c FROM cut)
+        |  WHERE source = '$DsirTargetSource' AND doc_id < (SELECT c FROM cut)
         |  GROUP BY h
         |), cr AS (
         |  SELECT h, count(*)::bigint AS cr FROM tok
-        |  WHERE source <> 'src0' AND doc_id < (SELECT c FROM cut)
+        |  WHERE source <> '$DsirTargetSource' AND doc_id < (SELECT c FROM cut)
         |  GROUP BY h
         |), perdoc AS (
         |  SELECT doc_id, h, count(*)::bigint AS k FROM tok
-        |  WHERE source <> 'src0' AND doc_id >= (SELECT c FROM cut)
+        |  WHERE source <> '$DsirTargetSource' AND doc_id >= (SELECT c FROM cut)
         |  GROUP BY doc_id, h
         |)
         |SELECT doc_id, sum(k)::bigint AS n_tokens,
@@ -2076,7 +2058,7 @@ object CorpusQuality {
 
     // Mirrors q108: same scores for both pipelines, candidacy differs.
     "q108_bm25_recall_audit" ->
-      """WITH ws AS (
+      raw"""WITH ws AS (
         |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') w FROM documents
         |), occ AS (
         |  SELECT doc_id, ('0x' || substr(md5(s),1,15))::bigint % 2147483647 h FROM (
@@ -2104,7 +2086,7 @@ object CorpusQuality {
         |), cand_cap AS (
         |  SELECT DISTINCT q.doc_id AS query_id, t2.doc_id AS doc_id
         |  FROM q JOIN tf t1 ON t1.doc_id = q.doc_id
-        |  JOIN stats s ON s.h = t1.h AND s.df <= 16
+        |  JOIN stats s ON s.h = t1.h AND s.df <= $Bm25DfCap
         |  JOIN tf t2 ON t2.h = t1.h AND t2.doc_id <> q.doc_id
         |), contrib AS (
         |  SELECT c.query_id, c.doc_id,
@@ -2223,7 +2205,7 @@ object CorpusQuality {
     * shared by the q102 oracle and q116's negatives oracle (which
     * filters the same ranking through the near-dup pair set). */
   private[queries] lazy val bm25RankedCtes: String =
-    """WITH ws AS (
+    raw"""WITH ws AS (
       |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') w FROM documents
       |), occ AS (
       |  SELECT doc_id, ('0x' || substr(md5(s),1,15))::bigint % 2147483647 h FROM (
@@ -2248,7 +2230,7 @@ object CorpusQuality {
       |  SELECT DISTINCT q.doc_id AS query_id, t2.doc_id AS doc_id
       |  FROM q
       |  JOIN tf t1 ON t1.doc_id = q.doc_id
-      |  JOIN stats s ON s.h = t1.h AND s.df <= 16
+      |  JOIN stats s ON s.h = t1.h AND s.df <= $Bm25DfCap
       |  JOIN tf t2 ON t2.h = t1.h AND t2.doc_id <> q.doc_id
       |), contrib AS (
       |  SELECT c.query_id, c.doc_id,

@@ -131,7 +131,7 @@ object CrawlIngest {
       : (DataFrame, DataFrame, String, String) = {
     // stage timing under the q111 decomposition flag: the dedup member
     // is the epoch barrier, so ITS phase split must be measurable too
-    val timer = new PhaseTimer(s, "q111-timing")
+    val timer = new PhaseTimer("q111-timing")
     def timed[T](l: String)(b: => T): T = timer(f"    dedup.$l%-8s")(b)
     val deltaBands = timed("sig")(graft.ops.Dedup.bandRows(
         graft.ops.Dedup.minhashSignaturesOf(sh3))
@@ -151,7 +151,7 @@ object CrawlIngest {
       .unionByName(deltaBands)
       .localCheckpoint()) // collision-relevant index rows only (q67)
     val allBands = timed("cap")(graft.ops.Dedup.capBuckets(relevant,
-      Seq("band_idx", "band_key"), s, capWhat))
+      Seq("band_idx", "band_key"), s, capWhat, Conf.DedupMaxBucket(s)))
     val candLazy = allBands.as("a").join(deltaBands.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_key") === col("b.band_key") &&
@@ -307,9 +307,9 @@ object CrawlIngest {
         col("top1_doc"), col("top1_ppm"))
 
   private[graft] def run(s: SparkSession, dir: String): DataFrame = {
-    val target = Conf.DsirTargetSource(s)
+    val target = CorpusQuality.DsirTargetSource
     val buckets = Conf.DsirBuckets(s)
-    val dfCap = Conf.Bm25DfCap(s)
+    val dfCap = CorpusQuality.Bm25DfCap
 
     val d = Graft.parquetSource(s, dir).table("documents")
     val cut = BatchCut.cut(s, d)
@@ -504,10 +504,10 @@ object CrawlIngest {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     // Phase timing: q111 is the bench's single most expensive line
     // item, so its cost must be decomposable (see PhaseTimer).
-    val timed = new PhaseTimer(s, "q111-timing")
-    val target = Conf.DsirTargetSource(s)
+    val timed = new PhaseTimer("q111-timing")
+    val target = CorpusQuality.DsirTargetSource
     val buckets = Conf.DsirBuckets(s)
-    val dfCap = Conf.Bm25DfCap(s)
+    val dfCap = CorpusQuality.Bm25DfCap
     val d = Graft.parquetSource(s, dir).table("documents")
     val cut = BatchCut.cut(s, d)
     val fp = Some(s"$dir/documents.parquet")
@@ -835,15 +835,15 @@ object CrawlIngest {
          |),
          |dsct AS (
          |  SELECT h, count(*)::bigint AS ct FROM dstok
-         |  WHERE source = 'src0' AND doc_id < (SELECT c FROM cut) GROUP BY h
+         |  WHERE source = '${CorpusQuality.DsirTargetSource}' AND doc_id < (SELECT c FROM cut) GROUP BY h
          |),
          |dscr AS (
          |  SELECT h, count(*)::bigint AS cr FROM dstok
-         |  WHERE source <> 'src0' AND doc_id < (SELECT c FROM cut) GROUP BY h
+         |  WHERE source <> '${CorpusQuality.DsirTargetSource}' AND doc_id < (SELECT c FROM cut) GROUP BY h
          |),
          |dsper AS (
          |  SELECT doc_id, h, count(*)::bigint AS k FROM dstok
-         |  WHERE source <> 'src0' AND doc_id >= (SELECT c FROM cut)
+         |  WHERE source <> '${CorpusQuality.DsirTargetSource}' AND doc_id >= (SELECT c FROM cut)
          |  GROUP BY doc_id, h
          |),
          |ds AS (
@@ -885,7 +885,7 @@ object CrawlIngest {
          |bmcand AS (
          |  SELECT DISTINCT b.doc_id AS query_id, t2.doc_id AS doc_id
          |  FROM bmtfb b
-         |  JOIN bmstats s ON s.h = b.h AND s.df <= 16
+         |  JOIN bmstats s ON s.h = b.h AND s.df <= ${CorpusQuality.Bm25DfCap}
          |  JOIN bmtfo t2 ON t2.h = b.h
          |),
          |bmcontrib AS (

@@ -158,16 +158,34 @@ object Embeddings {
 
   // ------------------------------------------------------- k-means (q80)
 
-  // The clustering family's defaults (graft.kmeans.*, graft.semdedup.*,
-  // graft.ann.rerankCandidates, graft.pq.*, graft.ood.tau; see
-  // graft.Conf) are the values the static DuckDB oracles are written
+  // The clustering family's defaults (graft.kmeans.*, graft.semdedup.*;
+  // see graft.Conf) are the values the static DuckDB oracles are written
   // against. The confs are the DEPLOYMENT knobs: SemDeDup's scale rule
   // is k ∝ N (constant expected cluster size, so q81's Σ|cluster|²
   // pairwise work stays linear in the corpus), which makes k a
   // per-corpus parameter, never a constant, at 100 TB. A non-default
   // value changes the operator's defined answer — the driver's oracle
   // harness runs at the defaults; KMeansSpec covers the conf-driven
-  // variants against the brute-force reimplementation.
+  // variants against the brute-force reimplementation. The family's
+  // other parameters are the constants below, read by binding and
+  // oracle alike; a deployment passes its own to the ops.
+
+  /** Exact re-rank candidates per query (C) of the two-stage ANN paths
+    * (q90, q110, q117, q120, q122, q123). */
+  private val RerankC = 20
+  /** q117 PQ: 4 subspaces × 16 centroids over Dim=64 — the oracle
+    * unrolls exactly these. */
+  private val PqM = 4
+  private val PqKsub = 16
+  /** q91: a batch vector whose best centroid cosine is below this is
+    * out-of-distribution. */
+  private val OodTau = 0.12
+  /** q145: the low/high norm-rank quantiles, in percent. */
+  private val NormLo = 5
+  private val NormHi = 95
+  /** q130/q131: mutual-neighbour count and ratio-margin threshold. */
+  private val MarginK = 4
+  private val MarginTau = 1.05
 
   /** Fixed-point scale (2^20) for centroid accumulation. Multiplying a
     * double by a power of two is EXACT in binary floating point (no
@@ -271,7 +289,7 @@ object Embeddings {
         col("nrm"))
       .join(labels, Seq("vec_id"))
     val capped = graft.ops.Dedup.capBuckets(m, Seq("cluster"), s,
-      what, Conf.SemdedupMaxCluster)
+      what, Conf.SemdedupMaxCluster(s))
     val b = capped.select(col("vec_id").as("b_id"), col("cluster"),
       col("label").as("b_label"), col("v").as("bv"),
       col("nrm").as("bn"))
@@ -784,7 +802,7 @@ object Embeddings {
       val capped = graft.ops.Dedup.capBuckets(
         km.select(col("vec_id"), col("cluster"), col("v"), col("nrm")),
         Seq("cluster"), s, "q81 semdedup clusters",
-        Conf.SemdedupMaxCluster)
+        Conf.SemdedupMaxCluster(s))
       val a = capped
       val b = capped.select(col("vec_id").as("b_id"), col("cluster"),
         col("v").as("bv"), col("nrm").as("bn"))
@@ -868,7 +886,7 @@ object Embeddings {
     // The deployment retrieval shape q82's audit justifies: stage 1
     // searches ONLY the int8-quantized index — at 100 TB the sole
     // full-corpus pass, over vectors 8× smaller than the doubles — for
-    // `graft.ann.rerankCandidates` (default 20) candidates per query;
+    // [[RerankC]] (20) candidates per query;
     // stage 2 fetches EXACT vectors for the candidates alone (their
     // ≤ C·|queries| ids broadcast against the corpus scan as a
     // semi-join — the corpus never shuffles) and re-ranks by exact
@@ -887,7 +905,7 @@ object Embeddings {
           qz.join(broadcast(qq), col("vec_id") =!= col("q_id"))
             .select(col("q_id"), col("vec_id"),
               (dotNative(col("qqv"), col("qv")) / (col("qqn") * col("qn")))
-                .as("cos")), Conf.AnnRerankCandidates(s))
+                .as("cos")), RerankC)
         .select(col("q_id"), col("vec_id"))
         .localCheckpoint() // ≤ C·|q| rows; the fetch probe + re-rank spine
       val fetch = e.join(
@@ -911,7 +929,7 @@ object Embeddings {
     // geometry? Fit = max cosine to any persisted centroid (a cosine
     // notion — the embedding-dedup family's metric — distinct from
     // q86's Euclidean assignment); a batch vector with fit below
-    // `graft.ood.tau` (default 0.12) is out-of-distribution. Per
+    // [[OodTau]] (0.12) is out-of-distribution. Per
     // centroid: n_batch, n_ood, ood_rate, min_fit — a rising ood_rate,
     // or one cluster's collapsing min_fit, is the rebuild-the-artifact
     // signal q86's per-vector score stream aggregates to at the
@@ -942,7 +960,7 @@ object Embeddings {
           col("r.cos").as("fit"))
       fit.groupBy(col("cluster"))
         .agg(count(lit(1)).as("n_batch"),
-          sum(when(col("fit") < lit(Conf.OodTau(s)), 1L).otherwise(0L))
+          sum(when(col("fit") < lit(OodTau), 1L).otherwise(0L))
             .as("n_ood"),
           min(col("fit")).as("min_fit"))
         .select(col("cluster"), col("n_batch"), col("n_ood"),
@@ -1183,7 +1201,7 @@ object Embeddings {
         .unionByName(batchAsg
           .select(col("vec_id"), col("cluster"), col("v"), col("nrm")))
       val capped = graft.ops.Dedup.capBuckets(earlier, Seq("cluster"),
-        s, "q88 semdedup clusters", Conf.SemdedupMaxCluster)
+        s, "q88 semdedup clusters", Conf.SemdedupMaxCluster(s))
       val domLazy = capped.join(broadcast(b), Seq("cluster"))
         .where(col("vec_id") < col("b_id") &&
           (dotNative(col("v"), col("bv")) / (col("nrm") * col("bn")))
@@ -1305,7 +1323,7 @@ object Embeddings {
         .select(col("q_id"), col("vec_id"),
           (dotNative(col("qqv"), col("qv")) / (col("qqn") * col("qn")))
             .as("cos"))
-      val cand = topkPerQuery(scored1Lazy, Conf.AnnRerankCandidates(s))
+      val cand = topkPerQuery(scored1Lazy, RerankC)
         .select(col("q_id"), col("vec_id"))
         .localCheckpoint() // ≤ C·|batch| rows; fetch probe + spine
       // stage 2: exact payload for candidates ONLY, from the exact
@@ -1345,7 +1363,7 @@ object Embeddings {
       // the DETECTOR always recomputes and refreshes the session memo
       // (its benchmarked cost is the real pipeline); q121, the
       // CONSUMER, reuses the session's last run — the q27/q53 pattern
-      pqMemo.put(s, embFile(dir), pqParams(s))(
+      pqMemo.put(s, embFile(dir))(
         computePqAnn(s, dir).localCheckpoint()) // 25 rows
     }),
 
@@ -1362,7 +1380,7 @@ object Embeddings {
         .where(col("rank") <= 5)
         .select(col("q_id"), col("vec_id"))
         .localCheckpoint() // ≤ 5 rows per query; read by hits AND qids
-      val approx = pqMemo(s, embFile(dir), pqParams(s))(
+      val approx = pqMemo(s, embFile(dir))(
           computePqAnn(s, dir).localCheckpoint())
         .select(col("q_id"), col("vec_id"))
       // approx is k-per-query and hits one-per-query; the checkpointed
@@ -1390,9 +1408,9 @@ object Embeddings {
     "q122_ivfpq_ann" -> ((s, dir) => {
       val emb = Graft.parquetSource(s, dir).table("embeddings")
       graft.ops.Embed.ivfPqTopK(emb, emb.where(col("vec_id") < 5),
-        k = 5, nlist = Conf.KmeansK(s), nprobe = 2, m = Conf.PqM.default,
-        ksub = Conf.PqKsub.default, iters = Conf.KmeansIters.default,
-        c = Conf.AnnRerankCandidates(s), excludeSelf = true)
+        k = 5, nlist = Conf.KmeansK(s), nprobe = 2, m = PqM,
+        ksub = PqKsub, iters = Conf.KmeansIters.default,
+        c = RerankC, excludeSelf = true)
     }),
 
     // ---- q123: incremental IVFPQ vs persisted router + routed codes --
@@ -1417,7 +1435,7 @@ object Embeddings {
         s.read.parquet(routerP), nprobe = 2)
       graft.ops.Embed.pqSearch(s.read.parquet(ccP),
         s.read.parquet(cbP), s.read.parquet(exP), batch, k = 5,
-        c = Conf.AnnRerankCandidates(s), m = Conf.PqM.default,
+        c = RerankC, m = PqM,
         probes = Some(probes))
     }),
 
@@ -1462,7 +1480,7 @@ object Embeddings {
     // top-1 pairs between the even- and odd-id halves of the
     // embeddings table, each pair's cosine normalized by the two
     // sides' k-NN cosine means (hub correction), kept at margin ≥ tau.
-    // Knobs: graft.margin.k / graft.margin.tau.
+    // Knobs: [[MarginK]] / [[MarginTau]].
     // ---- q146: per-dimension embedding health report -------------------
     // Thin binding over [[graft.ops.Embed.dimStats]] — per-coordinate
     // count/mean/quantized-variance/min/max + dead-dimension flag,
@@ -1567,12 +1585,12 @@ object Embeddings {
     // embedding sanity filter: exact global rank in the (nrm, id)
     // total order via range partitioning + per-partition windows +
     // broadcast offsets (the q63 two-level discipline on a sort key);
-    // bottom/top rank-quantiles flag low/high. Knobs: graft.norm.lo /
-    // graft.norm.hi (percent).
+    // bottom/top rank-quantiles flag low/high. Knobs: [[NormLo]] /
+    // [[NormHi]] (percent).
     "q145_norm_outliers" -> ((s, dir) => {
       graft.ops.Embed.normOutliers(
           Graft.parquetSource(s, dir).table("embeddings"),
-          Conf.NormLo(s), Conf.NormHi(s))
+          NormLo, NormHi)
         .orderBy("vec_id")
     }),
 
@@ -1581,7 +1599,7 @@ object Embeddings {
       graft.ops.Embed.marginPairs(
           emb.where(pmod(col("vec_id"), lit(2)) === 0),
           emb.where(pmod(col("vec_id"), lit(2)) === 1),
-          Conf.MarginK(s), Conf.MarginTau(s))
+          MarginK, MarginTau)
         .orderBy("x_id")
     }),
 
@@ -1600,7 +1618,7 @@ object Embeddings {
       val nP = normIndex(s, dir, cut)
       graft.ops.Embed.marginPairsBatchImpl(
           s.read.parquet(nP), emb.where(col("vec_id") >= cut),
-          Conf.MarginK(s), Conf.MarginTau(s),
+          MarginK, MarginTau,
           "vec_id", "v", "vec_id", "embedding",
           capture = true) // the q131 plan pin reads the capture
         .orderBy("x_id")
@@ -1624,7 +1642,7 @@ object Embeddings {
       val batch = emb.where(col("vec_id") >= cut)
       graft.ops.Embed.pqSearchImpl(s.read.parquet(codeP),
         s.read.parquet(cbP), s.read.parquet(exP), batch, k = 5,
-        c = Conf.AnnRerankCandidates(s), m = Conf.PqM.default, "vec_id",
+        c = RerankC, m = PqM, "vec_id",
         "embedding",
         capture = true) // the q120 plan pin reads the capture
     })
@@ -1633,19 +1651,15 @@ object Embeddings {
   /** The q117 pipeline body — shared by the q117 binding (which
     * refreshes the session memo) and q121's consumer path. */
   private def computePqAnn(s: SparkSession, dir: String): DataFrame = {
-    val (m, ksub, c) = pqParams(s)
     val emb = Graft.parquetSource(s, dir).table("embeddings")
     graft.ops.Embed.pqTopK(emb, emb.where(col("vec_id") < 5), k = 5,
-      m = m, ksub = ksub, iters = Conf.KmeansIters.default, c = c,
-      excludeSelf = true)
+      m = PqM, ksub = PqKsub, iters = Conf.KmeansIters.default,
+      c = RerankC, excludeSelf = true)
   }
 
-  /** Session memo of q117's 25-row ranking, keyed by every input that
-    * determines it (conf-resolved m/ksub/C fold in via the key). */
+  /** Session memo of q117's 25-row ranking, keyed by its input (m,
+    * ksub and C are constants). */
   private val pqMemo = Memo[DataFrame]("pq")
-
-  private def pqParams(s: SparkSession) =
-    (Conf.PqM(s), Conf.PqKsub(s), Conf.AnnRerankCandidates(s))
 
   /** The persisted IVFPQ snapshot artifacts behind q123 — router
     * centroids, codebooks (q120's, shared by identity), the
@@ -1654,7 +1668,7 @@ object Embeddings {
       cut: Long): (String, String, String, String) = {
     import graft.sources.SideTable
     val k = Conf.KmeansK(s)
-    val key = s"$dir#$cut#m${Conf.PqM.default}-k${Conf.PqKsub.default}" +
+    val key = s"$dir#$cut#m${PqM}-k${PqKsub}" +
       s"-i${Conf.KmeansIters.default}" +
       s"-s${FpScale.toLong}"
     val fp = Some(s"$dir/embeddings.parquet")
@@ -1666,12 +1680,12 @@ object Embeddings {
         Conf.KmeansIters.default, capture = false)
     }
     val cbP = SideTable.ensure(s, "pq_codebooks", key, fp) {
-      graft.ops.Embed.pqCodebooks(old, Conf.PqM.default, Conf.PqKsub.default,
+      graft.ops.Embed.pqCodebooks(old, PqM, PqKsub,
         Conf.KmeansIters.default)
     }
     val ccP = SideTable.ensure(s, "pq_cellcodes", s"$key-r$k", fp,
         partitionBy = Seq("cell")) {
-      graft.ops.Embed.pqEncode(old, s.read.parquet(cbP), Conf.PqM.default)
+      graft.ops.Embed.pqEncode(old, s.read.parquet(cbP), PqM)
         .join(graft.ops.Embed.assignCells(old,
           s.read.parquet(routerP)), Seq("vec_id"))
     }
@@ -1723,18 +1737,18 @@ object Embeddings {
   private[graft] def pqIndex(s: SparkSession, dir: String,
       cut: Long): (String, String, String) = {
     import graft.sources.SideTable
-    val key = s"$dir#$cut#m${Conf.PqM.default}-k${Conf.PqKsub.default}" +
+    val key = s"$dir#$cut#m${PqM}-k${PqKsub}" +
       s"-i${Conf.KmeansIters.default}" +
       s"-s${FpScale.toLong}"
     val fp = Some(s"$dir/embeddings.parquet")
     def old = Graft.parquetSource(s, dir).table("embeddings")
       .where(col("vec_id") < cut)
     val cbP = SideTable.ensure(s, "pq_codebooks", key, fp) {
-      graft.ops.Embed.pqCodebooks(old, Conf.PqM.default, Conf.PqKsub.default,
+      graft.ops.Embed.pqCodebooks(old, PqM, PqKsub,
         Conf.KmeansIters.default)
     }
     val codeP = SideTable.ensure(s, "pq_codes", key, fp) {
-      graft.ops.Embed.pqEncode(old, s.read.parquet(cbP), Conf.PqM.default)
+      graft.ops.Embed.pqEncode(old, s.read.parquet(cbP), PqM)
     }
     val exP = SideTable.ensure(s, "pq_exact", key, fp) {
       graft.ops.Embed.normalize(old)
@@ -2315,7 +2329,7 @@ object Embeddings {
            |    SELECT q_id, vec_id,
            |      row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) rnk
            |    FROM qscored
-           |  ) WHERE rnk <= ${Conf.AnnRerankCandidates.default}
+           |  ) WHERE rnk <= ${RerankC}
            |), q AS (SELECT vec_id q_id, v ev, nrm en FROM e WHERE vec_id < 5),
            |rer AS (
            |  SELECT c.q_id, c.vec_id,
@@ -2380,7 +2394,7 @@ object Embeddings {
            |  SELECT q_id, vec_id FROM (
            |    SELECT q_id, vec_id,
            |      row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) rnk
-           |    FROM s1) WHERE rnk <= ${Conf.AnnRerankCandidates.default}
+           |    FROM s1) WHERE rnk <= ${RerankC}
            |), rer AS (
            |  SELECT cd.q_id, cd.vec_id,
            |    (${duckDot("b.ev", "o.v")} / (b.en * o.nrm)) AS cos
@@ -2413,8 +2427,8 @@ object Embeddings {
            |  ) WHERE rnk = 1
            |)
            |SELECT cid AS cluster, count(*)::bigint AS n_batch,
-           |  sum(CASE WHEN cos < ${Conf.OodTau.default} THEN 1 ELSE 0 END)::bigint AS n_ood,
-           |  (sum(CASE WHEN cos < ${Conf.OodTau.default} THEN 1 ELSE 0 END)::double
+           |  sum(CASE WHEN cos < ${OodTau} THEN 1 ELSE 0 END)::bigint AS n_ood,
+           |  (sum(CASE WHEN cos < ${OodTau} THEN 1 ELSE 0 END)::double
            |    / count(*)::double) AS ood_rate,
            |  min(cos) AS min_fit
            |FROM fit GROUP BY cid ORDER BY cluster""".stripMargin),
@@ -2910,7 +2924,7 @@ object Embeddings {
     * clauses against k0/t0 — the IVF routing of q122). */
   private def pqSqlFrom(src: String, queryPred: String,
       excludeSelf: Boolean, probeJoin: String = ""): String = {
-    val m = Conf.PqM.default
+    val m = PqM
     val sub = Dim / m
     val subCtes = (0 until m).map { j =>
       val lo = j * sub + 1
@@ -2925,7 +2939,7 @@ object Embeddings {
            |    SELECT vec_id, sv, sn, row_number() OVER (ORDER BY
            |      (('0x' || substr(md5(vec_id::varchar),1,15))::bigint % 2147483647), vec_id) rnk
            |    FROM s$j
-           |  ) WHERE rnk <= ${Conf.PqKsub.default}
+           |  ) WHERE rnk <= ${PqKsub}
            |)""".stripMargin
       val iters = (1 to Conf.KmeansIters.default).map { it =>
         val prev = s"s${j}c${it - 1}"
@@ -2979,7 +2993,7 @@ object Embeddings {
          |    SELECT q_id, vec_id,
          |      row_number() OVER (PARTITION BY q_id ORDER BY approx DESC, vec_id) rnk
          |    FROM approx
-         |  ) WHERE rnk <= ${Conf.AnnRerankCandidates.default}
+         |  ) WHERE rnk <= ${RerankC}
          |), qe AS (SELECT q.vec_id q_id, q.v qv, q.nrm qn FROM e q WHERE $queryPred),
          |rer AS (
          |  SELECT c.q_id, c.vec_id, (${duckDot("q.qv", "ee.v")} / (q.qn * ee.nrm)) AS cos

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Graft
+import graft.{Conf, Graft}
 import graft.functions.Multimodal._
 
 /** Multimodal-column queries over a synthetic media table derived from
@@ -659,7 +659,7 @@ object Media {
       // test cards) drops from candidate generation LOUDLY instead of
       // going quadratic; overlap denominators stay the full counts
       val capped = graft.ops.Dedup.capBuckets(fh, Seq("h"), s,
-        "q205 frame-hash buckets")
+        "q205 frame-hash buckets", Conf.DedupMaxBucket(s))
       val a = capped.select(col("media_id").as("m1"), col("h"))
       val b = capped.select(col("media_id").as("m2"), col("h"))
       val shared = a.join(b, Seq("h")).where(col("m1") < col("m2"))
@@ -733,7 +733,7 @@ object Media {
               .bitwiseAND(lit(65535L)).as("bk"))): _*)).as("e"))
         .select(col("media_id"), col("e.b").as("b"), col("e.bk").as("bk"))
       val capped = graft.ops.Dedup.capBuckets(bands, Seq("b", "bk"), s,
-        "q208 ahash bands")
+        "q208 ahash bands", Conf.DedupMaxBucket(s))
       val cand = capped.select(col("media_id").as("m1"), col("b"),
           col("bk"))
         .join(capped.select(col("media_id").as("m2"), col("b"),
@@ -822,7 +822,7 @@ object Media {
               .bitwiseAND(lit(65535L)).as("bk"))): _*)).as("e"))
         .select(col("media_id"), col("e.b").as("b"), col("e.bk").as("bk"))
       val capped = graft.ops.Dedup.capBuckets(bands, Seq("b", "bk"), s,
-        "q212 ahash bands")
+        "q212 ahash bands", Conf.DedupMaxBucket(s))
         .localCheckpoint() // probed by BOTH pair sides
       val cand = capped.select(col("media_id").as("m1"), col("b"),
           col("bk"))
@@ -872,7 +872,7 @@ object Media {
         .agg(count(lit(1)).as("n"))
         .localCheckpoint() // one row per video; joined twice
       val capped = graft.ops.Dedup.capBuckets(fh, Seq("h"), s,
-        "q213 frame-hash buckets")
+        "q213 frame-hash buckets", Conf.DedupMaxBucket(s))
       val a = capped.select(col("media_id").as("m1"), col("h"))
       val b = capped.where(col("media_id") >= cut)
         .select(col("media_id").as("m2"), col("h"))
@@ -1659,7 +1659,7 @@ object Media {
     // verify gate stays valid at corpus sizes where a degenerate
     // frame class (black frames, test cards) exceeds the cap
     "q205_video_clip_detect" ->
-      (videoSrcCtes + """, fh AS (
+      (videoSrcCtes + s""", fh AS (
         |  SELECT DISTINCT media_id,
         |    ('0x' || substr(md5(
         |      w::VARCHAR || ':' || h::VARCHAR || ':' ||
@@ -1670,7 +1670,7 @@ object Media {
         |), nf AS (
         |  SELECT media_id, count(*)::BIGINT AS n FROM fh GROUP BY 1
         |), hb AS (
-        |  SELECT hh FROM fh GROUP BY hh HAVING count(*) <= 2000
+        |  SELECT hh FROM fh GROUP BY hh HAVING count(*) <= ${Conf.DedupMaxBucket.default}
         |), pr AS (
         |  SELECT a.media_id AS m1, b.media_id AS m2,
         |    count(*)::BIGINT AS n_shared
@@ -1712,7 +1712,7 @@ object Media {
     // aHash/dHash bits straight from the sampled-pixel formula (R
     // multiplier is 7 for every format class), the SAME 4×16-bit band
     // join the engine runs (pigeonhole recall for Hamming ≤ 3, hb
-    // mirroring the capBuckets default 2000), exact bit-count verify
+    // mirroring graft.dedup.maxBucket's default), exact bit-count verify
     // on candidates
     "q208_image_near_dup" ->
       (imgPlantCtes +
@@ -1735,7 +1735,7 @@ object Media {
         |      j -> ab[t.b * 16 + j + 1] * (1 << j)))::BIGINT AS bk
         |  FROM ah, unnest([0, 1, 2, 3]) AS t(b)
         |), hb AS (
-        |  SELECT b, bk FROM bnd GROUP BY b, bk HAVING count(*) <= 2000
+        |  SELECT b, bk FROM bnd GROUP BY b, bk HAVING count(*) <= ${Conf.DedupMaxBucket.default}
         |), cand AS (
         |  SELECT DISTINCT x.media_id AS m1, y.media_id AS m2
         |  FROM bnd x JOIN hb USING (b, bk) JOIN bnd y USING (b, bk)
@@ -1799,7 +1799,7 @@ object Media {
         |      j -> ab[t.b * 16 + j + 1] * (1 << j)))::BIGINT AS bk
         |  FROM ah, unnest([0, 1, 2, 3]) AS t(b)
         |), hb AS (
-        |  SELECT b, bk FROM bnd GROUP BY b, bk HAVING count(*) <= 2000
+        |  SELECT b, bk FROM bnd GROUP BY b, bk HAVING count(*) <= ${Conf.DedupMaxBucket.default}
         |), cand AS (
         |  SELECT DISTINCT x.media_id AS m1, y.media_id AS m2
         |  FROM bnd x JOIN hb USING (b, bk) JOIN bnd y USING (b, bk)
@@ -1823,7 +1823,7 @@ object Media {
     // whole-corpus replay of the q205 containment, filtered to pairs
     // touching the batch (cut-split ids: m2 >= cut ⟺ some side new)
     "q213_incremental_clip_detect" ->
-      (videoSrcCtes + """, fh AS (
+      (videoSrcCtes + s""", fh AS (
         |  SELECT DISTINCT media_id,
         |    ('0x' || substr(md5(
         |      w::VARCHAR || ':' || h::VARCHAR || ':' ||
@@ -1834,7 +1834,7 @@ object Media {
         |), nf AS (
         |  SELECT media_id, count(*)::BIGINT AS n FROM fh GROUP BY 1
         |), hb AS (
-        |  SELECT hh FROM fh GROUP BY hh HAVING count(*) <= 2000
+        |  SELECT hh FROM fh GROUP BY hh HAVING count(*) <= ${Conf.DedupMaxBucket.default}
         |), pr AS (
         |  SELECT a.media_id AS m1, b.media_id AS m2,
         |    count(*)::BIGINT AS n_shared

@@ -79,7 +79,7 @@ object MediaIngest {
     // Phase timing — the q111 decomposition discipline: fixed overhead
     // (snapshot ensure, state seed) vs per-epoch member work must be
     // separable before optimizing (see PhaseTimer).
-    val timed = new PhaseTimer(s, "q214-timing")
+    val timed = new PhaseTimer("q214-timing")
 
     val d = Graft.parquetSource(s, dir).table("documents")
     val cut = BatchCut.cut(s, d)
@@ -234,7 +234,7 @@ object MediaIngest {
             val rel = all.join(broadcast(bHs), Seq("h"), "left_semi")
               .localCheckpoint()
             val capped = graft.ops.Dedup.capBuckets(rel, Seq("h"), s,
-              "q214 frame-hash buckets")
+              "q214 frame-hash buckets", Conf.DedupMaxBucket(s))
             val shared = capped.select(col("media_id").as("m1"), col("h"))
               .join(capped.join(broadcast(bids), Seq("media_id"),
                   "left_semi")
@@ -343,7 +343,7 @@ object MediaIngest {
   val oracles: Map[String, String] = Map(
     "q214_stream_media_ingest" ->
       (Media.videoSrcCtes + ", " +
-        Media.audioSrcCtes.stripPrefix("WITH ") + """, vfh AS (
+        Media.audioSrcCtes.stripPrefix("WITH ") + s""", vfh AS (
         |  SELECT media_id,
         |    ('0x' || substr(md5(
         |      frame_idx::VARCHAR || ':' || w::VARCHAR || ':' ||
@@ -372,7 +372,7 @@ object MediaIngest {
         |), nf2 AS (
         |  SELECT media_id, count(*)::BIGINT AS n FROM fh2 GROUP BY 1
         |), hb AS (
-        |  SELECT hh FROM fh2 GROUP BY hh HAVING count(*) <= 2000
+        |  SELECT hh FROM fh2 GROUP BY hh HAVING count(*) <= ${Conf.DedupMaxBucket.default}
         |), pr AS (
         |  SELECT a.media_id AS m1, b.media_id AS m2,
         |    count(*)::BIGINT AS n_shared

@@ -1,17 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-
 /** Stderr phase timing for the streaming ingest loops (q111, q214), off
-  * by default: `graft.stream.timing=true` or SPARK_GRAFT_STREAM_TIMING=1
-  * turns it on. Every line reads `[<tag>] <label> <seconds> s`; SCALE.md's
-  * decompositions into fixed streaming overhead (snapshot ensure, state
-  * seed, stream start/stop) and per-epoch member work are read from
-  * these lines. */
-private[graft] final class PhaseTimer(s: SparkSession, tag: String) {
-  private val on =
-    graft.Conf.StreamTiming(s) ||
-      sys.env.get("SPARK_GRAFT_STREAM_TIMING").contains("1")
+  * by default: SPARK_GRAFT_STREAM_TIMING=1 turns it on. Every line reads
+  * `[<tag>] <label> <seconds> s`; SCALE.md's decompositions into fixed
+  * streaming overhead (snapshot ensure, state seed, stream start/stop)
+  * and per-epoch member work are read from these lines. */
+private[graft] final class PhaseTimer(tag: String) {
+  private val on = sys.env.get("SPARK_GRAFT_STREAM_TIMING").contains("1")
 
   /** Runs `body`, printing its wall time when timing is on. */
   def apply[T](label: String)(body: => T): T = {

@@ -37,13 +37,6 @@ object TextPipeline {
   private def shingleRowsAll(s: SparkSession, dir: String, n: Int = 3): DataFrame =
     shingleHashRows(Graft.parquetSource(s, dir).table("documents"), n)
 
-  /** Exact set-overlap counts for candidate pairs — see
-    * [[graft.ops.Dedup.pairOverlap]] (doc-grain `collect_set` arrays,
-    * one aggregation, codegen'd per-pair intersect; empty-intersection
-    * pairs still drop out, so any positive threshold stays correct). */
-  private def pairOverlap(cand: DataFrame, sh: DataFrame): DataFrame =
-    graft.ops.Dedup.pairOverlap(cand, sh)
-
   /** Candidate pairs from rare-feature blocking — the shared seam of the
     * blocked-verify family (q62 containment, q65 TF-IDF similarity):
     * features with document frequency in [lo, hi] are the blocking keys;
@@ -76,10 +69,6 @@ object TextPipeline {
     (cand, candDocs)
   }
 
-  /** Exact Jaccard |A∩B| / (n1 + n2 − |A∩B|) over [[pairOverlap]]. */
-  private def pairJaccard(cand: DataFrame, sh: DataFrame): DataFrame =
-    graft.ops.Dedup.pairJaccard(cand, sh)
-
   /** Exact-duplicate pre-collapse for the near-dup queries. Dedup corpora
     * are duplicate-heavy BY DEFINITION, and word-identical documents share
     * every band/block key, so feeding them straight into a bucket
@@ -87,7 +76,8 @@ object TextPipeline {
     * candidate pairs before any filter). Collapsing each
     * identical-word-sequence group to its min-doc_id representative first
     * keeps candidate generation linear in DISTINCT content — and the
-    * doc-level answer is recovered EXACTLY by [[expandRepPairs]]:
+    * doc-level answer is recovered EXACTLY by
+    * [[graft.ops.Dedup.expandRepPairs]]:
     * identical word sequences have identical shingle sets, hence
     * jaccard 1 within a group (passes any threshold) and identical
     * minhash signatures / band keys / block keys, hence cross-group
@@ -98,18 +88,6 @@ object TextPipeline {
     * Core: [[graft.ops.Dedup.exactGroups]]. */
   private[queries] def exactGroups(d: DataFrame, minWords: Int): DataFrame =
     graft.ops.Dedup.exactGroups(d, "doc_id", "text", minWords)
-
-  /** Exact recovery of the doc-level near-dup answer from rep-level
-    * pairs (see [[exactGroups]]): within an exact-dup group every pair
-    * is a duplicate with similarity exactly 1 (identical word sequences
-    * have identical shingle sets under every overlap measure); across
-    * groups, member similarity equals representative similarity because
-    * members share their rep's word sequence. Output is (d1, d2,
-    * <measure>) with d1 < d2 — identical to what the un-collapsed
-    * formulation produces. Core: [[graft.ops.Dedup.expandRepPairs]]. */
-  private[queries] def expandRepPairs(members: DataFrame, repPairs: DataFrame,
-      measure: String = "jac"): DataFrame =
-    graft.ops.Dedup.expandRepPairs(members, repPairs, measure)
 
   /** Session-level memo of [[computeRepPairs]] results, keyed by
     * (session, documents file, bucket cap) — the inputs that determine
@@ -159,14 +137,50 @@ object TextPipeline {
         .toSeq)
 
   /** Unigram-LM knobs of the q155/q156 bindings — interpolated into
-    * the unrolled oracles (the q150 oracle-pin discipline; the
-    * graft.ulm.* session knobs exist for deployment, non-default
-    * values are not verify-gate material). */
+    * the unrolled oracles (the q150 oracle-pin discipline; a
+    * deployment passes its own values to the op). */
   private val UlmMaxW = 16
   private val UlmMaxP = 4
   private val UlmMinFreq = 2L
   private val UlmRounds = 2
   private val UlmVSize = 1024
+
+  // Knobs of the span, chunking, collocation and curation bindings,
+  // each read by its binding and by its oracle (the same pin
+  // discipline); a deployment passes its own values to the ops.
+
+  /** Word-gram length of the span family (q128–q160, q134–q144). */
+  private val SpanK = 5
+  /** A gram is duplicated from this many corpus occurrences on. */
+  private val SpanMinCount = 2L
+  /** ExactSubstr's longest exact span; longer spans chain, clamped. */
+  private val SubstrMaxSpan = 64
+  /** Winnowing window (q139/q144), in grams. */
+  private val WinnowW = 4
+  /** q127's chunk window and stride, in tokens. */
+  private val ChunkWindow = 16
+  private val ChunkStride = 12
+  /** q141: the fewest occurrences a reported pair has, and how many
+    * top pairs are reported. */
+  private val PmiMinCount = 5L
+  private val PmiTopK = 100
+  /** q116: hard negatives kept per query. */
+  private val NegativesN = 5
+  /** q138's uniform per-source token budget: ~half of each source at
+    * the test SFs, so the cut provably bites. */
+  private val BudgetPerSource = 1000L
+  /** q118's per-source doc cap. q119's sits just above the per-source
+    * old-doc count at the test cut, so BOTH its saturation path and
+    * its remaining-slot path execute. */
+  private val CapPerKey = 15
+  private val CapPerKeyIncr = 22
+  /** q142/q143's mixture temperature (0.5: the common
+    * up-sample-the-tail choice, one IEEE sqrt in both engines) and
+    * q143's total token budget. */
+  private val MixAlpha = 0.5
+  private val MixBudget = 10000L
+  /** q149's curriculum stages. */
+  private val CurrBuckets = 8
 
   /** Trained unigram vocabularies per (session, dir) — ≤ vocabSize
     * driver rows (vocabulary grain, the bpeMemo discipline): q155
@@ -174,7 +188,7 @@ object TextPipeline {
   private val ulmMemo = Memo[Seq[(String, Long)]]("ulm")
 
   /** Session-level memo of the q159 ExactSubstr span frame, keyed by
-    * (session, documents file, k, maxSpan) — the pairMemo discipline
+    * (session, documents file) — the pairMemo discipline
     * applied to the suffix-grade detector: q159, the DETECTOR, always
     * recomputes and refreshes its entry (its benchmarked cost is the real
     * prefix-doubling pipeline, never a memo read); q160, the trim
@@ -183,13 +197,13 @@ object TextPipeline {
     * extents only, ≪ corpus). */
   private val substrMemo = Memo[DataFrame]("substr")
 
-  private def substrSpansOf(s: SparkSession, dir: String, k: Int,
-      cap: Int, refresh: Boolean): DataFrame = {
+  private def substrSpansOf(s: SparkSession, dir: String,
+      refresh: Boolean): DataFrame = {
     def compute = graft.ops.Dedup.exactSubstrSpans(
-        Graft.parquetSource(s, dir).table("documents"), k, cap)
+        Graft.parquetSource(s, dir).table("documents"), SpanK, SubstrMaxSpan)
       .localCheckpoint()
-    if (refresh) substrMemo.put(s, docsFile(dir), (k, cap))(compute)
-    else substrMemo(s, docsFile(dir), (k, cap))(compute)
+    if (refresh) substrMemo.put(s, docsFile(dir))(compute)
+    else substrMemo(s, docsFile(dir))(compute)
   }
 
   private def ulmVocabOf(s: SparkSession,
@@ -229,23 +243,6 @@ object TextPipeline {
     * bands never shuffle for candidate generation). */
   @volatile private[graft] var lastDecontamPlan: String = ""
 
-
-  /** 16-permutation MinHash signatures (doc_id, m0..m15) — the signature
-    * stage shared by [[minhashBands]] and q73's fidelity audit. MinHash
-    * needs NO distinct(): min over a multiset equals min over its
-    * support. The 16 mins are codegen'd MIN aggregates over the shingle
-    * rows (map-side partial agg — the 100 TB shape), not per-element
-    * lambdas; only 16 longs per doc cross the wire, never the
-    * shingles. */
-  private def minhashSignatures(docs: DataFrame): DataFrame =
-    graft.ops.Dedup.minhashSignatures(docs)
-
-  /** Banded MinHash signatures of a `doc_id`/`text` frame: one row per
-    * (doc_id, band_idx, band_key), 4 bands × 4 rows over 16 permutations
-    * — the LSH index layout shared by q27's in-session pipeline and
-    * q67's persisted signature artifact. */
-  private def minhashBands(docs: DataFrame): DataFrame =
-    graft.ops.Dedup.minhashBands(docs)
 
   /** The shared MinHash+LSH candidate/verify pipeline (q27 + q53):
     * exact-dup collapse → 16-perm minhash over representatives → 4×4
@@ -455,12 +452,12 @@ object TextPipeline {
     // duplicate-heavy-input guard), buckets capped ([[capBuckets]] — the
     // degenerate-key guard); verified with exact Jaccard ≥ 0.8 on the
     // 3-gram shingle sets, then expanded back to the doc-level answer
-    // ([[expandRepPairs]] — exact, not approximate).
+    // ([[graft.ops.Dedup.expandRepPairs]] — exact, not approximate).
     "q27_minhash_lsh" -> ((s, dir) => {
       // The detector always recomputes (and refreshes the memo for q53):
       // its reported cost is the real pipeline, never a memo read.
       val pair = repPairsOf(s, dir, refresh = true)
-      expandRepPairs(pair._1, pair._2)
+      graft.ops.Dedup.expandRepPairs(pair._1, pair._2)
         .orderBy("d1", "d2")
     }),
 
@@ -711,11 +708,11 @@ object TextPipeline {
     // window/stride token chunks (the RAG / fixed-context splitting
     // primitive). Output pins position, length and the md5 of every
     // chunk's full text, so the oracle checks the complete chunking
-    // without long string columns. Knobs: graft.chunk.window /
-    // graft.chunk.stride.
+    // without long string columns. Knobs: [[ChunkWindow]] /
+    // [[ChunkStride]].
     "q127_chunk" -> ((s, dir) => {
       graft.ops.Text.chunk(Graft.parquetSource(s, dir).table("documents"),
-          Conf.ChunkWindow(s), Conf.ChunkStride(s))
+          ChunkWindow, ChunkStride)
         .select(col("doc_id"), col("chunk_idx"), col("start_tok"),
           col("n_tok"), md5(col("chunk_text")).as("chunk_md5"))
         .orderBy("doc_id", "chunk_idx")
@@ -725,10 +722,10 @@ object TextPipeline {
     // Thin binding over [[graft.ops.Dedup.spanDups]] — the Lee-et-al
     // span dedup signal at word-5-gram grain: per document, the
     // corpus-duplicated gram positions merged into maximal extents.
-    // Knobs: graft.span.k / graft.span.minCount.
+    // Knobs: [[SpanK]] / [[SpanMinCount]].
     "q128_span_dups" -> ((s, dir) => {
       graft.ops.Dedup.spanDups(Graft.parquetSource(s, dir).table("documents"),
-          Conf.SpanK(s), Conf.SpanMinCount(s))
+          SpanK, SpanMinCount)
         .orderBy("doc_id")
     }),
 
@@ -744,12 +741,11 @@ object TextPipeline {
     // alone (two batch docs sharing a novel span both score it fresh;
     // the NEXT snapshot owns it).
     "q129_incremental_span_dups" -> ((s, dir) => {
-      val k = Conf.SpanK(s)
       val d = Graft.parquetSource(s, dir).table("documents")
       val cut = BatchCut.cut(s, d)
-      val gPath = spanGramIndex(s, dir, cut, k)
+      val gPath = spanGramIndex(s, dir, cut)
       graft.ops.Dedup.spanDupScoreImpl(d.where(col("doc_id") >= cut),
-          s.read.parquet(gPath), k, "doc_id", "text",
+          s.read.parquet(gPath), SpanK, "doc_id", "text",
           capture = true) // the q129 plan pin reads the capture
         .orderBy("doc_id")
     }),
@@ -761,7 +757,7 @@ object TextPipeline {
     // with n_removed = n_words. Same knobs as q128.
     "q132_span_trim" -> ((s, dir) => {
       graft.ops.Dedup.spanTrim(Graft.parquetSource(s, dir).table("documents"),
-          Conf.SpanK(s), Conf.SpanMinCount(s))
+          SpanK, SpanMinCount)
         .orderBy("doc_id")
     }),
 
@@ -934,7 +930,7 @@ object TextPipeline {
     "q154_span_extent_audit" -> ((s, dir) => {
       graft.ops.Dedup.spanExtentAudit(
           Graft.parquetSource(s, dir).table("documents"),
-          Conf.SpanK(s), Conf.SpanMinCount(s))
+          SpanK, SpanMinCount)
         .orderBy("doc_id", "start_tok")
     }),
 
@@ -947,8 +943,7 @@ object TextPipeline {
     // covered positions stay exact). The suffix-grade exact path next
     // to the k-gram approximation (q128) its audit measures (q154).
     "q159_exact_substr_spans" -> ((s, dir) => {
-      substrSpansOf(s, dir, Conf.SpanK(s), Conf.SubstrMaxSpan(s),
-          refresh = true)
+      substrSpansOf(s, dir, refresh = true)
         .orderBy("doc_id", "start_tok")
     }),
 
@@ -965,8 +960,7 @@ object TextPipeline {
     "q160_exact_substr_trim" -> ((s, dir) => {
       graft.ops.Dedup.trimSpans(
           Graft.parquetSource(s, dir).table("documents"),
-          substrSpansOf(s, dir, Conf.SpanK(s), Conf.SubstrMaxSpan(s),
-            refresh = false))
+          substrSpansOf(s, dir, refresh = false))
         .orderBy("doc_id")
     }),
 
@@ -1089,10 +1083,10 @@ object TextPipeline {
     // Thin binding over [[graft.ops.Dedup.crossSourceOverlap]] — the
     // inter-source contamination report (shared distinct 5-grams and
     // gram-set Jaccard per source pair, full matrix). Knob:
-    // graft.span.k (shared with the span family).
+    // [[SpanK]] (shared with the span family).
     "q134_source_overlap" -> ((s, dir) => {
       graft.ops.Dedup.crossSourceOverlap(
-          Graft.parquetSource(s, dir).table("documents"), Conf.SpanK(s))
+          Graft.parquetSource(s, dir).table("documents"), SpanK)
         .orderBy("src1", "src2")
     }),
 
@@ -1105,14 +1099,13 @@ object TextPipeline {
     // [[graft.ops.Dedup.crossSourceOverlapOf]] makes appended
     // duplicates harmless (the lifecycle append discipline).
     "q136_incremental_source_overlap" -> ((s, dir) => {
-      val k = Conf.SpanK(s)
       val d = Graft.parquetSource(s, dir).table("documents")
       val cut = BatchCut.cut(s, d)
-      val sgP = sourceGramIndex(s, dir, cut, k)
+      val sgP = sourceGramIndex(s, dir, cut)
       graft.ops.Dedup.crossSourceOverlapOf(
           s.read.parquet(sgP).unionByName(
             graft.ops.Dedup.sourceGramFrame(
-              d.where(col("doc_id") >= cut), k)))
+              d.where(col("doc_id") >= cut), SpanK)))
         .orderBy("src1", "src2")
     }),
 
@@ -1128,16 +1121,14 @@ object TextPipeline {
 
     // ---- q138: per-source token budgets (the mixture executor) ---------
     // Thin binding over [[graft.ops.Curate.sourceBudget]] — a uniform
-    // per-source budget (graft.budget.perSource, default 1000 tokens:
-    // ~half of each source at the test SFs, so the cut provably
-    // bites) applied to every source; the deployment shape passes the
-    // real mixture spec as the budgets map.
+    // per-source budget ([[BudgetPerSource]]) applied to every source;
+    // the deployment shape passes the real mixture spec as the budgets
+    // map.
     "q138_source_budget" -> ((s, dir) => {
-      val b = Conf.BudgetPerSource(s)
       val d = Graft.parquetSource(s, dir).table("documents")
       val srcs = d.select(col("source")).distinct()
         .collect().map(_.getString(0)) // ≤ |sources| — metadata grain
-      graft.ops.Curate.sourceBudget(d, srcs.map(_ -> b).toMap)
+      graft.ops.Curate.sourceBudget(d, srcs.map(_ -> BudgetPerSource).toMap)
         .orderBy("source", "cum", "doc_id")
     }),
 
@@ -1146,10 +1137,10 @@ object TextPipeline {
     // fingerprint selector: rightmost-minimum gram hash per w-window,
     // the ~w/2× index-size lever for span/novelty artifacts (every
     // ≥(w+k−1)-token match still shares a fingerprint). Knobs:
-    // graft.span.k / graft.winnow.w.
+    // [[SpanK]] / [[WinnowW]].
     "q139_winnow" -> ((s, dir) => {
       graft.ops.Dedup.winnow(Graft.parquetSource(s, dir).table("documents"),
-          Conf.SpanK(s), Conf.WinnowW(s))
+          SpanK, WinnowW)
         .orderBy("doc_id", "pos")
     }),
 
@@ -1159,7 +1150,7 @@ object TextPipeline {
     // k-gram fraction) Gopher-style quality filters threshold on.
     "q140_repetition" -> ((s, dir) => {
       graft.ops.Text.repetition(Graft.parquetSource(s, dir).table("documents"),
-          Seq(1, 2, 3), Conf.SpanK(s))
+          Seq(1, 2, 3), SpanK)
         .orderBy("doc_id")
     }),
 
@@ -1167,13 +1158,13 @@ object TextPipeline {
     // Thin binding over [[graft.ops.Text.collocations]] — corpus-level
     // adjacent-pair association mining (Church-Hanks PMI, reported as
     // the engine-exact lift ratio); top pairs by (lift DESC, w1, w2)
-    // through the TakeOrdered tail. Knobs: graft.pmi.minCount /
-    // graft.pmi.topK.
+    // through the TakeOrdered tail. Knobs: [[PmiMinCount]] /
+    // [[PmiTopK]].
     "q141_collocations" -> ((s, dir) => {
       graft.ops.Text.collocations(
-          Graft.parquetSource(s, dir).table("documents"), Conf.PmiMinCount(s))
+          Graft.parquetSource(s, dir).table("documents"), PmiMinCount)
         .orderBy(col("lift").desc, col("w1"), col("w2"))
-        .limit(Conf.PmiTopK(s))
+        .limit(PmiTopK)
     }),
 
     // ---- q144: incremental winnow novelty ------------------------------
@@ -1184,15 +1175,13 @@ object TextPipeline {
     // fingerprint selection against that frozen set
     // ([[graft.ops.Dedup.winnowScore]] — hit_ratio 0 = fully novel;
     // any ≥(w+k−1)-token span shared with the snapshot guarantees a
-    // hit). Knobs: graft.span.k / graft.winnow.w.
+    // hit). Knobs: [[SpanK]] / [[WinnowW]].
     "q144_incremental_winnow" -> ((s, dir) => {
-      val k = Conf.SpanK(s)
-      val w = Conf.WinnowW(s)
       val d = Graft.parquetSource(s, dir).table("documents")
       val cut = BatchCut.cut(s, d)
-      val fpP = winnowFpIndex(s, dir, cut, k, w)
+      val fpP = winnowFpIndex(s, dir, cut)
       graft.ops.Dedup.winnowScore(
-          d.where(col("doc_id") >= cut), s.read.parquet(fpP), k, w)
+          d.where(col("doc_id") >= cut), s.read.parquet(fpP), SpanK, WinnowW)
         .orderBy("doc_id")
     }),
 
@@ -1247,16 +1236,14 @@ object TextPipeline {
     // ranks, SQL-standard NTILE stages, and a deterministic
     // within-bucket hash shuffle — all via the q145 two-level
     // range-partition discipline (no single-partition window). Knob:
-    // graft.curr.buckets — NOTE the oracle interpolates
-    // the entry's default, so a non-default knob is a deployment
-    // setting, not a verify-gate one (the q150 oracle-pin discipline).
+    // [[CurrBuckets]], which the oracle interpolates.
     "q149_curriculum" -> ((s, dir) => {
-      val nb = Conf.CurrBuckets(s)
       graft.ops.Curate.curriculum(
           graft.ops.Text.readability(
               Graft.parquetSource(s, dir).table("documents"))
             .select(col("doc_id"), col("flesch")),
-          nb, scoreCol = "flesch", idCol = "doc_id", ascending = false)
+          CurrBuckets, scoreCol = "flesch", idCol = "doc_id",
+          ascending = false)
         .orderBy("bucket", "ord")
     }),
 
@@ -1266,26 +1253,26 @@ object TextPipeline {
     // counts into sampling weights (alpha = 0.5 here: the common
     // up-sample-the-tail temperature, engine-exact via one IEEE sqrt
     // + 20-bit fixed point + exact integer total). Knob:
-    // graft.mix.alpha in {0, 0.5, 1}.
+    // [[MixAlpha]]; the op takes alpha in {0, 0.5, 1}.
     "q142_mixture_weights" -> ((s, dir) => {
       graft.ops.Curate.mixtureWeights(
-          Graft.parquetSource(s, dir).table("documents"), Conf.MixAlpha(s))
+          Graft.parquetSource(s, dir).table("documents"), MixAlpha)
         .orderBy("source")
     }),
 
     // ---- q143: solved-mixture pipeline (weights -> budgets -> cut) ------
     // The full mixture pipeline as ONE composition of public ops:
     // [[graft.ops.Curate.mixtureWeights]] SOLVES the per-source
-    // sampling weights at metadata grain (α = graft.mix.alpha), the
+    // sampling weights at metadata grain (α = [[MixAlpha]]), the
     // driver turns weight·total into a tokens-per-source budget map
     // (≤ |sources| rows — metadata grain), and
     // [[graft.ops.Curate.sourceBudget]] EXECUTES the cut at corpus
-    // grain. Knobs: graft.mix.alpha / graft.mix.budget.
+    // grain. Knobs: [[MixAlpha]] / [[MixBudget]].
     "q143_mixture_pipeline" -> ((s, dir) => {
       val d = Graft.parquetSource(s, dir).table("documents")
-      val budgets = graft.ops.Curate.mixtureWeights(d, Conf.MixAlpha(s))
+      val budgets = graft.ops.Curate.mixtureWeights(d, MixAlpha)
         .select(col("source"),
-          floor(col("weight") * Conf.MixBudget(s)).cast("long").as("budget"))
+          floor(col("weight") * MixBudget).cast("long").as("budget"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       graft.ops.Curate.sourceBudget(d, budgets)
         .orderBy("source", "cum", "doc_id")
@@ -1348,7 +1335,7 @@ object TextPipeline {
         // with distinct content — checkpoint class); read by the cap's
         // size job and both self-join sides
       val blocks = graft.ops.Dedup.capBuckets(repBlocks, Seq("blk"), s,
-        "q29 prefix blocks")
+        "q29 prefix blocks", Conf.DedupMaxBucket(s))
       val a = blocks.as("a"); val b = blocks.as("b")
       val cand = a.join(b, col("a.blk") === col("b.blk") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -1364,12 +1351,12 @@ object TextPipeline {
           d.join(broadcast(candDocs), Seq("doc_id"), "left_semi"), 2)
         .distinct()
         .cache() // pairJaccard reads it three times (e1, e2, sizes)
-      val repPairs = pairJaccard(cand, sh)
+      val repPairs = graft.ops.Dedup.pairJaccard(cand, sh)
         .where(col("jac") >= 0.5)
         .localCheckpoint() // eager: allows unpersisting the cache NOW —
         // a long-lived session accumulates no cached tables from q29
       sh.unpersist()
-      expandRepPairs(members, repPairs)
+      graft.ops.Dedup.expandRepPairs(members, repPairs)
         .orderBy("d1", "d2")
     }),
 
@@ -1405,14 +1392,14 @@ object TextPipeline {
           d.join(broadcast(candDocs), Seq("doc_id"), "left_semi"), 5)
         .distinct()
         .cache() // pairOverlap reads it three times (e1, e2, sizes)
-      val repPairs = pairOverlap(cand, candSh)
+      val repPairs = graft.ops.Dedup.pairOverlap(cand, candSh)
         .select(col("d1"), col("d2"),
           (col("inter").cast("double") /
             least(col("n1"), col("n2")).cast("double")).as("cont"))
         .where(col("cont") >= 0.9)
         .localCheckpoint()
       candSh.unpersist()
-      expandRepPairs(members, repPairs, "cont")
+      graft.ops.Dedup.expandRepPairs(members, repPairs, "cont")
         .orderBy("d1", "d2")
     }),
 
@@ -1436,9 +1423,10 @@ object TextPipeline {
       val d = Graft.parquetSource(s, dir).table("documents")
       val cut = BatchCut.cut(s, d)
       val idx = s.read.parquet(signatureIndex(s, dir, cut))
-      val deltaBands = minhashBands(d.where(col("doc_id") >= cut))
-        .localCheckpoint() // probe side AND part of the build side; also
-        // keeps the candidate plan free of the batch's shingle generator
+      val deltaBands =
+        graft.ops.Dedup.minhashBands(d.where(col("doc_id") >= cut))
+          .localCheckpoint() // probe side AND part of the build side; also
+          // keeps the candidate plan free of the batch's shingle generator
       // Only band keys PRESENT IN THE BATCH can produce candidates (the
       // probe side has no other keys), so the artifact contributes just
       // the collision-relevant rows: a broadcast-semi-filtered scan —
@@ -1462,7 +1450,8 @@ object TextPipeline {
         // window bucket-count was tried and REVERTED on interleaved
         // A/B (q67 1.29× slower) — see OPTIMIZATION_r18.md.
       val allBands = graft.ops.Dedup.capBuckets(relevant,
-        Seq("band_idx", "band_key"), s, "q67 incremental bands")
+        Seq("band_idx", "band_key"), s, "q67 incremental bands",
+        Conf.DedupMaxBucket(s))
       val candLazy = allBands.as("a").join(deltaBands.as("b"),
           col("a.band_idx") === col("b.band_idx") &&
             col("a.band_key") === col("b.band_key") &&
@@ -1484,7 +1473,7 @@ object TextPipeline {
           d.join(broadcast(candDocs), Seq("doc_id"), "left_semi"), 3)
         .distinct()
         .cache() // pairJaccard reads it three times (e1, e2, sizes)
-      val out = pairJaccard(cand, candSh)
+      val out = graft.ops.Dedup.pairJaccard(cand, candSh)
         .where(col("jac") >= 0.8)
         .localCheckpoint()
       candSh.unpersist()
@@ -1552,7 +1541,8 @@ object TextPipeline {
           val seen = s.read.parquet(seenPath)
           val epochDocs =
             d.join(broadcast(epochIds), Seq("doc_id"), "left_semi")
-          val deltaBands = minhashBands(epochDocs).localCheckpoint()
+          val deltaBands =
+            graft.ops.Dedup.minhashBands(epochDocs).localCheckpoint()
           // the q67 relevance restriction, per epoch: only the epoch's
           // own band keys can collide, so the seen side contributes a
           // broadcast-semi-filtered scan — never a per-epoch
@@ -1568,7 +1558,8 @@ object TextPipeline {
             // join, so materialize once per epoch (window-count fusion
             // tried and REVERTED on r18 A/B — OPTIMIZATION_r18.md)
           val allBands = graft.ops.Dedup.capBuckets(relevant,
-            Seq("band_idx", "band_key"), s, "q76 incremental bands")
+            Seq("band_idx", "band_key"), s, "q76 incremental bands",
+            Conf.DedupMaxBucket(s))
           val cand = allBands.as("a").join(deltaBands.as("b"),
               col("a.band_idx") === col("b.band_idx") &&
                 col("a.band_key") === col("b.band_key") &&
@@ -1582,7 +1573,7 @@ object TextPipeline {
               d.join(broadcast(candDocs), Seq("doc_id"), "left_semi"), 3)
             .distinct()
             .cache() // pairJaccard reads it three times (e1, e2, sizes)
-          val pairs = pairJaccard(cand, candSh)
+          val pairs = graft.ops.Dedup.pairJaccard(cand, candSh)
             .where(col("jac") >= 0.8)
             .localCheckpoint()
           candSh.unpersist()
@@ -1685,12 +1676,12 @@ object TextPipeline {
     // so the audit never re-shingles the corpus.
     "q73_minhash_est_audit" -> ((s, dir) => {
       val pair = repPairsOf(s, dir)
-      val pairs = expandRepPairs(pair._1, pair._2)
+      val pairs = graft.ops.Dedup.expandRepPairs(pair._1, pair._2)
         .localCheckpoint() // tiny; read by pairDocs AND the final join
       val d = Graft.parquetSource(s, dir).table("documents")
       val pairDocs = pairs.select(col("d1").as("doc_id"))
         .unionByName(pairs.select(col("d2").as("doc_id"))).distinct()
-      val mh = minhashSignatures(
+      val mh = graft.ops.Dedup.minhashSignatures(
           d.join(broadcast(pairDocs), Seq("doc_id"), "left_semi"))
         .localCheckpoint() // pair-doc-bounded; read by both join sides
       val est = (0 until 16).map(j =>
@@ -1786,12 +1777,13 @@ object TextPipeline {
     "q83_neardup_decontam" -> ((s, dir) => {
       val d = Graft.parquetSource(s, dir).table("documents")
       val evBands = graft.ops.Dedup.capBuckets(
-        minhashBands(d.where(col("doc_id") < 20))
+        graft.ops.Dedup.minhashBands(d.where(col("doc_id") < 20))
           .localCheckpoint(), // tiny: the cap's size job + the join
-        Seq("band_idx", "band_key"), s, "q83 eval bands")
+        Seq("band_idx", "band_key"), s, "q83 eval bands",
+        Conf.DedupMaxBucket(s))
         .select(col("doc_id").as("eval_id"),
           col("band_idx"), col("band_key"))
-      val candLazy = minhashBands(d.where(col("doc_id") >= 20))
+      val candLazy = graft.ops.Dedup.minhashBands(d.where(col("doc_id") >= 20))
         .join(broadcast(evBands), Seq("band_idx", "band_key"))
         .select(col("doc_id").as("d1"), col("eval_id").as("d2"))
         .distinct()
@@ -1804,7 +1796,7 @@ object TextPipeline {
           d.join(broadcast(candDocs), Seq("doc_id"), "left_semi"), 3)
         .distinct()
         .cache() // pairJaccard reads it three times (e1, e2, sizes)
-      val ver = pairJaccard(cand, candSh)
+      val ver = graft.ops.Dedup.pairJaccard(cand, candSh)
         .where(col("jac") >= 0.5d)
         .localCheckpoint() // candidate-bounded; read twice below
       candSh.unpersist()
@@ -1900,7 +1892,7 @@ object TextPipeline {
     // one final share division (the q84 bit-stability discipline).
     "q94_source_attribution" -> ((s, dir) => {
       val pair = repPairsOf(s, dir)
-      val pairs = expandRepPairs(pair._1, pair._2)
+      val pairs = graft.ops.Dedup.expandRepPairs(pair._1, pair._2)
         .select(col("d1"), col("d2"))
         .localCheckpoint() // pair-bounded; read by pairDocs AND the label join
       val pairDocs = pairs.select(col("d1").as("doc_id"))
@@ -2009,11 +2001,11 @@ object TextPipeline {
       val d = Graft.parquetSource(s, dir).table("documents")
       val queries = d.where(pmod(hash60(col("text")), lit(20)) === 0)
         .select(col("doc_id"), col("text"))
-      val hits = graft.ops.Retrieval.bm25(d, queries, k, Conf.Bm25DfCap(s),
+      val hits = graft.ops.Retrieval.bm25(d, queries, k, CorpusQuality.Bm25DfCap,
           excludeSelf = true)
         .localCheckpoint() // k·|queries| rows; anti-join spine + window
       val (members, repPairs) = repPairsOf(s, dir)
-      val pairs = expandRepPairs(members, repPairs)
+      val pairs = graft.ops.Dedup.expandRepPairs(members, repPairs)
         .select(col("d1"), col("d2"))
       val sym = pairs.unionByName(
           pairs.select(col("d2").as("d1"), col("d1").as("d2")))
@@ -2021,7 +2013,7 @@ object TextPipeline {
       val w = Window.partitionBy("query_id").orderBy("rank")
       hits.join(broadcast(sym), Seq("query_id", "doc_id"), "left_anti")
         .withColumn("neg_rank", row_number().over(w).cast("long"))
-        .where(col("neg_rank") <= Conf.NegativesN(s))
+        .where(col("neg_rank") <= NegativesN)
         .select(col("query_id"), col("neg_rank"), col("doc_id"),
           col("score_ppm"))
         .orderBy("query_id", "neg_rank")
@@ -2035,11 +2027,10 @@ object TextPipeline {
     // partial top-n, ≤ n rows per source cross the shuffle — never the
     // per-key full sort a row_number window pays; q40's window form is
     // the contrast, kept there because its per-lang k=5 output IS the
-    // window shape). Cap knob: graft.cap.perKey.
+    // window shape). Cap knob: [[CapPerKey]].
     "q118_domain_cap" -> ((s, dir) => {
-      val n = Conf.CapPerKey(s)
       val d = Graft.parquetSource(s, dir).table("documents")
-      graft.ops.Curate.capPerKey(d, n).orderBy("source", "doc_id")
+      graft.ops.Curate.capPerKey(d, CapPerKey).orderBy("source", "doc_id")
     }),
 
     // ---- q119: incremental per-domain cap vs persisted kept-counts -----
@@ -2051,16 +2042,13 @@ object TextPipeline {
     // the same hash priority, keep_rank continues the snapshot's
     // numbering. Batch-proportional: one batch scan + a tiny broadcast;
     // the old corpus contributes via the count artifact only. The cap
-    // (graft.cap.perKeyIncr, default 22) sits just above the per-source
-    // old-doc count at the test cut so BOTH the saturation path and the
-    // remaining-slot path execute.
+    // is [[CapPerKeyIncr]].
     "q119_incremental_domain_cap" -> ((s, dir) => {
-      val n = Conf.CapPerKeyIncr(s)
       val d = Graft.parquetSource(s, dir).table("documents")
       val cut = BatchCut.cut(s, d)
-      val cPath = capCountIndex(s, dir, cut, n)
+      val cPath = capCountIndex(s, dir, cut)
       graft.ops.Curate.capPerKeyAppend(d.where(col("doc_id") >= cut),
-          s.read.parquet(cPath), n)
+          s.read.parquet(cPath), CapPerKeyIncr)
         .orderBy("source", "doc_id")
     })
   )
@@ -2068,12 +2056,12 @@ object TextPipeline {
   /** The persisted per-source kept-count artifact behind q119 — built
     * via the public frame definition ([[graft.ops.Curate.capCounts]]). */
   private[graft] def capCountIndex(s: SparkSession, dir: String,
-      cut: Long, n: Int): String =
-    graft.sources.SideTable.ensure(s, "cap_counts", s"$dir#$cut#n$n",
-        Some(s"$dir/documents.parquet")) {
+      cut: Long): String =
+    graft.sources.SideTable.ensure(s, "cap_counts",
+        s"$dir#$cut#n$CapPerKeyIncr", Some(s"$dir/documents.parquet")) {
       graft.ops.Curate.capCounts(
         Graft.parquetSource(s, dir).table("documents")
-          .where(col("doc_id") < cut), n)
+          .where(col("doc_id") < cut), CapPerKeyIncr)
     }
 
   /** The persisted per-shard pack-tail artifact behind q115 — built via
@@ -2093,12 +2081,12 @@ object TextPipeline {
   /** The persisted per-source gram inventory behind q136 — built via
     * the public frame definition ([[graft.ops.Dedup.sourceGramFrame]]). */
   private[graft] def sourceGramIndex(s: SparkSession, dir: String,
-      cut: Long, k: Int): String =
-    graft.sources.SideTable.ensure(s, "source_grams", s"$dir#$cut#k$k",
+      cut: Long): String =
+    graft.sources.SideTable.ensure(s, "source_grams", s"$dir#$cut#k$SpanK",
         Some(s"$dir/documents.parquet")) {
       graft.ops.Dedup.sourceGramFrame(
         Graft.parquetSource(s, dir).table("documents")
-          .where(col("doc_id") < cut), k)
+          .where(col("doc_id") < cut), SpanK)
     }
 
   /** The persisted BPE merge-table artifact behind q133 — built via
@@ -2146,12 +2134,12 @@ object TextPipeline {
     * via the public frame definition ([[graft.ops.Dedup.winnowFrame]]),
     * the ~w/2× smaller index of the span family. */
   private[graft] def winnowFpIndex(s: SparkSession, dir: String,
-      cut: Long, k: Int, w: Int): String =
-    graft.sources.SideTable.ensure(s, "winnow_fps", s"$dir#$cut#k$k#w$w",
-        Some(s"$dir/documents.parquet")) {
+      cut: Long): String =
+    graft.sources.SideTable.ensure(s, "winnow_fps",
+        s"$dir#$cut#k$SpanK#w$WinnowW", Some(s"$dir/documents.parquet")) {
       graft.ops.Dedup.winnowFrame(
         Graft.parquetSource(s, dir).table("documents")
-          .where(col("doc_id") < cut), k, w)
+          .where(col("doc_id") < cut), SpanK, WinnowW)
     }
 
   /** The persisted distinct-gram-set artifact behind q129 — built via
@@ -2169,12 +2157,12 @@ object TextPipeline {
     }
 
   private[graft] def spanGramIndex(s: SparkSession, dir: String,
-      cut: Long, k: Int): String =
-    graft.sources.SideTable.ensure(s, "span_grams", s"$dir#$cut#k$k",
+      cut: Long): String =
+    graft.sources.SideTable.ensure(s, "span_grams", s"$dir#$cut#k$SpanK",
         Some(s"$dir/documents.parquet")) {
       graft.ops.Dedup.spanGramFrame(
         Graft.parquetSource(s, dir).table("documents")
-          .where(col("doc_id") < cut), k)
+          .where(col("doc_id") < cut), SpanK)
     }
 
   /** The persisted per-source boilerplate gram artifact behind q114 —
@@ -3089,23 +3077,23 @@ object TextPipeline {
         |FROM documents GROUP BY source ORDER BY source""".stripMargin,
 
     "q118_domain_cap" ->
-      """SELECT source, doc_id, keep_rank FROM (
+      s"""SELECT source, doc_id, keep_rank FROM (
         |  SELECT source, doc_id,
         |    row_number() OVER (PARTITION BY source
         |      ORDER BY (('0x' || substr(md5(doc_id::varchar),1,15))::bigint
         |        % 2147483647), doc_id) AS keep_rank
         |  FROM documents
-        |) WHERE keep_rank <= 15 ORDER BY source, doc_id""".stripMargin,
+        |) WHERE keep_rank <= $CapPerKey ORDER BY source, doc_id""".stripMargin,
 
     "q119_incremental_domain_cap" ->
-      """WITH cut AS (SELECT (max(doc_id) * 4) // 5 AS c FROM documents),
+      s"""WITH cut AS (SELECT (max(doc_id) * 4) // 5 AS c FROM documents),
         |oldr AS (
         |  SELECT source, doc_id, row_number() OVER (PARTITION BY source
         |    ORDER BY (('0x' || substr(md5(doc_id::varchar),1,15))::bigint
         |      % 2147483647), doc_id) AS rnk
         |  FROM documents WHERE doc_id < (SELECT c FROM cut)
         |), oldc AS (
-        |  SELECT source, count(*) AS n0 FROM oldr WHERE rnk <= 22
+        |  SELECT source, count(*) AS n0 FROM oldr WHERE rnk <= $CapPerKeyIncr
         |  GROUP BY source
         |), bat AS (
         |  SELECT source, doc_id, row_number() OVER (PARTITION BY source
@@ -3116,7 +3104,7 @@ object TextPipeline {
         |SELECT b.source, b.doc_id,
         |  (coalesce(o.n0, 0) + b.rnk)::bigint AS keep_rank
         |FROM bat b LEFT JOIN oldc o USING (source)
-        |WHERE coalesce(o.n0, 0) + b.rnk <= 22
+        |WHERE coalesce(o.n0, 0) + b.rnk <= $CapPerKeyIncr
         |ORDER BY source, doc_id""".stripMargin,
 
     "q52_contamination" ->
@@ -3392,19 +3380,19 @@ object TextPipeline {
 
 
     "q127_chunk" ->
-      """WITH ws AS (
+      raw"""WITH ws AS (
         |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') w
         |  FROM documents WHERE text IS NOT NULL AND len(trim(text)) > 0
         |), ch AS (
         |  SELECT doc_id, len(w)::bigint AS n, w,
-        |    unnest(range(0, greatest((len(w) - 16 + 11) // 12, 0) + 1))
+        |    unnest(range(0, greatest((len(w) - $ChunkWindow + ${ChunkStride - 1}) // $ChunkStride, 0) + 1))
         |      AS chunk_idx
         |  FROM ws
         |)
         |SELECT doc_id, chunk_idx::bigint AS chunk_idx,
-        |  (chunk_idx * 12)::bigint AS start_tok,
-        |  least(16, n - chunk_idx * 12)::bigint AS n_tok,
-        |  md5(array_to_string(w[chunk_idx*12+1 : chunk_idx*12+16], ' '))
+        |  (chunk_idx * $ChunkStride)::bigint AS start_tok,
+        |  least($ChunkWindow, n - chunk_idx * $ChunkStride)::bigint AS n_tok,
+        |  md5(array_to_string(w[chunk_idx*$ChunkStride+1 : chunk_idx*$ChunkStride+$ChunkWindow], ' '))
         |    AS chunk_md5
         |FROM ch ORDER BY doc_id, chunk_idx""".stripMargin,
 
@@ -3528,11 +3516,11 @@ object TextPipeline {
       s"""WITH ws AS MATERIALIZED (
         |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
         |  FROM documents WHERE text IS NOT NULL AND len(trim(text)) > 0
-        |), dd AS (SELECT doc_id, w, len(w) AS n FROM ws WHERE len(w) >= 5),
+        |), dd AS (SELECT doc_id, w, len(w) AS n FROM ws WHERE len(w) >= $SpanK),
         |win AS MATERIALIZED (
         |  SELECT doc_id, n, i AS s, m, array_to_string(w[i:i+m-1], ' ') AS gram
         |  FROM dd, unnest(range(1, n + 1)) AS t(i),
-        |    unnest(range(5, ${Conf.SubstrMaxSpan.default + 1})) AS r(m)
+        |    unnest(range($SpanK, ${SubstrMaxSpan + 1})) AS r(m)
         |  WHERE i + m - 1 <= n
         |), dupw AS (
         |  SELECT m, gram FROM win GROUP BY m, gram HAVING count(*) >= 2
@@ -3547,7 +3535,7 @@ object TextPipeline {
         |  FROM lmax
         |)
         |SELECT doc_id, s::bigint AS start_tok, L AS n_tok,
-        |  (L = ${Conf.SubstrMaxSpan.default} AND n - s + 1 > ${Conf.SubstrMaxSpan.default}) AS clamped
+        |  (L = ${SubstrMaxSpan} AND n - s + 1 > ${SubstrMaxSpan}) AS clamped
         |FROM fin WHERE pe IS NULL OR s + L > pe
         |ORDER BY doc_id, start_tok""".stripMargin,
 
@@ -3555,11 +3543,11 @@ object TextPipeline {
       s"""WITH wsall AS MATERIALIZED (
         |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w
         |  FROM documents WHERE text IS NOT NULL AND len(trim(text)) > 0
-        |), dd AS (SELECT doc_id, w, len(w) AS n FROM wsall WHERE len(w) >= 5),
+        |), dd AS (SELECT doc_id, w, len(w) AS n FROM wsall WHERE len(w) >= $SpanK),
         |win AS MATERIALIZED (
         |  SELECT doc_id, n, i AS s, m, array_to_string(w[i:i+m-1], ' ') AS gram
         |  FROM dd, unnest(range(1, n + 1)) AS t(i),
-        |    unnest(range(5, ${Conf.SubstrMaxSpan.default + 1})) AS r(m)
+        |    unnest(range($SpanK, ${SubstrMaxSpan + 1})) AS r(m)
         |  WHERE i + m - 1 <= n
         |), dupw AS (
         |  SELECT m, gram FROM win GROUP BY m, gram HAVING count(*) >= 2
@@ -3705,7 +3693,7 @@ object TextPipeline {
         |ORDER BY src1, src2""".stripMargin,
 
     "q139_winnow" ->
-      """WITH ws AS (
+      raw"""WITH ws AS (
         |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') w
         |  FROM documents WHERE text IS NOT NULL
         |), g AS (
@@ -3718,15 +3706,15 @@ object TextPipeline {
         |  SELECT doc_id, max(pos) AS ng FROM g GROUP BY doc_id
         |), w1 AS (
         |  SELECT doc_id, pos, min(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |    ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mh
+        |    ROWS BETWEEN CURRENT ROW AND ${WinnowW - 1} FOLLOWING) AS mh
         |  FROM g
         |), sel AS (
         |  SELECT w1.doc_id, max(g2.pos) AS pos, w1.mh AS h
         |  FROM w1
         |  JOIN ng ON ng.doc_id = w1.doc_id
         |  JOIN g g2 ON g2.doc_id = w1.doc_id
-        |    AND g2.pos BETWEEN w1.pos AND w1.pos + 3 AND g2.h = w1.mh
-        |  WHERE w1.pos <= ng.ng - 3
+        |    AND g2.pos BETWEEN w1.pos AND w1.pos + ${WinnowW - 1} AND g2.h = w1.mh
+        |  WHERE w1.pos <= ng.ng - ${WinnowW - 1}
         |  GROUP BY w1.doc_id, w1.pos, w1.mh
         |)
         |SELECT DISTINCT doc_id, pos, h FROM sel
@@ -3786,7 +3774,7 @@ object TextPipeline {
         |ORDER BY doc_id""".stripMargin,
 
     "q141_collocations" ->
-      """WITH ws AS (
+      raw"""WITH ws AS (
         |  SELECT regexp_split_to_array(trim(text), '\s+') w
         |  FROM documents WHERE text IS NOT NULL AND len(trim(text)) > 0
         |), bg AS (
@@ -3801,11 +3789,11 @@ object TextPipeline {
         |  (c_pair::double * n_pairs::double) /
         |    (c_left::double * c_right::double) AS lift
         |FROM pc JOIN lm USING (w1) JOIN rm USING (w2) CROSS JOIN n
-        |WHERE c_pair >= 5
-        |ORDER BY lift DESC, w1, w2 LIMIT 100""".stripMargin,
+        |WHERE c_pair >= $PmiMinCount
+        |ORDER BY lift DESC, w1, w2 LIMIT $PmiTopK""".stripMargin,
 
     "q144_incremental_winnow" ->
-      """WITH cut AS (SELECT (max(doc_id) * 4) // 5 AS c FROM documents),
+      raw"""WITH cut AS (SELECT (max(doc_id) * 4) // 5 AS c FROM documents),
         |ws AS (
         |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') w
         |  FROM documents WHERE text IS NOT NULL
@@ -3819,15 +3807,15 @@ object TextPipeline {
         |  SELECT doc_id, max(pos) AS ng FROM g GROUP BY doc_id
         |), w1 AS (
         |  SELECT doc_id, pos, min(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |    ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mh
+        |    ROWS BETWEEN CURRENT ROW AND ${WinnowW - 1} FOLLOWING) AS mh
         |  FROM g
         |), sel AS (
         |  SELECT w1.doc_id, max(g2.pos) AS pos, w1.mh AS h
         |  FROM w1
         |  JOIN ng ON ng.doc_id = w1.doc_id
         |  JOIN g g2 ON g2.doc_id = w1.doc_id
-        |    AND g2.pos BETWEEN w1.pos AND w1.pos + 3 AND g2.h = w1.mh
-        |  WHERE w1.pos <= ng.ng - 3
+        |    AND g2.pos BETWEEN w1.pos AND w1.pos + ${WinnowW - 1} AND g2.h = w1.mh
+        |  WHERE w1.pos <= ng.ng - ${WinnowW - 1}
         |  GROUP BY w1.doc_id, w1.pos, w1.mh
         |), fp AS MATERIALIZED (
         |  SELECT DISTINCT doc_id, pos, h FROM sel
@@ -3858,7 +3846,7 @@ object TextPipeline {
         |FROM s CROSS JOIN t ORDER BY source""".stripMargin,
 
     "q143_mixture_pipeline" ->
-      """WITH c AS (
+      raw"""WITH c AS (
         |  SELECT source, sum(len(regexp_extract_all(text,
         |    '[A-Za-z]{1,4}|[0-9]|[^A-Za-z0-9\s]')))::bigint AS n_tokens
         |  FROM documents GROUP BY source
@@ -3868,7 +3856,7 @@ object TextPipeline {
         |), t AS (SELECT sum(s_fp)::bigint AS tot FROM s),
         |b AS (
         |  SELECT source,
-        |    floor((s_fp::double / tot::double) * 10000)::bigint AS budget
+        |    floor((s_fp::double / tot::double) * $MixBudget)::bigint AS budget
         |  FROM s CROSS JOIN t
         |), base AS (
         |  SELECT doc_id, d.source,
@@ -3887,7 +3875,7 @@ object TextPipeline {
         |ORDER BY source, cum, doc_id""".stripMargin,
 
     "q138_source_budget" ->
-      """WITH base AS (
+      raw"""WITH base AS (
         |  SELECT doc_id, source,
         |    len(regexp_extract_all(text,
         |      '[A-Za-z]{1,4}|[0-9]|[^A-Za-z0-9\s]'))::bigint AS n_tokens,
@@ -3900,7 +3888,7 @@ object TextPipeline {
         |  FROM base
         |)
         |SELECT doc_id, source, n_tokens, cum::bigint AS cum FROM r
-        |WHERE cum <= 1000
+        |WHERE cum <= $BudgetPerSource
         |ORDER BY source, cum, doc_id""".stripMargin,
 
     "q137_readability" ->
@@ -3936,7 +3924,7 @@ object TextPipeline {
         |  SELECT doc_id, flesch,
         |    row_number() OVER (ORDER BY flesch DESC, doc_id)::bigint
         |      AS rank,
-        |    ntile(${Conf.CurrBuckets.default}) OVER (ORDER BY flesch DESC, doc_id)::bigint
+        |    ntile(${CurrBuckets}) OVER (ORDER BY flesch DESC, doc_id)::bigint
         |      AS bucket
         |  FROM sc
         |)
@@ -4282,16 +4270,16 @@ object TextPipeline {
           |SELECT floor(jac * 10.0)::bigint AS bin, count(*)::bigint AS n_pairs
           |FROM ver GROUP BY bin ORDER BY bin""".stripMargin),
 
-    // Default confs mirrored: seed "0", 16 shards (top 4 of 60 hash
-    // bits). concat_ws skips NULL text in both engines, so NULL-text
+    // Default confs interpolated: graft.shuffle.seed, and
+    // graft.shuffle.shards as the top log2(shards) of 60 hash bits. concat_ws skips NULL text in both engines, so NULL-text
     // docs land in the seed-only key's shard, tie-broken by doc_id.
     "q92_shuffle_manifest" ->
-      """WITH base AS (
+      raw"""WITH base AS (
         |  SELECT doc_id,
         |    len(regexp_extract_all(text, '[A-Za-z]{1,4}|[0-9]|[^A-Za-z0-9\s]'))::bigint AS n_tokens,
-        |    ('0x' || substr(md5(concat_ws('#', text, '0')),1,15))::bigint AS h
+        |    ('0x' || substr(md5(concat_ws('#', text, '${Conf.ShuffleSeed.default}')),1,15))::bigint AS h
         |  FROM documents
-        |), shd AS (SELECT *, h >> 56 AS shard FROM base)
+        |), shd AS (SELECT *, h >> ${60 - Integer.numberOfTrailingZeros(Conf.ShuffleShards.default)} AS shard FROM base)
         |SELECT shard, count(*)::bigint AS n_docs, sum(n_tokens)::bigint AS sum_tokens,
         |  first(doc_id ORDER BY h, doc_id) AS first_doc,
         |  last(doc_id ORDER BY h, doc_id) AS last_doc,
@@ -4430,7 +4418,7 @@ object TextPipeline {
            |)
            |SELECT query_id, neg_rank::bigint AS neg_rank, doc_id,
            |  score_ppm
-           |FROM rer WHERE neg_rank <= 5
+           |FROM rer WHERE neg_rank <= $NegativesN
            |ORDER BY query_id, neg_rank""".stripMargin)
   )
 

@@ -33,6 +33,11 @@ object WordVectors {
     * directly, no dense V-dim rows anywhere. */
   private val TopVSparse = 768
 
+  /** q178's SemDeDup tau, high because the near-1-D PPMI space
+    * inflates doc cosines — exactly the regime where a deployment
+    * tightens τ. */
+  private val SemTau = 0.9995
+
   /** Session memo of the trained word-vector frame — metadata grain
     * (k·V rows); q173 the TRAINER refreshes, q174 the doc-vector
     * CONSUMER reuses (the pcaMemo discipline). */
@@ -203,9 +208,7 @@ object WordVectors {
     // first (cosine-invariant; keeps the k-means fixed-point update
     // arithmetic on its designed |x| ≤ 1 grid — raw doc sums reach
     // 2⁴⁰ and would overflow the 2²⁰-scale centroid accumulator).
-    // tau defaults high (0.9995): the near-1-D PPMI space inflates doc
-    // cosines, exactly the regime where a deployment tightens τ.
-    // Knob: graft.wordvec.semtau.
+    // tau is [[SemTau]]; the cluster cap is graft.semdedup.maxCluster.
     "q178_docvec_semdedup" -> ((s, dir) => {
       val dv = graft.ops.Text.docVectors(
           Graft.parquetSource(s, dir).table("documents"),
@@ -215,8 +218,8 @@ object WordVectors {
         .agg(greatest(max(abs(col("x"))), lit(1.0d))).head().getDouble(0)
       val dvs = dv.select(col("doc_id"),
         transform(col("vec"), x => x / lit(mx)).as("vec"))
-      graft.ops.Embed.semdedupKeep(dvs, 8, 3, Conf.WordvecSemtau(s),
-          idCol = "doc_id", vecCol = "vec")
+      graft.ops.Embed.semdedupKeep(dvs, 8, 3, SemTau,
+          Conf.SemdedupMaxCluster(s), idCol = "doc_id", vecCol = "vec")
         .orderBy("doc_id")
     }),
 
@@ -860,7 +863,7 @@ object WordVectors {
 
     // doc vectors scaled to the |x| <= 1 grid, then the q81 oracle
     // shape verbatim: the same hash-sampled k-means init/iterations
-    // (3-dim) and the in-cluster dominance pass at tau = 0.9995
+    // (3-dim) and the in-cluster dominance pass at tau = SemTau
     "q178_docvec_semdedup" ->
       (wvCtes() + dvecCtes +
         s""", mxd AS (
@@ -884,7 +887,7 @@ object WordVectors {
           |  JOIN e ea ON ea.vec_id = a.vec_id
           |  JOIN e eb ON eb.vec_id = b.vec_id
           |  WHERE ${Embeddings.duckCos("ea.v", "ea.nrm",
-             "eb.v", "eb.nrm")} >= 0.9995
+             "eb.v", "eb.nrm")} >= $SemTau
           |  GROUP BY a.vec_id
           |)
           |SELECT asg.vec_id AS doc_id, asg.cluster,

@@ -60,6 +60,25 @@ class ConfSpec extends AnyFunSuite {
     for ((k, d) <- table) assert(documented(k) === d, s"default of $k")
   }
 
+  test("every table key has a reader in src/main outside Conf.scala") {
+    val named = Conf.getClass.getMethods.toSeq
+      .filter(m => m.getParameterCount == 0 &&
+        classOf[Conf.Entry[_]].isAssignableFrom(m.getReturnType))
+      .map(m => m.invoke(Conf).asInstanceOf[Conf.Entry[_]].key -> m.getName)
+      .toMap
+    assert(named.keySet === Conf.entries.map(_.key).toSet)
+    val root = Paths.get("src/main/scala")
+    val sources = Files.walk(root).iterator().asScala.toSeq
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "Conf.scala")
+      .map(p => new String(Files.readAllBytes(p), "UTF-8"))
+    val unread = named.filter { case (_, name) =>
+      val use = raw"\bConf\.$name\b".r
+      !sources.exists(use.findFirstIn(_).isDefined)
+    }.keySet
+    assert(unread === Set.empty, "keys no src/main code reads")
+  }
+
   test("each entry's default round-trips through its own parse") {
     Conf.entries.foreach {
       case f: Conf.Fixed[_] =>
@@ -77,7 +96,7 @@ class ConfSpec extends AnyFunSuite {
   }
 
   test("TRUE, true and false read alike for every boolean entry") {
-    assert(bools.map(_.key).toSet.contains("graft.stream.timing"))
+    assert(bools.map(_.key).toSet.contains("graft.artifacts.bloom"))
     for (e <- bools; (raw, want) <- Seq("TRUE" -> true, "true" -> true,
         "false" -> false, "FALSE" -> false)) {
       spark.conf.set(e.key, raw)
@@ -88,8 +107,8 @@ class ConfSpec extends AnyFunSuite {
 
   test("a malformed int, long, double or boolean value throws naming " +
       "the key and the value") {
-    for ((e, raw) <- Seq(Conf.SpanK -> "five", Conf.SpanMinCount -> "2L",
-        Conf.MarginTau -> "1,05", Conf.ArtifactsBloom -> "yes")) {
+    for ((e, raw) <- Seq(Conf.KmeansK -> "five", Conf.BudgetTokens -> "2L",
+        Conf.SemdedupTau -> "0,45", Conf.ArtifactsBloom -> "yes")) {
       spark.conf.set(e.key, raw)
       try {
         val err = intercept[IllegalArgumentException](e(spark))
